@@ -153,9 +153,17 @@ object Bench {
     }
     val shuffleMb = scala.collection.mutable.LinkedHashMap[String, Double]()
     val taskCount = scala.collection.mutable.LinkedHashMap[String, Long]()
+    // Per-query Janino compiles: the delta of Spark's JVM-wide compile
+    // counter, which is bumped synchronously inside the compiling thread, so
+    // it is exact once the action returns (no listener drain). The first
+    // pass's count is kept: a re-measure run finds its classes cached.
+    val compileCount = scala.collection.mutable.LinkedHashMap[String, Long]()
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val s0 = drainedShuffleBytes()
       val k0 = tasksEnded.get()
+      val c0 = compiles()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch {
         case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
@@ -163,6 +171,7 @@ object Bench {
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       shuffleMb(name) = math.rint((drainedShuffleBytes() - s0) / 1048576.0 * 100) / 100
       taskCount(name) = tasksEnded.get() - k0
+      compileCount.getOrElseUpdate(name, compiles() - c0)
       // Deterministic block release between queries (untimed): operators
       // that localCheckpoint (dedup candidates, CC rounds) leave RDD blocks
       // pinned until the ContextCleaner GC-detects them — across 84 queries
@@ -185,6 +194,7 @@ object Bench {
         System.err.println(s"[bench] running $name") // progress marker (untimed)
         (name, fn, timeOne(name, fn))
       }
+    System.err.println(s"[bench] first pass compiled ${compileCount.values.sum} generated classes")
     // Noise-robust outlier re-measure: this host is co-tenant VM hardware
     // with intermittent near-total CPU-steal windows (measured: a contention
     // burst mid-run inflated one alphabetical stretch 50-300× while queries
@@ -342,7 +352,10 @@ object Bench {
       val rs = ratios.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       // per-query task counts (see the listener note): parallelism evidence
       val tk = taskCount.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$tot,"unit":"sec","failed":$nFailed,"baseline_ops_total":$base,$pairedKeys,"queries":$qs,"ratios":$rs,"shuffle_mb":$sh,"tasks":$tk,"sf":"$sfDir"}"""
+      // per-query codegen compiles (see compileCount): the generated-class
+      // working set that GraftSession.CodegenCacheEntries has to hold
+      val cc = compileCount.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":$tot,"unit":"sec","failed":$nFailed,"baseline_ops_total":$base,$pairedKeys,"queries":$qs,"ratios":$rs,"shuffle_mb":$sh,"tasks":$tk,"compiles":$cc,"sf":"$sfDir"}"""
     }
     // Full-precision line for human reading, then — as the VERY LAST line of
     // the run — a compact 2-decimal duplicate. The driver keeps only the

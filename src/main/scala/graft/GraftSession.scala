@@ -16,8 +16,28 @@ import org.apache.spark.sql.SparkSession
   *  - Headless AWT: image kernels (`graft.image.Kernels`) run `javax.imageio`
   *    inside executor threads; no display exists in this environment
   *    (SURVEY.md §7 risk 6).
+  *  - Codegen cache of [[CodegenCacheEntries]] classes
+  *    (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100). Janino
+  *    compiles each distinct generated class once into one JVM-wide LRU
+  *    cache, and the engine's working sets exceed 100 entries. A
+  *    corpus-dedup round (`CorpusPipeline.prepare`, `Dedup.jaccardJoinExact`,
+  *    `Similarity.semanticDedup`) needs ~113 classes, so at 100 every class
+  *    was evicted before its next use and each round recompiled all of
+  *    them; keeping them cuts the round's wall time by ~30% on 4 vCPUs,
+  *    with the same plans. One full `graft.Bench` pass at sf0.1 compiles
+  *    2,587 distinct classes (the sum of the `compiles` map Bench writes to
+  *    BENCH_FULL.json), which the constant holds with slack for the cache's
+  *    hash segments. Cost: the benchmark's `live_heap_mb` rose 1.1–4.1 MB
+  *    (≤5.2%) for 47–320 more cached classes, ~13–25 KB of heap per class.
+  *    The conf is static: `CodeGenerator` reads it once per JVM, when the
+  *    first codegen builds its cache, so a session built earlier in the
+  *    same JVM without `configure` pins the cache at 100.
   */
 object GraftSession {
+
+  /** Capacity of Spark's JVM-wide generated-class cache; see the scaladoc
+    * above for the measured working sets behind it. */
+  val CodegenCacheEntries = 3000
 
   /** Apply the engine's standard configs to an existing builder (used by
     * Verify/Bench, which own master/parallelism per the driver contract). */
@@ -46,6 +66,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
       .config("spark.sql.parquet.filterPushdown", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
   }
 
   /** Standalone builder for tests / local exploration. */
