@@ -1,17 +1,8 @@
 package graft
+import graft.obs.Obs
+import org.apache.spark.graft.ContextShim
 import org.apache.spark.sql.SparkSession
 object Bench {
-
-  private def mkSession(cpus: String): SparkSession = {
-    val s = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   // Untimed warmup: session/codegen/JIT spin-up and the first parquet
   // footer reads otherwise land entirely in whichever query sorts first
@@ -88,101 +79,30 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = mkSession(cpus)
+    val spark = GraftSession.local(defaultCpus = 4)
     warmup(spark, sfDir)
+    // the cleaner drain (see ContextShim.drainCleaner) runs untimed before
+    // both probes and after every query, so all of them start alike
+    ContextShim.drainCleaner(spark.sparkContext)
     val probePre = runProbe(spark, sfDir, "pre")
-    // Per-query shuffle-volume accounting: a stage-completion listener sums
-    // shuffle bytes written; each query reports the delta across its run.
-    // Listener delivery is async, so the snapshot after a query drains for
-    // up to ~200ms — attribution is approximate at the margin (and labeled
-    // so), but a query whose plan shuffles payloads vs one that shuffles
-    // ids differs by ORDERS of magnitude, which is the signal that matters.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    // Per-query task counts (r19): evidences how many tasks each query's
-    // jobs actually split into — 1-digit counts mark driver/fixed-cost-bound
-    // paths, 32+ marks compute that can use the cores. Same async-delivery
-    // caveat as shuffle_mb.
-    val tasksEnded = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        tasksEnded.incrementAndGet()
-      }
-    })
-    // BOUNDED CLEANER DRAIN (r19, untimed): localCheckpoint/broadcast-heavy
-    // queries leave weakly-referenced shuffle files, blocks and broadcasts
-    // whose ContextCleaner removal runs whenever a LATER GC happens to
-    // collect the references — i.e. inside whichever query runs next
-    // (measured r18: plain System.gc() between queries made the suite 18%
-    // WORSE because the cleaner drained during the next timed query; r18/r19
-    // isolated re-runs measured flagged queries up to ~3x faster alone than
-    // in-suite). The fix is to trigger the collection AND wait for the
-    // cleaner to go quiet — all in the untimed gap. Bounded (1.5s cap,
-    // 120ms quiet window) so a wedged cleaner can never stall the bench;
-    // the timed region of every query is untouched.
-    // local A/B escape hatch only (the driver never sets it): drain on by default
-    val drainOn = !sys.env.get("SPARK_GRAFT_BENCH_NODRAIN").contains("1")
-    def mkDrain(sc: org.apache.spark.SparkContext): () => Unit = {
-      val installed = drainOn && org.apache.spark.graft.CleanerShim.install(sc)
-      () => if (installed) {
-        System.gc()
-        val t0 = System.nanoTime()
-        var last = org.apache.spark.graft.CleanerShim.count
-        var lastChange = t0
-        while ((System.nanoTime() - t0) < 1.5e9 &&
-               (System.nanoTime() - lastChange) < 120e6) {
-          Thread.sleep(20)
-          val c = org.apache.spark.graft.CleanerShim.count
-          if (c != last) { last = c; lastChange = System.nanoTime() }
+    // Per-query evidence from the metrics spine (graft.obs.Obs): the jobs
+    // and tasks each query split into (1-digit task counts mark
+    // driver/fixed-cost-bound paths, 32+ marks compute that can use the
+    // cores), its shuffle WRITE volume, and its Janino compiles. The bus
+    // drains around each query are exact and sit outside the timed region,
+    // which stays the measured body: `fn(spark, sfDir).count()`.
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, Obs.Run) = {
+      val (ok, run) = Obs.measure(spark) {
+        try { fn(spark, sfDir).count(); true } catch {
+          case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       }
-    }
-    val drainCleaner: () => Unit = mkDrain(spark.sparkContext)
-    def drainedShuffleBytes(): Long = {
-      val t0 = System.nanoTime()
-      var last = shuffleBytes.get()
-      while ((System.nanoTime() - t0) < 200e6) {
-        Thread.sleep(20)
-        val now = shuffleBytes.get()
-        if (now == last) return now
-        last = now
-      }
-      last
-    }
-    val shuffleMb = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val taskCount = scala.collection.mutable.LinkedHashMap[String, Long]()
-    // Per-query Janino compiles: the delta of Spark's JVM-wide compile
-    // counter, which is bumped synchronously inside the compiling thread, so
-    // it is exact once the action returns (no listener drain). The first
-    // pass's count is kept: a re-measure run finds its classes cached.
-    val compileCount = scala.collection.mutable.LinkedHashMap[String, Long]()
-    def compiles(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val s0 = drainedShuffleBytes()
-      val k0 = tasksEnded.get()
-      val c0 = compiles()
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      }
-      val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      shuffleMb(name) = math.rint((drainedShuffleBytes() - s0) / 1048576.0 * 100) / 100
-      taskCount(name) = tasksEnded.get() - k0
-      compileCount.getOrElseUpdate(name, compiles() - c0)
-      // Deterministic block release between queries (untimed): operators
-      // that localCheckpoint (dedup candidates, CC rounds) leave RDD blocks
-      // pinned until the ContextCleaner GC-detects them — across 84 queries
-      // that is nondeterministic block-manager pressure charged to whichever
-      // query runs next. Each query's own timing above still includes any
-      // persist/checkpoint work it does itself.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      drainCleaner()
+      // each query's own timing above still includes any persist/checkpoint
+      // work it does itself; what it leaves behind is released untimed
+      Obs.release(spark)
       // a failed query must not read as a fast success: report -1
-      dt
+      (if (ok) run.seconds else -1.0, run)
     }
     // optional comma-separated name filter (local perf iteration only; the
     // driver never sets it, so round benches always cover the full set)
@@ -192,9 +112,13 @@ object Bench {
       .filter { case (name, _) => onlyQ.forall(_.contains(name)) }
       .map { case (name, fn) =>
         System.err.println(s"[bench] running $name") // progress marker (untimed)
-        (name, fn, timeOne(name, fn))
+        val (dt, run) = timeOne(name, fn)
+        (name, fn, dt, run)
       }
-    System.err.println(s"[bench] first pass compiled ${compileCount.values.sum} generated classes")
+    // Janino compiles are kept from the first pass: a re-measure run finds
+    // its classes cached
+    val compileCount = firstPass.map { case (name, _, _, run) => name -> run.compiles }
+    System.err.println(s"[bench] first pass compiled ${compileCount.map(_._2).sum} generated classes")
     // Noise-robust outlier re-measure: this host is co-tenant VM hardware
     // with intermittent near-total CPU-steal windows (measured: a contention
     // burst mid-run inflated one alphabetical stretch 50-300× while queries
@@ -234,18 +158,21 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
     val prevTimes: Map[String, Double] = prevMap("queries")
-    val results = firstPass.map { case (name, fn, dt1) =>
+    // each query keeps the run whose time it reports: its tasks, jobs and
+    // shuffle_mb describe that same run
+    val kept = firstPass.map { case (name, fn, dt1, run1) =>
       val regressedVsPrev = dt1 >= 0.3 &&
         prevTimes.get(name).exists(p => p >= 0 && dt1 > 1.7 * p)
-      if (dt1 < 1.0 && !regressedVsPrev) name -> dt1
+      if (dt1 < 1.0 && !regressedVsPrev) (name, dt1, run1)
       else {
         val why = if (dt1 >= 1.0) "heavy" else f"${dt1 / prevTimes(name)}%.1fx prev"
         System.err.println(f"[bench] re-measuring $name (first pass $dt1%.1fs, $why)")
-        val dt2 = timeOne(name, fn)
-        name -> (if (dt2 >= 0) math.min(dt1, dt2) else dt1)
+        val (dt2, run2) = timeOne(name, fn)
+        if (dt2 >= 0 && dt2 < dt1) (name, dt2, run2) else (name, dt1, run1)
       }
     }
-    drainCleaner() // same untimed hygiene before the post probe as before any query
+    val results = kept.map { case (name, dt, _) => name -> dt }
+    ContextShim.drainCleaner(spark.sparkContext)
     val probePost = runProbe(spark, sfDir, "post")
     // the paired number: min of the two probe runs (a steal window during
     // one of them must not read as a slow host era)
@@ -307,10 +234,10 @@ object Bench {
       else try {
         System.err.println(s"[bench] isolating ${flagged.size} ratio outliers: " +
           flagged.mkString(", "))
-        val s2 = mkSession(cpus)
+        val s2 = GraftSession.local(defaultCpus = 4)
         try {
           warmup(s2, sfDir)
-          val drain2 = mkDrain(s2.sparkContext)
+          ContextShim.drainCleaner(s2.sparkContext)
           val p1 = runProbe(s2, sfDir, "iso-pre")
           val runs = flagged.map { k =>
             val fn = SparkEntry.queries(k)
@@ -319,9 +246,7 @@ object Bench {
               val dt = try { fn(s2, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
                 catch { case e: Throwable =>
                   System.err.println(s"[bench] isolated $k failed: ${e.getMessage}"); -1.0 }
-              s2.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-              s2.catalog.clearCache()
-              drain2()
+              Obs.release(s2)
               dt
             }
             val (a, b) = (one(), one())
@@ -337,25 +262,20 @@ object Bench {
         System.err.println(s"[bench] isolation phase failed (results kept): ${e.getMessage}")
         Seq.empty
       }
-    val isoJson = isolatedRatios
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def obj(kvs: Seq[(String, Any)]) =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def pairedKeys =
-      s""""paired_baseline_total":$paired,"probe_pre":$probePre,"probe_post":$probePost,"baseline_ops_vs_paired":$pairedRatio,"value_per_probe":$valuePerProbe,"isolated_ratios":$isoJson"""
+      s""""paired_baseline_total":$paired,"probe_pre":$probePre,"probe_post":$probePost,"baseline_ops_vs_paired":$pairedRatio,"value_per_probe":$valuePerProbe,"isolated_ratios":${obj(isolatedRatios)}"""
     def line(vals: Seq[(String, Double)], tot: Double, base: Double) = {
-      val qs = vals.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      // shuffle_mb: approximate per-query shuffle WRITE volume (see the
-      // listener note) — an extra top-level key so the {"queries": sec}
-      // shape every consumer parses stays untouched
-      val sh = shuffleMb.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      // probe-normalized per-query map (time / paired probe): compare
-      // ROUNDS on these, not on raw seconds — host drift cancels
-      val rs = ratios.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      // per-query task counts (see the listener note): parallelism evidence
-      val tk = taskCount.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      // per-query codegen compiles (see compileCount): the generated-class
-      // working set that GraftSession.CodegenCacheEntries has to hold
-      val cc = compileCount.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$tot,"unit":"sec","failed":$nFailed,"baseline_ops_total":$base,$pairedKeys,"queries":$qs,"ratios":$rs,"shuffle_mb":$sh,"tasks":$tk,"compiles":$cc,"sf":"$sfDir"}"""
+      // ratios: the probe-normalized per-query map (time / paired probe):
+      // compare ROUNDS on these, not on raw seconds — host drift cancels.
+      // Per-query evidence (see timeOne) rides in extra top-level keys so
+      // the {"queries": sec} shape every consumer parses stays untouched;
+      // compiles are the generated-class working set that
+      // GraftSession.CodegenCacheEntries has to hold
+      def evidence(f: Obs.Run => Any) = obj(kept.map { case (k, _, run) => k -> f(run) })
+      val sh = evidence(r => math.rint(r.shuffleWriteBytes / 1048576.0 * 100) / 100)
+      s"""{"metric":"total","value":$tot,"unit":"sec","failed":$nFailed,"baseline_ops_total":$base,$pairedKeys,"queries":${obj(vals)},"ratios":${obj(ratios)},"shuffle_mb":$sh,"tasks":${evidence(_.tasks)},"jobs":${evidence(_.jobs)},"compiles":${obj(compileCount)},"sf":"$sfDir"}"""
     }
     // Full-precision line for human reading, then — as the VERY LAST line of
     // the run — a compact 2-decimal duplicate. The driver keeps only the
@@ -380,8 +300,8 @@ object Bench {
     } catch { case e: Throwable => System.err.println(s"[bench] full dump failed: ${e.getMessage}") }
     val budget = 1800 // driver tail window is ~2000 chars; leave margin
     def compactLine(included: Seq[(String, Double)], omitted: Seq[(String, Double)]): String = {
-      val qs = included.sortBy(_._1) // stable alphabetical order for round-over-round diffs
-        .map { case (k, v) => "\"" + k + "\":" + r2d(v) }.mkString("{", ",", "}")
+      // stable alphabetical order for round-over-round diffs
+      val qs = obj(included.sortBy(_._1).map { case (k, v) => k -> r2d(v) })
       val omit =
         if (omitted.isEmpty) ""
         else s""","omitted_ops_total":${r3(omitted.map(_._2.max(0.0)).sum)},"omitted_n":${omitted.size},"full":"BENCH_FULL.json""""

@@ -40,7 +40,7 @@ object GraftSession {
   val CodegenCacheEntries = 3000
 
   /** Apply the engine's standard configs to an existing builder (used by
-    * Verify/Bench, which own master/parallelism per the driver contract). */
+    * [[builder]] and by perfbench, which sets its own master and confs). */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     System.setProperty("java.awt.headless", "true")
     // WindowExec's "No Partition Defined" warning is quieted inside
@@ -76,6 +76,16 @@ object GraftSession {
         .master(master)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", shufflePartitions.toString))
+
+  /** The harness mains' session (Verify, Bench, ScaleBench, the `Profile*`
+    * mains): `local[n]` with n shuffle partitions, n from `SPARK_GRAFT_CPUS`
+    * or else the main's `defaultCpus`; UI off, WARN logging. */
+  def local(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(defaultCpus)
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily overridden —
     * the per-query state-store sizing knob for STREAMING pipelines. A

@@ -1,14 +1,23 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.obs.Obs
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-/** Dev utility for the optimization rounds: run a declared query k times in
-  * a warmed session and report, per run, the wall time plus the job/stage/
-  * task counts and shuffle volume — the "how many passes and shuffles does
-  * this query actually do" view that a single bench number hides.
+/** Dev utility for the optimization rounds: run declared queries k times
+  * each in a warmed session and print, per run, what [[Obs.measure]]
+  * recorded — the "how many passes and shuffles does this query actually
+  * do, and where did its time go" view that a single bench number hides:
+  *
+  *  - `[profile]` totals: wall, rows, jobs, stages, tasks, task and GC
+  *    time, shuffle read/write, spill, Janino compiles;
+  *  - `STAGE`: the ten slowest completed stages by wall time;
+  *  - `JOB`: one line per job, with its wall time and result-stage name;
+  *  - `TRIGGER`: per streaming trigger, Spark's phase durations
+  *    (`addBatch` is the batch's own work; latestOffset, getBatch,
+  *    queryPlanning, walCommit and commitOffsets are the harness overhead),
+  *    then the phase totals — printed only when the query ran streams.
+  *
+  * Runs are released between each other as in Bench (unpersist, clear
+  * cache, drain the cleaner).
   *
   * Usage: runMain graft.Profile [sfDir] [k] query [query ...]
   */
@@ -17,36 +26,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 3
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val jobs = new AtomicInteger; val stages = new AtomicInteger
-    val tasks = new AtomicInteger; val shuffleB = new AtomicLong
-    val verbose = sys.env.contains("SPARK_GRAFT_PROFILE_JOBS")
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (verbose) jobStart.put(j.jobId, (System.nanoTime(),
-          Option(j.properties).map(_.getProperty("spark.job.description", "")).getOrElse("")))
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (verbose) Option(jobStart.remove(j.jobId)).foreach { case (t0, desc) =>
-          println(f"[profile-job] job=${j.jobId} ${(System.nanoTime() - t0) / 1e3}%9.0fus $desc")
-        }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = t.taskMetrics
-        if (m != null) shuffleB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val spark = GraftSession.local(defaultCpus = 32)
 
     // same warmup as Bench so first-run numbers aren't codegen spin-up
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -55,21 +35,38 @@ object Profile {
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       (1 to k).foreach { i =>
-        Thread.sleep(250) // let listener events drain between runs
-        val (j0, s0, t0, b0) = (jobs.get, stages.get, tasks.get, shuffleB.get)
-        val w0 = System.nanoTime()
-        val rows = try fn(spark, sfDir).count() catch {
-          case e: Throwable => System.err.println(s"[profile] $n failed: ${e.getMessage}"); -1L
+        val (rows, run) = Obs.measure(spark) {
+          try fn(spark, sfDir).count() catch {
+            case e: Throwable => System.err.println(s"[profile] $n failed: ${e.getMessage}"); -1L
+          }
         }
-        val dt = (System.nanoTime() - w0) / 1e9
-        Thread.sleep(250)
-        println(f"[profile] $n run$i: $dt%6.2fs rows=$rows jobs=${jobs.get - j0} " +
-          f"stages=${stages.get - s0} tasks=${tasks.get - t0} " +
-          f"shuffleMB=${(shuffleB.get - b0) / 1048576.0}%.2f")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        report(s"$n run$i", rows, run)
+        Obs.release(spark)
       }
     }
     spark.stop()
+  }
+
+  private def mb(bytes: Long): Double = bytes / 1048576.0
+
+  private def report(label: String, rows: Long, r: Obs.Run): Unit = {
+    println(f"[profile] $label: ${r.seconds}%6.2fs rows=$rows jobs=${r.jobs} stages=${r.stages} " +
+      f"tasks=${r.tasks} taskMs=${r.taskMs} gcMs=${r.gcMs} " +
+      f"shuffleReadMB=${mb(r.shuffleReadBytes)}%.2f shuffleWriteMB=${mb(r.shuffleWriteBytes)}%.2f " +
+      f"spillMB=${mb(r.spillBytes)}%.2f compiles=${r.compiles}")
+    r.stageRows.sortBy(-_.wallMs).take(10).foreach(s =>
+      println(f"  STAGE ${s.id}%5d wall=${s.wallMs / 1000.0}%7.3f s " +
+        f"taskSum=${s.taskMs / 1000.0}%8.3f s tasks=${s.tasks}%4d " +
+        f"shR=${mb(s.shuffleReadBytes)}%7.2f MB shW=${mb(s.shuffleWriteBytes)}%7.2f MB  ${s.name}"))
+    r.jobRows.sortBy(_.id).foreach(j => println(f"  JOB ${j.id}%5d ${j.wallMs}%7d ms  ${j.label}"))
+    if (r.triggers.nonEmpty) {
+      val keys = Seq("triggerExecution", "addBatch", "latestOffset", "getBatch",
+        "queryPlanning", "walCommit", "commitOffsets")
+      r.triggers.foreach(t => println(s"  TRIGGER batch ${t.batchId}  " +
+        keys.flatMap(k => t.durationMs.get(k).map(v => s"$k=$v")).mkString(" ")))
+      val totals = r.triggers.flatMap(_.durationMs).groupMapReduce(_._1)(_._2)(_ + _)
+      println(s"  TRIGGER TOTALS triggers=${r.triggers.size} " +
+        totals.toSeq.sortBy(-_._2).map { case (k, v) => s"$k=${v}ms" }.mkString(" "))
+    }
   }
 }

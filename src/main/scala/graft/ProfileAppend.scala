@@ -15,14 +15,7 @@ object ProfileAppend {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k     = args.lift(1).map(_.toInt).getOrElse(4)
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 32)
 
     val ev = Tables.load(spark, sfDir, "events")
       .select(col("ts"), col("event_id").as("v"), col("user_id"), col("value"))

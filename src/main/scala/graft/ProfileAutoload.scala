@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off AutoLoader discovery-cost profiler (not part of the public
   * surface): the loader's per-trigger cost is one recursive listing plus a
   * set-diff against the ledger — this measures that cost as the raw
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileAutoload {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1000, 5000, 20000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 32)
 
     sizes.foreach { n =>
       val root = java.nio.file.Files.createTempDirectory(s"graft_alprof_$n").toString

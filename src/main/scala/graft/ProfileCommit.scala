@@ -1,30 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.obs.Obs
 import graft.tables.VersionedTable
 
 /** One-off per-commit latency profiler (not part of the public surface):
   * separates the Spark parquet-write job from the protocol's metadata
   * tail, per commit, on the q_versioned_deltalog shape at a given SF.
-  * Usage: runMain graft.ProfileCommit <sfDir> */
+  * Usage: runMain graft.ProfileCommit <sfDir> [cdc] */
 object ProfileCommit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-          sys.env.getOrElse("PROF_COMMITTER_V", "1"))
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
-          sys.env.getOrElse("PROF_SUCCESS", "true"))
-        // A/B knob (r19): is AQE's per-query driver overhead measurable on
-        // the tiny one-partition protocol writes?
-        .config("spark.sql.adaptive.enabled", sys.env.getOrElse("PROF_AQE", "true"))
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 32)
     val o = Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
         round(col("o_totalprice") * lit(100)).cast("long").as("cents"))
@@ -35,25 +22,12 @@ object ProfileCommit {
       (r, (System.nanoTime() - t0) / 1e6)
     }
 
-    // job-level listener: per-phase job count + summed job wall
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        starts.put(j.jobId, j.time)
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val s = Option(starts.remove(j.jobId)).getOrElse(j.time)
-        jobs.add((j.jobId, s, j.time))
-      }
-    })
+    // per phase: job count, summed job wall, and the driver-side rest
     def phase[T](label: String)(f: => T): T = {
-      jobs.clear()
-      val (r, wall) = ms(f)
-      Thread.sleep(50)
-      import scala.jdk.CollectionConverters._
-      val js = jobs.asScala.toSeq
-      val jobMs = js.map { case (_, s, e) => e - s }.sum
-      println(f"[$label] wall=$wall%.0fms jobs=${js.size} jobWall=${jobMs}ms driverGap=${wall - jobMs}%.0fms")
+      val (r, run) = Obs.measure(spark)(f)
+      val wall = run.seconds * 1000
+      println(f"[$label] wall=$wall%.0fms jobs=${run.jobs} jobWall=${run.jobMs}ms " +
+        f"driverGap=${wall - run.jobMs}%.0fms")
       r
     }
 

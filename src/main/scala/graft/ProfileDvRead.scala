@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.tables.VersionedTable
 
@@ -20,22 +19,7 @@ object ProfileDvRead {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val amp = args.lift(1).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // per-query shuffle-write accounting (the Bench listener's shape)
-    val sh = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          sh.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val spark = GraftSession.local(defaultCpus = 32)
 
     val dir = java.nio.file.Files.createTempDirectory("graft_dvprof").toString + "/t"
     val li0 = Tables.load(spark, sfDir, "lineitem")
@@ -59,11 +43,8 @@ object ProfileDvRead {
       // warm once, then 3 measured runs
       f
       val runs = (1 to 3).map { _ =>
-        sh.set(0)
-        val t0 = System.nanoTime()
-        val n = f
-        val dt = (System.nanoTime() - t0) / 1e9
-        (dt, n, sh.get() / 1048576.0)
+        val (n, run) = graft.obs.Obs.measure(spark)(f)
+        (run.seconds, n, run.shuffleWriteBytes / 1048576.0)
       }
       val best = runs.minBy(_._1)
       println(f"DVPROF $label%-22s best=${best._1}%6.3f s rows=${best._2} " +

@@ -872,32 +872,7 @@ object ScaleBench {
     val only    = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
     val srcDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val baseOut = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
-    def drained(): Long = {
-      val t0 = System.nanoTime()
-      var last = shuffleBytes.get()
-      while ((System.nanoTime() - t0) < 200e6) {
-        Thread.sleep(20)
-        val now = shuffleBytes.get()
-        if (now == last) return now
-        last = now
-      }
-      last
-    }
+    val spark   = GraftSession.local(defaultCpus = 8)
 
     val results = new StringBuilder
     factors.foreach { f =>
@@ -909,19 +884,15 @@ object ScaleBench {
       workloads.filter { case (n, _) => only.forall(_.contains(n)) }
         .foreach { case (name, fn) =>
           System.err.println(s"[scale] f=$f $name")
-          val s0 = drained()
-          val t0 = System.nanoTime()
           val res = try {
-            val rows = fn(spark, dir, f).count()
-            val sec  = (System.nanoTime() - t0) / 1e9
-            val mb   = (drained() - s0) / 1048576.0
-            f"""{"workload":"$name","factor":$f,"sec":${math.rint(sec * 100) / 100},"shuffle_mb":${math.rint(mb * 100) / 100},"rows":$rows}"""
+            val (rows, run) = graft.obs.Obs.measure(spark)(fn(spark, dir, f).count())
+            val mb = run.shuffleWriteBytes / 1048576.0
+            f"""{"workload":"$name","factor":$f,"sec":${math.rint(run.seconds * 100) / 100},"shuffle_mb":${math.rint(mb * 100) / 100},"rows":$rows}"""
           } catch {
             case e: Throwable =>
               s"""{"workload":"$name","factor":$f,"error":"${e.getMessage.take(120).replace('"', '\'')}"}"""
           }
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-          spark.catalog.clearCache()
+          graft.obs.Obs.release(spark)
           println(res)
           results.append(res).append('\n')
         }

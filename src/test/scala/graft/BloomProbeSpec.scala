@@ -1,10 +1,9 @@
 package graft
 
+import graft.obs.Obs
 import graft.operators.{Dedup, TextAnalysis}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import scala.collection.mutable.ArrayBuffer
 
 /** TEMPORARY probe: per-stage task counts + durations for the explode plans. */
 class BloomProbeSpec extends AnyFunSuite {
@@ -15,26 +14,15 @@ class BloomProbeSpec extends AnyFunSuite {
     s
   }
 
-  private val stages = ArrayBuffer[(String, Int, Long)]()
-  private val listener = new SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      stages += ((i.name.split(" ").head, i.numTasks,
-        i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)))
-    }
-  }
-
   private def timed[T](label: String)(body: => T): T = {
-    stages.clear()
-    val t0 = System.nanoTime(); val r = body
-    val tot = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] $label%-32s $tot%.2f s  stages=" +
-      stages.map { case (n, t, ms) => s"$n(tasks=$t,${ms}ms)" }.mkString(" "))
+    val (r, run) = Obs.measure(spark)(body)
+    println(f"[probe] $label%-32s ${run.seconds}%.2f s  stages=" +
+      run.stageRows.map(s => s"${s.name.split(" ").head}(tasks=${s.tasks},${s.wallMs}ms)")
+        .mkString(" "))
     r
   }
 
   test("stage anatomy") {
-    spark.sparkContext.addSparkListener(listener)
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val isEval = col("doc_id") % 10 === 0
     val base = docs.where(col("text").isNotNull)
@@ -42,13 +30,10 @@ class BloomProbeSpec extends AnyFunSuite {
     // warm
     TextAnalysis.contamination(docs, "text", "doc_id", isEval, 3).count()
     base.select(explode(Dedup.wordShingles(col("__text"), 3)).as("gram")).count()
-    Thread.sleep(500)
 
     timed("A bare explode count")(
       base.select(explode(Dedup.wordShingles(col("__text"), 3)).as("gram")).count())
-    Thread.sleep(500)
     timed("B exact contamination e2e")(
       TextAnalysis.contamination(docs, "text", "doc_id", isEval, 3).count())
-    Thread.sleep(500)
   }
 }

@@ -155,17 +155,7 @@ class ChangeFeedConsumerSpec extends SparkSpec {
     VersionedTable.commitDelete(spark, bronze, col("k") === 100L)
     VersionedTable.commitAppend(spark, Seq((900L, 1L, "new")).toDF("k", "x", "tag"), bronze)
     val silverBefore = VersionedTable.log(silver).size
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      mirror(bronze, silver)
-      Thread.sleep(300) // listener delivery is async; drain before reading
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = graft.obs.Obs.measure(spark)(mirror(bronze, silver))._2.jobs
     assert(rowsOf(silver) == rowsOf(bronze))
     // the whole span (update + delete + insert) lands as ONE conditional
     // MERGE — one probe, one rewrite, one commit. The job budget pins the
@@ -177,6 +167,6 @@ class ChangeFeedConsumerSpec extends SparkSpec {
     // scans (every undeclared scan resolves through one driver footer now).
     assert(VersionedTable.log(silver).size == silverBefore + 1,
       s"span must apply as ONE commit (${VersionedTable.log(silver).size - silverBefore})")
-    assert(jobs.get() <= 20, s"span apply cost ${jobs.get()} Spark jobs (> 20)")
+    assert(jobs <= 20, s"span apply cost $jobs Spark jobs (> 20)")
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import graft.obs.Obs
 import graft.tables.VersionedTable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Driver-latency budget for the versioned-commit protocol (round-11
   * hardening item): an uncontended commitAppend must stay within a fixed
@@ -14,24 +14,6 @@ class CommitLatencySpec extends SparkSpec {
 
   private def dirOf() = Files.createTempDirectory("graft_lat").toString + "/t"
 
-  private def countJobs[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      // listener delivery is async: settle before reading the counter
-      val t0 = System.nanoTime()
-      var last = -1
-      while (System.nanoTime() - t0 < 2e9 && n.get() != last) {
-        last = n.get(); Thread.sleep(100)
-      }
-      (r, n.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("uncontended commitAppend: bounded Spark jobs and wall time per commit") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -40,10 +22,10 @@ class CommitLatencySpec extends SparkSpec {
       .select(col("id").as("k"), (col("id") % 97L).as("x")).localCheckpoint(true)
     // warm the protocol paths (first commit pays class-loading etc.)
     VersionedTable.commitAppend(spark, base.where(col("k") < 100L).coalesce(1), dir)
-    val (_, jobs) = countJobs {
+    val jobs = Obs.measure(spark) {
       VersionedTable.commitAppend(spark,
         base.where(col("k") >= 100L && col("k") < 200L).coalesce(1), dir)
-    }
+    }._2.jobs
     // budget: 1 stage-write job + at most 1 incidental (schema/validation
     // probes are footer reads or driver-only and must NOT spawn jobs on an
     // unconstrained table)
