@@ -64,9 +64,12 @@ class GraftTable(val tableName: String, val dir: String,
   // path; a batch READ of such a table still fails loudly at analysis
   // (readDataFrame refuses).
   private lazy val resolvedSchema: StructType =
-    declaredSchema
-      .orElse(if (VersionedTable.latestVersion(dir).isEmpty) Some(new StructType()) else None)
-      .getOrElse(VersionedTable.schemaOf(SparkSession.active, dir, pinnedVersion))
+    declaredSchema.getOrElse {
+      // one log listing serves both the emptiness check and the lookup
+      val committed = VersionedTable.log(dir)
+      if (committed.isEmpty) new StructType()
+      else VersionedTable.schemaOf(SparkSession.active, dir, committed, pinnedVersion)
+    }
 
   override def schema(): StructType = resolvedSchema
 
@@ -224,10 +227,11 @@ class GraftCdfTable(tableName: String, dir: String,
   // cached like the base class's resolvedSchema (one driver read per Table
   // instance), with the clean empty-table refusal surfacing at analysis
   private lazy val cdfSchema: StructType = {
-    require(VersionedTable.latestVersion(dir).isDefined,
+    val committed = VersionedTable.log(dir)
+    require(committed.nonEmpty,
       s"graft: readChangeFeed on $dir — the table has no committed version")
     graft.sources.VersionedStream.withCdfColumns(
-      VersionedTable.schemaOf(SparkSession.active, dir, None))
+      VersionedTable.schemaOf(SparkSession.active, dir, committed, None))
   }
 
   override def schema(): StructType = cdfSchema

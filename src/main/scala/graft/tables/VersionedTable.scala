@@ -846,12 +846,14 @@ object VersionedTable {
   def log(dir: String): Seq[(Long, Long)] = {
     val ld = logDir(dir)
     val fs = ld.getFileSystem(FsIO.hadoopConf())
-    if (!fs.exists(ld)) Seq.empty
-    else {
+    // one stat answers both "does the log exist" and "is it a directory"
+    val status =
+      try Some(fs.getFileStatus(ld)) catch { case _: java.io.FileNotFoundException => None }
+    status.fold(Seq.empty[(Long, Long)]) { st =>
       // fail LOUDLY on a foreign layout at this path (e.g. a plain file
       // named _log): silently-empty here would make vacuum classify every
       // live version as an orphan and delete committed data
-      require(fs.getFileStatus(ld).isDirectory,
+      require(st.isDirectory,
         s"VersionedTable: $ld is not a log directory — $dir was not written " +
           "by this layer (or by an incompatible version of it); refusing to " +
           "treat its versions as uncommitted")
@@ -2853,8 +2855,14 @@ object VersionedTable {
     * statement (once for the relation's schema, once for the substituted
     * scan). */
   def schemaOf(spark: SparkSession, dir: String,
-      version: Option[Long] = None): org.apache.spark.sql.types.StructType = {
-    val committed = log(dir)
+      version: Option[Long] = None): org.apache.spark.sql.types.StructType =
+    schemaOf(spark, dir, log(dir), version)
+
+  /** [[schemaOf]] over an already-listed log (`committed`, as [[log]]
+    * returns it), for callers that list it anyway. */
+  private[graft] def schemaOf(spark: SparkSession, dir: String,
+      committed: Seq[(Long, Long)],
+      version: Option[Long]): org.apache.spark.sql.types.StructType = {
     require(committed.nonEmpty, s"schemaOf: $dir has no committed version")
     val v = version.getOrElse(committed.last._1)
     val entry = committed.find(_._1 == v).getOrElse(

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -20,12 +22,27 @@ import org.apache.spark.sql.types.StructType
   * so every type-mapping flag — int96, binary-as-string, legacy nanos —
   * matches what a real read would resolve). Lives in the `sql` namespace
   * for the `private[sql]` `sessionState` access, like [[StreamShim]].
+  *
+  * Every reader here is opened through [[open]], with `HadoopReadOptions`
+  * built from the conf the caller passes. The one-argument
+  * `ParquetFileReader.open(InputFile)` builds its read options from a
+  * fresh default `Configuration`, whose first lookup re-parses every
+  * Hadoop default XML resource (`core-default.xml`, `core-site.xml`, and
+  * the mapred/yarn/hdfs ones once those classes have loaded): several
+  * milliseconds on every footer, paid by every schema resolution of an
+  * undeclared-schema table, every commit-time schema gate and every
+  * DV/manifest scan, and once per file on CONVERT adoption. That default
+  * conf also lacks the session's `spark.hadoop.parquet.*` read options
+  * (e.g. `parquet.crypto.factory.class`); the passed conf carries them.
   */
 object FooterShim {
 
+  private def open(path: String, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf),
+      HadoopReadOptions.builder(conf).build())
+
   def schemaOf(spark: SparkSession, path: String): StructType = {
-    val conf = spark.asInstanceOf[ClassicSession].sessionState.newHadoopConf()
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    val reader = open(path, spark.asInstanceOf[ClassicSession].sessionState.newHadoopConf())
     try {
       val meta = reader.getFooter.getFileMetaData
       // prefer the embedded Spark schema (what the distributed inference
@@ -56,8 +73,7 @@ object FooterShim {
     spark.sparkContext
       .parallelize(paths, math.max(1, math.min(paths.size, 64)))
       .map { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f), conf.value))
+        val reader = open(f, conf.value)
         try {
           reader.getFooter.getFileMetaData.getSchema.getFields
             .toArray.map(_.toString.toLowerCase(java.util.Locale.ROOT))
