@@ -1739,13 +1739,14 @@ object SparkEntry {
       s.read.parquet(s"$work/sink").orderBy("c_id", "p_id")
     }),
 
-    // -- streaming partitioned CDC upsert, fully oracle-checked ------------
+    // -- streaming CDC upsert, fully oracle-checked -------------------------
     // Two COMMUTATIVE update batches (disjoint key sets: +50 on %3 keys,
     // zero-out on %5∖%3 keys, inserts on %11 shifted keys) stream through
-    // foreachBatch → upsertPartitioned (O(touched-bucket) I/O per batch,
-    // lease-locked partition swaps). Disjointness makes the final state
-    // independent of file-discovery order, so the streaming merge is
-    // DuckDB-replayable: the oracle applies both batches as one CASE.
+    // foreachBatch → VersionedTable.commitMerge (one log version per batch,
+    // file-grain copy-on-write, txn-marked for exactly-once replay).
+    // Disjointness makes the final state independent of file-discovery
+    // order, so the streaming merge is DuckDB-replayable: the oracle applies
+    // both batches as one CASE.
     "q_stream_upsert" -> ((s, d) => {
       val work   = scratchDir("graft_sup")
       val srcDir = s"$work/src"
@@ -1754,7 +1755,7 @@ object SparkEntry {
       // cast updates to the table's OWN balance type — fixture vintages
       // have shipped both DECIMAL(15,2) and DOUBLE here
       val balType = c.schema("c_acctbal").dataType
-      TableManager.initPartitionedTarget(c, target, Seq("c_custkey"), nBuckets = 8)
+      VersionedTable.commit(s, c, target)
       val u1 = c.where(pmod(col("c_custkey"), lit(3L)) === 0L)
         .withColumn("c_acctbal", (col("c_acctbal") + 50).cast(balType))
       val u2 = c.where(pmod(col("c_custkey"), lit(5L)) === 0L &&
@@ -1784,10 +1785,9 @@ object SparkEntry {
             java.nio.file.Paths.get(srcDir, s"$nm.parquet"))
         }
       }
-      StreamingInference.streamUpsertPartitioned(
+      StreamingInference.streamUpsert(
         s, srcDir, s.read.parquet(s"$srcDir/b1.parquet").schema, target,
-        Seq("c_custkey"), identity, s"$work/ckpt",
-        nBuckets = 8, maxFilesPerTrigger = 1)
+        Seq("c_custkey"), identity, s"$work/ckpt", maxFilesPerTrigger = 1)
         .select(col("c_custkey"), col("c_name"),
           col("c_acctbal").cast("double").as("bal"))
         .orderBy("c_custkey")
@@ -4166,15 +4166,17 @@ object SparkEntry {
     }),
 
     // -- key-addressed DELETE (right-to-be-forgotten) ----------------------
-    // Partition-scoped anti-rewrite: only the buckets holding doomed keys
-    // are read/rewritten/swapped; oracle = the surviving-row filter.
+    // Delta's key-set delete: a keys-only source MERGEd with WHEN MATCHED
+    // THEN DELETE. File-grain copy-on-write — only the files holding doomed
+    // keys are rewritten; oracle = the surviving-row filter.
     "q_delete_keys" -> ((s, d) => {
       val work = scratchDir("graft_delk") + "/t"
       val c = t(s, d, "customer").select("c_custkey", "c_name", "c_acctbal")
-      TableManager.initPartitionedTarget(c, work, Seq("c_custkey"), nBuckets = 8)
-      TableManager.deletePartitioned(s, work,
-        c.where(col("c_custkey") % 7 === 0).select("c_custkey"), Seq("c_custkey"), nBuckets = 8)
-      s.read.parquet(work)
+      VersionedTable.commit(s, c, work)
+      VersionedTable.commitMergeConditional(s, work,
+        c.where(col("c_custkey") % 7 === 0).select("c_custkey"), Seq("c_custkey"),
+        Seq(VersionedTable.WhenMatchedDelete(None)))
+      VersionedTable.read(s, work)
         .select(col("c_custkey"), col("c_name"), col("c_acctbal").cast("double").as("bal"))
         .orderBy("c_custkey")
     }),

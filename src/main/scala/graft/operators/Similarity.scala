@@ -739,9 +739,9 @@ object Similarity {
       df: DataFrame,
       vecCol: String,
       idCol: String,
-      indexPath: String,
-      lockLeaseMs: Long = graft.tables.TableManager.DefaultLockLeaseMs): Array[Array[Float]] =
-    graft.tables.FsIO.withWriteLock(indexPath, "appendToIvfIndex", lockLeaseMs) {
+      indexPath: String): Array[Array[Float]] =
+    graft.tables.FsIO.withWriteLock(indexPath, "appendToIvfIndex",
+        graft.tables.TableManager.DefaultLockLeaseMs) {
       val spark = df.sparkSession
       val centroids = loadIvfCentroids(spark, indexPath).getOrElse(
         sys.error(s"appendToIvfIndex: no IVF index at $indexPath — build one " +

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.tables.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
@@ -77,95 +78,22 @@ object StreamingInference {
       sinkDir, checkpointDir)
 
   /** Streaming MERGE (the Delta CDC pattern `writeStream.foreachBatch(merge)`):
-    * each micro-batch of updates is upserted into a managed target table via
-    * [[graft.tables.TableManager.mergeUpsert]] + atomic table overwrite.
+    * each micro-batch of updates commits as ONE
+    * [[graft.tables.VersionedTable.commitMerge]] into the versioned table at
+    * `targetDir` — one log version per batch, copy-on-write at file grain
+    * (only the files holding a batch key are rewritten; every other file
+    * stays shared with the previous version). The target must already hold
+    * a committed version ([[graft.tables.VersionedTable.commit]]).
+    *
     * Batches must be keyed uniquely — within one micro-batch, duplicate keys
     * are pre-aggregated by `reduceBatch` (latest-wins needs an ordering
     * column; pass e.g. `max_by`-style aggs), because MERGE rejects ambiguous
-    * sources. The checkpoint makes the upsert exactly-once per batch id on
-    * restart: a re-run of a committed batch re-merges the same rows, and
-    * upsert is idempotent for identical inputs.
-    *
-    * 100 TB shape: each micro-batch's merge is the broadcast-friendly
-    * LeftOuter+LeftAnti plan (update batches are small relative to the
-    * target, the common CDC case); the full-table overwrite stands in for
-    * Delta's transactional file replacement — on real Delta this callback
-    * body would be `DeltaTable.merge`, everything else identical. */
+    * sources. Exactly-once: each merge carries the txn marker
+    * (`graft.upsert:<checkpointDir>`, batchId), so a batch that committed to
+    * the table but crashed before its checkpoint commit replays as a no-op
+    * (the [[StreamingMatview]] and `graft` sink idiom). Returns the final
+    * target contents. */
   def streamUpsert(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      targetTable: String,
-      keyCols: Seq[String],
-      reduceBatch: DataFrame => DataFrame,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    import graft.tables.TableManager
-    val q = readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // crash recovery BEFORE reading the target: the two renames below are
-        // not atomic together — a crash between them leaves the target parked
-        // under __merge_old (and the merged batch under __merge_tmp). Roll
-        // BACK by restoring old→target and dropping tmp: the interrupted
-        // batch never committed to the checkpoint, so it re-runs and
-        // re-merges idempotently.
-        recoverSwappedTable(spark, targetTable)
-        val merged = TableManager.mergeUpsert(
-          spark.table(targetTable), reduceBatch(batch), keyCols)
-        // materialize into a TEMP table before touching the target: the merge
-        // plan reads the table being replaced, so writing over it in place
-        // would race its own scan. saveAsTable fully writes the result
-        // distributed (no driver collect). The swap then renames the OLD
-        // target aside before renaming tmp in — a crash between the two
-        // renames leaves both tables recoverable (old data under __merge_old,
-        // new data under __merge_tmp) and auto-restores on the next batch /
-        // next streamUpsert call; a drop-then-rename ordering would have an
-        // unrecoverable window with NO copy of the target at all.
-        // File-commit-protocol guarantees, consistent with TableManager's
-        // documented (non-transactional) scope. For a partition-scoped swap
-        // that does not rewrite the whole table, use
-        // [[streamUpsertPartitioned]] — the 100 TB-shaped variant.
-        val tmp = targetTable + "__merge_tmp"
-        val old = targetTable + "__merge_old"
-        TableManager.dropTable(spark, tmp)
-        merged.write.format("parquet").saveAsTable(tmp)
-        spark.sql(s"ALTER TABLE $targetTable RENAME TO $old")
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $targetTable")
-        TableManager.dropTable(spark, old)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(targetTable)
-  }
-
-  /** Restore a target orphaned by a crash between [[streamUpsert]]'s two
-    * renames: if the target is gone but its `__merge_old` copy exists,
-    * rename it back; stale `__merge_tmp`/`__merge_old` leftovers are
-    * dropped. Safe to call when no orphan exists (no-op). */
-  def recoverSwappedTable(spark: SparkSession, targetTable: String): Unit = {
-    import graft.tables.TableManager
-    val old = targetTable + "__merge_old"
-    if (!spark.catalog.tableExists(targetTable) && spark.catalog.tableExists(old))
-      spark.sql(s"ALTER TABLE $old RENAME TO $targetTable")
-    TableManager.dropTable(spark, targetTable + "__merge_tmp")
-    TableManager.dropTable(spark, old)
-  }
-
-  /** Streaming MERGE into a BUCKET-PARTITIONED path target — the scale-safe
-    * CDC sink. Where [[streamUpsert]] rewrites the whole table per
-    * micro-batch (O(target) I/O — Delta-emulation fidelity, but a
-    * scale-killer), this variant lays the target out partitioned by
-    * `key_bucket` and each batch rewrites ONLY the partitions its keys hash
-    * into ([[graft.tables.TableManager.upsertPartitioned]]): per-batch I/O
-    * is O(touched buckets), untouched partitions' files stay byte-identical,
-    * and an interrupted partition swap rolls forward from the recovery
-    * marker on the next batch. Initialize the target with
-    * [[graft.tables.TableManager.initPartitionedTarget]]. Returns the final
-    * target contents (without the internal `key_bucket` column). */
-  def streamUpsertPartitioned(
       spark: SparkSession,
       srcDir: String,
       schema: StructType,
@@ -173,20 +101,21 @@ object StreamingInference {
       keyCols: Seq[String],
       reduceBatch: DataFrame => DataFrame,
       checkpointDir: String,
-      nBuckets: Int = 64,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    import graft.tables.TableManager
+    // stable across restarts: the checkpoint IS the stream's identity
+    val appId = s"graft.upsert:$checkpointDir"
     val q = readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TableManager.upsertPartitioned(
-          spark, targetDir, reduceBatch(batch), keyCols, nBuckets)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        VersionedTable.commitMerge(spark, targetDir, reduceBatch(batch), keyCols,
+          txn = Some((appId, batchId)))
+        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(targetDir).drop("key_bucket")
+    VersionedTable.read(spark, targetDir)
   }
 
   /** Streaming NEAR-dedup of an arriving document stream against the

@@ -62,10 +62,9 @@ object ChangeFeedConsumer {
   def pollSpan(spark: SparkSession, dir: String, id: String)(
       snapshot: (DataFrame, Long) => Unit)(
       span: (Long, Long) => Unit,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       sinkOffset: () => Option[Long] = () => None): Long =
     FsIO.withWriteLock(offsetPath(dir, id).toString, s"ChangeFeedConsumer($id)",
-        lockLeaseMs) {
+        TableManager.DefaultLockLeaseMs) {
       val latest = VersionedTable.latestVersion(dir)
         .getOrElse(sys.error(s"ChangeFeedConsumer: $dir has no committed version"))
       // effective offset = the FURTHEST of the offset file and the sink's
@@ -108,12 +107,11 @@ object ChangeFeedConsumer {
   def poll(spark: SparkSession, dir: String, id: String,
       keyCols: Seq[String], valueCols: Seq[String])(
       snapshot: (DataFrame, Long) => Unit)(
-      changes: (DataFrame, Long, Long) => Unit,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    pollSpan(spark, dir, id)(snapshot)({ (from, latest) =>
+      changes: (DataFrame, Long, Long) => Unit): Long =
+    pollSpan(spark, dir, id)(snapshot) { (from, latest) =>
       changes(VersionedTable.changes(spark, dir, from, latest, keyCols, valueCols),
         from, latest)
-    }, lockLeaseMs)
+    }
 
   /** Bronze→silver replication through the feed: maintains `silverDir` as a
     * row-identical mirror of `bronzeDir`'s latest version, incrementally —

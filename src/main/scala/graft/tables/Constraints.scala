@@ -40,14 +40,13 @@ object Constraints {
     * refuses duplicates and malformed names. Serialized with commits via
     * the table write lease so a concurrent commit can't slip unvalidated
     * rows between the scan and the publish. */
-  def add(spark: SparkSession, dir: String, name: String, predicateSql: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Unit = {
+  def add(spark: SparkSession, dir: String, name: String, predicateSql: String): Unit = {
     require(nameRe.findFirstIn(name).isDefined,
       s"constraint name `$name` must match ${nameRe.regex}")
     // parse NOW: an unparseable predicate must fail the ALTER, not every
     // future commit
     expr(predicateSql)
-    FsIO.withWriteLock(dir, s"Constraints.add($name)", lockLeaseMs) {
+    FsIO.withWriteLock(dir, s"Constraints.add($name)", TableManager.DefaultLockLeaseMs) {
       val fs = cDir(dir).getFileSystem(FsIO.hadoopConf())
       val target = new Path(cDir(dir), s"$name.check")
       require(!fs.exists(target), s"constraint `$name` already exists on $dir")

@@ -150,8 +150,7 @@ object MaterializedAgg {
     * for an all-null group). */
   def create(spark: SparkSession, sourceDir: String, viewDir: String,
       keyCols: Seq[String], groupCols: Seq[String], sumCols: Seq[String],
-      minMaxCols: Seq[String] = Seq.empty,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long = {
+      minMaxCols: Seq[String] = Seq.empty): Long = {
     require(groupCols.nonEmpty, "MaterializedAgg: need at least one group column")
     require(keyCols.nonEmpty, "MaterializedAgg: need the source's key columns")
     val srcV = VersionedTable.latestVersion(sourceDir)
@@ -172,7 +171,7 @@ object MaterializedAgg {
           Seq(min(col(s"`$c`")).as(minColName(c)),
             max(col(s"`$c`")).as(maxColName(c)))
         }): _*)
-    val v = VersionedTable.commit(spark, state, viewDir, lockLeaseMs)
+    val v = VersionedTable.commit(spark, state, viewDir)
     writeMeta(viewDir, v, Meta(sourceDir, srcV, keyCols, groupCols, sumCols, minMaxCols))
     v
   }
@@ -188,14 +187,14 @@ object MaterializedAgg {
     * commit the result as the next view version (returned). A no-op when
     * the source hasn't moved — returns the current view version without
     * committing. */
-  def refresh(spark: SparkSession, viewDir: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
+  def refresh(spark: SparkSession, viewDir: String): Long =
     // Serialize refreshes on the META scope (lock file `_matview.__write_lock`
     // inside the view dir), NOT on viewDir itself — the inner
     // VersionedTable.commit takes the viewDir lease, and the lease is not
     // reentrant. Two refreshes still exclude each other here, so the
     // read-state → fold → commit → meta sequence stays single-writer.
-    FsIO.withWriteLock(metaDir(viewDir).toString, "MaterializedAgg.refresh", lockLeaseMs) {
+    FsIO.withWriteLock(metaDir(viewDir).toString, "MaterializedAgg.refresh",
+        TableManager.DefaultLockLeaseMs) {
       val (viewV, meta) = latestMeta(viewDir)
       val srcV = VersionedTable.latestVersion(meta.sourceDir)
         .getOrElse(sys.error(s"MaterializedAgg: source ${meta.sourceDir} has no versions"))
@@ -285,7 +284,7 @@ object MaterializedAgg {
           if (mm.isEmpty) merged
           else foldMinMax(spark, meta, srcV, state, ch, merged)
         }
-        val v = VersionedTable.commit(spark, finalState, viewDir, lockLeaseMs)
+        val v = VersionedTable.commit(spark, finalState, viewDir)
         writeMeta(viewDir, v, meta.copy(sourceVersion = srcV))
         v
       }

@@ -76,9 +76,10 @@ object TableManager {
     fs.delete(bak, true)
   }
 
-  /** Default write-lease length for the swap-protocol writers. Since r17
-    * the data-proportional holders (the compact* family, upsert/delete
-    * Partitioned, SkippingIndex.appendClustered) renew it every
+  /** Write-lease length of every table writer (versioned commits, the
+    * compact* family, constraints, views, the IVF index append). Since r17
+    * the data-proportional holders (the compact* family,
+    * SkippingIndex.appendClustered) renew it every
     * `leaseMs/3` ([[FsIO.withWriteLockHeartbeat]]) — 15 min bounds the
     * longest tolerated heartbeat STALL, not the stage-write length, so a
     * multi-hour 100 TB rewrite never looks crashed while a genuinely
@@ -90,15 +91,14 @@ object TableManager {
     * `targetFiles` files via an atomic rename swap. A maintenance procedure,
     * not a Catalyst rule (SURVEY.md §4). Single-writer by lease lock — a
     * second writer entering the swap mid-flight would interleave renames. */
-  def compact(spark: SparkSession, dir: String, targetFiles: Int,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
+  def compact(spark: SparkSession, dir: String, targetFiles: Int): Unit =
     // HEARTBEAT lease (r17): the rewrite inside the lock is
     // data-proportional — on a 100 TB table it outlives any fixed lease,
     // and a rival takeover would share the .__compact_tmp path with the
     // still-running writer (clobbered stage, partial table published by
     // the interleaved swap). Renewal keeps a live writer unstealable;
     // verifyOwned aborts a genuinely lost writer BEFORE its swap.
-    FsIO.withWriteLockHeartbeat(dir, "compact", lockLeaseMs) { hb =>
+    FsIO.withWriteLockHeartbeat(dir, "compact", DefaultLockLeaseMs) { hb =>
       val tmp = new Path(dir + ".__compact_tmp")
       spark.read.parquet(dir).repartition(targetFiles).write.mode("overwrite").parquet(tmp.toString)
       hb.verifyOwned("the compact swap")
@@ -113,9 +113,8 @@ object TableManager {
     * on the partition column (each partition value lands wholly in one
     * task → one file per partition dir), then the same lease-locked atomic
     * rename swap. */
-  def compactPartitioned(spark: SparkSession, dir: String, partitionCol: String,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
-    FsIO.withWriteLockHeartbeat(dir, "compactPartitioned", lockLeaseMs) { hb =>
+  def compactPartitioned(spark: SparkSession, dir: String, partitionCol: String): Unit =
+    FsIO.withWriteLockHeartbeat(dir, "compactPartitioned", DefaultLockLeaseMs) { hb =>
       val tmp = new Path(dir + ".__compact_tmp")
       spark.read.parquet(dir)
         .repartition(col(partitionCol))
@@ -140,9 +139,8 @@ object TableManager {
     * rule airtight. The sentinel can never collide with a real batch id
     * (ids are ≥ 0) and re-folds idempotently on the next compaction.
     * Same lease-locked atomic rename swap as [[compactPartitioned]]. */
-  def compactBatchIndex(spark: SparkSession, dir: String, targetFiles: Int = 1,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
-    FsIO.withWriteLockHeartbeat(dir, "compactBatchIndex", lockLeaseMs) { hb =>
+  def compactBatchIndex(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
+    FsIO.withWriteLockHeartbeat(dir, "compactBatchIndex", DefaultLockLeaseMs) { hb =>
       val raw = spark.read.parquet(dir)
       require(raw.columns.contains("batch_id"),
         s"$dir is not a batch-partitioned dedup index (no batch_id)")
@@ -170,9 +168,9 @@ object TableManager {
     * a 100 TB full scan into a handful of file reads for selective
     * predicates; here it is the same atomic rename-swap procedure as
     * [[compact]]. */
-  def compactZOrder(spark: SparkSession, dir: String, colA: String, colB: String, targetFiles: Int,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
-    FsIO.withWriteLockHeartbeat(dir, "compactZOrder", lockLeaseMs) { hb =>
+  def compactZOrder(spark: SparkSession, dir: String, colA: String, colB: String,
+      targetFiles: Int): Unit =
+    FsIO.withWriteLockHeartbeat(dir, "compactZOrder", DefaultLockLeaseMs) { hb =>
     val df  = spark.read.parquet(dir)
     val tmp = new Path(dir + ".__zorder_tmp")
     zLayout(df, colA, colB, targetFiles, "compactZOrder")
@@ -293,245 +291,11 @@ object TableManager {
     VersionedTable.invalidateEntryCache(dir)
   }
 
-  // ---- partition-scoped upsert target (the streaming-CDC table layout) ----
-  //
-  // A CDC stream's target must absorb small keyed update batches without
-  // rewriting itself: lay the table out partitioned by a stable key bucket
-  // (`key_bucket = pmod(xxhash64(keys), nBuckets)`), merge each batch against
-  // ONLY the buckets its keys hash into, and swap just those partition
-  // directories. Per batch, I/O is O(touched buckets), not O(target) — at
-  // 100 TB with 4096 buckets, a 10-key batch rewrites ≤10 buckets (~0.25% of
-  // the table), and every other partition's files are untouched bytes.
-  // Crash-safety: the staged files are fully written BEFORE a marker lists
-  // the buckets being swapped; recovery rolls the swap forward from the
-  // marker (stage survives), and a re-run of the uncommitted micro-batch
-  // re-merges idempotently.
-
-  /** Stable bucket column over the key columns. xxhash64 never yields null
-    * (null keys hash to the seed), so every row lands in a real partition. */
-  def keyBucket(keyCols: Seq[String], nBuckets: Int): Column =
-    pmod(xxhash64(keyCols.map(c => col(s"`$c`")): _*), lit(nBuckets.toLong)).cast("int")
-
-  /** Lay out the initial target: one shuffle by bucket, then a partitioned
-    * write (each bucket directory gets contiguous files), plus a `_layout`
-    * sidecar recording (nBuckets, keyCols) — [[upsertPartitioned]] refuses
-    * to merge under a different layout, because a mismatched bucket count
-    * would hash a key into the wrong partition and silently DUPLICATE it
-    * (the lookup misses, the "insert" lands in a new bucket while the old
-    * row survives in the original one). */
-  def initPartitionedTarget(df: DataFrame, targetDir: String, keyCols: Seq[String], nBuckets: Int): Unit = {
-    df.withColumn("key_bucket", keyBucket(keyCols, nBuckets))
-      .repartition(col("key_bucket"))
-      .write.mode("overwrite").partitionBy("key_bucket").parquet(targetDir)
-    // The sidecar must land after the data (overwrite clears the dir) but
-    // atomically: write-to-temp-then-rename, so no reader ever observes a
-    // partially written layout record. A crash in the window between the
-    // data write and this rename leaves a target WITHOUT a sidecar — which
-    // requireLayout treats as a hard error, not a bypassed check.
-    val layout = new Path(targetDir, "_layout")
-    val tmp    = new Path(targetDir, "_layout.tmp")
-    FsIO.writeText(tmp.toString, s"nBuckets=$nBuckets\nkeyCols=${keyCols.mkString(",")}\n")
-    val fs = layout.getFileSystem(FsIO.hadoopConf())
-    fs.delete(layout, false)
-    if (!fs.rename(tmp, layout)) sys.error(s"initPartitionedTarget: could not publish $layout")
-  }
-
-  /** Every [[upsertPartitioned]] target MUST carry the `_layout` sidecar
-    * [[initPartitionedTarget]] writes. A missing sidecar is a hard error
-    * (crashed init, or a directory that was never initialized) — silently
-    * skipping the check would let a mismatched nBuckets merge duplicate
-    * keys across buckets, the exact failure the guard exists to stop. */
-  private def requireLayout(targetDir: String, keyCols: Seq[String], nBuckets: Int): Unit =
-    FsIO.readText(s"$targetDir/_layout") match {
-      case None =>
-        sys.error(s"upsertPartitioned: target $targetDir has no _layout sidecar — " +
-          "it was not initialized by initPartitionedTarget (or init crashed before " +
-          "publishing the sidecar). Re-run initPartitionedTarget before merging; " +
-          "merging unguarded could silently duplicate keys across buckets")
-      case Some(body) =>
-        val fields = body.split("\n").map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
-        val declared = (fields("nBuckets").toInt, fields("keyCols").split(",").toSeq)
-        require(declared == ((nBuckets, keyCols)),
-          s"upsertPartitioned: target $targetDir was initialized with " +
-            s"(nBuckets=${declared._1}, keyCols=${declared._2.mkString(",")}) but this merge " +
-            s"uses (nBuckets=$nBuckets, keyCols=${keyCols.mkString(",")}) — a layout mismatch " +
-            "would silently duplicate keys across buckets")
-    }
-
-  private def upsertStageDir(targetDir: String) = targetDir + ".__upsert_stage"
-  private def upsertMarker(targetDir: String)   = new Path(targetDir, "_merge_inprogress")
-
-  /** Roll forward a swap interrupted by a crash: the marker file lists the
-    * buckets being swapped and only exists while the fully-written stage
-    * directory does. Any bucket whose staged partition is still present is
-    * re-swapped (delete-then-atomic-rename is idempotent); buckets already
-    * moved have no staged copy left and are skipped. Returns true if there
-    * was orphaned state. Runs automatically at the start of every
-    * [[upsertPartitioned]]. */
-  def recoverPartitionedTarget(spark: SparkSession, targetDir: String): Boolean = {
-    val fs     = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = upsertMarker(targetDir)
-    val stage  = upsertStageDir(targetDir)
-    if (!fs.exists(marker)) {
-      // no marker ⇒ no swap in flight; a leftover stage dir is pre-marker
-      // garbage from a crash during the stage write — safe to drop
-      if (fs.exists(new Path(stage))) fs.delete(new Path(stage), true)
-      return false
-    }
-    val in = fs.open(marker)
-    val buckets = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").filter(_.nonEmpty).map(_.toInt).toSeq finally in.close()
-    buckets.foreach { b =>
-      val sp = new Path(stage, s"key_bucket=$b")
-      if (fs.exists(sp)) {
-        val tp = new Path(targetDir, s"key_bucket=$b")
-        if (fs.exists(tp)) fs.delete(tp, true)
-        if (!fs.rename(sp, tp)) sys.error(s"recoverPartitionedTarget: could not restore bucket $b")
-      }
-    }
-    fs.delete(marker, false)
-    fs.delete(new Path(stage), true)
-    true
-  }
-
-  /** Merge `updates` (unique per key, NO `key_bucket` column — it derives
-    * here) into a bucket-partitioned target: read only the touched buckets,
-    * [[mergeUpsert]] against them, stage the rewritten buckets, then swap
-    * just those partition directories. Untouched partitions' files are never
-    * opened, rewritten, or moved. */
-  def upsertPartitioned(
-      spark: SparkSession,
-      targetDir: String,
-      updates: DataFrame,
-      keyCols: Seq[String],
-      nBuckets: Int,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
-    // single-writer HEARTBEAT lease over recover + stage + swap: two
-    // upserts interleaving the marker/rename steps could each roll forward
-    // the other's half-finished swap, and the stage write is
-    // touched-bucket-proportional (see compact for the renewal rationale)
-    FsIO.withWriteLockHeartbeat(targetDir, "upsertPartitioned", lockLeaseMs) { hb =>
-      recoverPartitionedTarget(spark, targetDir)
-      requireLayout(targetDir, keyCols, nBuckets)
-      // cache the (small) update batch: it feeds the touched-bucket probe AND
-      // both mergeUpsert join branches during the stage write — uncached, a
-      // reduceBatch shuffle upstream would re-run three times per micro-batch
-      val withBucket = updates.withColumn("key_bucket", keyBucket(keyCols, nBuckets)).persist()
-      try {
-        // ONE probe job delivers the touched buckets AND proves source-key
-        // uniqueness (bounded by nBuckets — driver-safe). Proving it here
-        // lets mergeUpsert skip its per-branch window tripwire: the window
-        // is a source-sized shuffle that both join branches recomputed —
-        // two shuffles of every micro-batch, pure per-batch fixed cost.
-        val probe = withBucket.groupBy("key_bucket").agg(
-          count(lit(1)).as("__n"),
-          count_distinct(struct(keyCols.map(c => col(s"`$c`")): _*)).as("__nk"))
-          .collect()
-        val dup = probe.find(r => r.getLong(1) != r.getLong(2))
-        require(dup.isEmpty,
-          "upsertPartitioned: duplicate source key(s) in bucket " +
-            s"${dup.map(_.getInt(0)).getOrElse(-1)} — MERGE requires a unique " +
-            "source per key; pre-aggregate the source")
-        val touched = probe.map(_.getInt(0)).sorted
-        if (touched.nonEmpty)
-          upsertBuckets(spark, targetDir, withBucket, keyCols, touched,
-            () => hb.verifyOwned("publishing the staged buckets"))
-      } finally withBucket.unpersist(false)
-    }
-
-  private def upsertBuckets(
-      spark: SparkSession,
-      targetDir: String,
-      withBucket: DataFrame,
-      keyCols: Seq[String],
-      touched: Array[Int],
-      preCommit: () => Unit): Unit = {
-    val current = spark.read.parquet(targetDir)
-      .where(col("key_bucket").isin(touched.map(Int.box).toIndexedSeq: _*))
-    // uniqueness was proven by the caller's probe — skip the window tripwire
-    val merged = mergeUpsert(current, withBucket, keyCols, keysProvenUnique = true)
-    commitStagedBuckets(spark, targetDir, merged, touched, "upsertPartitioned", preCommit)
-  }
-
-  /** Shared stage→marker→swap tail of the partition-scoped writers: write
-    * the rewritten buckets to the stage dir, ensure every touched bucket
-    * has a staged partition (an all-rows-deleted bucket stages EMPTY —
-    * parquet's writer drops empty partitions, and skipping the swap would
-    * resurrect the deleted rows), then the marker/rename/cleanup protocol
-    * [[recoverPartitionedTarget]] rolls forward. */
-  private def commitStagedBuckets(
-      spark: SparkSession,
-      targetDir: String,
-      rewritten: DataFrame,
-      touched: Array[Int],
-      label: String,
-      preCommit: () => Unit = () => ()): Unit = {
-    val stage = upsertStageDir(targetDir)
-    deleteDir(spark, stage)
-    rewritten.repartition(col("key_bucket"))
-      .write.mode("overwrite").partitionBy("key_bucket").parquet(stage)
-    val fs = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.foreach { b =>
-      val sp = new Path(stage, s"key_bucket=$b")
-      if (!fs.exists(sp)) fs.mkdirs(sp) // bucket emptied: stage an empty dir
-    }
-    // ownership gate BEFORE the marker: the marker is the roll-forward
-    // commit point, and a writer whose lease was seized mid-stage-write
-    // may be publishing a stage a rival has since clobbered
-    preCommit()
-    // marker AFTER the stage is fully written: its existence is the recovery
-    // contract ("stage is complete — roll forward")
-    FsIO.writeText(upsertMarker(targetDir).toString, touched.mkString("\n"))
-    touched.foreach { b =>
-      val sp = new Path(stage, s"key_bucket=$b")
-      val tp = new Path(targetDir, s"key_bucket=$b")
-      if (fs.exists(tp)) fs.delete(tp, true)
-      if (!fs.rename(sp, tp)) sys.error(s"$label: swap failed for bucket $b")
-    }
-    fs.delete(upsertMarker(targetDir), false)
-    fs.delete(new Path(stage), true)
-  }
-
-  /** Key-addressed DELETE (the GDPR right-to-be-forgotten shape) over a
-    * bucket-partitioned target: read ONLY the buckets holding the doomed
-    * keys, anti-join them out, and swap just those partitions — O(touched
-    * buckets) I/O like [[upsertPartitioned]], same lease lock, marker
-    * recovery, and crash-safe rename protocol. A bucket whose every row
-    * dies swaps in as an empty partition rather than being skipped (the
-    * correctness trap [[commitStagedBuckets]] documents). */
-  def deletePartitioned(
-      spark: SparkSession,
-      targetDir: String,
-      keys: DataFrame,
-      keyCols: Seq[String],
-      nBuckets: Int,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
-    FsIO.withWriteLockHeartbeat(targetDir, "deletePartitioned", lockLeaseMs) { hb =>
-      recoverPartitionedTarget(spark, targetDir)
-      requireLayout(targetDir, keyCols, nBuckets)
-      val delKeys = keys.select(keyCols.map(col): _*).distinct()
-        .withColumn("key_bucket", keyBucket(keyCols, nBuckets)).persist()
-      try {
-        val touched = delKeys.select("key_bucket").distinct()
-          .collect().map(_.getInt(0)).sorted // bounded by nBuckets — driver-safe
-        if (touched.nonEmpty) {
-          val current = spark.read.parquet(targetDir)
-            .where(col("key_bucket").isin(touched.map(Int.box).toIndexedSeq: _*))
-          // delete set is small by contract → broadcast anti join; the
-          // target's payload never shuffles
-          val remaining = current.join(
-            broadcast(delKeys.select(keyCols.map(col): _*)), keyCols, "left_anti")
-          commitStagedBuckets(spark, targetDir, remaining, touched, "deletePartitioned",
-            () => hb.verifyOwned("publishing the staged buckets"))
-        }
-      } finally delKeys.unpersist(false)
-    }
-
   /** Delta `MERGE INTO` emulation (upsert): WHEN MATCHED THEN UPDATE SET
     * <source columns>, WHEN NOT MATCHED THEN INSERT. The reference's storage
     * layer (Delta Lake) ships MERGE as its canonical upsert; on plain Parquet
-    * we express the same semantics relationally, then the caller overwrites
-    * the table ([[overwriteTable]]) for persistence.
+    * we express the same semantics relationally; [[VersionedTable.commitMerge]]
+    * applies it to the touched files and commits the result as one version.
     *
     * Result schema = target schema. For each matched key, non-key columns
     * present in `source` take the source value; columns absent from `source`
@@ -551,14 +315,8 @@ object TableManager {
     * columns, and be unique per key. Like Delta MERGE, a duplicate source
     * key fails LOUDLY at execution time (a per-row assertion riding the
     * plan — silent fan-out of matched target rows would be corrupted
-    * output); pre-aggregate the source to choose a winner.
-    * `keysProvenUnique` (internal): a caller that has ALREADY proven source
-    * keys unique (upsertPartitioned's touched-bucket probe doubles as the
-    * proof) skips the window tripwire — the window is a source-sized
-    * shuffle that BOTH join branches recompute, two shuffles of every
-    * micro-batch in the streaming-upsert loop. */
-  def mergeUpsert(target: DataFrame, source: DataFrame, keyCols: Seq[String],
-      keysProvenUnique: Boolean = false): DataFrame = {
+    * output); pre-aggregate the source to choose a winner. */
+  def mergeUpsert(target: DataFrame, source: DataFrame, keyCols: Seq[String]): DataFrame = {
     val tCols = target.columns.toSeq
     // Membership checks follow the analyzer's case sensitivity (default:
     // INsensitive) — a source column cased differently from the target must
@@ -588,15 +346,13 @@ object TableManager {
     // source's keys (source-sized shuffle only — the cheap side) detects
     // contract violations where they corrupt output instead of trusting docs.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(c => col(s"`$c`")): _*)
-    val marked =
-      if (keysProvenUnique) source.withColumn("__matched", lit(true))
-      else source.withColumn("__matched",
-        when(count(lit(1)).over(w) === 1, lit(true))
-          .otherwise(raise_error(concat(
-            lit("mergeUpsert: duplicate source key ("),
-            concat_ws(",", keyCols.map(c => col(s"`$c`").cast("string")): _*),
-            lit(") — MERGE requires a unique source per key; pre-aggregate the source")))
-            .cast("boolean")))
+    val marked = source.withColumn("__matched",
+      when(count(lit(1)).over(w) === 1, lit(true))
+        .otherwise(raise_error(concat(
+          lit("mergeUpsert: duplicate source key ("),
+          concat_ws(",", keyCols.map(c => col(s"`$c`").cast("string")): _*),
+          lit(") — MERGE requires a unique source per key; pre-aggregate the source")))
+          .cast("boolean")))
     val updated = target.alias("t").join(marked.alias("s"), cond, "left_outer")
       // the filter is semantically a no-op (unmatched rows coalesce true;
       // matched rows' marker is true or raises) — its job is to REFERENCE

@@ -957,9 +957,8 @@ object VersionedTable {
     * rename are each atomic creates (never a delete of existing metadata),
     * so every crash window leaves the previously committed history fully
     * visible — never a torn table. */
-  def commit(spark: SparkSession, df: DataFrame, dir: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    FsIO.withWriteLock(dir, "VersionedTable.commit", lockLeaseMs) {
+  def commit(spark: SparkSession, df: DataFrame, dir: String): Long =
+    FsIO.withWriteLock(dir, "VersionedTable.commit", TableManager.DefaultLockLeaseMs) {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // next = one past anything ever attempted — committed OR orphaned —
       // so a crashed commit's number is never reused (reuse would let a
@@ -1075,7 +1074,6 @@ object VersionedTable {
     * commit) cannot double the rows — the exactly-once contract streaming
     * writers rely on. */
   def commitAppend(spark: SparkSession, df: DataFrame, dir: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // replay short-circuit before any staging work — an optimization only;
@@ -1112,8 +1110,8 @@ object VersionedTable {
       validateStaged(spark, dir, newRels, "VersionedTable.commitAppend", preDeclared)
       // the publish tail holds the lease for milliseconds, so a LIVE rival
       // ahead of us resolves by waiting, not erroring (bounded by the lease)
-      FsIO.withWriteLockRetry(dir, "VersionedTable.commitAppend", lockLeaseMs,
-        maxWaitMs = lockLeaseMs) {
+      FsIO.withWriteLockRetry(dir, "VersionedTable.commitAppend", TableManager.DefaultLockLeaseMs,
+        maxWaitMs = TableManager.DefaultLockLeaseMs) {
         val replayed = txn.flatMap { case (app, tv) =>
           lastTxnVersion(dir, app).filter(_ >= tv) }
         if (replayed.isDefined) {
@@ -1179,7 +1177,6 @@ object VersionedTable {
     * as [[commitAppend]]; a concurrent evolve is re-gated under the lease
     * against the head's schema. */
   def commitAppendEvolve(spark: SparkSession, df: DataFrame, dir: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val preReplayed = txn.flatMap { case (app, tv) =>
@@ -1234,8 +1231,8 @@ object VersionedTable {
         s"a${java.util.UUID.randomUUID().toString.take(8)}")
       val provenAgainst = Constraints.list(dir)
       validateStaged(spark, dir, newRels, "commitAppendEvolve", preDeclared)
-      FsIO.withWriteLockRetry(dir, "commitAppendEvolve", lockLeaseMs,
-        maxWaitMs = lockLeaseMs) {
+      FsIO.withWriteLockRetry(dir, "commitAppendEvolve", TableManager.DefaultLockLeaseMs,
+        maxWaitMs = TableManager.DefaultLockLeaseMs) {
         val replayed = txn.flatMap { case (app, tv) =>
           lastTxnVersion(dir, app).filter(_ >= tv) }
         if (replayed.isDefined) {
@@ -1364,7 +1361,7 @@ object VersionedTable {
       fs: org.apache.hadoop.fs.FileSystem, dir: String, op: String,
       readV: Long, readEntries: Seq[FileEntry], result: Seq[FileEntry],
       staged: Seq[String], provenAgainst: Seq[(String, String)],
-      txn: Option[(String, Long)], lockLeaseMs: Long,
+      txn: Option[(String, Long)],
       dataChange: Boolean = true, validateRels: Seq[String] = Seq.empty,
       validateDeclared: Option[org.apache.spark.sql.types.StructType] = None,
       /** Declared schema to publish WITH this commit (merge-folded
@@ -1373,7 +1370,8 @@ object VersionedTable {
         * version missing its schema. */
       declareSchema: Option[org.apache.spark.sql.types.StructType] = None,
       opLabel: String = ""): Long =
-    FsIO.withWriteLockRetry(dir, op, lockLeaseMs, maxWaitMs = lockLeaseMs) {
+    FsIO.withWriteLockRetry(dir, op, TableManager.DefaultLockLeaseMs,
+        maxWaitMs = TableManager.DefaultLockLeaseMs) {
       val replayed = txn.flatMap { case (app, tv) =>
         lastTxnVersion(dir, app).filter(_ >= tv) }
       if (replayed.isDefined) {
@@ -1433,7 +1431,7 @@ object VersionedTable {
     * (bounded) if a rival rewrite raced ours ([[publishRebased]]). */
   private def copyOnWrite(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column, rewrite: DataFrame => DataFrame,
-      op: String, lockLeaseMs: Long,
+      op: String,
       txn: Option[(String, Long)] = None,
       opLabel: String = ""): Long = withOccRetries(op) { () =>
     import org.apache.spark.sql.functions.col
@@ -1480,7 +1478,7 @@ object VersionedTable {
       publishRebased(spark, fs, dir, op, pv, entries,
         untouched ++ newRels.map(FileEntry(_, Nil)),
         staged = newRels, provenAgainst = provenAgainst,
-        txn = txn, lockLeaseMs = lockLeaseMs, validateRels = newRels,
+        txn = txn, validateRels = newRels,
         validateDeclared = declared, opLabel = opLabel)
     }
   }
@@ -1491,7 +1489,6 @@ object VersionedTable {
   def commitUpdate(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None): Long = {
     require(set.nonEmpty, "commitUpdate: empty SET clause")
     // ONE withColumns, not a fold of withColumn: SQL UPDATE evaluates every
@@ -1508,17 +1505,16 @@ object VersionedTable {
             .otherwise(org.apache.spark.sql.functions.col(s"`$c`"))
         })
       },
-      "VersionedTable.commitUpdate", lockLeaseMs, txn, opLabel = "UPDATE")
+      "VersionedTable.commitUpdate", txn, opLabel = "UPDATE")
   }
 
   /** Commit a row-level DELETE as the next version: rows matching `cond`
     * disappear; files with no matching row are shared, not rewritten. */
   def commitDelete(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None): Long =
     copyOnWrite(spark, dir, cond, _.where(!cond), "VersionedTable.commitDelete",
-      lockLeaseMs, txn, opLabel = "DELETE")
+      txn, opLabel = "DELETE")
 
   /** DELETE via DELETION VECTORS (Delta's merge-on-read delete): instead of
     * rewriting every file that holds a matching row (copy-on-write — write
@@ -1541,7 +1537,6 @@ object VersionedTable {
     * [[commitAppend]]'s replay idempotence. */
   def commitDeleteDV(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None): Long =
     withOccRetries("VersionedTable.commitDeleteDV") { () =>
       import org.apache.spark.sql.functions.col
@@ -1585,7 +1580,7 @@ object VersionedTable {
           staged.foreach(rel => fs.delete(absOf(dir, rel), false))
           publishRebased(spark, fs, dir, "VersionedTable.commitDeleteDV",
             pv, entries, entries, staged = Seq.empty,
-            provenAgainst = Constraints.list(dir), txn = txn, lockLeaseMs = lockLeaseMs,
+            provenAgainst = Constraints.list(dir), txn = txn,
             opLabel = "DELETE MOR")
         } else {
           val dvRel = staged match {
@@ -1598,7 +1593,7 @@ object VersionedTable {
             entries.map(e =>
               if (touchedNames(baseName(e.rel))) e.copy(dvs = e.dvs :+ dvRel) else e),
             staged = staged, provenAgainst = Constraints.list(dir),
-            txn = txn, lockLeaseMs = lockLeaseMs, opLabel = "DELETE MOR")
+            txn = txn, opLabel = "DELETE MOR")
         }
       }
     }
@@ -1623,7 +1618,6 @@ object VersionedTable {
   def commitUpdateDV(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None): Long =
     withOccRetries("VersionedTable.commitUpdateDV") { () =>
       import org.apache.spark.sql.functions.col
@@ -1668,7 +1662,7 @@ object VersionedTable {
           staged.foreach(rel => fs.delete(absOf(dir, rel), false))
           publishRebased(spark, fs, dir, "VersionedTable.commitUpdateDV",
             pv, entries, entries, staged = Seq.empty,
-            provenAgainst = Constraints.list(dir), txn = txn, lockLeaseMs = lockLeaseMs,
+            provenAgainst = Constraints.list(dir), txn = txn,
             opLabel = "UPDATE MOR")
         } else {
           val dvRel = staged match {
@@ -1695,7 +1689,7 @@ object VersionedTable {
               if (touchedNames(baseName(e.rel))) e.copy(dvs = e.dvs :+ dvRel) else e) ++
               newRels.map(FileEntry(_, Nil)),
             staged = staged ++ newRels, provenAgainst = provenAgainst,
-            txn = txn, lockLeaseMs = lockLeaseMs, validateRels = newRels,
+            txn = txn, validateRels = newRels,
             validateDeclared = declared, opLabel = "UPDATE MOR")
         }
       }
@@ -1712,9 +1706,9 @@ object VersionedTable {
     * sidecar per-row-group fname min/max stats, so pruned masked scans
     * skip other files' positions. No-op (current version, no commit) when
     * nothing would shrink. */
-  def compactDeletionVectors(spark: SparkSession, dir: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    FsIO.withWriteLock(dir, "VersionedTable.compactDeletionVectors", lockLeaseMs) {
+  def compactDeletionVectors(spark: SparkSession, dir: String): Long =
+    FsIO.withWriteLock(dir, "VersionedTable.compactDeletionVectors",
+        TableManager.DefaultLockLeaseMs) {
       import org.apache.spark.sql.functions.col
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
@@ -1827,7 +1821,6 @@ object VersionedTable {
     * must see the same rows even if the source plan is nondeterministic. */
   def commitMerge(spark: SparkSession, dir: String, source: DataFrame,
       keyCols: Seq[String],
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions._
     require(keyCols.nonEmpty, "commitMerge: need at least one key column")
@@ -1904,7 +1897,7 @@ object VersionedTable {
         val v = publishRebased(spark, fs, dir, "VersionedTable.commitMerge",
           pv, entries, untouched ++ newRels.map(FileEntry(_, Nil)),
           staged = newRels, provenAgainst = provenAgainst,
-          txn = txn, lockLeaseMs = lockLeaseMs, validateRels = newRels,
+          txn = txn, validateRels = newRels,
           validateDeclared = declared, opLabel = "MERGE")
         recordKeyColumns(dir, keyCols)
         v
@@ -1976,7 +1969,6 @@ object VersionedTable {
     * replay idempotence. */
   def commitMergeConditional(spark: SparkSession, dir: String, source: DataFrame,
       keyCols: Seq[String], clauses: Seq[MergeClause],
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       txn: Option[(String, Long)] = None,
       /** `MERGE ... WITH SCHEMA EVOLUTION` widenings staged at analysis
         * ([[graft.catalog.GraftCatalog.alterTable]]): ADD COLUMN alters
@@ -2324,7 +2316,7 @@ object VersionedTable {
         val v = publishRebased(spark, fs, dir, "VersionedTable.commitMergeConditional",
           pv, entries, untouched ++ newRels.map(FileEntry(_, Nil)),
           staged = newRels, provenAgainst = provenAgainst,
-          txn = txn, lockLeaseMs = lockLeaseMs, validateRels = newRels,
+          txn = txn, validateRels = newRels,
           validateDeclared = declaredForWrite,
           declareSchema = declaredEvolved,
           opLabel = if (effAlters.isEmpty) "MERGE COND"
@@ -2426,11 +2418,10 @@ object VersionedTable {
     * (the schema change itself surfaces through the op label and
     * declaredSchemaAt). */
   def commitSchemaChanges(spark: SparkSession, dir: String,
-      alters: Seq[SchemaAlter],
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long = {
+      alters: Seq[SchemaAlter]): Long = {
     require(alters.nonEmpty, "commitSchemaChanges: need at least one alter")
     val op = "VersionedTable.commitSchemaChanges"
-    FsIO.withWriteLock(dir, op, lockLeaseMs) {
+    FsIO.withWriteLock(dir, op, TableManager.DefaultLockLeaseMs) {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
       require(committed.nonEmpty, s"$op: $dir has no committed version")
@@ -2461,23 +2452,20 @@ object VersionedTable {
     * or above the commit see the new name; time travel below it sees the
     * old one. */
   def commitRenameColumn(spark: SparkSession, dir: String,
-      oldName: String, newName: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    commitSchemaChanges(spark, dir, Seq(RenameColumnAlter(oldName, newName)), lockLeaseMs)
+      oldName: String, newName: String): Long =
+    commitSchemaChanges(spark, dir, Seq(RenameColumnAlter(oldName, newName)))
 
   /** ADD COLUMN as its own commit — see [[AddColumnAlter]]. Subsequent
     * appends must carry the column (the schema gate reads the declared
     * schema); time travel below the commit reads the narrow schema. */
   def commitAddColumn(spark: SparkSession, dir: String, colName: String,
-      dataType: org.apache.spark.sql.types.DataType,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    commitSchemaChanges(spark, dir, Seq(AddColumnAlter(colName, dataType)), lockLeaseMs)
+      dataType: org.apache.spark.sql.types.DataType): Long =
+    commitSchemaChanges(spark, dir, Seq(AddColumnAlter(colName, dataType)))
 
   /** DROP COLUMN as its own commit — see [[DropColumnAlter]]. Time travel
     * below the drop still reads the column. */
-  def commitDropColumn(spark: SparkSession, dir: String, colName: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    commitSchemaChanges(spark, dir, Seq(DropColumnAlter(colName)), lockLeaseMs)
+  def commitDropColumn(spark: SparkSession, dir: String, colName: String): Long =
+    commitSchemaChanges(spark, dir, Seq(DropColumnAlter(colName)))
 
   /** A CHECK constraint mentioning a column being renamed/dropped would
     * silently stop binding (constraints store SQL text with logical
@@ -2523,7 +2511,6 @@ object VersionedTable {
   def commitCompact(spark: SparkSession, dir: String, targetFiles: Int,
       clusterBy: Seq[String] = Seq.empty,
       zOrderBy: Option[(String, String)] = None,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       where: Option[org.apache.spark.sql.Column] = None,
       zOrderCols: Seq[String] = Seq.empty): Long = {
     require(targetFiles >= 1, s"commitCompact: targetFiles must be >= 1, got $targetFiles")
@@ -2534,7 +2521,7 @@ object VersionedTable {
       "commitCompact: pass zOrderCols or zOrderBy, not both")
     require(clusterBy.isEmpty || zCols.isEmpty,
       "commitCompact: clusterBy and zOrderBy are mutually exclusive layouts")
-    FsIO.withWriteLock(dir, "VersionedTable.commitCompact", lockLeaseMs) {
+    FsIO.withWriteLock(dir, "VersionedTable.commitCompact", TableManager.DefaultLockLeaseMs) {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
       require(committed.nonEmpty, s"commitCompact: $dir has no committed version")
@@ -2596,9 +2583,8 @@ object VersionedTable {
     * "roll back the bad batch" affordable on a 100 TB table. Fails loudly
     * if the target version's data was vacuumed (Delta's documented RESTORE
     * hazard). Returns the new version number. */
-  def commitRestore(spark: SparkSession, dir: String, toVersion: Long,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    FsIO.withWriteLock(dir, "VersionedTable.commitRestore", lockLeaseMs) {
+  def commitRestore(spark: SparkSession, dir: String, toVersion: Long): Long =
+    FsIO.withWriteLock(dir, "VersionedTable.commitRestore", TableManager.DefaultLockLeaseMs) {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
       val entry = committed.find(_._1 == toVersion).getOrElse(sys.error(
@@ -2637,21 +2623,19 @@ object VersionedTable {
     * retention is not under your control. Fails if `dstDir` already has
     * commits. */
   def cloneShallow(spark: SparkSession, srcDir: String, dstDir: String,
-      version: Option[Long] = None,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    clone0(spark, srcDir, dstDir, version, deep = false, lockLeaseMs)
+      version: Option[Long] = None): Long =
+    clone0(spark, srcDir, dstDir, version, deep = false)
 
   /** DEEP CLONE: like [[cloneShallow]] but every referenced file is COPIED
     * into the clone's `data/` — O(table) once, and from then on the clone
     * is fully self-contained (source vacuums/drops can't break it). */
   def cloneDeep(spark: SparkSession, srcDir: String, dstDir: String,
-      version: Option[Long] = None,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    clone0(spark, srcDir, dstDir, version, deep = true, lockLeaseMs)
+      version: Option[Long] = None): Long =
+    clone0(spark, srcDir, dstDir, version, deep = true)
 
   private def clone0(spark: SparkSession, srcDir: String, dstDir: String,
-      version: Option[Long], deep: Boolean, lockLeaseMs: Long): Long =
-    FsIO.withWriteLock(dstDir, "VersionedTable.clone", lockLeaseMs) {
+      version: Option[Long], deep: Boolean): Long =
+    FsIO.withWriteLock(dstDir, "VersionedTable.clone", TableManager.DefaultLockLeaseMs) {
       val conf = spark.sparkContext.hadoopConfiguration
       val fs   = new Path(dstDir).getFileSystem(conf)
       require(VersionedTable.log(dstDir).isEmpty,
@@ -2744,9 +2728,8 @@ object VersionedTable {
     * schemas (proven DISTRIBUTED via a mergeSchema footer sweep equal to
     * the first footer — a narrower file would otherwise silently
     * null-fill); an existing table at `tableDir`. */
-  def convertParquet(spark: SparkSession, srcDir: String, tableDir: String,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs): Long =
-    FsIO.withWriteLock(tableDir, "VersionedTable.convertParquet", lockLeaseMs) {
+  def convertParquet(spark: SparkSession, srcDir: String, tableDir: String): Long =
+    FsIO.withWriteLock(tableDir, "VersionedTable.convertParquet", TableManager.DefaultLockLeaseMs) {
       val conf  = spark.sparkContext.hadoopConfiguration
       val fs    = new Path(tableDir).getFileSystem(conf)
       require(VersionedTable.log(tableDir).isEmpty,
@@ -2996,10 +2979,9 @@ object VersionedTable {
     * documented Delta-VACUUM hazard — size `retainLast` to the longest
     * reader. */
   def vacuum(spark: SparkSession, dir: String, retainLast: Int,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       graceMs: Long = DefaultVacuumGraceMs): Seq[Long] = {
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
-    vacuumKeeping(spark, dir, lockLeaseMs, graceMs,
+    vacuumKeeping(spark, dir, graceMs,
       committed => committed.map(_._1).takeRight(retainLast).toSet)._1
   }
 
@@ -3009,10 +2991,9 @@ object VersionedTable {
     * under the same lease so the answer is a consistent snapshot; the
     * returned paths are table-relative. */
   def vacuumDryRun(spark: SparkSession, dir: String, retainLast: Int,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       graceMs: Long = DefaultVacuumGraceMs): (Seq[Long], Seq[String]) = {
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
-    vacuumKeeping(spark, dir, lockLeaseMs, graceMs,
+    vacuumKeeping(spark, dir, graceMs,
       committed => committed.map(_._1).takeRight(retainLast).toSet, dryRun = true)
   }
 
@@ -3023,12 +3004,11 @@ object VersionedTable {
     * window to the longest reader, same hazard as [[vacuum]]. */
   def vacuumOlderThan(spark: SparkSession, dir: String, olderThanMs: Long,
       retainLast: Int = 1,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       graceMs: Long = DefaultVacuumGraceMs): Seq[Long] = {
     require(olderThanMs >= 0, s"olderThanMs must be >= 0, got $olderThanMs")
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
     val cutoff = System.currentTimeMillis() - olderThanMs
-    vacuumKeeping(spark, dir, lockLeaseMs, graceMs, committed =>
+    vacuumKeeping(spark, dir, graceMs, committed =>
       (committed.filter(_._2 >= cutoff).map(_._1) ++
         committed.map(_._1).takeRight(retainLast)).toSet)._1
   }
@@ -3037,12 +3017,11 @@ object VersionedTable {
     * same arguments, deleting nothing. */
   def vacuumOlderThanDryRun(spark: SparkSession, dir: String, olderThanMs: Long,
       retainLast: Int = 1,
-      lockLeaseMs: Long = TableManager.DefaultLockLeaseMs,
       graceMs: Long = DefaultVacuumGraceMs): (Seq[Long], Seq[String]) = {
     require(olderThanMs >= 0, s"olderThanMs must be >= 0, got $olderThanMs")
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
     val cutoff = System.currentTimeMillis() - olderThanMs
-    vacuumKeeping(spark, dir, lockLeaseMs, graceMs, committed =>
+    vacuumKeeping(spark, dir, graceMs, committed =>
       (committed.filter(_._2 >= cutoff).map(_._1) ++
         committed.map(_._1).takeRight(retainLast)).toSet, dryRun = true)
   }
@@ -3050,10 +3029,10 @@ object VersionedTable {
   /** Shared vacuum core. `dryRun = true` computes the FULL deletion plan
     * (same lease, same decisions) and touches nothing; the second return
     * component lists every planned path table-relative. */
-  private def vacuumKeeping(spark: SparkSession, dir: String, lockLeaseMs: Long,
+  private def vacuumKeeping(spark: SparkSession, dir: String,
       graceMs: Long, keepOf: Seq[(Long, Long)] => Set[Long],
       dryRun: Boolean = false): (Seq[Long], Seq[String]) =
-    FsIO.withWriteLock(dir, "VersionedTable.vacuum", lockLeaseMs) {
+    FsIO.withWriteLock(dir, "VersionedTable.vacuum", TableManager.DefaultLockLeaseMs) {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val rootUri = new Path(dir).toUri.getPath
       val planned = scala.collection.mutable.ArrayBuffer[String]()

@@ -4,7 +4,7 @@ package graft
   * ([[LockStressSpec]]). Each child loops `rounds` attempts to take the
   * [[graft.tables.FsIO]] write lease on the same target and, while holding
   * it, performs a full delete-and-rewrite of the target (the swap-protocol
-  * shape compact/upsertPartitioned serialize) with a verify-in-section
+  * shape the compact* family serializes) with a verify-in-section
   * read-back: if another writer interleaved, the read-back sees foreign
   * tokens and reports TORN. A live-contender denial is the EXPECTED loud
   * failure and is counted, not retried-silently.

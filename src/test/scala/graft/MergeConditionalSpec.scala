@@ -41,6 +41,35 @@ class MergeConditionalSpec extends SparkSpec {
     ), rows.toString) // k=2 deleted; k=10 matched no insert clause → dropped
   }
 
+  test("keys-only WhenMatchedDelete empties a whole file; a re-run is a no-op") {
+    import spark.implicits._
+    val dir = dirOf()
+    // four key-range files, so one doomed key range can empty a whole file
+    VersionedTable.commit(spark, spark.range(1L, 65L)
+      .select(col("id").as("k"), (col("id") * 10.0).as("bal"))
+      .repartitionByRange(4, col("k")), dir)
+    val v0 = VersionedTable.filesOf(dir, 0L)
+    assert(v0.size == 4, s"test needs four files, got $v0")
+    val byFile = VersionedTable.read(spark, dir).select(col("k"), input_file_name())
+      .collect().groupBy(_.getString(1)).map { case (f, rs) => f -> rs.map(_.getLong(0)).toSet }
+    // doomed: every key of key 9's file, plus key 50 from another file
+    val doomed = byFile.values.find(_.contains(9L)).get + 50L
+    def delete(): Long = VersionedTable.commitMergeConditional(spark, dir,
+      doomed.toSeq.toDF("k"), Seq("k"), Seq(WhenMatchedDelete(None)))
+    def survivors() = VersionedTable.read(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val expected = (1L to 64L).filterNot(doomed).map(k => k -> k * 10.0).toMap
+    val v1 = delete()
+    assert(survivors() == expected)
+    // file-grain copy-on-write: files holding no doomed key stay shared
+    val touched = byFile.filter(_._2.exists(doomed)).keySet
+    val untouched = v0.filterNot(rel => touched.exists(_.endsWith(rel))).toSet
+    assert(untouched.size == 2, s"expected 2 untouched files of $v0")
+    assert(untouched.subsetOf(VersionedTable.filesOf(dir, v1).toSet))
+    delete()
+    assert(survivors() == expected, "re-running the delete must not change the contents")
+  }
+
   test("NOT MATCHED BY SOURCE arms: retention delete + flag update, file-pruned") {
     import spark.implicits._
     val dir = dirOf()

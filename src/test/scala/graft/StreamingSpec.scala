@@ -276,13 +276,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamUpsert merges each micro-batch into the target (CDC foreachBatch shape)") {
-    import graft.tables.TableManager
+    import graft.tables.VersionedTable
     import spark.implicits._
-    val work   = Files.createTempDirectory("graft_stream_merge").toString
-    val srcDir = s"$work/src"
-    TableManager.dropTable(spark, "t_cdc_target")
-    TableManager.overwriteTable(
-      Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("id", "bal"), "t_cdc_target")
+    val work      = Files.createTempDirectory("graft_stream_merge").toString
+    val srcDir    = s"$work/src"
+    val targetDir = s"$work/target"
+    val ckpt      = s"$work/ckpt"
+    // one target file per key, so file sharing is observable per key
+    VersionedTable.commit(spark, Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("id", "bal")
+      .repartitionByRange(3, col("id")), targetDir)
+    val v0Files = VersionedTable.filesOf(targetDir, 0L)
+    assert(v0Files.size == 3, s"test needs one target file per key, got $v0Files")
     // two update files → with maxFilesPerTrigger=1, two micro-batches; the
     // same key updated in both batches must end at the LAST batch's value
     Seq((2L, 99.0), (7L, 7.0)).toDF("id", "bal").coalesce(1)
@@ -290,194 +294,42 @@ class StreamingSpec extends SparkSpec {
     Seq((2L, 111.0)).toDF("id", "bal").coalesce(1)
       .write.mode("append").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
-    val result = StreamingInference.streamUpsert(
-      spark, srcDir, schema, "t_cdc_target", Seq("id"),
+    def run() = StreamingInference.streamUpsert(
+      spark, srcDir, schema, targetDir, Seq("id"),
       // within one micro-batch, collapse duplicate keys (max-bal wins here)
       b => b.groupBy("id").agg(max("bal").as("bal")),
-      s"$work/ckpt", maxFilesPerTrigger = 1)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1)))
+      ckpt, maxFilesPerTrigger = 1)
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val result = run()
     // NOTE: file order across the two parquet files isn't guaranteed, but
     // both orders end with id=2 in {99→111} or {111→99}; assert the stable
     // facts: all keys present, id=7 inserted, id=1/3 untouched
-    assert(result.map(_._1).toSeq == Seq(1L, 2L, 3L, 7L))
+    assert(result.map(_._1) == Seq(1L, 2L, 3L, 7L))
     assert(result(0)._2 == 10.0 && result(2)._2 == 30.0 && result(3)._2 == 7.0)
     assert(Set(99.0, 111.0).contains(result(1)._2))
-    TableManager.dropTable(spark, "t_cdc_target")
-  }
-
-  test("streamUpsertPartitioned: only touched partitions change; others stay byte-identical") {
-    import graft.tables.TableManager
-    import spark.implicits._
-    val work      = Files.createTempDirectory("graft_stream_pmerge").toString
-    val srcDir    = s"$work/src"
-    val targetDir = s"$work/target"
-    val nBuckets  = 8
-    val init = (1L to 64L).map(i => (i, i * 10.0)).toDF("id", "bal")
-    TableManager.initPartitionedTarget(init, targetDir, Seq("id"), nBuckets)
-
-    // fingerprint every partition's files before the stream
-    def fileState(dir: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
+    // each micro-batch publishes exactly one version on top of v0
+    assert(VersionedTable.latestVersion(targetDir).contains(2L))
+    // file sharing: both batches touch only key 2's file, so the files of
+    // keys 1 and 3 stay in every later manifest
+    val key2File = VersionedTable.read(spark, targetDir, Some(0L))
+      .where(col("id") === 2L).select(input_file_name()).head().getString(0)
+    val shared = v0Files.filterNot(rel => key2File.endsWith(rel)).toSet
+    assert(shared.size == 2, s"key 2's file not found among $v0Files")
+    Seq(1L, 2L).foreach { v =>
+      val files = VersionedTable.filesOf(targetDir, v).toSet
+      assert(shared.subsetOf(files), s"v$v rewrote an untouched file: $files")
     }
-    val before = fileState(targetDir)
-
-    // updates touch two keys → at most two buckets
-    Seq((2L, 999.0), (7L, 777.0)).toDF("id", "bal").coalesce(1).write.parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val result = StreamingInference.streamUpsertPartitioned(
-      spark, srcDir, schema, targetDir, Seq("id"),
-      b => b.groupBy("id").agg(max("bal").as("bal")),
-      s"$work/ckpt", nBuckets = nBuckets, maxFilesPerTrigger = 1)
-    val byId = result.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(byId.size == 64 && byId(2L) == 999.0 && byId(7L) == 777.0 && byId(1L) == 10.0)
-
-    // the scale contract: partitions whose bucket no update key hashed into
-    // must be EXACTLY the same files (same paths, lengths, mtimes)
-    val touched = Seq(2L, 7L).map(k =>
-      init.where(col("id") === k)
-        .select(TableManager.keyBucket(Seq("id"), nBuckets)).head().getInt(0))
-      .map(b => s"key_bucket=$b").toSet
-    val after = fileState(targetDir)
-    val untouchedBefore = before.filterNot { case (p, _) => touched.exists(p.contains) }
-    val untouchedAfter  = after.filterNot { case (p, _) => touched.exists(p.contains) }
-    assert(untouchedBefore.nonEmpty, "test needs untouched partitions to compare")
-    assert(untouchedAfter == untouchedBefore,
-      s"untouched partitions were rewritten:\n${(untouchedAfter.toSet diff untouchedBefore.toSet).mkString("\n")}")
-    // no recovery litter
-    assert(!new java.io.File(s"$targetDir/_merge_inprogress").exists)
-    assert(!new java.io.File(s"$targetDir.__upsert_stage").exists)
-  }
-
-  test("deletePartitioned: key-scoped buckets rewritten, emptied buckets swap in empty, others untouched") {
-    import graft.tables.TableManager
-    import spark.implicits._
-    val work      = Files.createTempDirectory("graft_delete_p").toString
-    val targetDir = s"$work/target"
-    val nBuckets  = 8
-    val init = (1L to 64L).map(i => (i, i * 10.0)).toDF("id", "bal")
-    TableManager.initPartitionedTarget(init, targetDir, Seq("id"), nBuckets)
-    def fileState(dir: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    }
-    val before = fileState(targetDir)
-    // doomed: key 5, plus EVERY key of key 9's bucket (the empty-bucket trap)
-    val b9 = init.select(col("id"), TableManager.keyBucket(Seq("id"), nBuckets).as("b"))
-      .collect().filter(_.getInt(1) == init.select(TableManager.keyBucket(Seq("id"), nBuckets))
-        .where(col("id") === 9L).head().getInt(0)).map(_.getLong(0)).toSet
-    val doomed = b9 + 5L
-    TableManager.deletePartitioned(spark, targetDir,
-      doomed.toSeq.toDF("id"), Seq("id"), nBuckets)
-    val left = spark.read.parquet(targetDir).select("id").collect().map(_.getLong(0)).toSet
-    assert(left == (1L to 64L).toSet -- doomed, s"wrong survivors: missing/extra keys")
-    // untouched buckets byte-identical
-    val touchedDirs = doomed.map(k => s"key_bucket=${
-      init.where(col("id") === k).select(TableManager.keyBucket(Seq("id"), nBuckets)).head().getInt(0)}")
-    val after = fileState(targetDir)
-    val ub = before.filterNot { case (p, _) => touchedDirs.exists(p.contains) }
-    val ua = after.filterNot { case (p, _) => touchedDirs.exists(p.contains) }
-    assert(ub.nonEmpty && ua == ub, "untouched partitions were rewritten")
-    // idempotent re-delete; no recovery litter
-    TableManager.deletePartitioned(spark, targetDir, doomed.toSeq.toDF("id"), Seq("id"), nBuckets)
-    assert(spark.read.parquet(targetDir).count() == 64L - doomed.size)
-    assert(!new java.io.File(s"$targetDir/_merge_inprogress").exists)
-    assert(!new java.io.File(s"$targetDir.__upsert_stage").exists)
-  }
-
-  test("upsertPartitioned recovery rolls an interrupted swap forward from the marker") {
-    import graft.tables.TableManager
-    import spark.implicits._
-    val work      = Files.createTempDirectory("graft_pmerge_recover").toString
-    val targetDir = s"$work/target"
-    val nBuckets  = 4
-    val init = (1L to 16L).map(i => (i, 1.0)).toDF("id", "bal")
-    TableManager.initPartitionedTarget(init, targetDir, Seq("id"), nBuckets)
-    val bucketOf1 = init.where(col("id") === 1L)
-      .select(TableManager.keyBucket(Seq("id"), nBuckets)).head().getInt(0)
-
-    // simulate a crash AFTER the stage write + marker, BEFORE the swap:
-    // stage the new version of bucketOf1 by hand, then write the marker
-    val stage = s"$targetDir.__upsert_stage"
-    val newBucket = init.withColumn("key_bucket", TableManager.keyBucket(Seq("id"), nBuckets))
-      .where(col("key_bucket") === bucketOf1)
-      .withColumn("bal", when(col("id") === 1L, 42.0).otherwise(col("bal")))
-    newBucket.repartition(col("key_bucket"))
-      .write.partitionBy("key_bucket").parquet(stage)
-    java.nio.file.Files.write(java.nio.file.Paths.get(targetDir, "_merge_inprogress"),
-      bucketOf1.toString.getBytes)
-
-    assert(TableManager.recoverPartitionedTarget(spark, targetDir), "must report recovery")
-    val rows = spark.read.parquet(targetDir).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(rows(1L) == 42.0, "staged bucket must be rolled forward")
-    assert(rows.size == 16 && rows(2L) == 1.0)
-    assert(!new java.io.File(s"$targetDir/_merge_inprogress").exists)
-    assert(!new java.io.File(stage).exists)
-    // idempotent when clean
-    assert(!TableManager.recoverPartitionedTarget(spark, targetDir))
-  }
-
-  test("upsertPartitioned refuses a bucket-layout mismatch instead of duplicating keys") {
-    import graft.tables.TableManager
-    import spark.implicits._
-    val targetDir = Files.createTempDirectory("graft_pmerge_layout").toString + "/target"
-    TableManager.initPartitionedTarget(
-      (1L to 8L).map(i => (i, 1.0)).toDF("id", "bal"), targetDir, Seq("id"), nBuckets = 8)
-    val updates = Seq((2L, 9.0)).toDF("id", "bal")
-    val e = intercept[IllegalArgumentException] {
-      TableManager.upsertPartitioned(spark, targetDir, updates, Seq("id"), nBuckets = 4)
-    }
-    assert(e.getMessage.contains("layout mismatch"))
-    // matching layout still merges
-    TableManager.upsertPartitioned(spark, targetDir, updates, Seq("id"), nBuckets = 8)
-    val byId = spark.read.parquet(targetDir).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(byId.size == 8 && byId(2L) == 9.0)
-  }
-
-  test("upsertPartitioned: live second writer loses loudly, target untouched; stale lease taken over") {
-    import graft.tables.{FsIO, TableManager}
-    import spark.implicits._
-    val targetDir = Files.createTempDirectory("graft_pmerge_lock").toString + "/target"
-    TableManager.initPartitionedTarget(
-      (1L to 8L).map(i => (i, 1.0)).toDF("id", "bal"), targetDir, Seq("id"), nBuckets = 4)
-    def fileState(dir: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    }
-    // writer A holds a live lease; writer B's whole upsert must fail loudly
-    // BEFORE touching the target
-    val lockA  = FsIO.acquireWriteLock(targetDir, "upsertPartitioned", staleMs = 600000)
-    val before = fileState(targetDir)
-    val e = intercept[RuntimeException] {
-      TableManager.upsertPartitioned(spark, targetDir,
-        Seq((2L, 9.0)).toDF("id", "bal"), Seq("id"), nBuckets = 4)
-    }
-    assert(e.getMessage.contains("another writer"), e.getMessage)
-    assert(fileState(targetDir) == before, "loser must not have touched the target")
-    // A releases → the same upsert applies cleanly
-    FsIO.releaseWriteLock(lockA)
-    TableManager.upsertPartitioned(spark, targetDir,
-      Seq((2L, 9.0)).toDF("id", "bal"), Seq("id"), nBuckets = 4)
-    assert(spark.read.parquet(targetDir).where(col("id") === 2L).head().getDouble(1) == 9.0)
-    // a crashed writer's EXPIRED lease is taken over instead of deadlocking
-    FsIO.writeText(s"$targetDir.__write_lock", "owner=dead\nts=1\nlabel=upsertPartitioned\n")
-    TableManager.upsertPartitioned(spark, targetDir,
-      Seq((3L, 7.0)).toDF("id", "bal"), Seq("id"), nBuckets = 4)
-    assert(spark.read.parquet(targetDir).where(col("id") === 3L).head().getDouble(1) == 7.0)
-    assert(!new java.io.File(s"$targetDir.__write_lock").exists, "lease released after takeover")
-    // double-release of a superseded lock must not delete a later holder's lease
-    val lockB = FsIO.acquireWriteLock(targetDir, "t", staleMs = 600000)
-    FsIO.releaseWriteLock(lockA) // stale handle — must be a no-op
-    assert(new java.io.File(s"$targetDir.__write_lock").exists)
-    FsIO.releaseWriteLock(lockB)
+    // crash window: the last batch merged into the table, but its checkpoint
+    // commit never landed — the restarted stream re-executes that batch and
+    // the txn marker turns its merge into a no-op
+    val lastCommit = new java.io.File(s"$ckpt/commits/1")
+    assert(lastCommit.delete())
+    new java.io.File(s"$ckpt/commits/.1.crc").delete()
+    val replayed = run()
+    assert(lastCommit.exists, "the uncommitted batch must re-execute")
+    assert(VersionedTable.latestVersion(targetDir).contains(2L),
+      "a replayed batch must not publish a second version")
+    assert(replayed == result)
   }
 
   test("compact under a live foreign lease fails loudly and leaves the dir intact") {
@@ -495,32 +347,17 @@ class StreamingSpec extends SparkSpec {
     TableManager.compact(spark, dir, targetFiles = 2)
     assert(spark.read.parquet(dir).count() == 100)
     assert(TableManager.dataFileCount(spark, dir) == 2)
-  }
-
-  test("streamUpsert auto-restores a target orphaned between the swap renames") {
-    import graft.tables.TableManager
-    import spark.implicits._
-    val work   = Files.createTempDirectory("graft_swap_recover").toString
-    val srcDir = s"$work/src"
-    Seq("t_rec_target", "t_rec_target__merge_old", "t_rec_target__merge_tmp")
-      .foreach(TableManager.dropTable(spark, _))
-    TableManager.overwriteTable(
-      Seq((1L, 10.0), (2L, 20.0)).toDF("id", "bal"), "t_rec_target")
-    // simulate the crash window: target renamed aside, tmp never swapped in
-    spark.sql("ALTER TABLE t_rec_target RENAME TO t_rec_target__merge_old")
-    assert(!spark.catalog.tableExists("t_rec_target"))
-
-    Seq((2L, 99.0)).toDF("id", "bal").coalesce(1).write.parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val result = StreamingInference.streamUpsert(
-      spark, srcDir, schema, "t_rec_target", Seq("id"),
-      b => b.groupBy("id").agg(max("bal").as("bal")),
-      s"$work/ckpt", maxFilesPerTrigger = 1)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(result.toSeq == Seq((1L, 10.0), (2L, 99.0)),
-      "restored target must carry pre-crash rows plus the re-merged batch")
-    assert(!spark.catalog.tableExists("t_rec_target__merge_old"))
-    TableManager.dropTable(spark, "t_rec_target")
+    // a crashed writer's EXPIRED lease is taken over instead of deadlocking
+    FsIO.writeText(s"$dir.__write_lock", "owner=dead\nts=1\nlabel=compact\n")
+    TableManager.compact(spark, dir, targetFiles = 3)
+    assert(spark.read.parquet(dir).count() == 100)
+    assert(TableManager.dataFileCount(spark, dir) == 3)
+    assert(!new java.io.File(s"$dir.__write_lock").exists, "lease released after takeover")
+    // double-release of a superseded lock must not delete a later holder's lease
+    val later = FsIO.acquireWriteLock(dir, "t", staleMs = 600000)
+    FsIO.releaseWriteLock(lock) // stale handle — must be a no-op
+    assert(new java.io.File(s"$dir.__write_lock").exists)
+    FsIO.releaseWriteLock(later)
   }
 
   test("stream-static broadcast enrichment equals the batch join") {

@@ -77,7 +77,7 @@ class VacuumGraceSpec extends SparkSpec {
     val lock = FsIO.acquireWriteLock(dir, "test-hold", staleMs = 120000)
     try {
       val fut = Future(VersionedTable.commitAppend(spark,
-        Seq((2L, "b")).toDF("id", "s"), dir, lockLeaseMs = 30000))
+        Seq((2L, "b")).toDF("id", "s"), dir))
       def unreferenced(): Seq[java.io.File] = {
         val dd = new java.io.File(s"$dir/data")
         if (!dd.exists) Seq.empty
