@@ -243,13 +243,16 @@ object TimePartitioned {
     val sroot = appendStageRoot(root.toString)
     if (!fs.exists(sroot)) return
     val entries = fs.listStatus(sroot).toSeq
-    // a stale lock with NO stage dir: the appender died between acquiring
-    // its stage lease and the first staged write — pure litter
-    entries.filter(e => e.isFile && e.getPath.getName.endsWith(".__write_lock"))
-      .foreach { lf =>
-        if (settleableStageEntry(fs, sroot, lf, staleMs))
-          fs.delete(lf.getPath, false)
+    // a stale lock, or a dead holder's lease-renewal temp, with NO stage
+    // dir: the appender died between acquiring its stage lease and the
+    // first staged write (or a sweep died mid-cleanup) — pure litter
+    entries.filter(_.isFile).foreach { f =>
+      if (settleableStageEntry(fs, sroot, f, staleMs)) {
+        val lock = stageLockOf(sroot, f.getPath.getName).get
+        fs.delete(lock, false)
+        FsIO.sweepRenewTemps(fs, lock)
       }
+    }
     entries.filter(_.isDirectory).foreach { s =>
       val stage = s.getPath
       if (settleableStageEntry(fs, sroot, s, staleMs)) {
@@ -263,7 +266,10 @@ object TimePartitioned {
             s"append stage under $root (${stage.getName})")
           fs.delete(stage, true)
         }
-        fs.delete(new org.apache.hadoop.fs.Path(stage.toString + ".__write_lock"), false)
+        val lock = new org.apache.hadoop.fs.Path(stage.toString + ".__write_lock")
+        fs.delete(lock, false)
+        // a holder killed mid-renewal leaves its temp next to the lock
+        FsIO.sweepRenewTemps(fs, lock)
       }
     }
     // best-effort root cleanup: the non-recursive delete can legally race
@@ -275,9 +281,22 @@ object TimePartitioned {
     } catch { case _: java.io.IOException => () }
   }
 
+  /** The stage lock a stage-root file belongs to: itself for a
+    * `<stage>.__write_lock`, its lock for a `<stage>.__write_lock.renew.*`
+    * renewal temp; None for any other file. */
+  private def stageLockOf(sroot: org.apache.hadoop.fs.Path,
+      name: String): Option[org.apache.hadoop.fs.Path] = {
+    val i = name.indexOf(".__write_lock")
+    val tail = if (i > 0) name.substring(i) else ""
+    if (tail == ".__write_lock" || tail.startsWith(".__write_lock.renew."))
+      Some(new org.apache.hadoop.fs.Path(sroot, name.take(i) + ".__write_lock"))
+    else None
+  }
+
   /** Is this append-stage entry settleable by a sweep — a stage dir
-    * whose lease is stale/absent, or an orphan stage-lock with no stage
-    * dir? ONE copy of the predicate, shared by the lock-free [[heal]]
+    * whose lease is stale/absent, or an orphan stage-lock (or renewal
+    * temp) with no stage dir and no live lock? ONE copy of the
+    * predicate, shared by the lock-free [[heal]]
     * probe and the under-lease [[recoverAppendStages]] sweep; liveness
     * delegates to [[FsIO.lockIsLive]], the single crash-classification
     * rule (body ts, mtime fallback, unreadable-reads-as-live, staleness
@@ -291,10 +310,10 @@ object TimePartitioned {
       !FsIO.lockIsLive(
         new org.apache.hadoop.fs.Path(e.getPath.toString + ".__write_lock"),
         staleMs).getOrElse(false)
-    else e.getPath.getName.endsWith(".__write_lock") && {
+    else stageLockOf(sroot, e.getPath.getName).exists { lock =>
       val stageDir = new org.apache.hadoop.fs.Path(sroot,
-        e.getPath.getName.stripSuffix(".__write_lock"))
-      !fs.exists(stageDir) && !FsIO.lockIsLive(e.getPath, staleMs).getOrElse(false)
+        lock.getName.stripSuffix(".__write_lock"))
+      !fs.exists(stageDir) && !FsIO.lockIsLive(lock, staleMs).getOrElse(false)
     }
 
   /** Lock-free probe: does the append-stage root hold anything a sweep

@@ -282,11 +282,8 @@ class StreamingSpec extends SparkSpec {
     val srcDir    = s"$work/src"
     val targetDir = s"$work/target"
     val ckpt      = s"$work/ckpt"
-    // one target file per key, so file sharing is observable per key
-    VersionedTable.commit(spark, Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("id", "bal")
-      .repartitionByRange(3, col("id")), targetDir)
-    val v0Files = VersionedTable.filesOf(targetDir, 0L)
-    assert(v0Files.size == 3, s"test needs one target file per key, got $v0Files")
+    VersionedTable.commit(spark,
+      Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("id", "bal"), targetDir)
     // two update files → with maxFilesPerTrigger=1, two micro-batches; the
     // same key updated in both batches must end at the LAST batch's value
     Seq((2L, 99.0), (7L, 7.0)).toDF("id", "bal").coalesce(1)
@@ -309,16 +306,6 @@ class StreamingSpec extends SparkSpec {
     assert(Set(99.0, 111.0).contains(result(1)._2))
     // each micro-batch publishes exactly one version on top of v0
     assert(VersionedTable.latestVersion(targetDir).contains(2L))
-    // file sharing: both batches touch only key 2's file, so the files of
-    // keys 1 and 3 stay in every later manifest
-    val key2File = VersionedTable.read(spark, targetDir, Some(0L))
-      .where(col("id") === 2L).select(input_file_name()).head().getString(0)
-    val shared = v0Files.filterNot(rel => key2File.endsWith(rel)).toSet
-    assert(shared.size == 2, s"key 2's file not found among $v0Files")
-    Seq(1L, 2L).foreach { v =>
-      val files = VersionedTable.filesOf(targetDir, v).toSet
-      assert(shared.subsetOf(files), s"v$v rewrote an untouched file: $files")
-    }
     // crash window: the last batch merged into the table, but its checkpoint
     // commit never landed — the restarted stream re-executes that batch and
     // the txn marker turns its merge into a no-op
@@ -330,6 +317,102 @@ class StreamingSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(targetDir).contains(2L),
       "a replayed batch must not publish a second version")
     assert(replayed == result)
+  }
+
+  test("streamUpsertPartitioned: only touched partitions change; others stay byte-identical") {
+    // the upsert's scale contract on the versioned target: a micro-batch
+    // rewrites only the data files holding its keys; every other file
+    // stays in the new manifest as the SAME bytes on disk
+    import graft.tables.VersionedTable
+    import spark.implicits._
+    val work      = Files.createTempDirectory("graft_stream_pmerge").toString
+    val srcDir    = s"$work/src"
+    val targetDir = s"$work/target"
+    val init = (1L to 64L).map(i => (i, i * 10.0)).toDF("id", "bal")
+    VersionedTable.commit(spark, init.repartitionByRange(8, col("id")), targetDir)
+    val v0Files = VersionedTable.filesOf(targetDir, 0L)
+    assert(v0Files.size == 8, s"test needs 8 target files, got $v0Files")
+
+    // fingerprint every data file before the stream
+    def fileState(dir: String): Map[String, (Long, Long)] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
+    }
+    val before = fileState(targetDir)
+
+    // updates touch two keys → at most two files
+    Seq((2L, 999.0), (7L, 777.0)).toDF("id", "bal").coalesce(1).write.parquet(srcDir)
+    val schema = spark.read.parquet(srcDir).schema
+    val result = StreamingInference.streamUpsert(
+      spark, srcDir, schema, targetDir, Seq("id"),
+      b => b.groupBy("id").agg(max("bal").as("bal")),
+      s"$work/ckpt", maxFilesPerTrigger = 1)
+    val byId = result.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(byId.size == 64 && byId(2L) == 999.0 && byId(7L) == 777.0 && byId(1L) == 10.0)
+
+    // files no update key lives in must be EXACTLY the same files: still in
+    // the new version's manifest, same paths, lengths and mtimes on disk
+    val touched = VersionedTable.read(spark, targetDir, Some(0L))
+      .where(col("id").isin(2L, 7L)).select(input_file_name())
+      .collect().map(_.getString(0)).toSet
+    val untouched = v0Files.filterNot(rel => touched.exists(_.endsWith(rel)))
+    assert(untouched.nonEmpty && untouched.size >= v0Files.size - 2,
+      s"key files not found among $v0Files")
+    val head = VersionedTable.latestVersion(targetDir).get
+    assert(head == 1L, "one micro-batch publishes one version")
+    val headFiles = VersionedTable.filesOf(targetDir, head).toSet
+    assert(untouched.toSet.subsetOf(headFiles),
+      s"untouched files left the manifest: ${untouched.toSet diff headFiles}")
+    val after = fileState(targetDir)
+    val untouchedState = (m: Map[String, (Long, Long)]) =>
+      m.filter { case (p, _) => untouched.exists(p.endsWith) }
+    assert(untouchedState(before).size == untouched.size)
+    assert(untouchedState(after) == untouchedState(before),
+      "untouched files were rewritten")
+  }
+
+  test("upsertPartitioned: live second writer loses loudly, target untouched; stale lease taken over") {
+    // the upsert target's write lease: a merge publish waits out a live
+    // lease (bounded retry), so the writer that must lose loudly here is a
+    // non-waiting one — a versioned overwrite of the same target
+    import graft.tables.{FsIO, VersionedTable}
+    import spark.implicits._
+    val targetDir = Files.createTempDirectory("graft_pmerge_lock").toString + "/target"
+    VersionedTable.commit(spark, (1L to 8L).map(i => (i, 1.0)).toDF("id", "bal"), targetDir)
+    def fileState(dir: String): Map[String, (Long, Long)] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).filter(_.isFile)
+        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
+    }
+    def bal(id: Long): Double =
+      VersionedTable.read(spark, targetDir).where(col("id") === id).head().getDouble(1)
+    // writer A holds a live lease; writer B must fail loudly BEFORE
+    // touching the target
+    val lockA  = FsIO.acquireWriteLock(targetDir, "streamUpsert", staleMs = 600000)
+    val before = fileState(targetDir)
+    val e = intercept[RuntimeException] {
+      VersionedTable.commit(spark, Seq((2L, 9.0)).toDF("id", "bal"), targetDir)
+    }
+    assert(e.getMessage.contains("another writer"), e.getMessage)
+    assert(fileState(targetDir) == before, "loser must not have touched the target")
+    assert(VersionedTable.latestVersion(targetDir).contains(0L))
+    // A releases → the upsert applies cleanly
+    FsIO.releaseWriteLock(lockA)
+    VersionedTable.commitMerge(spark, targetDir, Seq((2L, 9.0)).toDF("id", "bal"), Seq("id"))
+    assert(bal(2L) == 9.0)
+    // a crashed writer's EXPIRED lease is taken over instead of deadlocking
+    FsIO.writeText(s"$targetDir.__write_lock", "owner=dead\nts=1\nlabel=streamUpsert\n")
+    VersionedTable.commitMerge(spark, targetDir, Seq((3L, 7.0)).toDF("id", "bal"), Seq("id"))
+    assert(bal(3L) == 7.0)
+    assert(!new java.io.File(s"$targetDir.__write_lock").exists, "lease released after takeover")
+    // double-release of a superseded lock must not delete a later holder's lease
+    val lockB = FsIO.acquireWriteLock(targetDir, "t", staleMs = 600000)
+    FsIO.releaseWriteLock(lockA) // stale handle — must be a no-op
+    assert(new java.io.File(s"$targetDir.__write_lock").exists)
+    FsIO.releaseWriteLock(lockB)
   }
 
   test("compact under a live foreign lease fails loudly and leaves the dir intact") {
@@ -347,17 +430,6 @@ class StreamingSpec extends SparkSpec {
     TableManager.compact(spark, dir, targetFiles = 2)
     assert(spark.read.parquet(dir).count() == 100)
     assert(TableManager.dataFileCount(spark, dir) == 2)
-    // a crashed writer's EXPIRED lease is taken over instead of deadlocking
-    FsIO.writeText(s"$dir.__write_lock", "owner=dead\nts=1\nlabel=compact\n")
-    TableManager.compact(spark, dir, targetFiles = 3)
-    assert(spark.read.parquet(dir).count() == 100)
-    assert(TableManager.dataFileCount(spark, dir) == 3)
-    assert(!new java.io.File(s"$dir.__write_lock").exists, "lease released after takeover")
-    // double-release of a superseded lock must not delete a later holder's lease
-    val later = FsIO.acquireWriteLock(dir, "t", staleMs = 600000)
-    FsIO.releaseWriteLock(lock) // stale handle — must be a no-op
-    assert(new java.io.File(s"$dir.__write_lock").exists)
-    FsIO.releaseWriteLock(later)
   }
 
   test("stream-static broadcast enrichment equals the batch join") {

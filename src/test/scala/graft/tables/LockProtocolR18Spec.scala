@@ -372,6 +372,49 @@ class LockProtocolR18Spec extends SparkSpec {
     assert(vSet(dir) == Set(0L, 1L, 888L))
   }
 
+  test("a crashed appender's stage-lease renewal temps are swept with its stage") {
+    // an appender SIGKILLed mid-renewal of its stage lease leaves a
+    // `<stage>.__write_lock.renew.<owner>` temp next to the stage; the
+    // sweep must take it with the stage, or the stage root never empties
+    val dir = tmp() + "/t"
+    seedDays(dir, 2)
+    val fs    = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sroot = TimePartitioned.appendStageRoot(dir)
+    def stageBatch(name: String, v: Long): Path = {
+      val s = new Path(sroot, name)
+      TimePartitioned.write(
+        spark.range(0, 1).select(lit(Day1).as("ts"), lit(v).as("v")),
+        s.toString, "ts", filesPerDay = 1)
+      s
+    }
+    def names(): Set[String] =
+      if (!fs.exists(sroot)) Set.empty else fs.listStatus(sroot).map(_.getPath.getName).toSet
+    // (a) crashed post-intent, stale stage lease, in-flight renewal temp
+    val fwd = stageBatch("dead-postintent", 888L)
+    FsIO.writeText(new Path(fwd, "_publish_intent").toString, "")
+    FsIO.writeText(fwd.toString + ".__write_lock", "owner=dead\nts=1\nlabel=append.stage\n")
+    FsIO.writeText(fwd.toString + ".__write_lock.renew.deadbeef",
+      "owner=dead\nts=2\nlabel=append.stage\n")
+    // (b) a renewal temp whose stage and lock are already gone
+    FsIO.writeText(new Path(sroot, "gone.__write_lock.renew.cafebabe").toString,
+      "owner=gone\nts=1\nlabel=append.stage\n")
+    // (c) a LIVE stage mid-renewal: its temp belongs to a live holder
+    val live = stageBatch("live-staging", 666L)
+    FsIO.writeText(live.toString + ".__write_lock",
+      s"owner=someone\nts=${System.currentTimeMillis()}\nlabel=append.stage\n")
+    FsIO.writeText(live.toString + ".__write_lock.renew.someone0",
+      s"owner=someone\nts=${System.currentTimeMillis()}\nlabel=append.stage\n")
+    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000))
+    assert(vSet(dir) == Set(0L, 1L, 888L), "exactly the intent-carrying batch must land")
+    assert(names() == Set("live-staging", "live-staging.__write_lock",
+      "live-staging.__write_lock.renew.someone0"),
+      s"crashed stages must leave nothing behind; a live one must survive: ${names()}")
+    // once the live holder is gone for good, the next touch empties the root
+    FsIO.writeText(live.toString + ".__write_lock", "owner=someone\nts=1\nlabel=append.stage\n")
+    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000))
+    assert(names().isEmpty, s"stage root must empty: ${names()}")
+  }
+
   test("dropDaysBefore refuses to race a live maintenance writer") {
     val dir = tmp() + "/t"
     seedDays(dir, 4)
