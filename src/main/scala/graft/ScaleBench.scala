@@ -293,13 +293,12 @@ object ScaleBench {
     "skipping_zorder" -> ((s, d, f) => {
       val work = java.nio.file.Files.createTempDirectory("graft_scale_z").toString
       val tbl  = s"$work/t"
-      t(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")
-        .write.parquet(tbl)
-      tables.TableManager.compactZOrder(s, tbl, "l_orderkey", "l_partkey",
-        targetFiles = 16 * f)
-      tables.SkippingIndex.refreshStats(s, tbl, Seq("l_orderkey", "l_partkey"))
-      tables.SkippingIndex.readPrunedMulti(s, tbl, Seq(
+      tables.VersionedTable.commit(s, t(s, d, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity"), tbl)
+      tables.VersionedTable.commitCompact(s, tbl, targetFiles = 16 * f,
+        zOrderCols = Seq("l_orderkey", "l_partkey"))
+      tables.VersionedStats.refresh(s, tbl, Seq("l_orderkey", "l_partkey"))
+      tables.VersionedStats.readPruned(s, tbl, Seq(
         ("l_orderkey", lit(1000L), lit(4000L)),
         ("l_partkey", lit(100L), lit(400L))))
     }),

@@ -5,7 +5,7 @@ import graft.image.{ImageFixtures, ImagePipeline, ImageUdfs}
 import graft.operators._
 import graft.multimodal.Multimodal
 import graft.streaming.{Stateful, StreamingInference}
-import graft.tables.{TableManager, VersionedTable}
+import graft.tables.{TableManager, VersionedStats, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,6 +27,13 @@ object SparkEntry {
     * [[Scratch]] (ADVICE-r16: the per-query temp dirs previously leaked
     * on every Verify/Bench invocation). */
   private def scratchDir(tag: String): String = Scratch.dir(tag)
+
+  /** Range-cluster `df` on `l_orderkey` into `n` files, sorted within each:
+    * every file then covers a narrow key interval, which is what makes its
+    * min/max stats selective for the skipping queries (random placement
+    * gives every file the full range and nothing prunes). */
+  private def clustered(df: DataFrame, n: Int): DataFrame =
+    df.repartitionByRange(n, col("l_orderkey")).sortWithinPartitions("l_orderkey")
 
   /** Planted-copy id offset for the dedup/near-dup decision gates: copies
     * are `id + PlantOffset` and leakage is detected via
@@ -2868,72 +2875,69 @@ object SparkEntry {
         .orderBy("doc_id")),
 
     // -- file-stat data skipping: the lakehouse manifest-pruning read ------
-    // lineitem range-clustered on l_orderkey into 16 files + min/max
-    // manifest; the range read prunes the file list BEFORE the scan plans
-    // (self-gated: require fails unless files were actually skipped) and
-    // must be row-identical to the full-scan filter the oracle runs.
+    // lineitem range-clustered on l_orderkey into 16 files of a versioned
+    // table + its per-version min/max stats; the range read prunes the file
+    // list BEFORE the scan plans (self-gated: require fails unless files
+    // were actually skipped) and must be row-identical to the full-scan
+    // filter the oracle runs.
     "q_skipping_scan" -> ((s, d) => {
-      val work = scratchDir("graft_skip")
-      val tbl  = s"$work/t"
+      val tbl = scratchDir("graft_skip") + "/t"
       val li = t(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      graft.tables.SkippingIndex.writeClustered(
-        li, tbl, "l_orderkey", Seq("l_orderkey"), nFiles = 16)
-      val (kept, total) = graft.tables.SkippingIndex.prunedFiles(
-        s, tbl, "l_orderkey", lit(1000L), lit(2000L))
+      VersionedTable.commit(s, clustered(li, 16), tbl)
+      VersionedStats.refresh(s, tbl, Seq("l_orderkey"))
+      val range = Seq(("l_orderkey", lit(1000L), lit(2000L)))
+      val (kept, total) = VersionedStats.prunedFiles(s, tbl, range)
       require(kept.size < total,
-        s"manifest must prune the range scan; kept ${kept.size} of $total files")
-      graft.tables.SkippingIndex.readPruned(s, tbl, "l_orderkey", lit(1000L), lit(2000L))
+        s"stats must prune the range scan; kept ${kept.size} of $total files")
+      VersionedStats.readPruned(s, tbl, range)
         .withColumn("l_extendedprice", col("l_extendedprice").cast(Dec).cast("double"))
         .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     }),
 
-    // -- 2-D skipping: Z-order layout + multi-column manifest --------------
+    // -- 2-D skipping: OPTIMIZE ZORDER + multi-column stats ----------------
     // The space-filling curve makes BOTH columns' per-file ranges narrow,
     // so one layout serves range predicates on either or both — the reason
     // lakehouses pair data skipping with Z-order rather than one sort key.
     // Self-gated on each dimension pruning ALONE, then read with the AND.
     "q_skipping_zorder" -> ((s, d) => {
-      val work = scratchDir("graft_zskip")
-      val tbl  = s"$work/t"
-      t(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")
-        .write.parquet(tbl)
-      TableManager.compactZOrder(s, tbl, "l_orderkey", "l_partkey", targetFiles = 16)
-      graft.tables.SkippingIndex.refreshStats(s, tbl, Seq("l_orderkey", "l_partkey"))
-      def keptOn(c: String, lo: Long, hi: Long) =
-        graft.tables.SkippingIndex.prunedFiles(s, tbl, c, lit(lo), lit(hi))
-      val (kA, tot) = keptOn("l_orderkey", 1000L, 4000L)
-      val (kB, _)   = keptOn("l_partkey", 100L, 400L)
+      val tbl = scratchDir("graft_zskip") + "/t"
+      VersionedTable.commit(s, t(s, d, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity"), tbl)
+      VersionedTable.commitCompact(s, tbl, targetFiles = 16,
+        zOrderCols = Seq("l_orderkey", "l_partkey"))
+      VersionedStats.refresh(s, tbl, Seq("l_orderkey", "l_partkey"))
+      val ranges = Seq(("l_orderkey", lit(1000L), lit(4000L)),
+        ("l_partkey", lit(100L), lit(400L)))
+      val (kA, tot) = VersionedStats.prunedFiles(s, tbl, ranges.take(1))
+      val (kB, _)   = VersionedStats.prunedFiles(s, tbl, ranges.drop(1))
       require(kA.size < tot && kB.size < tot,
-        s"z-order manifest must prune on BOTH dimensions; kept " +
+        s"z-order stats must prune on BOTH dimensions; kept " +
           s"${kA.size}/$tot on l_orderkey, ${kB.size}/$tot on l_partkey")
-      graft.tables.SkippingIndex.readPrunedMulti(s, tbl, Seq(
-          ("l_orderkey", lit(1000L), lit(4000L)),
-          ("l_partkey", lit(100L), lit(400L))))
+      VersionedStats.readPruned(s, tbl, ranges)
         .orderBy("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")
     }),
 
     // -- skipping table under continuous ingest ----------------------------
-    // Half the table lands via writeClustered, half via an O(batch)
-    // appendClustered (history never re-read); the pruned range read must
-    // still equal the plain filter over BOTH generations, and the manifest
-    // must still prune (in-query gate).
+    // Half the table lands as the first version, half as an appended
+    // version whose stats refresh INCREMENTALLY (only the new files read
+    // back, history never re-read); the pruned range read must still equal
+    // the plain filter over BOTH halves, and the stats must still prune
+    // (in-query gate).
     "q_skipping_append" -> ((s, d) => {
-      val work = scratchDir("graft_skipapp")
-      val tbl  = s"$work/t"
+      val tbl = scratchDir("graft_skipapp") + "/t"
       val li = t(s, d, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-      graft.tables.SkippingIndex.writeClustered(
-        li.where(pmod(col("l_orderkey"), lit(2L)) === 0L),
-        tbl, "l_orderkey", Seq("l_orderkey"), nFiles = 8)
-      graft.tables.SkippingIndex.appendClustered(
-        li.where(pmod(col("l_orderkey"), lit(2L)) === 1L),
-        tbl, "l_orderkey", Seq("l_orderkey"), nFiles = 8)
-      val (kept, total) = graft.tables.SkippingIndex.prunedFiles(
-        s, tbl, "l_orderkey", lit(1000L), lit(2000L))
+      VersionedTable.commit(s,
+        clustered(li.where(pmod(col("l_orderkey"), lit(2L)) === 0L), 8), tbl)
+      VersionedStats.refresh(s, tbl, Seq("l_orderkey"))
+      VersionedTable.commitAppend(s,
+        clustered(li.where(pmod(col("l_orderkey"), lit(2L)) === 1L), 8), tbl)
+      VersionedStats.refreshIncremental(s, tbl, Seq("l_orderkey"))
+      val range = Seq(("l_orderkey", lit(1000L), lit(2000L)))
+      val (kept, total) = VersionedStats.prunedFiles(s, tbl, range)
       require(total == 16 && kept.size < total,
-        s"append must extend the manifest and still prune; kept ${kept.size} of $total")
-      graft.tables.SkippingIndex.readPruned(s, tbl, "l_orderkey", lit(1000L), lit(2000L))
+        s"append must extend the stats and still prune; kept ${kept.size} of $total")
+      VersionedStats.readPruned(s, tbl, range)
         .orderBy("l_orderkey", "l_linenumber", "l_quantity")
     }),
 
@@ -3130,20 +3134,18 @@ object SparkEntry {
         .orderBy("c_custkey")
     }),
 
-    // -- metadata-only aggregation from the skipping manifest --------------
+    // -- metadata-only aggregation from the stats manifest -----------------
     // The Delta/Iceberg "min/max/count from the log" fast path: the
-    // aggregate is answered entirely from the per-file manifest (one row
-    // per file; data files never open — SkippingIndexSpec proves it by
-    // corrupting them first). Oracle is the same aggregate as a full
+    // aggregate is answered entirely from the version's per-file stats
+    // (one row per file; data files never open — VersionedStatsSpec proves
+    // it by corrupting them first). Oracle is the same aggregate as a full
     // table scan — equality proves exact mergeability of the file stats.
     "q_stats_pushdown" -> ((s, d) => {
-      val work = scratchDir("graft_statsagg")
-      val tbl  = s"$work/t"
+      val tbl  = scratchDir("graft_statsagg") + "/t"
       val cols = Seq("l_orderkey", "l_quantity", "l_extendedprice")
-      graft.tables.SkippingIndex.writeClustered(
-        t(s, d, "lineitem").select(cols.map(col): _*),
-        tbl, "l_orderkey", cols, nFiles = 16)
-      graft.tables.SkippingIndex.statsOnlyAggregate(s, tbl, cols)
+      VersionedTable.commit(s, clustered(t(s, d, "lineitem").select(cols.map(col): _*), 16), tbl)
+      VersionedStats.refresh(s, tbl, cols)
+      VersionedStats.statsOnlyAggregate(s, tbl, cols)
         .orderBy("column")
     }),
 
@@ -3397,7 +3399,7 @@ object SparkEntry {
         col("l_extendedprice").cast("double").as("l_extendedprice"))
       VersionedTable.commitAppend(s,
         li.where(pmod(col("l_orderkey"), lit(2L)) === 0L).repartition(2), dir)
-      graft.tables.VersionedStats.refreshIncremental(s, dir,
+      VersionedStats.refreshIncremental(s, dir,
         Seq("l_extendedprice", "l_quantity"))
       // RENAME mid-history: stats key on immutable PHYSICAL names, so the
       // manifest survives the rename and the carry-forward stays O(new
@@ -3406,9 +3408,9 @@ object SparkEntry {
       VersionedTable.commitAppend(s,
         li.where(pmod(col("l_orderkey"), lit(2L)) === 1L)
           .withColumnRenamed("l_quantity", "qty").repartition(2), dir)
-      graft.tables.VersionedStats.refreshIncremental(s, dir,
+      VersionedStats.refreshIncremental(s, dir,
         Seq("l_extendedprice", "qty"))
-      graft.tables.VersionedStats.statsOnlyAggregate(s, dir,
+      VersionedStats.statsOnlyAggregate(s, dir,
         Seq("l_extendedprice", "qty")).orderBy("column")
     }),
 
@@ -3715,17 +3717,15 @@ object SparkEntry {
       val dir = scratchDir("graft_vsk") + "/t"
       val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"),
         col("l_quantity").cast("double").as("qty"))
-      def clustered(df: DataFrame, n: Int) =
-        df.repartitionByRange(n, col("l_orderkey")).sortWithinPartitions("l_orderkey")
       VersionedTable.commitAppend(s, clustered(li.where(col("l_orderkey") % 2 === 1), 8), dir)
-      graft.tables.VersionedStats.refresh(s, dir, Seq("l_orderkey"))
+      VersionedStats.refresh(s, dir, Seq("l_orderkey"))
       VersionedTable.commitAppend(s, clustered(li.where(col("l_orderkey") % 2 === 0), 8), dir)
-      graft.tables.VersionedStats.refreshIncremental(s, dir, Seq("l_orderkey"))
-      val (kept, total) = graft.tables.VersionedStats.prunedFiles(s, dir,
+      VersionedStats.refreshIncremental(s, dir, Seq("l_orderkey"))
+      val (kept, total) = VersionedStats.prunedFiles(s, dir,
         Seq(("l_orderkey", lit(1000L), lit(5000L))))
       require(kept.size.toDouble / total < 0.4,
         s"stats pruning kept ${kept.size}/$total files — clustering regressed")
-      graft.tables.VersionedStats.readPruned(s, dir,
+      VersionedStats.readPruned(s, dir,
           Seq(("l_orderkey", lit(1000L), lit(5000L))))
         .orderBy("l_orderkey", "l_partkey", "qty")
     }),

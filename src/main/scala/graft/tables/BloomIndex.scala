@@ -9,19 +9,19 @@ import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-file Bloom-filter index for POINT lookups — the pruning min/max
   * stats can't do: a high-cardinality key written in arrival order gives
-  * every file the full value range ([[SkippingIndex]] keeps everything),
+  * every file the full value range ([[VersionedStats]] keeps everything),
   * but each file still holds only its own keys, and a per-file Bloom
   * answers "could key k be in this file?" in O(1) with `fpp` false
   * positives and ZERO false negatives — the Delta/Iceberg bloom-index
   * feature. A lookup reads `1 + fpp·(files-1)` files in expectation
   * instead of all of them.
   *
-  * Sidecar layout mirrors the stats manifest: one row per data file
-  * (`file`, serialized filter) under `<path>/_graft_bloom_<column>` —
-  * underscore-prefixed, invisible to plain reads, rides along with the
-  * table dir. Same staleness contract: the manifest's file set must match
-  * the data dir exactly or reads fail loudly (a file appended behind the
-  * index's back would silently miss rows).
+  * Sidecar layout: one row per data file (`file`, serialized filter)
+  * under `<path>/_graft_bloom_<column>` — underscore-prefixed, invisible
+  * to plain reads, rides along with the table dir. Staleness contract: the
+  * manifest's file set must match the data dir exactly or reads fail
+  * loudly (a file appended behind the index's back would silently miss
+  * rows).
   *
   * Values are indexed as their Spark STRING cast (one canonical form for
   * any key type); lookups cast the same way on both sides, so the probe

@@ -104,8 +104,8 @@ object FsIO {
   val ConditionalPutLockKey = "graft.lock.conditionalPut"
 
   /** Acquire an exclusive write lease for `dir` — the concurrent-writer
-    * guard for the rename-swap protocols (compact/compactZOrder/
-    * compactPartitioned/compactBatchIndex) and the versioned-log publish:
+    * guard for the rename-swap protocols (compact/compactPartitioned/
+    * compactBatchIndex) and the versioned-log publish:
     * two writers interleaving `swapDir`'s stage/rename steps can corrupt
     * the target, so the WHOLE stage+swap must be single-writer.
     *

@@ -78,8 +78,7 @@ object TableManager {
 
   /** Write-lease length of every table writer (versioned commits, the
     * compact* family, constraints, views, the IVF index append). Since r17
-    * the data-proportional holders (the compact* family,
-    * SkippingIndex.appendClustered) renew it every
+    * the data-proportional holders (the compact* family) renew it every
     * `leaseMs/3` ([[FsIO.withWriteLockHeartbeat]]) — 15 min bounds the
     * longest tolerated heartbeat STALL, not the stage-write length, so a
     * multi-hour 100 TB rewrite never looks crashed while a genuinely
@@ -159,34 +158,6 @@ object TableManager {
       hb.verifyOwned("the compactBatchIndex swap") // see compact: shared-tmp hazard
       swapDir(spark, dir, tmp, new Path(dir + ".__compact_bak"), "compactBatchIndex")
     }
-
-  /** OPTIMIZE ZORDER BY emulation: rewrite a path table into `targetFiles`
-    * files range-partitioned and sorted by the z-order of two columns, so
-    * each parquet file's min/max column statistics cover a narrow range of
-    * BOTH columns — filters on either column skip most files/row-groups at
-    * scan time. This is the Delta-style data-layout optimization that turns
-    * a 100 TB full scan into a handful of file reads for selective
-    * predicates; here it is the same atomic rename-swap procedure as
-    * [[compact]]. */
-  def compactZOrder(spark: SparkSession, dir: String, colA: String, colB: String,
-      targetFiles: Int): Unit =
-    FsIO.withWriteLockHeartbeat(dir, "compactZOrder", DefaultLockLeaseMs) { hb =>
-    val df  = spark.read.parquet(dir)
-    val tmp = new Path(dir + ".__zorder_tmp")
-    zLayout(df, colA, colB, targetFiles, "compactZOrder")
-      .write.mode("overwrite").parquet(tmp.toString)
-    hb.verifyOwned("the compactZOrder swap") // see compact: shared-tmp hazard
-    swapDir(spark, dir, tmp, new Path(dir + ".__zorder_bak"), "compactZOrder")
-  }
-
-  /** Re-layout `df` range-partitioned and sorted by the z-order of two
-    * numeric columns — kept as the 2-column entry; delegates to
-    * [[zLayoutN]] with an IDENTICAL bit layout (dimension d of bit i lands
-    * at z-bit i·N+d, which for N=2 reproduces the original even/odd
-    * interleave exactly). */
-  private[tables] def zLayout(df: org.apache.spark.sql.DataFrame,
-      colA: String, colB: String, targetFiles: Int, op: String): org.apache.spark.sql.DataFrame =
-    zLayoutN(df, Seq(colA, colB), targetFiles, op)
 
   /** N-COLUMN z-order (Delta's `ZORDER BY (c1, ..., cN)`): interleave each
     * column's range-normalized bucket rank bit-by-bit — dimension d's bit i

@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions._
   * per-file-stats-in-the-log design (stats ride the commit, not a mutable
   * sidecar), emulated as an immutable stats manifest per version under
   * `<dir>/_stats/v=<n>`: one row per data file of that version's manifest
-  * with `n_rows` and min/max/non-null-count per stat column. What
-  * [[SkippingIndex]] does for flat dirs, keyed instead by the version's
-  * RELATIVE file list, which buys three things the flat layout can't give:
-  * time travel (each version's stats are its own immutable row set),
-  * vacuum-safety (no staleness window — the stats row set and the manifest
-  * are checked 1:1 at read), and O(new files) maintenance
+  * with `n_rows` and min/max/non-null-count per stat column, keyed by the
+  * version's RELATIVE file list. That keying buys three things a mutable
+  * sidecar beside a plain directory can't give: time travel (each
+  * version's stats are its own immutable row set), vacuum-safety (no
+  * staleness window — the stats row set and the manifest are checked 1:1
+  * at read), and O(new files) maintenance
   * ([[refreshIncremental]] carries forward the stats of every file shared
   * with the previous statted version and reads back only the files the new
   * version added — the exact file-sharing structure commitAppend/
@@ -22,8 +22,15 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: the stats manifest is one row per file; a range read
   * prunes the FILE LIST driver-side before any scan plans (I/O ∝ selected
   * key range, not table), and daily stats maintenance costs one read-back
-  * of the day's new files. */
+  * of the day's new files. The kept file list is collected to the driver
+  * exactly like every FileIndex does; [[MaxPrunedFiles]] turns the
+  * degenerate no-pruning-possible case into an actionable error instead of
+  * a silent giant plan. */
 object VersionedStats {
+
+  /** Refuse to materialize absurd kept-file lists (no-stat overlap on every
+    * file = the clustering is wrong for this predicate, not a read problem). */
+  val MaxPrunedFiles = 1000000
 
   private def statsRoot(dir: String)          = new Path(dir, "_stats")
   private def statsDir(dir: String, v: Long)  = new Path(statsRoot(dir), f"v=$v%05d")
@@ -63,6 +70,11 @@ object VersionedStats {
         .map(_.dataType).getOrElse(org.apache.spark.sql.types.NullType)
     }
   }
+
+  /** `version`, or the latest committed one — loud on a table with none. */
+  private def versionOr(dir: String, version: Option[Long]): Long =
+    version.getOrElse(VersionedTable.latestVersion(dir)
+      .getOrElse(sys.error(s"VersionedStats: $dir has no committed version")))
 
   private def statAggs(statCols: Seq[String]): Seq[Column] =
     count(lit(1)).as("n_rows") +: statCols.flatMap(c =>
@@ -123,9 +135,12 @@ object VersionedStats {
       if (have(p.toLowerCase(java.util.Locale.ROOT))) df
       else df.withColumn(p, lit(null).cast(dt))
     }
+    // group on the raw file name and map each GROUP to its relative name:
+    // the path-parsing UDF then runs once per file, not once per row
     filled
-      .groupBy(relOf(input_file_name()).as("file"))
+      .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
+      .withColumn("file", relOf(col("file")))
   }
 
   /** (Re)build the stats manifest for `version` (default latest) from a
@@ -134,8 +149,7 @@ object VersionedStats {
   def refresh(spark: SparkSession, dir: String, statCols: Seq[String],
       version: Option[Long] = None): Long = {
     require(statCols.nonEmpty, "VersionedStats: need at least one stat column")
-    val v = version.getOrElse(VersionedTable.latestVersion(dir)
-      .getOrElse(sys.error(s"VersionedStats: $dir has no committed version")))
+    val v = versionOr(dir, version)
     // stats read raw footers, so they aggregate — and the manifest keys —
     // on PHYSICAL names, resolved from the logical statCols through the
     // version's column mapping; renames never invalidate a manifest
@@ -152,8 +166,7 @@ object VersionedStats {
   def refreshIncremental(spark: SparkSession, dir: String,
       statCols: Seq[String]): Long = {
     require(statCols.nonEmpty, "VersionedStats: need at least one stat column")
-    val v = VersionedTable.latestVersion(dir)
-      .getOrElse(sys.error(s"VersionedStats: $dir has no committed version"))
+    val v = versionOr(dir, None)
     val phys = physicalStatColsTyped(dir, v, statCols)
     val base = stattedVersions(dir).filter(_ < v).lastOption
     base match {
@@ -187,20 +200,20 @@ object VersionedStats {
     * the version's file set (a stale manifest fails, never silently
     * misses rows), and any DELETION VECTOR on the version refuses loudly —
     * stored stats describe physical files, and masked rows would falsify
-    * counts (compact the masks away first). Same output shape as
-    * [[SkippingIndex.statsOnlyAggregate]]: one row per column. */
+    * counts (compact the masks away first). One row per column:
+    * `column, n_rows, n_notnull, min_d, max_d` (min/max as DOUBLE via
+    * try_cast, null for non-numeric columns). */
   def statsOnlyAggregate(spark: SparkSession, dir: String,
       statCols: Seq[String], version: Option[Long] = None): DataFrame = {
     require(statCols.nonEmpty, "statsOnlyAggregate: need at least one column")
-    val v = version.getOrElse(VersionedTable.latestVersion(dir)
-      .getOrElse(sys.error(s"statsOnlyAggregate: $dir has no committed version")))
+    val v = versionOr(dir, version)
     val masked = VersionedTable.entriesOf(dir, v).filter(_._2.nonEmpty)
     require(masked.isEmpty,
       s"statsOnlyAggregate: version $v of $dir has deletion vectors on " +
         s"${masked.size} file(s) — physical stats would count masked rows; " +
         "run commitCompact (or compactDeletionVectors + refresh) first, or " +
         "aggregate through a real read")
-    val stats = loadStats(spark, dir, v)
+    val (stats, _) = loadStats(spark, dir, v)
     // aggregate under the PHYSICAL key, surface the LOGICAL name — a
     // renamed table answers for its current names from the same manifest
     val byPhys = physicalStatCols(dir, v, statCols)
@@ -219,7 +232,10 @@ object VersionedStats {
     one.select(explode(array(perCol: _*)).as("s")).select(col("s.*"))
   }
 
-  private def loadStats(spark: SparkSession, dir: String, v: Long): DataFrame = {
+  /** The version's stats rows, proven 1:1 with its file manifest, plus the
+    * statted file set that check collected — callers needing the file
+    * count take it from there instead of running a count job. */
+  private def loadStats(spark: SparkSession, dir: String, v: Long): (DataFrame, Set[String]) = {
     // the manifest keys on PHYSICAL names (immutable), so a column mapping
     // needs no refusal here — callers resolve through physicalStatCols
     val sd = statsDir(dir, v)
@@ -235,7 +251,7 @@ object VersionedStats {
       s"VersionedStats: stats manifest for version $v of $dir does not match its " +
         s"file manifest (${(rels -- statted).size} missing, ${(statted -- rels).size} extra) " +
         "— re-run refresh")
-    stats
+    (stats, statted)
   }
 
   /** Relative files of `version` whose [min, max] intersects EVERY
@@ -244,9 +260,8 @@ object VersionedStats {
       preds: Seq[(String, Column, Column)],
       version: Option[Long] = None): (Seq[String], Long) = {
     require(preds.nonEmpty, "VersionedStats: need at least one predicate")
-    val v = version.getOrElse(VersionedTable.latestVersion(dir)
-      .getOrElse(sys.error(s"VersionedStats: $dir has no committed version")))
-    val stats = loadStats(spark, dir, v)
+    val v = versionOr(dir, version)
+    val (stats, statted) = loadStats(spark, dir, v)
     val physOf = physicalStatCols(dir, v, preds.map(_._1)).toMap
     preds.foreach { case (c, _, _) => require(stats.columns.contains(s"min_${physOf(c)}"),
       s"VersionedStats: column $c is not statted for version $v — refresh including it") }
@@ -254,10 +269,10 @@ object VersionedStats {
       col(s"max_${physOf(c)}") >= lo && col(s"min_${physOf(c)}") <= hi
     }.reduce(_ && _)
     val kept = stats.where(cond).select("file").collect().map(_.getString(0)).toSeq
-    require(kept.size <= SkippingIndex.MaxPrunedFiles,
+    require(kept.size <= MaxPrunedFiles,
       s"VersionedStats: pruning kept ${kept.size} files — the clustering does not " +
         "discriminate for this predicate; re-cluster (commitCompact clusterBy) or read plainly")
-    (kept, stats.count())
+    (kept, statted.size.toLong)
   }
 
   /** Range read through the stats manifest: scan ONLY surviving files, then
@@ -269,7 +284,7 @@ object VersionedStats {
   def readPruned(spark: SparkSession, dir: String,
       preds: Seq[(String, Column, Column)],
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(VersionedTable.latestVersion(dir).get)
+    val v = versionOr(dir, version)
     val (kept, _) = prunedFiles(spark, dir, preds, Some(v))
     val base =
       if (kept.isEmpty) VersionedTable.read(spark, dir, Some(v)).limit(0)

@@ -2510,17 +2510,11 @@ object VersionedTable {
     * published. */
   def commitCompact(spark: SparkSession, dir: String, targetFiles: Int,
       clusterBy: Seq[String] = Seq.empty,
-      zOrderBy: Option[(String, String)] = None,
       where: Option[org.apache.spark.sql.Column] = None,
       zOrderCols: Seq[String] = Seq.empty): Long = {
     require(targetFiles >= 1, s"commitCompact: targetFiles must be >= 1, got $targetFiles")
-    // N-column ZORDER (zOrderCols) and the legacy 2-column tuple are one
-    // layout family; clusterBy is the other — exactly one may be chosen
-    val zCols = zOrderCols ++ zOrderBy.toSeq.flatMap { case (a, b) => Seq(a, b) }
-    require(zOrderCols.isEmpty || zOrderBy.isEmpty,
-      "commitCompact: pass zOrderCols or zOrderBy, not both")
-    require(clusterBy.isEmpty || zCols.isEmpty,
-      "commitCompact: clusterBy and zOrderBy are mutually exclusive layouts")
+    require(clusterBy.isEmpty || zOrderCols.isEmpty,
+      "commitCompact: clusterBy and zOrderCols are mutually exclusive layouts")
     FsIO.withWriteLock(dir, "VersionedTable.commitCompact", TableManager.DefaultLockLeaseMs) {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
@@ -2550,8 +2544,8 @@ object VersionedTable {
           // OPTIMIZE ZORDER BY: each rewritten file covers a narrow range
           // of EVERY listed column, so per-file stats prune selective
           // filters on any of them
-          if (zCols.nonEmpty)
-            TableManager.zLayoutN(full, zCols, targetFiles,
+          if (zOrderCols.nonEmpty)
+            TableManager.zLayoutN(full, zOrderCols, targetFiles,
               "VersionedTable.commitCompact")
           else if (clusterBy.isEmpty) full.repartition(targetFiles)
           else full.repartitionByRange(targetFiles,

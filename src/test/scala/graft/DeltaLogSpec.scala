@@ -158,7 +158,7 @@ class DeltaLogSpec extends SparkSpec {
     intercept[Exception] { VersionedTable.read(spark, dir, Some(0L)).count() }
   }
 
-  test("commitCompact zOrderBy: selective filters on EITHER column touch few files") {
+  test("commitCompact zOrderCols: selective filters on EITHER column touch few files") {
     val dir = dirOf()
     // anti-correlated layout: clustering by a alone would leave b scattered
     val base = spark.range(0L, 4096L).select(
@@ -167,7 +167,7 @@ class DeltaLogSpec extends SparkSpec {
     VersionedTable.commitAppend(spark, base.repartition(8), dir)
     val before = VersionedTable.read(spark, dir).collect().map(_.toSeq).toSet
     val vz = VersionedTable.commitCompact(spark, dir, targetFiles = 4,
-      zOrderBy = Some(("a", "b")))
+      zOrderCols = Seq("a", "b"))
     assert(VersionedTable.read(spark, dir).collect().map(_.toSeq).toSet == before)
     // files touched by a narrow range on each dimension — z-order keeps
     // both selective (4 files tile the (a,b) plane in 2x2 z-cells)

@@ -304,16 +304,17 @@ class PlansSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"phash must be map-side:\n$plan")
     val dir = java.nio.file.Files.createTempDirectory("graft_plan_stats").toString + "/t"
-    graft.tables.SkippingIndex.writeClustered(
-      Tables.load(spark, sfDir, "lineitem").select("l_orderkey", "l_quantity"),
-      dir, "l_orderkey", Seq("l_orderkey"), nFiles = 4)
-    val stats = graft.tables.SkippingIndex.statsOnlyAggregate(spark, dir, Seq("l_orderkey"))
-    // the only file source in the plan is the sidecar manifest
+    graft.tables.VersionedTable.commit(spark,
+      Tables.load(spark, sfDir, "lineitem").select("l_orderkey", "l_quantity")
+        .repartitionByRange(4, col("l_orderkey")), dir)
+    graft.tables.VersionedStats.refresh(spark, dir, Seq("l_orderkey"))
+    val stats = graft.tables.VersionedStats.statsOnlyAggregate(spark, dir, Seq("l_orderkey"))
+    // the only file source in the plan is the version's stats manifest
     val scan = stats.queryExecution.executedPlan.toString
-    assert(scan.contains("_graft_stats"), s"manifest scan missing:\n$scan")
-    val dataScans = scan.linesIterator.count(l =>
-      l.contains("FileScan parquet") && !l.contains("_graft_stats"))
-    assert(dataScans == 0, s"data files entered the stats-only plan:\n$scan")
+    val fileScans = scan.linesIterator.filter(_.contains("FileScan parquet")).toSeq
+    assert(fileScans.nonEmpty, s"stats manifest scan missing:\n$scan")
+    assert(fileScans.forall(_.contains("/_stats/")),
+      s"data files entered the stats-only plan:\n$scan")
   }
 
   test("saltedAggregate matches direct aggregation (algebraic aggs)") {

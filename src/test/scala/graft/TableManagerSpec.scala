@@ -65,41 +65,6 @@ class TableManagerSpec extends SparkSpec {
     assert(after.sameElements(before))
   }
 
-  test("compactZOrder clusters both columns: per-file ranges shrink, content preserved") {
-    val dir = Files.createTempDirectory("graft_zorder").toString + "/data"
-    val li  = Tables.load(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_partkey", "l_quantity")
-    li.repartition(8).write.parquet(dir) // random layout: every file spans ~full range
-    val before = spark.read.parquet(dir)
-      .orderBy("l_orderkey", "l_partkey", "l_quantity").collect()
-
-    // z-contiguous tiles span ~1/sqrt(nFiles) of each dimension — use
-    // enough files that clustering is unambiguous vs the random layout
-    TableManager.compactZOrder(spark, dir, "l_orderkey", "l_partkey", targetFiles = 32)
-
-    val after = spark.read.parquet(dir)
-      .orderBy("l_orderkey", "l_partkey", "l_quantity").collect()
-    assert(after.sameElements(before), "z-order rewrite must preserve content")
-
-    // data-skipping property: average per-file span of l_orderkey is a small
-    // fraction of the global span (random layout gives ~full span per file)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.toString).filter(_.endsWith(".parquet"))
-    assert(files.length == 32)
-    val globalSpan = {
-      val r = spark.read.parquet(dir).agg(min("l_orderkey"), max("l_orderkey")).head()
-      (r.getLong(1) - r.getLong(0)).toDouble
-    }
-    val spans = files.map { f =>
-      val r = spark.read.parquet(f).agg(min("l_orderkey"), max("l_orderkey")).head()
-      (r.getLong(1) - r.getLong(0)).toDouble
-    }
-    assert(spans.sum / spans.length < globalSpan * 0.4,
-      s"expected clustered files, got spans ${spans.map(_.toInt).mkString(",")} vs global $globalSpan")
-  }
-
   test("withParquetCodec restores previous codec even on failure (S11)") {
     val prev = spark.conf.get("spark.sql.parquet.compression.codec")
     intercept[RuntimeException] {

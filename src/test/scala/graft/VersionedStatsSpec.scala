@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.obs.Obs
 import graft.tables.{VersionedStats, VersionedTable}
 import org.apache.spark.sql.functions._
 
@@ -31,6 +32,9 @@ class VersionedStatsSpec extends SparkSpec {
     val (kept, total) = VersionedStats.prunedFiles(spark, dir,
       Seq(("k", lit(100L), lit(199L))))
     assert(total == 8L && kept.size == 1, s"kept ${kept.size}/$total")
+    // an empty range keeps no file: an empty frame with the table's schema
+    val none = VersionedStats.readPruned(spark, dir, Seq(("k", lit(-500L), lit(-100L))))
+    assert(none.count() == 0L && none.columns.toSeq == Seq("k", "x"))
     // corrupt every file OUTSIDE the kept set: the pruned read never plans
     // a scan over them (file-LIST pruning, stronger than row-group stats —
     // their footers are never even opened by the pruned plan)
@@ -125,6 +129,72 @@ class VersionedStatsSpec extends SparkSpec {
       VersionedStats.statsOnlyAggregate(spark, dir2, Seq("k"))
     }
     assert(e.getMessage.contains("deletion vectors"), e.getMessage)
+    // nulls: n_notnull counts only non-null values, min/max skip them; an
+    // unstatted column is refused with the fix named
+    import spark.implicits._
+    val dir3 = Files.createTempDirectory("graft_vs9").toString + "/t"
+    VersionedTable.commit(spark, Seq[(java.lang.Long, java.lang.Double, String)](
+        (1L, 10.5, "a"), (2L, null, "b"), (3L, -2.0, "c"), (4L, 7.25, "d"),
+        (5L, null, "e"), (6L, 0.0, "f"))
+      .toDF("k", "v", "w").repartitionByRange(3, col("k")), dir3)
+    VersionedStats.refresh(spark, dir3, Seq("k", "v"))
+    val byCol = VersionedStats.statsOnlyAggregate(spark, dir3, Seq("k", "v"))
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), Option(r.get(3)), Option(r.get(4)))).toMap
+    assert(byCol("k") == ((6L, 6L, Some(1.0), Some(6.0))), byCol("k"))
+    assert(byCol("v") == ((6L, 4L, Some(-2.0), Some(10.5))), byCol("v"))
+    val e2 = intercept[IllegalArgumentException] {
+      VersionedStats.statsOnlyAggregate(spark, dir3, Seq("w"))
+    }
+    assert(e2.getMessage.contains("refresh with it included"), e2.getMessage)
+  }
+
+  test("z-order compaction: each dimension prunes alone; AND-read = two-range filter") {
+    val dir = Files.createTempDirectory("graft_vsz").toString + "/t"
+    VersionedTable.commit(spark, Tables.load(spark, sfDir, "lineitem")
+      .select("l_orderkey", "l_partkey", "l_quantity"), dir)
+    VersionedTable.commitCompact(spark, dir, targetFiles = 8,
+      zOrderCols = Seq("l_orderkey", "l_partkey"))
+    VersionedStats.refresh(spark, dir, Seq("l_orderkey", "l_partkey"))
+    val a = ("l_orderkey", lit(1L), lit(600L))
+    val b = ("l_partkey", lit(1L), lit(50L))
+    val (kA, tot) = VersionedStats.prunedFiles(spark, dir, Seq(a))
+    val (kB, _)   = VersionedStats.prunedFiles(spark, dir, Seq(b))
+    assert(kA.size < tot, s"orderkey kept ${kA.size}/$tot")
+    assert(kB.size < tot, s"partkey kept ${kB.size}/$tot")
+    // the AND keeps at most what either dimension keeps alone
+    val (kAB, _) = VersionedStats.prunedFiles(spark, dir, Seq(a, b))
+    assert(kAB.size <= math.min(kA.size, kB.size))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), String.valueOf(r.get(1)), String.valueOf(r.get(2))))
+        .sorted.toSeq
+    val pruned = rows(VersionedStats.readPruned(spark, dir, Seq(a, b)))
+    val full = rows(VersionedTable.read(spark, dir).where(
+      col("l_orderkey").between(1L, 600L) && col("l_partkey").between(1L, 50L)))
+    assert(pruned == full && pruned.nonEmpty)
+  }
+
+  test("prunedFiles takes the file total from the 1:1 check, not a count job") {
+    val dir = Files.createTempDirectory("graft_vsj").toString + "/t"
+    VersionedTable.commit(spark, spark.range(0L, 800L).select(col("id").as("k"))
+      .repartitionByRange(8, col("k")), dir)
+    VersionedStats.refresh(spark, dir, Seq("k"))
+    val range = Seq(("k", lit(100L), lit(199L)))
+    VersionedStats.prunedFiles(spark, dir, range) // warm
+    val ((kept, total), run) = Obs.measure(spark)(VersionedStats.prunedFiles(spark, dir, range))
+    assert(total == 8L && kept.size == 1, s"kept ${kept.size}/$total")
+    // budget: the manifest's schema read, the file-set collect of the 1:1
+    // check, the kept-file collect — no fourth job to count what the
+    // file-set collect already holds
+    assert(run.jobs <= 3, s"prunedFiles ran ${run.jobs} Spark jobs (budget 3)")
+  }
+
+  test("readPruned on a table with no committed version fails loudly") {
+    val dir = Files.createTempDirectory("graft_vsn").toString + "/t"
+    val e = intercept[RuntimeException] {
+      VersionedStats.readPruned(spark, dir, Seq(("k", lit(0L), lit(1L))))
+    }
+    assert(e.getMessage.contains("has no committed version"), e.getMessage)
   }
 
   test("stats survive RENAME COLUMN: physical-keyed manifest, logical-name reads") {
