@@ -32,6 +32,21 @@ import org.apache.spark.sql.SparkSession
   *    The conf is static: `CodeGenerator` reads it once per JVM, when the
   *    first codegen builds its cache, so a session built earlier in the
   *    same JVM without `configure` pins the cache at 100.
+  *  - Artifact isolation off (`spark.sql.artifact.isolation.enabled`). The
+  *    codegen cache is keyed by the compiling thread's context class loader
+  *    as well as the generated source. With isolation on (Spark's default),
+  *    every session stamps its jobs with its own artifact-state UUID and the
+  *    executor builds a fresh `ExecutorClassLoader` per UUID; Structured
+  *    Streaming runs each query, and each restart of it, in a
+  *    `cloneSession()` with a new UUID. So every stream run compiled its
+  *    task-side classes again (in `CodegenReuseSpec`, 20 per re-run of
+  *    `streamImageDedup` and 3 per re-run of a `readStream.format("graft")`
+  *    scoring stream), and each run's copies stayed cached, pinning their
+  *    loader, until LRU eviction. With isolation off, tasks run under the
+  *    executor's one default loader and a restarted stream hits the cache.
+  *    Isolation protects nothing here: the engine adds no session artifacts
+  *    (no `addArtifact`/`addJar`). Spark reads the conf once, when the
+  *    session is created; setting it on a live session changes nothing.
   */
 object GraftSession {
 
@@ -67,6 +82,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
   }
 
   /** Standalone builder for tests / local exploration. */

@@ -2885,12 +2885,12 @@ object SparkEntry {
       val li = t(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
       VersionedTable.commit(s, clustered(li, 16), tbl)
-      VersionedStats.refresh(s, tbl, Seq("l_orderkey"))
+      val v = VersionedStats.refresh(s, tbl, Seq("l_orderkey"))
       val range = Seq(("l_orderkey", lit(1000L), lit(2000L)))
-      val (kept, total) = VersionedStats.prunedFiles(s, tbl, range)
+      val (kept, total) = VersionedStats.prunedFiles(s, tbl, range, Some(v))
       require(kept.size < total,
         s"stats must prune the range scan; kept ${kept.size} of $total files")
-      VersionedStats.readPruned(s, tbl, range)
+      VersionedStats.readKept(s, tbl, range, v, kept)
         .withColumn("l_extendedprice", col("l_extendedprice").cast(Dec).cast("double"))
         .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     }),
@@ -2906,15 +2906,15 @@ object SparkEntry {
         .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity"), tbl)
       VersionedTable.commitCompact(s, tbl, targetFiles = 16,
         zOrderCols = Seq("l_orderkey", "l_partkey"))
-      VersionedStats.refresh(s, tbl, Seq("l_orderkey", "l_partkey"))
+      val v = VersionedStats.refresh(s, tbl, Seq("l_orderkey", "l_partkey"))
       val ranges = Seq(("l_orderkey", lit(1000L), lit(4000L)),
         ("l_partkey", lit(100L), lit(400L)))
-      val (kA, tot) = VersionedStats.prunedFiles(s, tbl, ranges.take(1))
-      val (kB, _)   = VersionedStats.prunedFiles(s, tbl, ranges.drop(1))
+      val (kA, tot) = VersionedStats.prunedFiles(s, tbl, ranges.take(1), Some(v))
+      val (kB, _)   = VersionedStats.prunedFiles(s, tbl, ranges.drop(1), Some(v))
       require(kA.size < tot && kB.size < tot,
         s"z-order stats must prune on BOTH dimensions; kept " +
           s"${kA.size}/$tot on l_orderkey, ${kB.size}/$tot on l_partkey")
-      VersionedStats.readPruned(s, tbl, ranges)
+      VersionedStats.readKept(s, tbl, ranges, v, kA.intersect(kB))
         .orderBy("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")
     }),
 
@@ -2932,12 +2932,12 @@ object SparkEntry {
       VersionedStats.refresh(s, tbl, Seq("l_orderkey"))
       VersionedTable.commitAppend(s,
         clustered(li.where(pmod(col("l_orderkey"), lit(2L)) === 1L), 8), tbl)
-      VersionedStats.refreshIncremental(s, tbl, Seq("l_orderkey"))
+      val v = VersionedStats.refreshIncremental(s, tbl, Seq("l_orderkey"))
       val range = Seq(("l_orderkey", lit(1000L), lit(2000L)))
-      val (kept, total) = VersionedStats.prunedFiles(s, tbl, range)
+      val (kept, total) = VersionedStats.prunedFiles(s, tbl, range, Some(v))
       require(total == 16 && kept.size < total,
         s"append must extend the stats and still prune; kept ${kept.size} of $total")
-      VersionedStats.readPruned(s, tbl, range)
+      VersionedStats.readKept(s, tbl, range, v, kept)
         .orderBy("l_orderkey", "l_linenumber", "l_quantity")
     }),
 
@@ -3720,13 +3720,12 @@ object SparkEntry {
       VersionedTable.commitAppend(s, clustered(li.where(col("l_orderkey") % 2 === 1), 8), dir)
       VersionedStats.refresh(s, dir, Seq("l_orderkey"))
       VersionedTable.commitAppend(s, clustered(li.where(col("l_orderkey") % 2 === 0), 8), dir)
-      VersionedStats.refreshIncremental(s, dir, Seq("l_orderkey"))
-      val (kept, total) = VersionedStats.prunedFiles(s, dir,
-        Seq(("l_orderkey", lit(1000L), lit(5000L))))
+      val v = VersionedStats.refreshIncremental(s, dir, Seq("l_orderkey"))
+      val range = Seq(("l_orderkey", lit(1000L), lit(5000L)))
+      val (kept, total) = VersionedStats.prunedFiles(s, dir, range, Some(v))
       require(kept.size.toDouble / total < 0.4,
         s"stats pruning kept ${kept.size}/$total files — clustering regressed")
-      VersionedStats.readPruned(s, dir,
-          Seq(("l_orderkey", lit(1000L), lit(5000L))))
+      VersionedStats.readKept(s, dir, range, v, kept)
         .orderBy("l_orderkey", "l_partkey", "qty")
     }),
 

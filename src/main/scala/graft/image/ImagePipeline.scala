@@ -123,13 +123,16 @@ object ImagePipeline {
     // the scan cache can be released here without leaking pinned payloads.
     // Uncompressed codec: payloads are already-compressed JPEG/PNG bytes —
     // recompressing burns CPU for ~0 ratio (same rationale as trainingPrep).
+    // The read-back takes the written frame's schema: parquet schema
+    // inference would launch a job of its own to merge the footers, one
+    // more job per ingest for a schema already known here.
+    val staged = indexed.join(gray, Seq("path"), "left_outer")
     try {
       graft.tables.TableManager.withParquetCodec(spark, "uncompressed") {
-        indexed.join(gray, Seq("path"), "left_outer")
-          .write.mode("overwrite").parquet(stageDir)
+        staged.write.mode("overwrite").parquet(stageDir)
       }
     } finally labeled.unpersist(false)
-    spark.read.parquet(stageDir)
+    spark.read.schema(staged.schema).parquet(stageDir)
   }
 
   /** The training-prep shape (`02.a …:74-97`): project to (content,

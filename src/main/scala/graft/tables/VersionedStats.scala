@@ -57,17 +57,24 @@ object VersionedStats {
     }
   }
 
-  /** Physical stat columns plus their declared types, for null-filling:
-    * files written BEFORE an ADD COLUMN don't carry the new physical
-    * column at all, yet their stats rows must still have its
-    * (all-null → cnt 0) slots so the manifest keeps one uniform schema. */
-  private def physicalStatColsTyped(dir: String, v: Long, statCols: Seq[String])
-      : Seq[(String, org.apache.spark.sql.types.DataType)] = {
-    def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val declared = VersionedTable.declaredSchemaAt(dir, v)
+  /** Physical stat columns plus their types, for the stats read-back of
+    * `rels` (files of version `v`). Types come from the declared schema,
+    * else from one driver footer read of the first file read back: the
+    * commit gate holds every file of an undeclared table's version to one
+    * schema, and taking the footer from `rels` keeps the incremental
+    * refresh's I/O on the version's fresh files alone. The
+    * read-back pins these types, so it never pays parquet's
+    * footer-merging inference job, and files written BEFORE an ADD COLUMN
+    * null-fill the new physical column while their stats rows keep its
+    * (all-null → cnt 0) slots, one uniform manifest schema. None: a column
+    * of an undeclared table that no file carries. */
+  private def physicalStatColsTyped(spark: SparkSession, dir: String, v: Long,
+      statCols: Seq[String], rels: Seq[String])
+      : Seq[(String, Option[org.apache.spark.sql.types.DataType])] = {
+    val schema = VersionedTable.declaredSchemaAt(dir, v).orElse(rels.headOption.map(rel =>
+      org.apache.spark.sql.graft.FooterShim.schemaOf(spark, new Path(new Path(dir), rel).toString)))
     physicalStatCols(dir, v, statCols).map { case (c, p) =>
-      p -> declared.flatMap(_.fields.find(_.name.equalsIgnoreCase(lc(c))))
-        .map(_.dataType).getOrElse(org.apache.spark.sql.types.NullType)
+      p -> schema.flatMap(_.fields.find(_.name.equalsIgnoreCase(c))).map(_.dataType)
     }
   }
 
@@ -100,8 +107,10 @@ object VersionedStats {
       sys.error(s"VersionedStats: could not publish stats for version $v in $dir")
   }
 
-  private def readBack(spark: SparkSession, dir: String, rels: Seq[String],
-      statCols: Seq[(String, org.apache.spark.sql.types.DataType)]): DataFrame = {
+  /** Stats rows of `rels` (files of version `v`), one per file. */
+  private def readBack(spark: SparkSession, dir: String, v: Long, rels: Seq[String],
+      logicalCols: Seq[String]): DataFrame = {
+    val statCols = physicalStatColsTyped(spark, dir, v, logicalCols, rels)
     val aggs = statAggs(statCols.map(_._1))
     val byAbs = rels.map(rel =>
       new Path(new Path(dir), rel).toUri.getPath -> rel).toMap
@@ -113,27 +122,18 @@ object VersionedStats {
     // file set mixing pre/post-ADD-COLUMN files the sampled footer can
     // predate the evolution and project the new column away for EVERY
     // file, recording cnt=0 even for files holding real values. Pin the
-    // read to the declared physical schema instead: the parquet reader
+    // read to the version's physical schema instead: the parquet reader
     // then null-fills the column per file that lacks it and reads it
     // wherever it exists.
-    import org.apache.spark.sql.types.{NullType, StructField, StructType}
-    val pinnable = statCols.forall(_._2 != NullType)
-    val raw =
-      if (pinnable)
-        spark.read
-          .schema(StructType(statCols.map { case (p, dt) => StructField(p, dt) }))
-          .parquet(paths: _*)
-      else
-        // no declared schema pins a type (legacy table, so no evolution
-        // path exists either) — merge every footer so a column present in
-        // ANY file survives and per-file absences null-fill
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    val have = raw.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    // a stat column present in NO file at all (mergeSchema branch only):
-    // null-fill so the stats row still carries its slots (cnt 0, min/max null)
-    val filled = statCols.foldLeft(raw) { case (df, (p, dt)) =>
-      if (have(p.toLowerCase(java.util.Locale.ROOT))) df
-      else df.withColumn(p, lit(null).cast(dt))
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val raw = spark.read
+      .schema(StructType(statCols.collect { case (p, Some(dt)) => StructField(p, dt) }))
+      .parquet(paths: _*)
+    // a stat column present in NO file at all: null-fill so the stats row
+    // still carries its slots (cnt 0, min/max null)
+    val filled = statCols.foldLeft(raw) {
+      case (df, (p, None)) => df.withColumn(p, lit(null))
+      case (df, _)         => df
     }
     // group on the raw file name and map each GROUP to its relative name:
     // the path-parsing UDF then runs once per file, not once per row
@@ -153,8 +153,7 @@ object VersionedStats {
     // stats read raw footers, so they aggregate — and the manifest keys —
     // on PHYSICAL names, resolved from the logical statCols through the
     // version's column mapping; renames never invalidate a manifest
-    val phys = physicalStatColsTyped(dir, v, statCols)
-    writeStats(spark, dir, v, readBack(spark, dir, VersionedTable.filesOf(dir, v), phys))
+    writeStats(spark, dir, v, readBack(spark, dir, v, VersionedTable.filesOf(dir, v), statCols))
     v
   }
 
@@ -167,7 +166,7 @@ object VersionedStats {
       statCols: Seq[String]): Long = {
     require(statCols.nonEmpty, "VersionedStats: need at least one stat column")
     val v = versionOr(dir, None)
-    val phys = physicalStatColsTyped(dir, v, statCols)
+    val phys = physicalStatCols(dir, v, statCols).map(_._2)
     val base = stattedVersions(dir).filter(_ < v).lastOption
     base match {
       case None => refresh(spark, dir, statCols)
@@ -176,7 +175,7 @@ object VersionedStats {
         // physical-keyed carry-forward: the previous manifest must cover
         // the SAME physical columns (a rename alone changes nothing here;
         // a re-added column's fresh physical name forces the full re-key)
-        if (!phys.forall { case (c, _) => prev.columns.contains(s"min_$c") })
+        if (!phys.forall(c => prev.columns.contains(s"min_$c")))
           refresh(spark, dir, statCols) // column set changed: re-key
         else {
           val rels    = VersionedTable.filesOf(dir, v)
@@ -185,7 +184,7 @@ object VersionedStats {
           val carriedDf = prev.where(col("file").isin(carried: _*))
           val stats =
             if (fresh.isEmpty) carriedDf
-            else carriedDf.unionByName(readBack(spark, dir, fresh, phys))
+            else carriedDf.unionByName(readBack(spark, dir, v, fresh, statCols))
           writeStats(spark, dir, v, stats)
           v
         }
@@ -285,7 +284,17 @@ object VersionedStats {
       preds: Seq[(String, Column, Column)],
       version: Option[Long] = None): DataFrame = {
     val v = versionOr(dir, version)
-    val (kept, _) = prunedFiles(spark, dir, preds, Some(v))
+    readKept(spark, dir, preds, v, prunedFiles(spark, dir, preds, Some(v))._1)
+  }
+
+  /** [[readPruned]] over a kept set the caller already holds, for callers
+    * that gate on the pruning before reading: the read then loads the stats
+    * manifest and runs its 1:1 check once, not twice. `kept` must be what
+    * [[prunedFiles]] returned at version `v` for `preds` (the intersection
+    * of the sets for a split of `preds` is the same set: a file is kept iff
+    * it intersects every range). */
+  def readKept(spark: SparkSession, dir: String,
+      preds: Seq[(String, Column, Column)], v: Long, kept: Seq[String]): DataFrame = {
     val base =
       if (kept.isEmpty) VersionedTable.read(spark, dir, Some(v)).limit(0)
       else {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.image.{ImageFixtures, ImagePipeline, ImageUdfs, Kernels, LinearScoringModel}
+import graft.obs.Obs
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -61,6 +62,24 @@ class ImagePipelineSpec extends SparkSpec {
     // sit pinned in executor storage
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"ingest leaked persistent RDDs: $leaked")
+  }
+
+  test("ingest reads the stage back with the schema parquet inference gives") {
+    val stage = Files.createTempDirectory("graft_stage_schema").toString + "/ingested"
+    val out   = ImagePipeline.ingest(spark, fixtureDir, stage)
+    val inferred = spark.read.parquet(stage).schema
+    assert(out.schema == inferred,
+      s"read-back schema ${out.schema.treeString} differs from inferred ${inferred.treeString}")
+    assert(out.count() == ImageFixtures.Classes.size * 6)
+  }
+
+  test("ingest: bounded Spark jobs, no schema-inference job on the read-back") {
+    ImagePipeline.ingest(spark, fixtureDir) // warm
+    val jobs = Obs.measure(spark)(ImagePipeline.ingest(spark, fixtureDir))._2.jobs
+    // budget: the scan/label-index and grouped-map stages, the join and the
+    // staging write, as AQE submits them; the read-back takes the written
+    // frame's schema, so parquet inference adds no tenth job
+    assert(jobs <= 9, s"ingest ran $jobs Spark jobs (budget 9)")
   }
 
   test("spark.graft.stageRoot routes default staging under the configured root") {

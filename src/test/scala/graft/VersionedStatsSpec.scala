@@ -189,6 +189,43 @@ class VersionedStatsSpec extends SparkSpec {
     assert(run.jobs <= 3, s"prunedFiles ran ${run.jobs} Spark jobs (budget 3)")
   }
 
+  test("a gated read reuses the gate's kept set: gate + read run the jobs of the gate alone") {
+    val dir = Files.createTempDirectory("graft_vsg").toString + "/t"
+    VersionedTable.commit(spark, spark.range(0L, 800L)
+      .select(col("id").as("k"), (col("id") * 3).as("x")).repartitionByRange(8, col("k")), dir)
+    val v = VersionedStats.refresh(spark, dir, Seq("k"))
+    val range = Seq(("k", lit(100L), lit(199L)))
+    VersionedStats.prunedFiles(spark, dir, range, Some(v)) // warm
+    val gate = Obs.measure(spark)(VersionedStats.prunedFiles(spark, dir, range, Some(v)))._2.jobs
+    val (read, run) = Obs.measure(spark) {
+      val (kept, total) = VersionedStats.prunedFiles(spark, dir, range, Some(v))
+      require(kept.size < total)
+      VersionedStats.readKept(spark, dir, range, v, kept)
+    }
+    assert(run.jobs == gate, s"gate + read ran ${run.jobs} Spark jobs, the gate alone $gate")
+    assert(read.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      (100L until 200L).map(k => (k, k * 3)).toSet)
+  }
+
+  test("refresh on an undeclared table types stats from one footer: no footer-merge job") {
+    val dir = Files.createTempDirectory("graft_vsu").toString + "/t"
+    VersionedTable.commitAppend(spark, spark.range(0L, 800L)
+      .select(col("id").as("k"), (col("id") * 3).as("x")).repartition(8), dir)
+    assert(VersionedTable.declaredSchemaAt(dir, 0L).isEmpty)
+    VersionedStats.refresh(spark, dir, Seq("k")) // warm
+    // a stat column no file carries still gets its null slots (cnt 0)
+    val jobs = Obs.measure(spark)(VersionedStats.refresh(spark, dir, Seq("k", "x", "absent")))._2.jobs
+    // budget: the per-file aggregate's shuffle stage and the stats write;
+    // typing the read from one driver footer leaves no job to merge footers
+    assert(jobs <= 2, s"refresh ran $jobs Spark jobs (budget 2)")
+    val byCol = VersionedStats.statsOnlyAggregate(spark, dir, Seq("k", "x", "absent"))
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), Option(r.get(3)), Option(r.get(4)))).toMap
+    assert(byCol("k") == ((800L, 800L, Some(0.0), Some(799.0))), byCol("k"))
+    assert(byCol("x") == ((800L, 800L, Some(0.0), Some(2397.0))), byCol("x"))
+    assert(byCol("absent") == ((800L, 0L, None, None)), byCol("absent"))
+  }
+
   test("readPruned on a table with no committed version fails loudly") {
     val dir = Files.createTempDirectory("graft_vsn").toString + "/t"
     val e = intercept[RuntimeException] {
