@@ -790,63 +790,26 @@ object ScaleBench {
 
     // RETENTION at day grain, decade-deep: a day-partitioned table with
     // 40·F day directories drops a FIXED 7-day prefix — dropDaysBefore is
-    // one directory listing (O(days), driver metadata) plus O(dropped)
-    // recursive deletes, so wall must stay near-flat while the day count
-    // grows ∝F. rows = the sweep's own micros.
+    // one metadata-only commit (the head manifest minus the dropped days'
+    // entries; zero data I/O), so wall must stay near-flat while the day
+    // count grows ∝F. rows = the sweep's own micros.
     "drop_days_sweep" -> ((s, d, f) => {
       val work = s"$d/dropdays/t"
-      val fs = new org.apache.hadoop.fs.Path(work)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$d/dropdays"), true)
+      tables.TableManager.deleteDir(s, work)
       val day = 86400L * 1000000000L
       val d0  = 19724L * day
       tables.TimePartitioned.write(
         s.range(40L * f).select(col("id").as("k"), (lit(d0) + col("id") * day).as("ts")),
-        work, "ts", filesPerDay = 1)
+        work, "ts")
       val t0 = System.nanoTime()
       val droppedDays = tables.TimePartitioned.dropDaysBefore(s, work, d0 + 7 * day)
       val us = (System.nanoTime() - t0) / 1000
       require(droppedDays.size == 7, s"expected 7 dropped days, got ${droppedDays.size}")
-      require(s.read.parquet(work).count() == 40L * f - 7,
+      require(tables.VersionedTable.read(s, work).count() == 40L * f - 7,
         "remaining days must read in full")
       System.err.println(s"[scale] drop_days_sweep f=$f days=${40 * f} " +
         s"dropped=7 sweep_us=$us")
       s.range(us).toDF("drop_days_us")
-    }),
-
-    // LOAD-TIME HEAL clean path, decade-deep (VERDICT r16 #5): the
-    // day-table catalog load runs heal() before a query's child plans
-    // resolve; the claim is O(1) — three existence probes, no directory
-    // listing, no lock touch — so per-call wall must stay FLAT as the day
-    // count grows ∝F (40·F day dirs). rows = mean heal micros over 200
-    // calls (a listing-based heal would grow ~10× from f=1 to f=10).
-    // Also reports the hook's share of a first-query read as a sanity
-    // line: probe cost must be noise against even one day's footer read.
-    "heal_clean_path" -> ((s, d, f) => {
-      val work = s"$d/healclean/t"
-      val fs = new org.apache.hadoop.fs.Path(work)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$d/healclean"), true)
-      val day = 86400L * 1000000000L
-      val d0  = 19724L * day
-      tables.TimePartitioned.write(
-        s.range(40L * f).select(col("id").as("k"), (lit(d0) + col("id") * day).as("ts")),
-        work, "ts", filesPerDay = 1)
-      var i = 0
-      while (i < 20) { tables.TimePartitioned.heal(s, work); i += 1 } // JIT warm
-      val n  = 200
-      val t0 = System.nanoTime()
-      i = 0
-      while (i < n) { tables.TimePartitioned.heal(s, work); i += 1 }
-      val us = (System.nanoTime() - t0) / 1000 / n
-      val tq0 = System.nanoTime()
-      tables.TimePartitioned.heal(s, work)
-      val cnt = s.read.parquet(work).count()
-      val firstQueryMs = (System.nanoTime() - tq0) / 1000000
-      require(cnt == 40L * f, "clean table must read in full")
-      System.err.println(s"[scale] heal_clean_path f=$f days=${40 * f} " +
-        s"heal_us_per_call=$us first_query_with_hook_ms=$firstQueryMs")
-      s.range(math.max(us, 1L)).toDF("heal_us")
     }),
 
     // trigger SIZE ∝ F (constant trigger count): per-byte streaming cost

@@ -79,6 +79,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def committed(dir: String): Boolean =
     VersionedTable.latestVersion(dir).isDefined
 
+  /** A committed table the versioned verbs (time travel, ALTER) serve — a
+    * day-partitioned table commits through the same log but keeps its
+    * narrower append/overwrite surface. */
+  private def versionedTable(dir: String): Boolean =
+    GraftCatalog.dayColumnCached(dir).isEmpty && committed(dir)
+
   override def tableExists(ident: Identifier): Boolean =
     dirOf(ident).exists(d => committed(d) ||
       GraftCatalog.pendingSchemas.containsKey(d) ||
@@ -91,14 +97,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       // the CREATE → first-write window (the marker is there too, but the
       // schema is only in memory until files exist)
       case Some(d) if GraftCatalog.dayColumnCached(d).isDefined =>
-        // heal a CRASHED compaction/overwrite swap BEFORE any plan builds
-        // over this table (a self-referential INSERT OVERWRITE resolves
-        // its scan at analysis — a shelved day must be back by then).
-        // Lock-gated inside heal: a LIVE writer makes this a no-op (it
-        // owns the state), the clean path is three existence probes, and
-        // a heal that genuinely fails mid-swap propagates loudly rather
-        // than letting the query silently serve a table with a day hole.
-        graft.tables.TimePartitioned.heal(SparkSession.active, d)
         new GraftDayTable(ident.name(), d, GraftCatalog.dayColumnCached(d).get,
           Option(GraftCatalog.pendingSchemas.get(d)))
       case Some(d) if committed(d) =>
@@ -133,7 +131,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   /** `VERSION AS OF <v>` — the version string must be a commit number. */
   override def loadTable(ident: Identifier, version: String): Table =
     dirOf(ident) match {
-      case Some(d) if committed(d) =>
+      case Some(d) if versionedTable(d) =>
         val v = try version.toLong catch {
           case _: NumberFormatException => throw new IllegalArgumentException(
             s"$catalogName.${ident.name()}: VERSION AS OF takes a commit number, got `$version`")
@@ -145,7 +143,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   /** `TIMESTAMP AS OF <ts>` — Spark hands epoch MICROseconds. */
   override def loadTable(ident: Identifier, timestamp: Long): Table =
     dirOf(ident) match {
-      case Some(d) if committed(d) =>
+      case Some(d) if versionedTable(d) =>
         new GraftTable(ident.name(), d,
           Some(VersionedTable.versionAsOf(d, timestamp / 1000L)), None, Some(catalogName))
       case _ => throw new NoSuchTableException(ident)
@@ -223,7 +221,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     import org.apache.spark.sql.connector.catalog.TableChange._
     // property-only changes are legal in the CREATE → first-INSERT window;
     // schema changes need a committed version to commit against
-    val d = dirOf(ident).filter(dd => committed(dd) ||
+    val d = dirOf(ident).filter(dd => versionedTable(dd) ||
       GraftCatalog.pendingSchemas.containsKey(dd)).getOrElse(
       throw new NoSuchTableException(ident))
     val spark = SparkSession.active
@@ -247,7 +245,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // cannot leave a multi-change ALTER half-applied.
     def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
     val names = scala.collection.mutable.Set.empty[String]
-    if (committed(d))
+    if (versionedTable(d))
       names ++= VersionedTable.schemaOf(SparkSession.active, d, None)
         .fieldNames.map(lc)
     changes.foreach {
@@ -262,7 +260,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
           s"$catalogName: ADD COLUMN ... FIRST/AFTER is not supported — " +
             "columns append at the end (position is physical layout, " +
             "which OPTIMIZE owns)")
-        require(committed(d),
+        require(versionedTable(d),
           s"$catalogName: cannot ADD COLUMN before the table's first write " +
             "commits a version")
         require(!names(lc(c)),
@@ -270,7 +268,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         names += lc(c)
       case r: RenameColumn =>
         val from = topLevel(r.fieldNames(), "RENAME COLUMN")
-        require(committed(d),
+        require(versionedTable(d),
           s"$catalogName: cannot RENAME COLUMN before the table's first write")
         require(names(lc(from)),
           s"$catalogName: RENAME COLUMN `$from` — no such column")
@@ -279,7 +277,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         names -= lc(from); names += lc(r.newName())
       case del: DeleteColumn =>
         val c = topLevel(del.fieldNames(), "DROP COLUMN")
-        require(committed(d),
+        require(versionedTable(d),
           s"$catalogName: cannot DROP COLUMN before the table's first write")
         require(names(lc(c)),
           s"$catalogName: DROP COLUMN `$c` — no such column")
@@ -297,7 +295,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
             org.apache.spark.sql.connector.catalog.constraints.Check],
           s"$catalogName: only CHECK constraints are supported, got " +
             a.constraint().toDDL)
-        require(committed(d),
+        require(versionedTable(d),
           s"$catalogName: cannot ADD CONSTRAINT before the table's first write")
       case del: DropConstraint =>
         require(del.ifExists() ||

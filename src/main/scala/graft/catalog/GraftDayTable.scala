@@ -12,20 +12,23 @@ import org.apache.spark.sql.sources.{BaseRelation, InsertableRelation, TableScan
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DSv2 [[Table]] for a HIDDEN-day-partitioned directory — what `CREATE
-  * TABLE graft.t (...) PARTITIONED BY (days(ts))` creates (the Iceberg
-  * transform contract, over [[TimePartitioned]]'s layout). The partition
-  * key `p_day` derives from the raw epoch-nanos `ts` column at WRITE time
-  * and never appears in the table schema: readers query the raw timestamp,
-  * and [[graft.plans.DayPartitionPruning]] maps their time-range
+/** DSv2 [[Table]] for a HIDDEN-day-partitioned versioned table — what
+  * `CREATE TABLE graft.t (...) PARTITIONED BY (days(ts))` creates (the
+  * Iceberg transform contract, over [[TimePartitioned]]'s layout). The
+  * partition key `p_day` derives from the raw epoch-nanos `ts` column at
+  * WRITE time and never appears in the table schema: readers query the raw
+  * timestamp, and [[graft.plans.DayPartitionPruning]] maps their time-range
   * predicates onto `p_day` directory pruning automatically — forgetting
   * the partition column cannot cause a full scan, because there is no
   * partition column to remember.
   *
-  * An ingest-layout table, not a versioned one: INSERT INTO appends into
-  * day directories, INSERT OVERWRITE replaces the layout (re-asserting the
-  * `_props` marker the overwrite wipes). Row-level DML and time travel
-  * belong to [[GraftTable]]'s versioned protocol — refused here.
+  * The table is an ordinary [[VersionedTable]] whose files sit under
+  * `data/p_day=<day>/`: INSERT INTO is one `commitAppend`, INSERT
+  * OVERWRITE one whole-table `commit` — both publish through the versioned
+  * log's single commit point, and a self-referential `INSERT OVERWRITE t
+  * SELECT ... FROM t` reads the version it replaces. Row-level DML and
+  * time travel stay refused here: DML belongs to [[GraftTable]], and the
+  * catalog serves no `VERSION AS OF` for day tables.
   *
   * Ref: `01. Ingest.py:176-183` writes the reference's ingest table; the
   * day layout is the 100 TB shape for its `events`-style successors.
@@ -37,10 +40,7 @@ class GraftDayTable(val tableName: String, val dir: String, val tsCol: String,
   override def name(): String = tableName
 
   private lazy val resolvedSchema: StructType =
-    declaredSchema.getOrElse {
-      val raw = SparkSession.active.read.parquet(dir).schema
-      StructType(raw.fields.filterNot(_.name == "p_day"))
-    }
+    declaredSchema.getOrElse(VersionedTable.schemaOf(SparkSession.active, dir))
 
   override def schema(): StructType = resolvedSchema
 
@@ -55,14 +55,12 @@ class GraftDayTable(val tableName: String, val dir: String, val tsCol: String,
     m
   }
 
-  /** The full-fidelity V1 read plan the resolution rule substitutes:
-    * a plain partitioned-parquet scan (keeping `p_day` visible to Catalyst
-    * for directory pruning) projected back to the hidden-partition schema. */
+  /** The full-fidelity V1 read plan the resolution rule substitutes: the
+    * head manifest's files as a `p_day`-partitioned parquet scan (keeping
+    * `p_day` visible to Catalyst for directory pruning) projected back to
+    * the hidden-partition schema. */
   def readDataFrame(spark: SparkSession): DataFrame =
-    spark.read.schema(StructType(resolvedSchema.fields :+
-        org.apache.spark.sql.types.StructField("p_day",
-          org.apache.spark.sql.types.StringType)))
-      .parquet(dir).drop("p_day")
+    TimePartitioned.scan(spark, dir, resolvedSchema).drop(TimePartitioned.DayKey)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
@@ -90,24 +88,9 @@ class GraftDayTable(val tableName: String, val dir: String, val tsCol: String,
               require(data.columns.exists(_.equalsIgnoreCase(tsCol)),
                 s"graft: day-partitioned table $tableName needs its timestamp " +
                   s"column `$tsCol` in every write")
-              if (overwrite || overwriteAll) {
-                // STAGED, CRASH-RECOVERABLE overwrite — the protocol
-                // lives in TimePartitioned.overwriteStaged: heal crashed
-                // predecessors first (a shelved compaction day must be
-                // readable by a self-referential `INSERT OVERWRITE t
-                // SELECT ... FROM t`), stage the new layout hidden,
-                // record a durable intent, swap per day through a trash.
-                // `_props` — the managed flag and the days marker — is
-                // never deleted, so the table keeps resolving and DROP
-                // TABLE keeps owning its data at every crash point; the
-                // old wipe-then-re-assert left a window where both were
-                // durably lost.
-                TimePartitioned.overwriteStaged(data, dir, tsCol)
-                TimePartitioned.assertMarker(dir, tsCol)
-              } else {
-                TimePartitioned.append(data, dir, tsCol)
-                TimePartitioned.assertMarker(dir, tsCol)
-              }
+              if (overwrite || overwriteAll)
+                VersionedTable.commit(data.sparkSession, data, dir)
+              else VersionedTable.commitAppend(data.sparkSession, data, dir)
             }
           }
       }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** HIDDEN partition pruning for day-partitioned tables (the Iceberg
   * `days(ts)` transform contract, [[graft.catalog.GraftDayTable]]): the
@@ -16,6 +17,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * reads O(window) directories without the query author ever naming the
   * partition column. The mapping is the read-path twin of
   * [[TimePartitioned.readRange]], generalized to any SQL/DataFrame filter.
+  * It fires on the day-table scan [[TimePartitioned.scan]] builds: the
+  * head manifest's files under `basePath=<table>/data`, so the table
+  * directory — and its day marker — resolve from that base path.
   *
   * Soundness: `p_day = dayOfNanos(ts)` holds for every stored row (the
   * writer derives it), `dayOfNanos` is monotone in ts, and ISO day strings
@@ -80,38 +84,28 @@ case class DayPartitionPruning(spark: SparkSession) extends Rule[LogicalPlan] {
       // already derived (p_day is hidden — only this rule writes it here)?
       if (cond.references.contains(pDay)) f
       else {
-        val dirOpt = fs.location.rootPaths.headOption.map(_.toString)
+        // the scan lists manifest FILES; the table directory is the parent
+        // of the `data` base path
+        val dirOpt = fs.options.get("basePath")
+          .map(b => new org.apache.hadoop.fs.Path(b).getParent.toString)
         dirOpt.flatMap(TimePartitioned.dayColumnCached) match {
           case Some(tsName) =>
             lr.output.find(_.name.equalsIgnoreCase(tsName)) match {
-              case Some(ts) =>
+              case Some(ts) if pDay.dataType == StringType =>
                 val bs = conjuncts(cond).map(boundsOf(_, ts))
                 val lower = bs.flatMap(_._1).maxOption
                 val upper = bs.flatMap(_._2).minOption
-                // Build the injected literal AT p_day's resolved type: this
-                // comparison is optimizer-built and never re-analyzed, so a
-                // type mismatch would surface as a codegen/cast failure at
-                // execution. GraftDayTable pins p_day to string, but an
-                // ad-hoc spark.read.parquet(dir) infers the 'yyyy-MM-dd'
-                // directory values as DATE — both prune soundly (epoch-day
-                // order = ISO-string order); any other inferred type skips
-                // the rewrite conservatively.
-                def dayLit(day: String): Option[Literal] = pDay.dataType match {
-                  case StringType => Some(Literal(
-                    org.apache.spark.unsafe.types.UTF8String.fromString(day), StringType))
-                  case org.apache.spark.sql.types.DateType => Some(Literal(
-                    java.time.LocalDate.parse(day).toEpochDay.toInt,
-                    org.apache.spark.sql.types.DateType))
-                  case _ => None
-                }
+                // the injected literal is built at p_day's resolved type
+                // (the scan pins it to string): this comparison is
+                // optimizer-built and never re-analyzed
+                def dayLit(nanos: Long) =
+                  Literal(UTF8String.fromString(TimePartitioned.dayOfNanos(nanos)), StringType)
                 val derived: Seq[Expression] =
-                  lower.flatMap(l => dayLit(TimePartitioned.dayOfNanos(l))
-                    .map(GreaterThanOrEqual(pDay, _): Expression)).toSeq ++
-                  upper.flatMap(u => dayLit(TimePartitioned.dayOfNanos(u))
-                    .map(LessThanOrEqual(pDay, _): Expression)).toSeq
+                  lower.map(l => GreaterThanOrEqual(pDay, dayLit(l))).toSeq ++
+                  upper.map(u => LessThanOrEqual(pDay, dayLit(u))).toSeq
                 if (derived.isEmpty) f
                 else Filter((derived :+ cond).reduce(And), lr)
-              case None => f
+              case _ => f
             }
           case None => f
         }

@@ -137,7 +137,7 @@ object FsIO {
       throw new IllegalStateException(s"$label: exact write-locking is unavailable on " +
         s"scheme '$lockScheme' (no atomic create-no-overwrite). This lease serializes " +
         "the engine's maintenance and commit protocols — including rename-swaps that " +
-        "delete data and the crash-heal that runs at table load — so best-effort " +
+        "delete data and the versioned log's commit point — so best-effort " +
         s"locking must be an explicit operator decision. Either attest the store's " +
         s"conditional-write support with $ConditionalPutLockKey=true " +
         s"(spark.hadoop.$ConditionalPutLockKey — S3 conditional PUT makes " +
@@ -247,31 +247,6 @@ object FsIO {
     * UnsupportedFileSystemException on every heartbeat tick. */
   private val AtomicRenameSchemes = Set("hdfs", "viewfs", "abfs", "abfss")
 
-  /** Is the lease at `lock` LIVE from an observer's standpoint? None iff
-    * the lock file is absent. The ONE copy of the crash-classification
-    * rule (acquireWriteLock's contender path applies the same logic
-    * inline where it also needs the age for its messages): liveness from
-    * the body `ts` when parsable, the file mtime otherwise, and
-    * fresh (= live, safe) when the file exists but neither is readable —
-    * a torn read must never classify a live holder as crashed. The
-    * staleness bar is max(observer's `staleMs`, the body's declared
-    * `lease=`): an observer configured with a shorter lease must honor
-    * the holder's declared heartbeat-stall tolerance. */
-  private[tables] def lockIsLive(lock: Path, staleMs: Long,
-      conf: Configuration = hadoopConf()): Option[Boolean] = {
-    val fs = lock.getFileSystem(conf)
-    if (!fs.exists(lock)) return None
-    val fields = readText(lock.toString, conf).getOrElse("")
-      .split("\n").map(_.split("=", 2))
-      .collect { case Array(k, v) => k -> v }.toMap
-    val age = fields.get("ts").flatMap(_.toLongOption)
-      .orElse(try Some(fs.getFileStatus(lock).getModificationTime)
-        catch { case _: java.io.IOException => None })
-      .map(System.currentTimeMillis() - _)
-    val bar = math.max(staleMs, fields.get("lease").flatMap(_.toLongOption).getOrElse(0L))
-    Some(age.forall(_ <= bar))
-  }
-
   /** Replace `dst` with `tmp` ATOMICALLY, so a concurrent reader sees
     * either the old complete body or the new complete body — never a
     * truncated prefix. file:// uses NIO ATOMIC_MOVE; [[AtomicRenameSchemes]]
@@ -342,7 +317,7 @@ object FsIO {
 
   /** Renew a held lease by rewriting its `ts` to now. Returns false —
     * lease LOST, do not write further — if the lock no longer carries
-    * this owner (a healer legitimately took over a lease whose heartbeat
+    * this owner (a rival legitimately took over a lease whose heartbeat
     * stalled past `staleMs`). The rewrite must never expose a torn or
     * absent lock to a rival's staleness poll, and the primitive that
     * guarantees that is per-scheme: on file:// a temp sibling + NIO
@@ -399,8 +374,8 @@ object FsIO {
       System.currentTimeMillis() - lastHeldMs > staleMs
     /** Abort loudly unless this holder still owns the lease. Call
       * immediately before every irreversible publish/rename: an aborted
-      * writer leaves only a stage the new owner's heal classifies as
-      * garbage — a writer that published on a lost lease could race the
+      * writer leaves only unpublished staging behind — a writer that
+      * published on a lost lease could race the
       * new owner into a torn swap. Self-expiry counts as lost even if
       * the lock file still reads as ours: past the lease a rival's
       * takeover may be mid-flight, and "file still mine" is not
@@ -409,7 +384,7 @@ object FsIO {
       if (lostV || selfExpired || !ownsWriteLock(l, conf)) {
         lostV = true
         sys.error(s"$label: write lease ${l.path} was lost before $step — " +
-          "a healer or rival writer took it over (heartbeat stalled past the " +
+          "a rival writer took it over (heartbeat stalled past the " +
           "lease?); aborting WITHOUT publishing")
       }
   }
@@ -418,14 +393,13 @@ object FsIO {
     * rewrites the lease `ts` every `staleMs/3`, so a LIVE holder never
     * ages past [[acquireWriteLock]]'s stale-takeover bar no matter how
     * long `body` runs. This is the lease for bodies that hold the lock
-    * across a DATA-PROPORTIONAL write (a staged overwrite of a 100 TB
-    * day table runs hours; under the fixed lease a reader-triggered heal
-    * would classify the live writer as crashed 15 minutes in, seize the
-    * lock, and delete the intent-less stage mid-write). The body receives
-    * a [[Heartbeat]] and must `verifyOwned` before each irreversible
-    * publish step — on a lost lease (renewal stalled past `staleMs`, a
-    * healer took over) the writer aborts loudly instead of publishing a
-    * truncated snapshot.
+    * across a DATA-PROPORTIONAL write (TableManager's compaction swap of a
+    * 100 TB directory runs hours; under the fixed lease a rival would
+    * classify the live writer as crashed 15 minutes in and seize the lock
+    * mid-write). The body receives a [[Heartbeat]] and must `verifyOwned`
+    * before each irreversible publish step — on a lost lease (renewal
+    * stalled past `staleMs`, a rival took over) the writer aborts loudly
+    * instead of publishing a truncated snapshot.
     *
     * Renewal-thread discipline: a transient FS error on a renewal tick
     * must NOT kill the thread (silently stopping renewals on one hiccup
@@ -441,26 +415,9 @@ object FsIO {
     runUnderHeartbeat(l, dir, label, staleMs, conf)(body)
   }
 
-  /** [[withWriteLockHeartbeat]] with [[withWriteLockRetry]]'s acquisition
-    * semantics: a LIVE contender is retried (jittered polls) up to
-    * `maxWaitMs` before failing loudly, then the body runs under the
-    * heartbeat-renewed lease. For writers that are short at the CALLER's
-    * grain but data-proportional in the worst case — a day-table append
-    * of an arbitrary batch: the retry absorbs a rival appender's
-    * millisecond hold without flaking, while the heartbeat keeps a
-    * legitimately large batch write from aging past the takeover bar
-    * (the fixed-lease retry variant would recreate the
-    * slow-writer-looks-crashed hazard for exactly those writers). */
-  def withWriteLockHeartbeatRetry[A](dir: String, label: String, staleMs: Long,
-      maxWaitMs: Long)(body: Heartbeat => A): A = {
-    val conf = hadoopConf()
-    val l    = acquireWithRetry(dir, label, staleMs, maxWaitMs, conf)
-    runUnderHeartbeat(l, dir, label, staleMs, conf)(body)
-  }
-
   /** [[acquireWriteLock]] with LIVE contenders retried on jittered
-    * exponential backoff up to `maxWaitMs` — the single retry loop behind
-    * [[withWriteLockRetry]] and [[withWriteLockHeartbeatRetry]]. */
+    * exponential backoff up to `maxWaitMs` — the retry loop behind
+    * [[withWriteLockRetry]]. */
   private def acquireWithRetry(dir: String, label: String, staleMs: Long,
       maxWaitMs: Long, conf: Configuration): WriteLock = {
     val deadline = System.currentTimeMillis() + maxWaitMs

@@ -250,13 +250,14 @@ object TableManager {
   def deleteDir(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(dir), true)
-    // sibling artifacts (the write-lease lock, its crashed-renewal temps,
-    // and any append stages) live NEXT TO the table dir and would linger
-    // as orphans past the delete
+    // sibling artifacts (the write-lease lock and its crashed-renewal
+    // temps) live NEXT TO the table dir and would linger as orphans past
+    // the delete
     val lock = new Path(dir + ".__write_lock")
     fs.delete(lock, false)
     FsIO.sweepRenewTemps(fs, lock)
-    fs.delete(TimePartitioned.appendStageRoot(dir), true)
+    // a table recreated here must not inherit the old one's day marker
+    TimePartitioned.invalidateDayColumn(dir)
     // a versioned table recreated at this path could collide with cached
     // commit-entry text (same version + same-millisecond commit name)
     VersionedTable.invalidateEntryCache(dir)

@@ -171,7 +171,7 @@ object VersionedStats {
     base match {
       case None => refresh(spark, dir, statCols)
       case Some(w) =>
-        val prev = spark.read.parquet(statsDir(dir, w).toString)
+        val prev = readStats(spark, dir, w)
         // physical-keyed carry-forward: the previous manifest must cover
         // the SAME physical columns (a rename alone changes nothing here;
         // a re-added column's fresh physical name forces the full re-key)
@@ -195,7 +195,7 @@ object VersionedStats {
     * log"): total rows, per-column non-null count / min / max for version
     * `v` (latest by default), resolved entirely from the stats manifest —
     * ZERO data-file I/O, the query a 100 TB dashboard asks hourly.
-    * Soundness guards: [[loadStats]] proves the manifest covers EXACTLY
+    * Soundness guards: [[checkedFiles]] proves the manifest covers EXACTLY
     * the version's file set (a stale manifest fails, never silently
     * misses rows), and any DELETION VECTOR on the version refuses loudly —
     * stored stats describe physical files, and masked rows would falsify
@@ -212,7 +212,8 @@ object VersionedStats {
         s"${masked.size} file(s) — physical stats would count masked rows; " +
         "run commitCompact (or compactDeletionVectors + refresh) first, or " +
         "aggregate through a real read")
-    val (stats, _) = loadStats(spark, dir, v)
+    val stats = readStats(spark, dir, v)
+    checkedFiles(stats, dir, v, lit(true))
     // aggregate under the PHYSICAL key, surface the LOGICAL name — a
     // renamed table answers for its current names from the same manifest
     val byPhys = physicalStatCols(dir, v, statCols)
@@ -231,47 +232,61 @@ object VersionedStats {
     one.select(explode(array(perCol: _*)).as("s")).select(col("s.*"))
   }
 
-  /** The version's stats rows, proven 1:1 with its file manifest, plus the
-    * statted file set that check collected — callers needing the file
-    * count take it from there instead of running a count job. */
-  private def loadStats(spark: SparkSession, dir: String, v: Long): (DataFrame, Set[String]) = {
-    // the manifest keys on PHYSICAL names (immutable), so a column mapping
-    // needs no refusal here — callers resolve through physicalStatCols
+  /** The stats manifest of version `v`, read under the schema its one
+    * file's footer carries (one driver footer read — a schema-less read
+    * would launch a schema-inference job on every gate). */
+  private def readStats(spark: SparkSession, dir: String, v: Long): DataFrame = {
     val sd = statsDir(dir, v)
     val fs = sd.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(sd),
       s"VersionedStats: no stats manifest for version $v of $dir — run refresh/refreshIncremental")
-    val stats = spark.read.parquet(sd.toString)
-    // 1:1 integrity check against the version's manifest — a stats set that
-    // drifted (partial write, foreign tool) must fail, not silently miss rows
-    val rels = VersionedTable.filesOf(dir, v).toSet
-    val statted = stats.select("file").collect().map(_.getString(0)).toSet
+    val part = fs.listStatus(sd).map(_.getPath).find(_.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"VersionedStats: stats manifest $sd holds no parquet file"))
+    spark.read.schema(org.apache.spark.sql.graft.FooterShim.schemaOf(spark, part.toString))
+      .parquet(sd.toString)
+  }
+
+  /** Every statted file of `stats` (version `v`'s manifest) with whether
+    * its row satisfies `keep`, in ONE collect — the file set doubles as the
+    * 1:1 integrity check against the version's file manifest: a stats set
+    * that drifted (partial write, foreign tool) must fail, not silently
+    * miss rows. */
+  private def checkedFiles(stats: DataFrame, dir: String, v: Long,
+      keep: Column): Seq[(String, Boolean)] = {
+    val rows = stats.select(col("file"), coalesce(keep, lit(false)))
+      .collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq
+    val rels    = VersionedTable.filesOf(dir, v).toSet
+    val statted = rows.map(_._1).toSet
     require(statted == rels,
       s"VersionedStats: stats manifest for version $v of $dir does not match its " +
         s"file manifest (${(rels -- statted).size} missing, ${(statted -- rels).size} extra) " +
         "— re-run refresh")
-    (stats, statted)
+    rows
   }
 
   /** Relative files of `version` whose [min, max] intersects EVERY
-    * (col, lo, hi) predicate, plus the version's total file count. */
+    * (col, lo, hi) predicate, plus the version's total file count — both
+    * from the one collect that proves the stats manifest 1:1. */
   def prunedFiles(spark: SparkSession, dir: String,
       preds: Seq[(String, Column, Column)],
       version: Option[Long] = None): (Seq[String], Long) = {
     require(preds.nonEmpty, "VersionedStats: need at least one predicate")
     val v = versionOr(dir, version)
-    val (stats, statted) = loadStats(spark, dir, v)
+    // the manifest keys on PHYSICAL names (immutable), so a column mapping
+    // needs no refusal here — predicates resolve through physicalStatCols
+    val stats = readStats(spark, dir, v)
     val physOf = physicalStatCols(dir, v, preds.map(_._1)).toMap
     preds.foreach { case (c, _, _) => require(stats.columns.contains(s"min_${physOf(c)}"),
       s"VersionedStats: column $c is not statted for version $v — refresh including it") }
     val cond = preds.map { case (c, lo, hi) =>
       col(s"max_${physOf(c)}") >= lo && col(s"min_${physOf(c)}") <= hi
     }.reduce(_ && _)
-    val kept = stats.where(cond).select("file").collect().map(_.getString(0)).toSeq
+    val files = checkedFiles(stats, dir, v, cond)
+    val kept = files.collect { case (f, true) => f }
     require(kept.size <= MaxPrunedFiles,
       s"VersionedStats: pruning kept ${kept.size} files — the clustering does not " +
         "discriminate for this predicate; re-cluster (commitCompact clusterBy) or read plainly")
-    (kept, statted.size.toLong)
+    (kept, files.size.toLong)
   }
 
   /** Range read through the stats manifest: scan ONLY surviving files, then

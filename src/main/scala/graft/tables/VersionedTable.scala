@@ -3,41 +3,34 @@ package graft.tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Versioned path tables — the Delta-log behaviors the plain swap protocol
-  * can't give: TIME TRAVEL (read any retained version) and READER ISOLATION
+/** Versioned path tables — the Delta-log behaviors a plain directory can't
+  * give: TIME TRAVEL (read any retained version) and READER ISOLATION
   * during publish (a commit never deletes or renames the files under a
-  * reader of an earlier version, unlike `swapDir`, which moves the live
-  * directory away mid-read).
+  * reader of an earlier version).
   *
-  * Layout: `<dir>/v=<n>/` holds version n's parquet in full; the
-  * `<dir>/_log/<n>.commit` entry (write-once: staged as `.tmp`, renamed
-  * into place) IS the commit point — a version exists for readers iff its
-  * commit file exists. Append-only per-version files rather than one
-  * rewritten log: a rewrite needs delete-then-rename (no atomic
-  * rename-over on HDFS), and a crash or concurrent read in that window
-  * would observe NO log at all — vanishing committed history. With
-  * one-file-per-commit there is nothing to rewrite and no such window.
-  * A crash after the data write but before the commit-file rename leaves
-  * an orphan directory that was never committed and never becomes visible
-  * (version numbers are never reused, so it can't be resurrected by a
-  * later commit either); the next [[vacuum]] sweeps it. This is a
-  * deliberate miniature of the Delta transaction log: commit = one atomic
-  * metadata rename, data files are immutable once written.
+  * Layout: data files live under `<dir>/data/` (a day-partitioned table —
+  * [[TimePartitioned]] — nests them one level deeper, under
+  * `data/p_day=<yyyy-MM-dd>/`); the `<dir>/_log/<n>-<ms>.commit` entry
+  * (write-once: staged as `.tmp`, renamed into place) IS the commit point —
+  * a version exists for readers iff its commit entry exists, and every
+  * table with a history has exactly this one commit point. The entry
+  * carries the version's MANIFEST: versions SHARE unchanged data files —
+  * append writes only the new rows' files; update/delete rewrite only the
+  * files that actually contain matching rows (file-level copy-on-write,
+  * the Delta MERGE discipline); a whole-table [[commit]] (the
+  * overwrite-table cadence the reference uses, `01. Ingest.py:176-189`)
+  * stages a full new file set. COMMIT cost is O(change), never O(table) —
+  * the property that makes versioning affordable on a 100 TB corpus, where
+  * a daily append must not re-copy the year.
   *
-  * Two commit flavors:
-  *
-  *  - **Snapshot** ([[commit]]): `<dir>/v=<n>/` holds version n's parquet
-  *    in full — the overwrite-table cadence the reference uses
-  *    (`01. Ingest.py:176-189` rewrites whole tables per run), where Delta
-  *    itself would also rewrite the data files.
-  *  - **Incremental** ([[commitAppend]] / [[commitUpdate]] /
-  *    [[commitDelete]]): the commit entry carries a MANIFEST and versions
-  *    SHARE unchanged data files — append writes only the new rows' files;
-  *    update/delete rewrite only the files that actually contain matching
-  *    rows (file-level copy-on-write, the Delta MERGE discipline). COMMIT
-  *    cost is O(change), never O(table) — the property that makes
-  *    versioning affordable on a 100 TB corpus, where a daily append must
-  *    not re-copy the year.
+  * Append-only per-version entries rather than one rewritten log: a
+  * rewrite needs delete-then-rename (no atomic rename-over on HDFS), and a
+  * crash or concurrent read in that window would observe NO log at all —
+  * vanishing committed history. A crash after the data staging but before
+  * the entry rename leaves orphan files no manifest references: never
+  * visible, swept by the next [[vacuum]] once past its grace window. This
+  * is a deliberate miniature of the Delta transaction log: commit = one
+  * atomic metadata rename, data files are immutable once written.
   *
   * Manifests are DELTA-ENCODED with periodic checkpoints (the Delta-log
   * actions + checkpoint-parquet architecture): between checkpoints a
@@ -47,10 +40,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * million manifest lines; every [[CheckpointInterval]]-th entry in a
   * chain is a full `file=` manifest, bounding any snapshot resolution at
   * O(interval) small entry reads no matter how many commits accumulated.
-  *
-  * Both flavors interoperate: an incremental commit on top of a snapshot
-  * references the snapshot's files in place; [[vacuum]] refcounts files
-  * across retained manifests before deleting anything.
+  * [[vacuum]] refcounts files across retained manifests before deleting
+  * anything.
   *
   * Concurrency: commits and vacuums serialize through
   * [[FsIO.acquireWriteLock]] (the lease guard); readers take no lock ever —
@@ -58,10 +49,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object VersionedTable {
 
-  private def vDir(dir: String, v: Long) = new Path(dir, f"v=$v%05d")
   private def logDir(dir: String)        = new Path(dir, "_log")
   private def dataDir(dir: String)       = new Path(dir, "data")
-  private val versionName = "^v=(\\d+)$".r
   // version AND commit-millis both ride in the entry NAME, so resolving the
   // log is ONE listStatus — no per-commit file read (O(versions) small-file
   // opens per read()/commit(), all inside the commit lease hold)
@@ -93,15 +82,12 @@ object VersionedTable {
     *    the previous version (`add=`/`remove=` files, `dvclear=`/`dvadd=`
     *    deletion-vector changes). Resolution replays the chain from the
     *    nearest full entry below.
-    *  - [[SnapshotEntry]] — no kind marker: the data is the `v=<n>`
-    *    directory itself ([[commit]]'s whole-table flavor). Detection is
-    *    by explicit markers, never by line emptiness — an empty delta
-    *    must not silently demote to the snapshot read path. */
+    * Detection is by explicit markers, never by line emptiness — an entry
+    * with neither marker fails loudly rather than reading as empty. */
   private sealed trait ParsedEntry
   private final case class FullEntry(entries: Seq[FileEntry]) extends ParsedEntry
   private final case class DeltaEntry(adds: Seq[String], removes: Seq[String],
       dvClears: Set[String], dvAdds: Seq[(String, String)]) extends ParsedEntry
-  private case object SnapshotEntry extends ParsedEntry
 
   // Commit entries are WRITE-ONCE (staged as .tmp, renamed into place,
   // never rewritten or deleted — vacuum drops DATA, the log is forever),
@@ -161,7 +147,10 @@ object VersionedTable {
       val dvs = dvPairs("dv=").groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toList }
       FullEntry(lines.filter(_.startsWith("file=")).map(_.stripPrefix("file="))
         .map(rel => FileEntry(rel, dvs.getOrElse(rel, Nil))))
-    } else SnapshotEntry
+    } else sys.error(
+      s"VersionedTable: commit entry for version $v in $dir carries no manifest " +
+        "(neither kind=manifest nor kind=delta) — written by an incompatible " +
+        "version of this layer")
   }
 
   /** Replay one delta on top of a resolved state: removes first, adds
@@ -206,9 +195,8 @@ object VersionedTable {
 
   /** How many delta entries sit DIRECTLY below version `v` before the
     * nearest full-manifest anchor — Some(n) when a delta on top is legal,
-    * None when it isn't (no previous commit, previous flavor is a snapshot
-    * whose file list lives only in a vacuumable directory listing, or a
-    * chain with no anchor — force a full manifest and self-heal). Counted
+    * None when it isn't (no previous commit, or a chain with no anchor —
+    * force a full manifest and self-heal). Counted
     * in CHAIN terms, not version numbers, so crashed-commit numbering gaps
     * can't stretch a chain past the interval. */
   private def deltaBudget(dir: String, v: Long): Option[Int] = {
@@ -220,7 +208,6 @@ object VersionedTable {
       parseEntry(dir, vv, ms) match {
         case _: DeltaEntry => n += 1
         case _: FullEntry  => return Some(n)
-        case SnapshotEntry => return None
       }
     }
     None
@@ -229,19 +216,12 @@ object VersionedTable {
   /** Full (file, deletion-vector) entries of a committed version: a full
     * manifest reads directly; a delta resolves by walking back to the
     * nearest full-manifest anchor (≤ [[CheckpointInterval]] entries by the
-    * checkpoint cadence) and replaying the chain forward; a snapshot lists
-    * its `v=<n>` directory. No existence checks on manifest files (log
-    * truth only); [[read]] and the scan paths check what they actually
-    * touch. */
-  private def entriesOfVersion(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      v: Long, ms: Long): Seq[FileEntry] =
+    * checkpoint cadence) and replaying the chain forward. No existence
+    * checks on manifest files (log truth only); [[read]] and the scan
+    * paths check what they actually touch. */
+  private def entriesOfVersion(dir: String, v: Long, ms: Long): Seq[FileEntry] =
     parseEntry(dir, v, ms) match {
       case FullEntry(es) => es
-      case SnapshotEntry =>
-        require(fs.exists(vDir(dir, v)), s"version $v of $dir was vacuumed")
-        fs.listStatus(vDir(dir, v)).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(s => FileEntry(f"v=$v%05d/${s.getPath.getName}", Nil))
       case d0: DeltaEntry =>
         val below = log(dir).filter(_._1 < v).reverse
         val pending = scala.collection.mutable.ArrayBuffer[DeltaEntry](d0)
@@ -252,10 +232,6 @@ object VersionedTable {
           parseEntry(dir, vv, mms) match {
             case FullEntry(es)  => anchor = Some(es)
             case dd: DeltaEntry => pending += dd
-            case SnapshotEntry  => sys.error(
-              s"VersionedTable: delta entry $v of $dir chains over snapshot " +
-                s"version $vv — log corrupt (deltas only ever commit on " +
-                "log-resolvable predecessors)")
           }
         }
         pending.reverseIterator.foldLeft(anchor.getOrElse(sys.error(
@@ -264,7 +240,7 @@ object VersionedTable {
 
   /** Stage the commit entry (with optional manifest lines and optional
     * idempotent-transaction marker) and rename it into the log — the atomic
-    * commit point for both flavors. The txn marker riding IN the commit
+    * commit point of every version. The txn marker riding IN the commit
     * entry (not a sidecar) is what makes [[commitAppend]]'s replay check
     * transactional: the data and the "this batch landed" fact become
     * visible in one rename, so no crash window can separate them. */
@@ -278,9 +254,9 @@ object VersionedTable {
     * entries. When `prev` (the previous version's resolved entries) is
     * given, the entry serializes as a DELTA of actions — O(change) bytes —
     * unless (a) the chain below has reached [[CheckpointInterval]] (forced
-    * checkpoint), (b) the predecessor isn't log-resolvable (snapshot or
-    * none), or (c) the delta wouldn't actually be smaller (a compaction
-    * that replaced everything). Resolution cost for readers stays bounded
+    * checkpoint), (b) there is no anchored predecessor, or (c) the delta
+    * wouldn't actually be smaller (a compaction that replaced everything).
+    * Resolution cost for readers stays bounded
     * at O(interval) entry reads either way. */
   private def publishEntries(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       v: Long, entries: Option[Seq[FileEntry]], txn: Option[(String, Long)] = None,
@@ -334,9 +310,8 @@ object VersionedTable {
     }.nextOption()
   }
 
-  /** Relative data files of a committed version — manifest lines for an
-    * incremental commit, the `v=<n>` directory's parquet listing for a
-    * snapshot. Fails loudly if the version's data was vacuumed. */
+  /** Relative data files of a committed version's manifest. Fails loudly
+    * if the version's data was vacuumed. */
   private def relsOfVersion(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       v: Long, ms: Long): Seq[String] =
     checkedEntries(fs, dir, v, ms).map(_.rel)
@@ -345,7 +320,7 @@ object VersionedTable {
     * deletion-vector file — the gate every scan path goes through. */
   private def checkedEntries(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       v: Long, ms: Long): Seq[FileEntry] = {
-    val entries = entriesOfVersion(fs, dir, v, ms)
+    val entries = entriesOfVersion(dir, v, ms)
     val missing = entries.flatMap(e => e.rel +: e.dvs)
       .filterNot(rel => fs.exists(new Path(dir, rel)))
     require(missing.isEmpty,
@@ -629,8 +604,8 @@ object VersionedTable {
     * attached (write paths key touched-file detection on them). Row
     * identity: file base name + physical row index — base names are
     * globally unique by construction (staged files carry a commit+UUID
-    * prefix; snapshot part files carry Spark's job UUID), and the check
-    * below makes the assumption loud rather than silent. */
+    * prefix), and the check below makes the assumption loud rather than
+    * silent. */
   private def scanEntriesMeta(spark: SparkSession, dir: String,
       entries: Seq[FileEntry],
       declared: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
@@ -743,10 +718,9 @@ object VersionedTable {
     * incremental consumers ([[graft.sources.VersionedStream]]) compare to
     * detect DV-only commits that add no files but remove rows. */
   def entriesOf(dir: String, v: Long): Seq[(String, Seq[String])] = {
-    val fs = new Path(dir).getFileSystem(FsIO.hadoopConf())
     val entry = log(dir).find(_._1 == v)
       .getOrElse(sys.error(s"VersionedTable.entriesOf: version $v does not exist in $dir"))
-    entriesOfVersion(fs, dir, v, entry._2).map(e => (e.rel, e.dvs))
+    entriesOfVersion(dir, v, entry._2).map(e => (e.rel, e.dvs))
   }
 
   /** DV-masked batch scan of an explicit entry subset (as returned by
@@ -760,7 +734,7 @@ object VersionedTable {
     scanEntries(spark, dir,
       entries.map { case (rel, dvs) => FileEntry(rel, dvs.toList) }, declared)
 
-  /** Write `df`'s parquet into a staging dir, then move each part file into
+  /** Write `df`'s rows into a staging dir, then move each part file into
     * `<dir>/data/` under a version-prefixed UUID name (immutable once moved;
     * a crashed attempt's moved files are unreferenced orphans that the next
     * [[vacuum]] sweeps — never resurrected, because entry publication is the
@@ -773,20 +747,50 @@ object VersionedTable {
     * lock-free append path stages BEFORE a version number exists (the
     * version is only assigned inside the publish lease), so its files
     * carry a UUID tag instead of a version prefix. The prefix is cosmetic
-    * either way: base-name uniqueness comes from the UUID. */
+    * either way: base-name uniqueness comes from the UUID.
+    *
+    * The table's layout is decided HERE, once for every row-writing
+    * commit: a directory marked day-partitioned ([[TimePartitioned.DaysProp]],
+    * read through the process-wide marker cache — unmarked tables pay no
+    * listing) stages through the (day, spread) shuffle and lands each file
+    * under `data/p_day=<day>/`. */
   private def stageDataFilesTagged(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      df: DataFrame, tag: String): Seq[String] = {
+      df: DataFrame, tag: String): Seq[String] =
+    TimePartitioned.dayColumnCached(dir) match {
+      case Some(ts) => stageFiles(fs, dir, TimePartitioned.withDayKey(df, ts), tag,
+        Some(TimePartitioned.DayKey))
+      case None => stageFiles(fs, dir, df, tag, None)
+    }
+
+  /** The staging write itself, partitioned by `partitionCol` when given.
+    * Deletion-vector sidecars stage here directly, flat under `data/`
+    * whatever the table's row layout: a sidecar holds `(fname, pos)`, no
+    * rows to lay out. */
+  private def stageFiles(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      df: DataFrame, tag: String, partitionCol: Option[String]): Seq[String] = {
     val stage = new Path(dir, s".stage-${java.util.UUID.randomUUID().toString.take(12)}.__tmp")
-    df.write.parquet(stage.toString)
+    partitionCol match {
+      case Some(c) => df.write.partitionBy(c).parquet(stage.toString)
+      case None    => df.write.parquet(stage.toString)
+    }
     fs.mkdirs(dataDir(dir))
-    val rels = fs.listStatus(stage).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val name = s"$tag-${java.util.UUID.randomUUID().toString.take(8)}-${s.getPath.getName}"
-        if (!fs.rename(s.getPath, new Path(dataDir(dir), name)))
-          sys.error(s"VersionedTable: could not stage data file $name in $dir")
-        s"data/$name"
-      }
+    // (sub-directory under data/, staged file): a partitioned write nests
+    // its files one `<col>=<value>` level down
+    val staged = fs.listStatus(stage).toSeq.flatMap { s =>
+      if (s.isDirectory && partitionCol.exists(c => s.getPath.getName.startsWith(c + "=")))
+        fs.listStatus(s.getPath).toSeq.map(f => (Some(s.getPath.getName), f))
+      else Seq((None, s))
+    }.filter(_._2.getPath.getName.endsWith(".parquet"))
+    val rels = staged.map { case (sub, s) =>
+      val name   = s"$tag-${java.util.UUID.randomUUID().toString.take(8)}-${s.getPath.getName}"
+      val target = sub.fold(dataDir(dir))(new Path(dataDir(dir), _))
+      // a day directory is made right before each move into it: a
+      // concurrent vacuum removes day directories it emptied
+      if (sub.isDefined) fs.mkdirs(target)
+      if (!fs.rename(s.getPath, new Path(target, name)))
+        sys.error(s"VersionedTable: could not stage data file $name in $dir")
+      sub.fold(s"data/$name")(d => s"data/$d/$name")
+    }
     fs.delete(stage, true)
     rels
   }
@@ -895,40 +899,39 @@ object VersionedTable {
     }
   }
 
-  /** Committed versions whose data is still present (not vacuumed),
-    * ascending, with commit timestamps. Existence resolves from ONE
-    * listing of `data/` (set membership per manifest entry) instead of a
-    * per-file fs.exists — the per-file form turned DESCRIBE HISTORY on a
-    * deep log over a wide manifest into O(versions × files) serial driver
-    * RPCs. Absolute entries (clones, CONVERT adoptions — outside data/)
-    * still check individually; they are rare and small in count. */
-  def versions(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    lazy val dataNames: Set[String] = {
-      val d = dataDir(dir)
-      if (!fs.exists(d)) Set.empty
-      else fs.listStatus(d).map(_.getPath.getName).toSet
-    }
-    def present(rel: String): Boolean =
-      if (rel.startsWith("data/")) dataNames(rel.stripPrefix("data/"))
-      else fs.exists(new Path(dir, rel))
-    log(dir).filter { case (v, ms) =>
-      parseEntry(dir, v, ms) match {
-        case SnapshotEntry => fs.exists(vDir(dir, v))
-        case _ => entriesOfVersion(fs, dir, v, ms)
-          .flatMap(e => e.rel +: e.dvs).forall(present)
-      }
+  /** Every file under `data/`, one level of nested directories included
+    * (a day table's `data/p_day=<day>/`), as (`data/...` relative path,
+    * status). One listing for a flat table; one more per day directory. */
+  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
+    val d = dataDir(dir)
+    if (!fs.exists(d)) Seq.empty
+    else fs.listStatus(d).toSeq.flatMap { s =>
+      if (s.isDirectory)
+        fs.listStatus(s.getPath).toSeq.map(f =>
+          (s"data/${s.getPath.getName}/${f.getPath.getName}", f))
+      else Seq((s"data/${s.getPath.getName}", s))
     }
   }
 
-  /** Version numbers of all `v=<n>` dirs (committed or orphaned), ignoring
-    * in-flight `.__tmp` staging dirs. */
-  private def listVersionDirs(fs: org.apache.hadoop.fs.FileSystem, dir: String): Seq[Long] =
-    if (!fs.exists(new Path(dir))) Seq.empty
-    else fs.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .flatMap(s => versionName.findFirstMatchIn(s.getPath.getName).map(_.group(1).toLong))
-      .sorted
+  /** Committed versions whose data is still present (not vacuumed),
+    * ascending, with commit timestamps. Existence resolves from ONE
+    * listing of `data/` (plus one per day directory; set membership per
+    * manifest entry) instead of a per-file fs.exists — the per-file form
+    * turned DESCRIBE HISTORY on a deep log over a wide manifest into
+    * O(versions × files) serial driver RPCs. Absolute entries (clones,
+    * CONVERT adoptions — outside data/) still check individually; they
+    * are rare and small in count. */
+  def versions(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    lazy val dataRels: Set[String] = listDataFiles(fs, dir).map(_._1).toSet
+    def present(rel: String): Boolean =
+      if (rel.startsWith("data/")) dataRels(rel)
+      else fs.exists(new Path(dir, rel))
+    log(dir).filter { case (v, ms) =>
+      entriesOfVersion(dir, v, ms).flatMap(e => e.rel +: e.dvs).forall(present)
+    }
+  }
 
   private def listSchemaVersions(fs: org.apache.hadoop.fs.FileSystem, dir: String): Seq[Long] = {
     val sd = schemaDir(dir)
@@ -944,49 +947,69 @@ object VersionedTable {
       }
   }
 
-  /** One past anything ever attempted — committed versions, orphaned data
-    * dirs, AND declared-schema files (a crashed evolve must never have its
-    * orphan schema resurrected by a later commit reusing the number). */
+  /** One past anything ever attempted that could masquerade as committed —
+    * committed versions AND declared-schema files (a crashed evolve must
+    * never have its orphan schema resurrected by a later commit reusing
+    * the number). A crashed commit's staged data files need no reservation:
+    * no manifest ever references them. */
   private def nextVersion(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       committed: Seq[(Long, Long)]): Long =
-    ((committed.map(_._1).foldLeft(-1L)(math.max) +:
-      (listVersionDirs(fs, dir) ++ listSchemaVersions(fs, dir))).max: Long) + 1
+    ((committed.map(_._1).foldLeft(-1L)(math.max) +: listSchemaVersions(fs, dir)).max: Long) + 1
 
-  /** Commit `df` as the next version. Returns the new version number.
-    * Serialized by the write lease; the data rename and the commit-file
-    * rename are each atomic creates (never a delete of existing metadata),
-    * so every crash window leaves the previously committed history fully
-    * visible — never a torn table. */
+  /** Commit `df` as the whole content of the next version (overwrite).
+    * Returns the new version number. Serialized by the write lease, held
+    * across the staging write and heartbeat-renewed (a 100 TB day-table
+    * overwrite runs hours and must never look crashed to a rival; the
+    * publish aborts if the lease was lost anyway). The new files stage
+    * through the table's layout ([[stageDataFiles]] — day directories on
+    * a day-partitioned table) and publish as a full manifest, so every
+    * crash window before the entry rename leaves the previously committed
+    * history fully visible (the staged files are orphans [[vacuum]]
+    * sweeps) — never a torn table. Earlier versions keep their files for
+    * readers pinned to them until vacuum retires them. */
   def commit(spark: SparkSession, df: DataFrame, dir: String): Long =
-    FsIO.withWriteLock(dir, "VersionedTable.commit", TableManager.DefaultLockLeaseMs) {
+    FsIO.withWriteLockHeartbeat(dir, "VersionedTable.commit", TableManager.DefaultLockLeaseMs) { hb =>
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // next = one past anything ever attempted — committed OR orphaned —
-      // so a crashed commit's number is never reused (reuse would let a
-      // stale orphan masquerade as the new version's data)
-      val next = nextVersion(fs, dir, log(dir))
-      val tmp  = new Path(dir, f"v=$next%05d.__tmp")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      if (!fs.rename(tmp, vDir(dir, next)))
-        sys.error(s"VersionedTable.commit: could not publish version $next in $dir")
-      validateStaged(spark, dir,
-        fs.listStatus(vDir(dir, next)).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(s => f"v=$next%05d/${s.getPath.getName}"),
-        "VersionedTable.commit")
-      // SNAPSHOT SCHEMA RESET: on a previously EVOLVED table, the
-      // overwrite's own schema becomes the declared truth at this version —
-      // without it declaredSchemaAt keeps resolving the pre-overwrite
-      // evolved schema forever: later appends would gate against a stale
-      // schema and reads of incremental versions on top of the snapshot
-      // would silently null/drop the overwrite's columns. Never-evolved
-      // tables skip this (no _schema dir, no cost).
-      if (log(dir).lastOption.exists { case (pv, _) =>
-          declaredSchemaAt(dir, pv).isDefined })
+      val committed = log(dir)
+      val next = nextVersion(fs, dir, committed)
+      val staged = stageDataFiles(fs, dir, df, next)
+      validateStaged(spark, dir, staged, "VersionedTable.commit")
+      // SCHEMA RESET: on a previously EVOLVED table, the overwrite's own
+      // schema becomes the declared truth at this version — without it
+      // declaredSchemaAt keeps resolving the pre-overwrite evolved schema
+      // forever: later appends would gate against a stale schema and reads
+      // of incremental versions on top of the overwrite would silently
+      // null/drop its columns. Never-evolved tables skip this (no _schema
+      // dir, no cost).
+      if (committed.lastOption.exists { case (pv, _) => declaredSchemaAt(dir, pv).isDefined })
         writeDeclaredSchema(fs, dir, next, df.schema)
       // the commit point: a write-once entry staged then renamed into the
       // log dir (readers never observe a partially named commit entry)
-      publishEntry(fs, dir, next, None, opLabel = "WRITE")
+      hb.verifyOwned("publishing the overwrite")
+      publishEntry(fs, dir, next, Some(staged), opLabel = "WRITE")
       next
+    }
+
+  /** Metadata-only DELETE of whole files: one commit whose manifest is the
+    * head's minus every entry whose relative path satisfies `drop` —
+    * Delta's partition-predicate delete (the day-retention drop of
+    * [[TimePartitioned.dropDaysBefore]]). Reads no data; the dropped
+    * files stay for readers of earlier versions until [[vacuum]] reclaims
+    * them. Returns the dropped relative paths — empty, with no commit, when
+    * nothing matches or the table has no version. */
+  private[tables] def commitDropFiles(spark: SparkSession, dir: String)(
+      drop: String => Boolean): Seq[String] =
+    FsIO.withWriteLock(dir, "VersionedTable.commitDropFiles", TableManager.DefaultLockLeaseMs) {
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val committed = log(dir)
+      committed.lastOption.toSeq.flatMap { case (pv, pms) =>
+        val entries = entriesOfVersion(dir, pv, pms)
+        val (gone, kept) = entries.partition(e => drop(e.rel))
+        if (gone.nonEmpty)
+          publishEntries(fs, dir, nextVersion(fs, dir, committed), Some(kept),
+            prev = Some(entries), opLabel = "DELETE")
+        gone.map(_.rel)
+      }
     }
 
   /** Order-insensitive, nullability-insensitive (name, type) schema
@@ -1049,7 +1072,7 @@ object VersionedTable {
   /** Commit `df` as the next version by APPENDING: the new version's
     * manifest = the previous version's files (shared in place, never
     * copied) + files holding only `df`'s rows. O(appended-rows) write cost
-    * regardless of table size. Works on top of either commit flavor.
+    * regardless of table size.
     *
     * The O(data) work — writing the new rows' parquet and proving CHECK
     * constraints over them — runs OUTSIDE the write lease (Delta's
@@ -1096,7 +1119,7 @@ object VersionedTable {
           // vacuum-retained, and the footer read itself fails loudly on a
           // missing file — the per-file existence sweep would put O(table)
           // serial RPCs on the append path for nothing
-          entriesOfVersion(fs, dir, pv, pms).headOption.map(e =>
+          entriesOfVersion(dir, pv, pms).headOption.map(e =>
             org.apache.spark.sql.graft.FooterShim.schemaOf(spark, absOf(dir, e.rel).toString)))
         existing.foreach(requireCompatibleSchema("commitAppend", _, df.schema))
       }
@@ -1130,7 +1153,7 @@ object VersionedTable {
           // serial RPCs (minutes on a 1M-file table), starving every
           // rival appender of the milliseconds publish tail they wait on
           val prevEntries = committed.lastOption
-            .map { case (v, ms) => entriesOfVersion(fs, dir, v, ms) }
+            .map { case (v, ms) => entriesOfVersion(dir, v, ms) }
             .getOrElse(Seq.empty)
           // one footer read each side, gating the STAGED bytes — but only
           // when the head MOVED since the pre-flight gate: uncontended
@@ -1187,7 +1210,7 @@ object VersionedTable {
       def tableSchemaAt(v: Long, ms: Long): Option[org.apache.spark.sql.types.StructType] =
         declaredSchemaAt(dir, v).orElse(
           // one footer read; no O(table) existence sweep (see commitAppend)
-          entriesOfVersion(fs, dir, v, ms).headOption.map(e =>
+          entriesOfVersion(dir, v, ms).headOption.map(e =>
             org.apache.spark.sql.graft.FooterShim.schemaOf(spark, absOf(dir, e.rel).toString)))
       // pre-flight additive gate, lock-free (authoritative re-gate under
       // the lease below)
@@ -1245,7 +1268,7 @@ object VersionedTable {
           // entriesOfVersion: same reasoning as commitAppend — the head is
           // lease-protected and vacuum-retained; no O(table) exists sweep
           val prevEntries = committed.lastOption
-            .map { case (v, ms) => entriesOfVersion(fs, dir, v, ms) }
+            .map { case (v, ms) => entriesOfVersion(dir, v, ms) }
             .getOrElse(Seq.empty)
           val headExisting = committed.lastOption.flatMap { case (pv, pms) =>
             tableSchemaAt(pv, pms) }
@@ -1566,11 +1589,11 @@ object VersionedTable {
         // still describes exactly the rows that landed (the write is the
         // single materialization of a possibly nondeterministic cond scan).
         val obs = org.apache.spark.sql.Observation()
-        val staged = stageDataFilesTagged(fs, dir,
+        val staged = stageFiles(fs, dir,
           hits.observe(obs, org.apache.spark.sql.functions.collect_set(
               org.apache.spark.sql.functions.col("fname")).as("touched"))
             .coalesce(1).sortWithinPartitions("fname", "pos"),
-          s"a${java.util.UUID.randomUUID().toString.take(8)}")
+          s"a${java.util.UUID.randomUUID().toString.take(8)}", None)
         val touchedNames: Set[String] =
           if (staged.isEmpty) Set.empty
           else observedStrings(obs, "touched")
@@ -1650,11 +1673,11 @@ object VersionedTable {
         // read-back job) — hits is checkpointed, so the observed set and
         // the rewritten rows below come from the same materialized batch
         val obs = org.apache.spark.sql.Observation()
-        val staged = stageDataFilesTagged(fs, dir,
+        val staged = stageFiles(fs, dir,
           hits.select(col(FnameCol).as("fname"), col(PosCol).as("pos"))
             .observe(obs, org.apache.spark.sql.functions.collect_set(
               org.apache.spark.sql.functions.col("fname")).as("touched"))
-            .coalesce(1).sortWithinPartitions("fname", "pos"), stageTag)
+            .coalesce(1).sortWithinPartitions("fname", "pos"), stageTag, None)
         val touchedNames: Set[String] =
           if (staged.isEmpty) Set.empty
           else observedStrings(obs, "touched")
@@ -1724,7 +1747,7 @@ object VersionedTable {
           .parquet(dvRels.map(r => absOf(dir, r).toString): _*)
           .select(col("fname"), col("pos")).distinct()
           .coalesce(1).sortWithinPartitions("fname", "pos")
-        val dvRel = stageDataFiles(fs, dir, merged, next) match {
+        val dvRel = stageFiles(fs, dir, merged, f"c$next%05d", None) match {
           case Seq(one) => one
           case other => sys.error(
             s"compactDeletionVectors: expected one staged sidecar, got ${other.size}")
@@ -2679,7 +2702,7 @@ object VersionedTable {
           val dvCopied = srcEntries.flatMap(_.dvs).distinct.map { d =>
             val rewritten = spark.read.parquet(new Path(new Path(srcDir), d).toString)
               .withColumn("fname", remap(org.apache.spark.sql.functions.col("fname")))
-            d -> (stageDataFiles(fs, dstDir, rewritten.coalesce(1), v) match {
+            d -> (stageFiles(fs, dstDir, rewritten.coalesce(1), f"c$v%05d", None) match {
               case Seq(one) => one
               case other    => sys.error(s"cloneDeep: sidecar $d staged ${other.size} files")
             })
@@ -2782,8 +2805,8 @@ object VersionedTable {
     * contract (appends never retract a row), which lets change-feed
     * consumers skip retraction handling entirely
     * ([[MaterializedAgg.refresh]]'s append-only fold). Resolved from the
-    * log alone — O(span) small entry reads, no data I/O; a manifest or
-    * snapshot entry in the span reports false (conservative: full
+    * log alone — O(span) small entry reads, no data I/O; a full-manifest
+    * entry in the span reports false (conservative: full
     * manifests do not say what they replaced). */
   def isAppendOnlySpan(dir: String, vFrom: Long, vTo: Long): Boolean =
     log(dir).filter { case (v, _) => v > vFrom && v <= vTo }
@@ -2845,8 +2868,7 @@ object VersionedTable {
     val entry = committed.find(_._1 == v).getOrElse(
       sys.error(s"schemaOf: version $v does not exist in $dir"))
     declaredSchemaAt(dir, v).getOrElse {
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val entries = entriesOfVersion(fs, dir, v, entry._2)
+      val entries = entriesOfVersion(dir, v, entry._2)
       require(entries.nonEmpty, s"schemaOf: version $v of $dir has no data files")
       footerSchema(spark, dir, entries)
     }
@@ -2864,7 +2886,7 @@ object VersionedTable {
     require(committed.nonEmpty, s"detail: $dir has no committed version")
     val (v, ms) = committed.last
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = entriesOfVersion(fs, dir, v, ms)
+    val entries = entriesOfVersion(dir, v, ms)
     def len(rel: String) =
       try fs.getFileStatus(absOf(dir, rel)).getLen catch { case _: Throwable => 0L }
     val dvs = entries.flatMap(_.dvs).distinct
@@ -2906,9 +2928,9 @@ object VersionedTable {
     read(spark, dir, Some(versionAsOf(dir, tsMillis)))
 
   /** Read a table version — the latest by default, or a pinned one (time
-    * travel). The returned plan reads exactly one immutable `v=<n>`
-    * directory: later commits and vacuums of OTHER versions never touch
-    * its files. */
+    * travel). The returned plan reads exactly that version's manifest
+    * files, all immutable: later commits and vacuums of OTHER versions
+    * never touch them. */
   def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
     val committed = VersionedTable.log(dir)
     require(committed.nonEmpty, s"VersionedTable.read: $dir has no committed version")
@@ -2917,32 +2939,14 @@ object VersionedTable {
     require(entry.isDefined,
       s"version $v does not exist (committed: ${committed.map(_._1).mkString(", ")})")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    parseEntry(dir, v, entry.get._2) match {
-      case SnapshotEntry =>
-        require(fs.exists(vDir(dir, v)),
-          s"version $v of $dir was vacuumed " +
-            s"(data retained for: ${versions(spark, dir).map(_._1).mkString(", ")})")
-        // one driver footer read instead of Spark's parallel schema-
-        // inference JOB per scan (snapshot files are schema-uniform by the
-        // commit gate — the same footerSchema device the manifest path uses)
-        val first = fs.listStatus(vDir(dir, v)).toSeq
-          .map(_.getPath).find(_.getName.endsWith(".parquet"))
-        first match {
-          case Some(f) => spark.read
-            .schema(org.apache.spark.sql.graft.FooterShim.schemaOf(spark, f.toString))
-            .parquet(vDir(dir, v).toString)
-          case None => spark.read.parquet(vDir(dir, v).toString)
-        }
-      case _ =>
-        val entries = entriesOfVersion(fs, dir, v, entry.get._2)
-        require(entries.nonEmpty, s"version $v of $dir committed no data files")
-        val missing = entries.flatMap(e => e.rel +: e.dvs)
-          .filterNot(rel => fs.exists(new Path(dir, rel)))
-        require(missing.isEmpty,
-          s"version $v of $dir was vacuumed " +
-            s"(data retained for: ${versions(spark, dir).map(_._1).mkString(", ")})")
-        scanEntries(spark, dir, entries, declaredSchemaAt(dir, v)) // DV-masked; plain when DV-free
-    }
+    val entries = entriesOfVersion(dir, v, entry.get._2)
+    require(entries.nonEmpty, s"version $v of $dir committed no data files")
+    val missing = entries.flatMap(e => e.rel +: e.dvs)
+      .filterNot(rel => fs.exists(new Path(dir, rel)))
+    require(missing.isEmpty,
+      s"version $v of $dir was vacuumed " +
+        s"(data retained for: ${versions(spark, dir).map(_._1).mkString(", ")})")
+    scanEntries(spark, dir, entries, declaredSchemaAt(dir, v)) // DV-masked; plain when DV-free
   }
 
   /** Grace window for NEVER-REFERENCED files during [[vacuum]] (Delta's
@@ -3065,10 +3069,9 @@ object VersionedTable {
         }
       }
       val keep      = keepOf(committed)
-      // FILE REFCOUNT across retained manifests: a data file (or a snapshot
-      // directory an incremental commit references into) lives as long as
-      // ANY retained version lists it — sharing means deletion must check
-      // every retained manifest, not just the version being dropped.
+      // FILE REFCOUNT across retained manifests: a data file lives as long
+      // as ANY retained version lists it — sharing means deletion must
+      // check every retained manifest, not just the version being dropped.
       // Deletion-vector sidecars refcount exactly like data files: a DV
       // lives as long as any retained entry masks through it.
       // resolution-based: a retained DELTA version's full file set comes
@@ -3076,28 +3079,20 @@ object VersionedTable {
       // the log keeps every entry forever)
       val keepRels: Set[String] = committed.filter(e => keep(e._1))
         .flatMap { case (v, ms) =>
-          parseEntry(dir, v, ms) match {
-            case SnapshotEntry => Seq.empty[String]
-            case _ => entriesOfVersion(fs, dir, v, ms).flatMap(e => e.rel +: e.dvs)
-          }
+          entriesOfVersion(dir, v, ms).flatMap(e => e.rel +: e.dvs)
         }.toSet
-      // legacy snapshot dirs: droppable only when not retained AND no
-      // retained manifest references a file inside them
-      val legacyDrop = listVersionDirs(fs, dir).filterNot(keep)
-        .filterNot(v => keepRels.exists(_.startsWith(f"v=$v%05d/")))
-      // manifest versions being dropped (data present now, swept below) —
-      // reported alongside the directory drops
-      val manifestDrop = committed.filterNot(e => keep(e._1))
+      // one listing of data/ (plus one per day directory) answers every
+      // existence question below
+      val dataFiles = listDataFiles(fs, dir)
+      val dataRels  = dataFiles.map(_._1).toSet
+      def present(rel: String): Boolean =
+        if (rel.startsWith("data/")) dataRels(rel) else fs.exists(new Path(dir, rel))
+      // versions being dropped (data present now, swept below)
+      val dropped = committed.filterNot(e => keep(e._1))
         .filter { case (v, ms) =>
-          parseEntry(dir, v, ms) match {
-            case SnapshotEntry => false
-            case _ =>
-              val rels = entriesOfVersion(fs, dir, v, ms).map(_.rel)
-              rels.nonEmpty && rels.forall(rel => fs.exists(new Path(dir, rel))) &&
-                rels.exists(rel => !keepRels.contains(rel))
-          }
+          val rels = entriesOfVersion(dir, v, ms).map(_.rel)
+          rels.nonEmpty && rels.forall(present) && rels.exists(rel => !keepRels.contains(rel))
         }.map(_._1)
-      legacyDrop.foreach(v => del(vDir(dir, v), true))
       // data/ sweep, two classes with different proof obligations:
       //  - referenced by SOME committed manifest but no retained one —
       //    a dropped version's exclusive file: deliberate retention drop,
@@ -3114,15 +3109,20 @@ object VersionedTable {
         parseEntry(dir, v, ms) match {
           case FullEntry(es) => es.flatMap(e => e.rel +: e.dvs)
           case DeltaEntry(adds, _, _, dvAdds) => adds ++ dvAdds.map(_._2)
-          case SnapshotEntry => Seq.empty[String]
         }
       }.toSet
-      if (fs.exists(dataDir(dir)))
-        fs.listStatus(dataDir(dir)).toSeq
-          .filterNot(s => keepRels.contains("data/" + s.getPath.getName))
-          .filter(s => everReferenced.contains("data/" + s.getPath.getName) ||
-            s.getModificationTime < cutoffMs)
-          .foreach(s => del(s.getPath, false))
+      val swept = dataFiles
+        .filterNot { case (rel, _) => keepRels.contains(rel) }
+        .filter { case (rel, st) => everReferenced.contains(rel) || st.getModificationTime < cutoffMs }
+      swept.foreach { case (_, st) => del(st.getPath, false) }
+      // day directories (data/p_day=<day>/) this sweep emptied go too; the
+      // non-recursive delete refuses a directory a racing stage just moved
+      // a file into, which then simply stays
+      val sweptRels = swept.map(_._1).toSet
+      dataFiles.groupBy { case (rel, _) => rel.split("/").init.mkString("/") }
+        .collect { case (sub, fs0) if sub != "data" && fs0.forall(f => sweptRels(f._1)) =>
+          new Path(dir, sub) }
+        .foreach(p => try del(p, false) catch { case _: java.io.IOException => () })
       // per-version stats manifests ([[VersionedStats]]) of dropped
       // versions describe files that no longer exist — sweep them (and
       // their crashed staging litter) so the stats root mirrors retention
@@ -3134,7 +3134,7 @@ object VersionedTable {
           if (n.endsWith(".__tmp") || vOf.exists(!keep(_)))
             del(s.getPath, true)
         }
-      ((legacyDrop ++ manifestDrop).distinct.sorted, planned.toSeq.sorted)
+      (dropped.sorted, planned.toSeq.sorted)
     }
 
   /** Row-level DIFF between two committed versions, keyed by `keyCols`:
@@ -3323,7 +3323,7 @@ object VersionedTable {
       val entry = committed.find(_._1 == v)
       require(entry.isDefined,
         s"version $v does not exist (committed: ${committed.map(_._1).mkString(", ")})")
-      entriesOfVersion(fs, dir, v, entry.get._2)
+      entriesOfVersion(dir, v, entry.get._2)
     }
     val entriesA = entriesAt(vFrom)
     val entriesB = entriesAt(vTo)

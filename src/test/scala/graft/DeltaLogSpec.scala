@@ -10,7 +10,7 @@ import graft.tables.VersionedTable
   * specs pin (1) the serialization actually shrinks to O(change), (2) the
   * checkpoint cadence holds, (3) every version still resolves to exactly
   * the right row set across delta chains, DV actions, vacuum, and the
-  * snapshot-anchor rule. */
+  * whole-table-commit anchor rule. */
 class DeltaLogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,7 +27,7 @@ class DeltaLogSpec extends SparkSpec {
     val lines = body.split("\n").toSeq
     if (lines.contains("kind=delta")) "delta"
     else if (lines.contains("kind=manifest")) "manifest"
-    else "snapshot"
+    else "none"
   }
 
   test("append chain: O(change) delta entries, full checkpoints on cadence, every version resolves") {
@@ -56,15 +56,17 @@ class DeltaLogSpec extends SparkSpec {
     }
   }
 
-  test("first incremental commit after a SNAPSHOT commit is a full manifest (anchor rule)") {
+  test("a whole-table commit publishes a full manifest: the next append is a delta on it (anchor rule)") {
     val dir = dirOf()
-    VersionedTable.commit(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir) // v0 snapshot
+    VersionedTable.commit(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir) // v0
     VersionedTable.commitAppend(spark, Seq((3L, "c")).toDF("k", "s"), dir)      // v1
-    VersionedTable.commitAppend(spark, Seq((4L, "d")).toDF("k", "s"), dir)      // v2
+    VersionedTable.commit(spark, Seq((4L, "d")).toDF("k", "s"), dir)            // v2
+    VersionedTable.commitAppend(spark, Seq((5L, "e")).toDF("k", "s"), dir)      // v3
     val kinds = entryBodies(dir).map { case (v, b) => v -> kindOf(b) }.toMap
-    assert(kinds(0L) == "snapshot" && kinds(1L) == "manifest" && kinds(2L) == "delta",
+    assert(kinds == Map(0L -> "manifest", 1L -> "delta", 2L -> "manifest", 3L -> "delta"),
       kinds.toString)
-    assert(VersionedTable.read(spark, dir).count() == 4)
+    assert(VersionedTable.read(spark, dir, Some(1L)).count() == 3)
+    assert(VersionedTable.read(spark, dir).count() == 2)
   }
 
   test("DV delete serializes as dvadd-only delta; sidecar compaction clears and re-adds; masks resolve across the chain") {
@@ -225,9 +227,11 @@ class DeltaLogSpec extends SparkSpec {
     val dir = dirOf()
     VersionedTable.commitAppend(spark,
       Seq((1L, 10L), (2L, 20L)).toDF("k", "x"), dir)                       // v0
-    // a crashed snapshot commit: the data dir renamed, the entry never
-    // written — nextVersion must skip its number forever
-    new java.io.File(dir, "v=00001").mkdirs()
+    // a crashed schema-changing commit: its tombstone file written, the
+    // entry never — nextVersion must skip its number forever
+    new java.io.File(dir, "_schema").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_schema", "v=00001.tombstones"),
+      "ghost".getBytes("UTF-8"))
     val v = VersionedTable.commitUpdate(spark, dir,
       col("k") === 1L, Map("x" -> lit(99L)))
     assert(v == 2L, s"the orphan's number must never be reused (got v$v)")

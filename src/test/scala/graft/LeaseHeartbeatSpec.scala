@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.tables.{FsIO, TimePartitioned}
-import org.apache.spark.sql.functions._
+import graft.tables.FsIO
 
 /** A RawLocalFileSystem wearing a scheme FsIO does not recognize as
   * having an atomic create-no-overwrite — the stand-in for S3A-without-
@@ -13,22 +12,16 @@ class MockNonAtomicFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("mock:///")
 }
 
-/** The maintenance-lease heartbeat (VERDICT r16 finding #1): a write
-  * lease held across a DATA-PROPORTIONAL write must renew, or a
-  * legitimately slow writer (a 100 TB staged overwrite runs hours) looks
-  * crashed to the load-time heal, which then seizes the lock and deletes
-  * the intent-less live stage — with the worst case being a truncated-
-  * newDays intent that retires every old day (silent table loss). These
-  * tests prove: a heartbeated holder never looks stale; a concurrent
-  * heal during a slower-than-lease stage write is a no-op; and a writer
-  * whose lease IS lost aborts loudly BEFORE publishing any intent. */
+/** The maintenance-lease heartbeat: a write lease held across a
+  * DATA-PROPORTIONAL write (TableManager's compaction swaps) must renew,
+  * or a legitimately slow writer looks crashed to a rival, which then
+  * seizes the lock mid-write. These tests prove: a heartbeated holder
+  * never looks stale, a writer whose lease IS lost aborts loudly at its
+  * next ownership check, and the lock-honesty gate refuses schemes
+  * without an atomic create. */
 class LeaseHeartbeatSpec extends SparkSpec {
 
   private def tmp() = Files.createTempDirectory("graft_lease").toString
-
-  // epoch-nanos base inside 2023-11-14 UTC; +1 day for the second batch
-  private val Day1 = 1700000000000000000L
-  private val Day2 = Day1 + 86400L * 1000000000L
 
   test("fixed lease goes stale under a slow holder; heartbeat lease never does") {
     val root = tmp()
@@ -72,78 +65,6 @@ class LeaseHeartbeatSpec extends SparkSpec {
       }
     }
     assert(e.getMessage.contains("lost before publishing"))
-  }
-
-  test("overwriteStaged slower than the lease survives concurrent heal attempts") {
-    val dir = tmp() + "/t"
-    val old = spark.range(0, 6).select((lit(Day1) + col("id")).as("ts"), col("id").as("v"))
-    TimePartitioned.write(old, dir, "ts", filesPerDay = 1)
-    // one upstream partition + one day partition: the 24 sleeps run
-    // sequentially, so the stage write takes ~2.9 s against a 1.2 s lease
-    // (renewal every 400 ms — ~800 ms of scheduler-delay tolerance)
-    val slow = udf((x: Long) => { Thread.sleep(120L); x })
-    val next = spark.range(0, 24, 1, numPartitions = 1)
-      .select((lit(Day2) + col("id")).as("ts"), slow(col("id") + 100L).as("v"))
-    val healerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    @volatile var writing = true
-    val healer = new Thread(() => {
-      try while (writing) {
-        TimePartitioned.heal(spark, dir, leaseMs = 1200) // LockBusy no-op vs a LIVE writer
-        Thread.sleep(100)
-      } catch { case t: Throwable => healerErr.set(t) }
-    })
-    healer.start()
-    try TimePartitioned.overwriteStaged(next, dir, "ts", filesPerDay = 1, leaseMs = 1200)
-    finally { writing = false; healer.join(10000) }
-    assert(healerErr.get() == null, s"healer failed: ${healerErr.get()}")
-    val got = spark.read.parquet(dir).select("v").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == (100L until 124L), "overwrite result lost or truncated")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_overwrite_stage")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_overwrite_trash")))
-  }
-
-  test("a writer that loses its lease mid-write aborts BEFORE publishing an intent") {
-    val dir = tmp() + "/t"
-    val old = spark.range(0, 6).select((lit(Day1) + col("id")).as("ts"), col("id").as("v"))
-    TimePartitioned.write(old, dir, "ts", filesPerDay = 1)
-    val slow = udf((x: Long) => { Thread.sleep(150L); x })
-    val next = spark.range(0, 14, 1, numPartitions = 1)
-      .select((lit(Day2) + col("id")).as("ts"), slow(col("id") + 100L).as("v"))
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val writer = new Thread(() => {
-      try TimePartitioned.overwriteStaged(next, dir, "ts", filesPerDay = 1, leaseMs = 600)
-      catch { case t: Throwable => failure.set(t) }
-    })
-    writer.start()
-    Thread.sleep(800) // mid stage-write: seize the lease like a healer would
-    FsIO.writeText(dir + ".__write_lock",
-      s"owner=intruder\nts=${System.currentTimeMillis()}\nlabel=heal-takeover\n")
-    writer.join(30000)
-    assert(!writer.isAlive, "writer hung after losing its lease")
-    val t = failure.get()
-    assert(t != null, "writer must abort once its lease is seized")
-    assert(t.getMessage.contains("lost before"), s"unexpected failure: $t")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the invariant the heartbeat protects: NO intent — complete or torn —
-    // may exist from an aborted writer (recovery rolling a truncated
-    // intent forward is the silent-data-loss path)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_overwrite_stage/_intent")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_overwrite_stage/_intent.tmp")))
-    // old table intact (the stage subdir is underscore-hidden from readers)
-    val got = spark.read.parquet(dir).select("v").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == (0L until 6L), "old snapshot must be untouched")
-    // once the intruder's lease ages out, heal classifies the orphan
-    // stage-without-intent as crash garbage and the table stays on the
-    // old snapshot
-    FsIO.writeText(dir + ".__write_lock",
-      s"owner=intruder\nts=${System.currentTimeMillis() - 10000}\nlabel=heal-takeover\n")
-    TimePartitioned.heal(spark, dir, leaseMs = 600)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_overwrite_stage")))
-    val after = spark.read.parquet(dir).select("v").collect().map(_.getLong(0)).sorted
-    assert(after.toSeq == (0L until 6L))
   }
 
   test("lock honesty: a scheme without atomic create is refused unless opted in") {

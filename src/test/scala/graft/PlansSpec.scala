@@ -416,8 +416,10 @@ class PlansSpec extends SparkSpec {
     val scans = pinned.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty)
     // time travel must not list or read sibling versions: the scan's root
-    // paths point at the single pinned v= directory
-    val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toString))
-    assert(roots.forall(_.endsWith("v=00001")), s"scan roots: $roots")
+    // paths are exactly the pinned version's manifest files
+    val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toUri.getPath)).toSet
+    val pinnedFiles = VersionedTable.filesOf(dir, 1L)
+      .map(rel => new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir), rel).toUri.getPath).toSet
+    assert(roots == pinnedFiles, s"scan roots: $roots")
   }
 }

@@ -57,12 +57,12 @@ class RestoreCloneConstraintsSpec extends SparkSpec {
   test("restore: snapshot-commit versions restore too; vacuumed targets fail loudly") {
     import spark.implicits._
     val dir = rootOf() + "/t"
-    VersionedTable.commit(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir) // v0 snapshot
-    VersionedTable.commit(spark, Seq((9L, "z")).toDF("id", "s"), dir)            // v1 snapshot
+    VersionedTable.commit(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir) // v0
+    VersionedTable.commit(spark, Seq((9L, "z")).toDF("id", "s"), dir)            // v1
     val rv = VersionedTable.commitRestore(spark, dir, 0L)
     assert(VersionedTable.read(spark, dir).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    // v0's snapshot dir is shared by the restore manifest: vacuum retaining
-    // only the restore must KEEP it (refcount across manifests)
+    // v0's files are shared by the restore manifest: vacuum retaining only
+    // the restore must KEEP them (refcount across manifests)
     VersionedTable.vacuum(spark, dir, retainLast = 1, graceMs = 0L)
     assert(VersionedTable.read(spark, dir, Some(rv)).count() == 2L)
     // restoring to the vacuumed v1 fails loudly, table unchanged

@@ -1,11 +1,22 @@
 package graft
 
-import graft.tables.TimePartitioned
+import graft.tables.{TimePartitioned, VersionedTable}
 import org.apache.spark.sql.functions._
 
 class TimePartitionedSpec extends SparkSpec {
 
   private val Day = 86400L * 1000000000L
+
+  private def tmpDir(tag: String) =
+    java.nio.file.Files.createTempDirectory(tag).toString + "/t"
+
+  /** Names of the `p_day=` directories under the table's `data/`. */
+  private def dayDirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir, "data").listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("p_day=")).map(_.getName).sorted
+
+  private def ids(dir: String): Set[Long] =
+    VersionedTable.read(spark, dir).select("id").collect().map(_.getLong(0)).toSet
 
   test("day boundaries are exact and inclusive; reader prunes to the window's days") {
     import spark.implicits._
@@ -16,10 +27,10 @@ class TimePartitionedSpec extends SparkSpec {
       (3L, d0 + Day - 1L), // last nano of day 0
       (4L, d0 + Day),      // midnight day 1
       (5L, d0 + 2 * Day + 5L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_spec").toString + "/t"
+    val dir = tmpDir("graft_tp_spec")
     TimePartitioned.write(rows.toDF("id", "ts"), dir, "ts")
-    // 4 distinct days → 4 partition dirs
-    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("p_day=")) == 4)
+    // 4 distinct days → 4 day directories
+    assert(dayDirs(dir).size == 4, dayDirs(dir).toString)
     def ids(from: Long, to: Long): Set[Long] =
       TimePartitioned.readRange(spark, dir, "ts", from, to)
         .select("id").collect().map(_.getLong(0)).toSet
@@ -34,46 +45,27 @@ class TimePartitionedSpec extends SparkSpec {
       .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
       .map(_.selectedPartitions.partitionCount).sum
     assert(scanned == 1, s"one-day window planned $scanned partitions")
-  }
-
-  test("ad-hoc parquet read (p_day inferred as DATE) still prunes, never miscasts") {
-    import spark.implicits._
-    val d0 = 19724L * Day
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_date").toString + "/t"
-    TimePartitioned.write(
-      (0 until 4).flatMap(d => Seq((d.toLong, d0 + d * Day + 7L))).toDF("id", "ts"),
-      dir, "ts")
-    TimePartitioned.assertMarker(dir, "ts")
-    // a DIRECT spark.read.parquet of the marker'd dir lets partition type
-    // inference type p_day as DATE ('yyyy-MM-dd' values), not the string
-    // GraftDayTable pins — the injected p_day bound must be built at that
-    // resolved type or execution dies on a cast; pruning must still fire
-    val adhoc = spark.read.parquet(dir).where(col("ts") >= d0 + Day && col("ts") < d0 + 2 * Day)
-    assert(adhoc.schema("p_day").dataType == org.apache.spark.sql.types.DateType)
-    assert(adhoc.select("id").collect().map(_.getLong(0)).toSet == Set(1L))
-    val scanned = adhoc.queryExecution.executedPlan
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .map(_.selectedPartitions.partitionCount).sum
-    assert(scanned == 1, s"one-day window planned $scanned partitions")
+    // a plain versioned read serves the hidden schema
+    assert(VersionedTable.read(spark, dir).columns.toSeq == Seq("id", "ts"))
   }
 
   test("pre-epoch timestamps map to the correct (negative-day) partition") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_neg").toString + "/t"
+    val dir = tmpDir("graft_tp_neg")
     val t = -3L * Day + 7L // 1969-12-29 00:00:00.000000007
     TimePartitioned.write(Seq((1L, t)).toDF("id", "ts"), dir, "ts")
-    assert(new java.io.File(dir).listFiles().exists(_.getName == "p_day=1969-12-29"))
+    assert(dayDirs(dir) == Seq("p_day=1969-12-29"))
     assert(TimePartitioned.readRange(spark, dir, "ts", t, t).count() == 1)
   }
 
   test("pre-epoch ts in the last second of a UTC day floors (not truncates) to that day") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_floor").toString + "/t"
+    val dir = tmpDir("graft_tp_floor")
     // 1969-12-31 23:59:59.5 — trunc-div would store it under p_day=1970-01-01
     // and readRange's floorDiv pruning would silently drop it.
     val t = -500000000L
     TimePartitioned.write(Seq((1L, t)).toDF("id", "ts"), dir, "ts")
-    assert(new java.io.File(dir).listFiles().exists(_.getName == "p_day=1969-12-31"),
+    assert(dayDirs(dir) == Seq("p_day=1969-12-31"),
       "write path must floor the day key like the reader does")
     assert(TimePartitioned.readRange(spark, dir, "ts", t, t).count() == 1)
   }
@@ -81,19 +73,24 @@ class TimePartitionedSpec extends SparkSpec {
   test("dropDaysBefore reclaims whole day directories, keeps the cutoff's own day") {
     import spark.implicits._
     val d0 = 19724L * Day
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_ret").toString + "/t"
+    val dir = tmpDir("graft_tp_ret")
     TimePartitioned.write(
       (0L until 100L).map(i => (i, d0 + (i / 10L) * Day + i)).toDF("id", "ts"),
       dir, "ts") // 10 days
     // cutoff MID-day 3: days 0-2 drop, day 3 (the cutoff's day) stays
     val dropped = TimePartitioned.dropDaysBefore(spark, dir, d0 + 3 * Day + 12345L)
     assert(dropped.size == 3, dropped.toString)
-    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("p_day=")) == 7)
-    val got = spark.read.parquet(dir).drop("p_day").as[(Long, Long)]
-      .collect().map(_._1).toSet
-    assert(got == (30L until 100L).toSet, "days 3..9 intact, 0..2 reclaimed")
-    // idempotent; and a later cutoff advances
+    assert(ids(dir) == (30L until 100L).toSet, "days 3..9 intact, 0..2 dropped")
+    // the drop is ONE metadata-only commit; the pre-drop version still reads
+    assert(VersionedTable.latestVersion(dir).contains(1L))
+    assert(VersionedTable.read(spark, dir, Some(0L)).count() == 100L)
+    // vacuum reclaims the dropped days' bytes and their directories
+    VersionedTable.vacuum(spark, dir, retainLast = 1, graceMs = 0L)
+    assert(dayDirs(dir).size == 7, dayDirs(dir).toString)
+    assert(ids(dir) == (30L until 100L).toSet)
+    // idempotent (no commit); and a later cutoff advances
     assert(TimePartitioned.dropDaysBefore(spark, dir, d0 + 3 * Day).isEmpty)
+    assert(VersionedTable.latestVersion(dir).contains(1L))
     assert(TimePartitioned.dropDaysBefore(spark, dir, d0 + 5 * Day) == Seq(
       TimePartitioned.dayOfNanos(d0 + 3 * Day), TimePartitioned.dayOfNanos(d0 + 4 * Day)))
   }
@@ -101,54 +98,52 @@ class TimePartitionedSpec extends SparkSpec {
   test("compactDaysBefore: closed days compact atomically; crash states recover") {
     import spark.implicits._
     val d0 = 19724L * Day
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_cmp").toString + "/t"
-    def rows(lo: Long, hi: Long) =
-      (lo until hi).map(i => (i, d0 + (i / 100L) * Day + i)).toDF("id", "ts")
-    def filesIn(day: String) =
-      new java.io.File(dir, s"p_day=$day").listFiles()
-        .count(f => f.getName.endsWith(".parquet"))
+    val dir = tmpDir("graft_tp_cmp")
+    def rows(wave: Long) =
+      (0L until 400L).map(i => (wave * 1000L + i, d0 + (i / 100L) * Day + i)).toDF("id", "ts")
+    def filesIn(day: String, v: Long) =
+      VersionedTable.filesOf(dir, v).count(_.startsWith(s"data/p_day=$day/"))
     val day0 = TimePartitioned.dayOfNanos(d0)
-    // appended waves over 4 days → the day fragments past the target
-    TimePartitioned.write(rows(0, 400), dir, "ts", filesPerDay = 4)
-    val wave1 = filesIn(day0)
-    TimePartitioned.append(rows(0, 400)
-      .select((col("id") + 1000).as("id"), col("ts")), dir, "ts", filesPerDay = 4)
-    TimePartitioned.append(rows(0, 400)
-      .select((col("id") + 2000).as("id"), col("ts")), dir, "ts", filesPerDay = 4)
-    assert(filesIn(day0) == 3 * wave1 && filesIn(day0) > 2,
-      s"appends fragment the day: wave=$wave1, now=${filesIn(day0)}")
-    val before = spark.read.parquet(dir).drop("p_day").as[(Long, Long)].collect().toSet
+    val day3 = TimePartitioned.dayOfNanos(d0 + 3 * Day)
+    // appended waves over 4 days fragment every day past the target
+    TimePartitioned.write(rows(0), dir, "ts")
+    (1L to TimePartitioned.FilesPerDay.toLong).foreach(w =>
+      VersionedTable.commitAppend(spark, rows(w), dir))
+    val head = VersionedTable.latestVersion(dir).get
+    assert(filesIn(day0, head) > TimePartitioned.FilesPerDay,
+      s"appends fragment the day: ${filesIn(day0, head)} files")
+    val before = VersionedTable.read(spark, dir).as[(Long, Long)].collect().toSet
     // compact days 0-2 (cutoff mid-day 3 keeps day 3 untouched)
-    val day3Files = filesIn(TimePartitioned.dayOfNanos(d0 + 3 * Day))
-    val compacted = TimePartitioned.compactDaysBefore(spark, dir, d0 + 3 * Day + 5L,
-      filesPerDay = 2)
+    val compacted = TimePartitioned.compactDaysBefore(spark, dir, d0 + 3 * Day + 5L)
     assert(compacted.size == 3, compacted.toString)
-    assert(filesIn(day0) == 2, s"day 0 compacted to 2, got ${filesIn(day0)}")
-    assert(filesIn(TimePartitioned.dayOfNanos(d0 + 3 * Day)) == day3Files,
+    val cv = VersionedTable.latestVersion(dir).get
+    assert(cv == head + 1, "compaction is ONE commit")
+    assert(!VersionedTable.dataChanged(dir, cv), "compaction commits dataChange=false")
+    assert(filesIn(day0, cv) <= TimePartitioned.FilesPerDay, s"day 0: ${filesIn(day0, cv)}")
+    assert(VersionedTable.filesOf(dir, cv).filter(_.startsWith(s"data/p_day=$day3/")) ==
+      VersionedTable.filesOf(dir, head).filter(_.startsWith(s"data/p_day=$day3/")),
       "the open day is never touched")
-    assert(spark.read.parquet(dir).drop("p_day").as[(Long, Long)].collect().toSet
-      == before, "compaction is row-identical")
-    // idempotent: already-compact days skip
-    assert(TimePartitioned.compactDaysBefore(spark, dir, d0 + 3 * Day, 2).isEmpty)
-    // CRASH RECOVERY — shelved day with a complete stage rolls FORWARD
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dayP  = new org.apache.hadoop.fs.Path(dir, s"p_day=$day0")
-    val stage = new org.apache.hadoop.fs.Path(dir, s".compact_p_day=$day0.__tmp")
-    val shelf = new org.apache.hadoop.fs.Path(dir, s".shelf_p_day=$day0.__old")
-    spark.read.parquet(dayP.toString).repartition(1).write.parquet(stage.toString)
-    assert(fs.rename(dayP, shelf)) // simulate crash between shelve and publish
-    // a racing reader between shelve and recovery must NOT double-read
-    assert(!spark.read.parquet(dir).columns.isEmpty)
-    TimePartitioned.compactDaysBefore(spark, dir, d0 + 3 * Day, 2) // recovers first
-    assert(filesIn(day0) == 1, "rolled forward to the staged layout")
-    assert(!fs.exists(shelf) && !fs.exists(stage))
-    // shelved day with NO stage rolls BACK
-    assert(fs.rename(dayP, shelf))
-    TimePartitioned.compactDaysBefore(spark, dir, d0 + 3 * Day, 2)
-    assert(fs.exists(dayP) && !fs.exists(shelf), "rolled back to the original day")
-    assert(spark.read.parquet(dir).drop("p_day").as[(Long, Long)].collect().toSet
-      == before, "recovery preserves every row")
+    assert(VersionedTable.read(spark, dir).as[(Long, Long)].collect().toSet == before,
+      "compaction is row-identical")
+    // idempotent: already-compact days skip, no commit
+    assert(TimePartitioned.compactDaysBefore(spark, dir, d0 + 3 * Day).isEmpty)
+    assert(VersionedTable.latestVersion(dir).contains(cv))
+    // CRASH STATE: a compaction killed before its log rename leaves staged
+    // files in a day directory and an entry temp — never visible, swept
+    val fdir = new java.io.File(dir)
+    val orphan = new java.io.File(fdir, s"data/p_day=$day0/c00099-deadbeef-part-0.parquet")
+    Seq((-1L, d0)).toDF("id", "ts").coalesce(1).write.parquet(s"$dir/.stage-forged.__tmp")
+    java.nio.file.Files.move(new java.io.File(s"$dir/.stage-forged.__tmp").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath, orphan.toPath)
+    java.nio.file.Files.write(new java.io.File(fdir, "_log/00099-1.commit.tmp").toPath,
+      s"commitMs=1\nkind=manifest\nfile=data/p_day=$day0/${orphan.getName}\n".getBytes("UTF-8"))
+    assert(VersionedTable.read(spark, dir).as[(Long, Long)].collect().toSet == before,
+      "a crashed compaction's staged files never become visible")
+    VersionedTable.vacuum(spark, dir, retainLast = 1, graceMs = 0L)
+    assert(!orphan.exists && !new java.io.File(fdir, "_log/00099-1.commit.tmp").exists)
+    assert(!new java.io.File(s"$dir/.stage-forged.__tmp").exists)
+    assert(VersionedTable.read(spark, dir).as[(Long, Long)].collect().toSet == before,
+      "recovery preserves every row")
   }
 
   test("day-table INSERT OVERWRITE is staged: _props never deleted, crash leftovers recover") {
@@ -156,128 +151,62 @@ class TimePartitionedSpec extends SparkSpec {
     val d0 = 19724L * Day
     (0L until 100L).map(i => (i, d0 + (i / 25L) * Day + i)).toDF("id", "ts")
       .createOrReplaceTempView("day_ow_src")
-    val dir = java.nio.file.Files.createTempDirectory("graft_day_ow").toString + "/t"
+    val dir = tmpDir("graft_day_ow")
     graft.catalog.GraftCatalog.register("day_ow", dir)
     spark.sql("CREATE TABLE graft.day_ow PARTITIONED BY (days(ts)) " +
       "AS SELECT id, ts FROM day_ow_src")
-    // simulate a previous overwrite's crash-before-swap leftover: a
-    // populated stage subdir. Reads must ignore it (hidden-path filter)…
-    val stage = new java.io.File(dir, "_overwrite_stage/p_day=2024-01-01")
+    // a previous overwrite's crash leftovers: a populated staging dir and
+    // a staged file moved into a day directory, no commit entry for either
     (900L to 909L).map(i => (i, d0)).toDF("id", "ts").coalesce(1)
-      .write.mode("overwrite").parquet(stage.toString)
+      .write.mode("overwrite").parquet(s"$dir/.stage-crashed.__tmp")
+    val orphan = new java.io.File(dir, "data/p_day=2024-01-01/c00042-deadbeef-part-0.parquet")
+    orphan.getParentFile.mkdirs()
+    java.nio.file.Files.copy(new java.io.File(s"$dir/.stage-crashed.__tmp").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath, orphan.toPath)
     assert(spark.sql("SELECT count(*) AS n FROM graft.day_ow").head.getLong(0) == 100L,
-      "a crash leftover stage dir must not leak into reads")
-    // …and the table still resolves as day-partitioned with its managed
-    // flag intact at every point of the staged protocol (the _props file
-    // is never deleted, unlike the old wipe-then-re-assert)
+      "a crash leftover must not leak into reads")
+    // the table resolves as day-partitioned with its managed flag intact:
+    // writes only ever add files and log entries, _props is never touched
     assert(TimePartitioned.dayColumnOf(dir).contains("ts"))
-    // the next overwrite clears the leftover and publishes atomically per
-    // day directory
     spark.sql("INSERT OVERWRITE graft.day_ow SELECT id + 10, ts FROM day_ow_src")
-    assert(!new java.io.File(dir, "_overwrite_stage").exists(),
-      "overwrite must clean a previous crash's stage leftover")
     assert(spark.sql("SELECT count(*) AS n FROM graft.day_ow").head.getLong(0) == 100L)
     assert(spark.sql("SELECT min(id) AS m FROM graft.day_ow").head.getLong(0) == 10L)
     assert(TimePartitioned.dayColumnOf(dir).contains("ts"))
-    // managed-ness survived the overwrite: DROP still owns and deletes
+    // SELF-REFERENTIAL overwrite: `INSERT OVERWRITE t SELECT ... FROM t`
+    // reads the version it replaces
+    spark.sql("INSERT OVERWRITE graft.day_ow SELECT id, ts FROM graft.day_ow WHERE id % 2 = 0")
+    assert(ids(dir) == (10L until 110L).filter(_ % 2 == 0).toSet)
+    // vacuum sweeps the leftovers once past the grace window
+    VersionedTable.vacuum(spark, dir, retainLast = 1, graceMs = 0L)
+    assert(!orphan.exists && !new java.io.File(s"$dir/.stage-crashed.__tmp").exists)
+    assert(ids(dir) == (10L until 110L).filter(_ % 2 == 0).toSet)
+    // managed-ness survived the overwrites: DROP still owns and deletes
     spark.sql("DROP TABLE graft.day_ow")
     assert(!new java.io.File(dir).exists(),
       "managed flag must survive INSERT OVERWRITE so DROP deletes data")
   }
 
-  test("day-table overwrite crashed MID-SWAP: reads stay sane, next overwrite converges") {
+  test("day-table manifests: every entry lies under data/p_day= after append, overwrite and compaction") {
     import spark.implicits._
     val d0 = 19724L * Day
-    (0L until 60L).map(i => (i, d0 + (i / 20L) * Day + i)).toDF("id", "ts")
-      .createOrReplaceTempView("day_ms_src")
-    val dir = java.nio.file.Files.createTempDirectory("graft_day_mid").toString + "/t"
-    graft.catalog.GraftCatalog.register("day_ms", dir)
-    spark.sql("CREATE TABLE graft.day_ms PARTITIONED BY (days(ts)) " +
-      "AS SELECT id, ts FROM day_ms_src")
-    // build the exact mid-swap crash state by hand, INTENT included: the
-    // crashed overwrite meant {d0,d1,d2} -> {d0,d1}; day 0 fully swapped
-    // (old in trash, new published), day 1 retired-not-reached (old in
-    // root, new in stage), day 2 (old-only, to be removed) untouched
-    val root = new java.io.File(dir)
-    val days = root.listFiles().filter(_.getName.startsWith("p_day="))
-      .map(_.getName).sorted
-    assert(days.length == 3)
-    val stage = new java.io.File(root, "_overwrite_stage")
-    val trash = new java.io.File(root, "_overwrite_trash")
-    assert(stage.mkdirs() && trash.mkdirs())
-    assert(new java.io.File(root, days(0)).renameTo(new java.io.File(trash, days(0))))
-    (900L to 902L).map(i => (i, d0 + 5L)).toDF("id", "ts")
-      .coalesce(1).write.parquet(new java.io.File(root, days(0)).toString)
-    (903L to 904L).map(i => (i, d0 + Day + 5L)).toDF("id", "ts")
-      .coalesce(1).write.parquet(new java.io.File(stage, days(1)).toString)
-    java.nio.file.Files.writeString(new java.io.File(stage, "_intent").toPath,
-      days.mkString(",") + "\n" + Seq(days(0), days(1)).mkString(","))
-    // the very FIRST catalog touch heals: loadTable rolls the swap
-    // FORWARD from the intent — day 1's staged copy publishes, old-only
-    // day 2 is removed, the crashed overwrite completes exactly, and the
-    // read serves the intended snapshot (never a hole, never old day 2)
-    assert(TimePartitioned.dayColumnOf(dir).contains("ts"))
-    val healed = spark.sql("SELECT id FROM graft.day_ms").collect().map(_.getLong(0)).toSet
-    assert(healed == Set(900L, 901L, 902L, 903L, 904L),
-      s"load-time roll-forward must complete the crashed overwrite, got $healed")
-    assert(!stage.exists() && !trash.exists(), "crash leftovers must be cleaned")
-    // and appends land on the healed snapshot
-    spark.sql(s"INSERT INTO graft.day_ms SELECT CAST(999 AS BIGINT), CAST($d0 AS BIGINT)")
-    val after999 = spark.sql("SELECT id FROM graft.day_ms").collect().map(_.getLong(0)).toSet
-    assert(after999 == Set(900L, 901L, 902L, 903L, 904L, 999L), s"append after heal: $after999")
-    // and a later overwrite still converges to exactly its own snapshot
-    spark.sql("INSERT OVERWRITE graft.day_ms SELECT id + 500, ts FROM day_ms_src")
-    val after = spark.sql("SELECT id FROM graft.day_ms").collect().map(_.getLong(0)).toSet
-    assert(after == (500L until 560L).toSet, s"convergence failed: ${after.size} ids")
-    spark.sql("DROP TABLE graft.day_ms")
-    assert(!root.exists(), "managed flag must survive the crashed swap")
-  }
-
-  test("overwrite clears crashed-compaction shelf: recovery can't resurrect pre-overwrite days") {
-    import spark.implicits._
-    val d0 = 19724L * Day
-    (0L until 60L).map(i => (i, d0 + (i / 20L) * Day + i)).toDF("id", "ts")
-      .createOrReplaceTempView("day_sh_src")
-    val dir = java.nio.file.Files.createTempDirectory("graft_day_shelf").toString + "/t"
-    graft.catalog.GraftCatalog.register("day_sh", dir)
-    spark.sql("CREATE TABLE graft.day_sh PARTITIONED BY (days(ts)) " +
-      "AS SELECT id, ts FROM day_sh_src")
-    // crashed compactDaysBefore, post-shelve no-stage state: day 0 sits
-    // shelved (recovery's roll-BACK case — it would restore the day)
-    val day0 = TimePartitioned.dayColumnOf(dir); assert(day0.contains("ts"))
-    val shelvedDay = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("p_day=")).map(_.getName).min
-    assert(new java.io.File(dir, shelvedDay).renameTo(
-      new java.io.File(dir, s".shelf_$shelvedDay.__old")))
-    // a real crashed compaction always leaves the pending marker (written
-    // before the first swap) — it is what the load-time heal probes
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_maint_pending"), "")
-    // the overwrite replaces the table wholesale — it must clear the
-    // shelf, or the next compaction's recovery resurrects deleted rows
-    spark.sql("INSERT OVERWRITE graft.day_sh " +
-      s"SELECT id + 100, ts + ${3 * Day} FROM day_sh_src")
-    assert(spark.sql("SELECT count(*) AS n FROM graft.day_sh").head.getLong(0) == 60L)
-    TimePartitioned.compactDaysBefore(spark, dir, d0 + 100 * Day, filesPerDay = 1)
-    val ids = spark.sql("SELECT id FROM graft.day_sh").collect().map(_.getLong(0)).toSet
-    assert(ids == (100L until 160L).toSet,
-      s"pre-overwrite rows resurrected: ${ids.filter(_ < 100L)}")
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith(".shelf_")))
-    // SELF-REFERENTIAL overwrite over a shelved day: `INSERT OVERWRITE t
-    // SELECT ... FROM t` must read the shelved day's rows — loadTable
-    // ROLLS the crashed compaction swap (restoring the day) before the
-    // statement's self-read plans, rather than deleting the shelf
-    val shDay2 = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("p_day=")).map(_.getName).min
-    assert(new java.io.File(dir, shDay2).renameTo(
-      new java.io.File(dir, s".shelf_$shDay2.__old")))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_maint_pending"), "")
-    spark.sql("INSERT OVERWRITE graft.day_sh SELECT id, ts FROM graft.day_sh WHERE id % 2 = 0")
-    val evens = spark.sql("SELECT id FROM graft.day_sh").collect().map(_.getLong(0)).toSet
-    assert(evens == (100L until 160L).filter(_ % 2 == 0).toSet,
-      s"shelved day's rows must survive a self-referential overwrite, got ${evens.size} ids")
-    spark.sql("DROP TABLE graft.day_sh")
+    val dir = tmpDir("graft_day_layout")
+    def rows(base: Long) = (0L until 40L).map(i => (base + i, d0 + (i / 10L) * Day + i)).toDF("id", "ts")
+    def allUnderDays(): Unit = {
+      val v = VersionedTable.latestVersion(dir).get
+      val files = VersionedTable.filesOf(dir, v)
+      assert(files.nonEmpty && files.forall(_.startsWith("data/p_day=")),
+        s"version $v has files outside day directories: ${files.filterNot(_.startsWith("data/p_day="))}")
+    }
+    TimePartitioned.write(rows(0L), dir, "ts")
+    allUnderDays()
+    (1 to 9).foreach(w => VersionedTable.commitAppend(spark, rows(w * 100L), dir))
+    allUnderDays()
+    TimePartitioned.write(rows(5000L), dir, "ts")
+    allUnderDays()
+    (1 to 9).foreach(w => VersionedTable.commitAppend(spark, rows(5000L + w * 100L), dir))
+    assert(TimePartitioned.compactDaysBefore(spark, dir, d0 + 100 * Day).nonEmpty)
+    allUnderDays()
+    assert(ids(dir) == (0 to 9).flatMap(w => (0L until 40L).map(5000L + w * 100L + _)).toSet)
   }
 
   test("catalog CTAS PARTITIONED BY (days(ts)): hidden layout, pruned reads, INSERT append") {
@@ -285,14 +214,14 @@ class TimePartitionedSpec extends SparkSpec {
     val d0 = 19724L * Day
     (0L until 400L).map(i => (i, d0 + (i / 40L) * Day + i)).toDF("id", "ts")
       .createOrReplaceTempView("day_src")
-    val dir = java.nio.file.Files.createTempDirectory("graft_day_cat").toString + "/t"
+    val dir = tmpDir("graft_day_cat")
     graft.catalog.GraftCatalog.register("day_ev", dir)
     spark.sql("CREATE TABLE graft.day_ev PARTITIONED BY (days(ts)) " +
       "AS SELECT id, ts FROM day_src")
     // hidden: the partition column never appears in the table schema
     assert(spark.table("graft.day_ev").columns.toSeq == Seq("id", "ts"))
     // 10 day directories on disk
-    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("p_day=")) == 10)
+    assert(dayDirs(dir).size == 10, dayDirs(dir).toString)
     // PRUNED-READ PLAN: a raw-ts range query plans a partition filter the
     // user never wrote, scanning only the window's directories
     val q = spark.sql(s"SELECT id FROM graft.day_ev " +
@@ -309,11 +238,15 @@ class TimePartitionedSpec extends SparkSpec {
     // INSERT INTO appends into day dirs; the full read sees both writes
     spark.sql(s"INSERT INTO graft.day_ev SELECT id + 1000, ts + ${20 * Day} FROM day_src")
     assert(spark.sql("SELECT count(*) AS n FROM graft.day_ev").head.getLong(0) == 800L)
-    // the marker survives INSERT OVERWRITE (which clears the directory)
+    // the marker survives INSERT OVERWRITE
     spark.sql("INSERT OVERWRITE graft.day_ev SELECT id, ts FROM day_src")
     assert(spark.sql("SELECT count(*) AS n FROM graft.day_ev").head.getLong(0) == 400L)
     assert(TimePartitioned.dayColumnOf(dir).contains("ts"),
-      "day marker must be re-asserted after overwrite")
+      "day marker must survive an overwrite")
+    // time travel stays refused on day tables
+    intercept[Exception] {
+      spark.sql("SELECT count(*) FROM graft.day_ev VERSION AS OF 0").collect()
+    }
     // restart shape: a cold process resolves the table from the persisted
     // marker alone (cache + pending schema dropped)
     TimePartitioned.invalidateDayColumn(dir)
@@ -321,17 +254,16 @@ class TimePartitionedSpec extends SparkSpec {
       s"WHERE ts BETWEEN ${d0 + Day} AND ${d0 + 2 * Day}").head.getLong(0) > 0)
     // non-CTAS create: declared schema serves the CREATE → first-INSERT
     // window, the persisted marker takes over after
-    graft.catalog.GraftCatalog.register("day_ev2",
-      java.nio.file.Files.createTempDirectory("graft_day_cat2").toString + "/t")
+    graft.catalog.GraftCatalog.register("day_ev2", tmpDir("graft_day_cat2"))
     spark.sql("CREATE TABLE graft.day_ev2 (id BIGINT, ts BIGINT) " +
       "PARTITIONED BY (days(ts))")
+    assert(spark.sql("SELECT count(*) AS n FROM graft.day_ev2").head.getLong(0) == 0L)
     spark.sql(s"INSERT INTO graft.day_ev2 SELECT id, ts FROM day_src")
     assert(spark.sql("SELECT count(*) AS n FROM graft.day_ev2").head.getLong(0) == 400L)
     spark.sql("DROP TABLE graft.day_ev2")
 
     // non-days transforms still refuse loudly
-    graft.catalog.GraftCatalog.register("day_bad",
-      java.nio.file.Files.createTempDirectory("graft_day_bad").toString + "/t")
+    graft.catalog.GraftCatalog.register("day_bad", tmpDir("graft_day_bad"))
     val e = intercept[Exception] {
       spark.sql("CREATE TABLE graft.day_bad (k BIGINT, ts BIGINT) PARTITIONED BY (k)")
     }

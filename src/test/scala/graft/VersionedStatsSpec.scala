@@ -183,10 +183,10 @@ class VersionedStatsSpec extends SparkSpec {
     VersionedStats.prunedFiles(spark, dir, range) // warm
     val ((kept, total), run) = Obs.measure(spark)(VersionedStats.prunedFiles(spark, dir, range))
     assert(total == 8L && kept.size == 1, s"kept ${kept.size}/$total")
-    // budget: the manifest's schema read, the file-set collect of the 1:1
-    // check, the kept-file collect — no fourth job to count what the
-    // file-set collect already holds
-    assert(run.jobs <= 3, s"prunedFiles ran ${run.jobs} Spark jobs (budget 3)")
+    // budget: ONE collect of (file, kept) — the manifest's schema comes
+    // from a driver footer read, and the file set that proves the 1:1
+    // check also carries the kept flag and the total
+    assert(run.jobs <= 1, s"prunedFiles ran ${run.jobs} Spark jobs (budget 1)")
   }
 
   test("a gated read reuses the gate's kept set: gate + read run the jobs of the gate alone") {

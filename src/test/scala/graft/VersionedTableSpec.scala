@@ -33,12 +33,9 @@ class VersionedTableSpec extends SparkSpec {
     import spark.implicits._
     val dir = dirOf()
     VersionedTable.commit(spark, Seq((1L, 10.0)).toDF("id", "v"), dir)
-    def files(v: Long) = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(f"$dir/v=$v%05d")).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    }
+    def files(v: Long) = VersionedTable.filesOf(dir, v)
+      .map(rel => new java.io.File(dir, rel))
+      .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
     val pinned = VersionedTable.read(spark, dir, Some(0L)) // lazy plan over v0
     val before = files(0L)
     VersionedTable.commit(spark, Seq((2L, 20.0)).toDF("id", "v"), dir)
@@ -52,17 +49,23 @@ class VersionedTableSpec extends SparkSpec {
     import spark.implicits._
     val dir = dirOf()
     (0 until 4).foreach(i => VersionedTable.commit(spark, Seq((i.toLong, i)).toDF("id", "v"), dir))
-    // forge an INVISIBLE orphan (crashed commit: data + _commit, no pointer flip)
-    val orphan = new java.io.File(s"$dir/v=00009")
-    Seq((99L, 99)).toDF("id", "v").write.parquet(orphan.getPath)
-    graft.tables.FsIO.writeText(s"${orphan.getPath}/_commit", "commitMs=1\n")
+    // forge the INVISIBLE residue of a crashed commit: a staged data file
+    // and an entry temp for version 9, never renamed into the log
+    val orphan = new java.io.File(s"$dir/data/c00009-deadbeef-part-00000.parquet")
+    Seq((99L, 99)).toDF("id", "v").coalesce(1).write.parquet(s"$dir/.stage-forged.__tmp")
+    java.nio.file.Files.move(new java.io.File(s"$dir/.stage-forged.__tmp").listFiles
+      .find(_.getName.endsWith(".parquet")).get.toPath, orphan.toPath)
+    graft.tables.FsIO.writeText(s"$dir/_log/00009-1.commit.tmp",
+      s"commitMs=1\nkind=manifest\nfile=data/${orphan.getName}\n")
     intercept[IllegalArgumentException] { VersionedTable.read(spark, dir, Some(9L)) }
-    // next commit never re-enters an attempted number
     val next = VersionedTable.commit(spark, Seq((5L, 5)).toDF("id", "v"), dir)
-    assert(next == 10L)
+    assert(next == 4L)
+    assert(VersionedTable.read(spark, dir).collect().map(_.getLong(0)).toSeq == Seq(5L),
+      "the orphan never becomes visible")
     val dropped = VersionedTable.vacuum(spark, dir, retainLast = 2, graceMs = 0L)
-    assert(dropped == Seq(0L, 1L, 2L, 9L), s"dropped $dropped") // 9 = the orphan
-    assert(VersionedTable.versions(spark, dir).map(_._1) == Seq(3L, 10L))
+    assert(dropped == Seq(0L, 1L, 2L), s"dropped $dropped")
+    assert(!orphan.exists, "vacuum must sweep the crashed commit's staged file")
+    assert(VersionedTable.versions(spark, dir).map(_._1) == Seq(3L, 4L))
     val e = intercept[IllegalArgumentException] { VersionedTable.read(spark, dir, Some(1L)) }
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
     assert(VersionedTable.read(spark, dir, Some(3L)).count() == 1L)
@@ -81,7 +84,8 @@ class VersionedTableSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] { VersionedTable.log(dir) }
     assert(e.getMessage.contains("not a log directory"), e.getMessage)
     intercept[IllegalArgumentException] { VersionedTable.vacuum(spark, dir, 1, graceMs = 0L) }
-    assert(new java.io.File(f"$dir/v=${0L}%05d").exists, "data must survive the refusal")
+    assert(new java.io.File(s"$dir/data").listFiles.exists(_.getName.endsWith(".parquet")),
+      "data must survive the refusal")
   }
 
   // ---- incremental (file-sharing) commits --------------------------------
@@ -111,25 +115,6 @@ class VersionedTableSpec extends SparkSpec {
       == Set(1L, 2L), "time travel to the pre-append version")
     assert(VersionedTable.read(spark, dir, Some(v1)).collect().map(_.getLong(0)).toSet
       == Set(1L, 2L, 3L))
-  }
-
-  test("commitAppend on top of a legacy snapshot references its files in place") {
-    import spark.implicits._
-    val dir = dirOf()
-    VersionedTable.commit(spark, Seq((1L, "a")).toDF("id", "s"), dir) // snapshot v0
-    val snapFiles = {
-      val vd = new java.io.File(f"$dir/v=${0L}%05d")
-      vd.listFiles.filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    }
-    val v1 = VersionedTable.commitAppend(spark, Seq((2L, "b")).toDF("id", "s"), dir)
-    // the snapshot's files never moved or re-wrote
-    snapFiles.foreach { case (p, sig) =>
-      val f = new java.io.File(p)
-      assert(f.exists && (f.length(), f.lastModified()) == sig, s"$p must be shared in place")
-    }
-    assert(VersionedTable.read(spark, dir, Some(v1)).collect().map(_.getLong(0)).toSet
-      == Set(1L, 2L))
   }
 
   test("commitUpdate rewrites ONLY files containing matching rows (copy-on-write)") {
@@ -185,17 +170,6 @@ class VersionedTableSpec extends SparkSpec {
       "retained version must be fully readable after vacuum")
     val e = intercept[IllegalArgumentException] { VersionedTable.read(spark, dir, Some(0L)) }
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
-  }
-
-  test("vacuum protects a legacy snapshot dir that a retained manifest references") {
-    import spark.implicits._
-    val dir = dirOf()
-    VersionedTable.commit(spark, Seq((1L, "a")).toDF("id", "s"), dir) // snapshot v0
-    VersionedTable.commitAppend(spark, Seq((2L, "b")).toDF("id", "s"), dir) // v1 shares v0's files
-    val dropped = VersionedTable.vacuum(spark, dir, retainLast = 1, graceMs = 0L)
-    assert(!dropped.contains(0L), s"v0's dir is still referenced by v1: $dropped")
-    assert(new java.io.File(f"$dir/v=${0L}%05d").exists, "referenced snapshot dir must survive")
-    assert(VersionedTable.read(spark, dir).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
   test("crashed incremental commit: orphan data files never become visible and vacuum sweeps them") {

@@ -40,11 +40,10 @@ object MockConditionalFs { val monitor = new Object }
   *    attestation — a store with conditional creates (modern S3) gets an
   *    EXACT lease instead of a refusal-or-lie choice; proven exactly-once
   *    under a 16-thread acquire race on a mock conditional-create FS.
-  *  - VERDICT-r17 #1/#5: `append`/`dropDaysBefore` serialize under the
-  *    maintenance lease (an append racing a live overwriteStaged lands
-  *    entirely in the post-swap table — never in a retired day), and
-  *    heal's live-writer skip is observable (returns false + logs the
-  *    holder) instead of indistinguishable from "no evidence". */
+  *  - day-table writers serialize on the versioned log's lease: an
+  *    append racing a live overwrite commits on top of it (never under
+  *    the replaced head), concurrent appends all land, and a retention
+  *    drop refuses to race a live maintenance writer. */
 class LockProtocolR18Spec extends SparkSpec {
 
   private def tmp() = Files.createTempDirectory("graft_lockr18").toString
@@ -171,34 +170,6 @@ class LockProtocolR18Spec extends SparkSpec {
     FsIO.releaseWriteLock(FsIO.acquireWriteLock(dir, "short-contender", staleMs = 100))
   }
 
-  test("append publish blocked post-intent: AppendPending, then roll-forward, no dup") {
-    val dir = tmp() + "/t"
-    seedDays(dir, 2)
-    val fs  = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // plant a FILE where the batch's day DIRECTORY must go — the publish
-    // renames then fail after the intent is durable
-    val newDayName = "p_day=" + java.time.LocalDate.ofEpochDay(
-      (Day1 + 30 * DayNs) / 1000000000L / 86400L).toString
-    FsIO.writeText(new Path(dir, newDayName).toString, "not a directory")
-    val batch = spark.range(0, 1)
-      .select(lit(Day1 + 30 * DayNs).as("ts"), lit(555L).as("v"))
-    val e = intercept[TimePartitioned.AppendPending] {
-      TimePartitioned.append(batch, dir, "ts", filesPerDay = 1,
-        leaseMs = 60000, maxWaitMs = 5000)
-    }
-    assert(e.getMessage.contains("do NOT resubmit"))
-    // deferred success: the intent-carrying stage survived
-    val sroot  = TimePartitioned.appendStageRoot(dir)
-    val stages = fs.listStatus(sroot).toSeq.filter(_.isDirectory).map(_.getPath)
-    assert(stages.size == 1, "the committed stage must survive an AppendPending")
-    assert(fs.exists(new Path(stages.head, "_publish_intent")))
-    // unblock and let the next maintenance touch roll it forward
-    fs.delete(new Path(dir, newDayName), false)
-    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000))
-    assert(vSet(dir) == Set(0L, 1L, 555L), "the committed batch must land exactly-once")
-    assert(!fs.exists(sroot) || fs.listStatus(sroot).isEmpty)
-  }
-
   // ------------------------------------------- conditional-put attestation
 
   test("conditionalPut attestation: refused without it, exactly-once with it") {
@@ -237,67 +208,51 @@ class LockProtocolR18Spec extends SparkSpec {
     assert(busy.get == 15, s"expected 15 LockBusy losers, got ${busy.get}")
   }
 
-  // -------------------------------------- day-table mutator serialization
+  // ------------------------------- day-table writers on the versioned log
 
   private def seedDays(dir: String, nDays: Int): Unit =
     TimePartitioned.write(
       spark.range(0L, nDays.toLong).select(
         (lit(Day1) + col("id") * lit(DayNs)).as("ts"), col("id").as("v")),
-      dir, "ts", filesPerDay = 1)
+      dir, "ts")
 
   private def vSet(dir: String): Set[Long] =
-    spark.read.parquet(dir).select("v").collect().map(_.getLong(0)).toSet
+    VersionedTable.read(spark, dir).select("v").collect().map(_.getLong(0)).toSet
+
+  private def appendRow(dir: String, v: Long): Long =
+    VersionedTable.commitAppend(spark,
+      spark.range(0, 1).select(lit(Day1).as("ts"), lit(v).as("v")), dir)
 
   test("append racing a live staged overwrite lands entirely in the post-swap table") {
     val dir = tmp() + "/t"
     seedDays(dir, 6)
-    val fs    = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(dir, "_overwrite_stage")
-    // ~2.9 s single-partition stage write — the live-writer window
+    val lock = new Path(dir + ".__write_lock")
+    val fs   = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // ~2.9 s single-partition stage write, held under the table lease —
+    // the live-writer window
     val slow = udf((x: Long) => { Thread.sleep(120L); x })
     val next = spark.range(0, 24, 1, numPartitions = 1)
       .select((lit(Day1 + DayNs) + col("id")).as("ts"), slow(col("id") + 100L).as("v"))
     val writerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val writer = new Thread(() => {
-      try TimePartitioned.overwriteStaged(next, dir, "ts", filesPerDay = 1, leaseMs = 60000)
+      try TimePartitioned.write(next, dir, "ts")
       catch { case t: Throwable => writerErr.set(t) }
     })
     writer.start()
     val deadline = System.currentTimeMillis() + 30000
-    while (!fs.exists(stage) && writerErr.get() == null &&
+    while (!fs.exists(lock) && writerErr.get() == null &&
         System.currentTimeMillis() < deadline) Thread.onSpinWait()
-    assert(fs.exists(stage), s"overwrite never staged: ${writerErr.get()}")
-    // mid-stage append: the old (pre-r18) path would heal-no-op on
-    // LockBusy and land this row in a root p_day dir the live writer's
-    // intent then retires to trash — silent row loss. Now it RETRIES the
-    // lease and lands strictly after the swap.
-    TimePartitioned.append(
-      spark.range(0, 1).select(lit(Day1).as("ts"), lit(999L).as("v")),
-      dir, "ts", filesPerDay = 1, leaseMs = 60000, maxWaitMs = 60000)
+    assert(fs.exists(lock), s"overwrite never took the lease: ${writerErr.get()}")
+    // mid-stage append: it stages lock-free, then its publish waits out
+    // the overwrite's lease and commits on top of the NEW version — an
+    // append published under the old head would have been replaced
+    val av = appendRow(dir, 999L)
     writer.join(60000)
     assert(writerErr.get() == null, s"overwrite failed: ${writerErr.get()}")
+    assert(av == 2L, s"the append must commit after the overwrite (v1), got v$av")
     // every overwrite row AND the appended row survive — nothing retired
     assert(vSet(dir) == (100L until 124L).toSet + 999L,
       "append raced the overwrite into row loss")
-  }
-
-  test("append fails loudly (LockBusy) when a live writer outlasts maxWaitMs") {
-    val dir = tmp() + "/t"
-    seedDays(dir, 2)
-    val fs    = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rival = FsIO.acquireWriteLock(dir, "live-maintenance", staleMs = 60000)
-    try intercept[FsIO.LockBusy] {
-      TimePartitioned.append(
-        spark.range(0, 1).select(lit(Day1).as("ts"), lit(7L).as("v")),
-        dir, "ts", filesPerDay = 1, leaseMs = 60000, maxWaitMs = 400)
-    } finally FsIO.releaseWriteLock(rival)
-    assert(vSet(dir) == Set(0L, 1L), "a refused append must write nothing")
-    // and it must withdraw its own stage — nothing for a sweeper to find
-    val sroot = TimePartitioned.appendStageRoot(dir)
-    val stages =
-      if (!fs.exists(sroot)) Seq.empty
-      else fs.listStatus(sroot).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-    assert(stages.isEmpty, s"a refused append must withdraw its stage: $stages")
   }
 
   test("concurrent appends stage in parallel and all land exactly-once") {
@@ -308,111 +263,18 @@ class LockProtocolR18Spec extends SparkSpec {
     val threads = (0 until 4).map { i =>
       new Thread(() => {
         gate.await()
-        try TimePartitioned.append(
-          spark.range(0, 1).select(lit(Day1).as("ts"), lit(1000L + i).as("v")),
-          dir, "ts", filesPerDay = 1, leaseMs = 60000, maxWaitMs = 60000)
+        try appendRow(dir, 1000L + i)
         catch { case t: Throwable => errs.add(t); () }
       })
     }
     threads.foreach(_.start()); gate.countDown(); threads.foreach(_.join(120000))
     assert(errs.isEmpty, s"concurrent appends failed: ${errs.peek()}")
-    val got = spark.read.parquet(dir).select("v").collect().map(_.getLong(0)).toSeq
+    val got = VersionedTable.read(spark, dir).select("v").collect().map(_.getLong(0)).toSeq
     assert(got.sorted == (Seq(0L, 1L) ++ (0 until 4).map(1000L + _)).sorted,
       s"concurrent appends lost or duplicated rows: $got")
-    val sroot = TimePartitioned.appendStageRoot(dir)
-    val fs    = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(sroot) || fs.listStatus(sroot).isEmpty,
-      "published appends must leave no stage behind")
-  }
-
-  test("crashed append stages: no intent sweeps, intent rolls forward, live survives") {
-    val dir = tmp() + "/t"
-    seedDays(dir, 2)
-    val fs    = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sroot = TimePartitioned.appendStageRoot(dir)
-    def stageBatch(name: String, v: Long): Path = {
-      val s = new Path(sroot, name)
-      TimePartitioned.write(
-        spark.range(0, 1).select(lit(Day1).as("ts"), lit(v).as("v")),
-        s.toString, "ts", filesPerDay = 1)
-      s
-    }
-    // (a) crashed pre-intent (no stage lock, no intent): swept, rows never land
-    val dead = stageBatch("dead-preintent", 777L)
-    // (b) crashed post-intent: rolled forward, rows land exactly-once
-    val fwd = stageBatch("dead-postintent", 888L)
-    FsIO.writeText(new Path(fwd, "_publish_intent").toString, "")
-    // (c) LIVE stage (fresh lease): untouched by heal and by maintenance
-    val live = stageBatch("live-staging", 666L)
-    FsIO.writeText(live.toString + ".__write_lock",
-      s"owner=someone\nts=${System.currentTimeMillis()}\nlabel=append.stage\n")
-    // (d) stage whose holder DECLARED a long lease: its ts is stale by
-    // the sweeper's bar but inside the declared tolerance — must survive
-    val longLease = stageBatch("live-long-lease", 444L)
-    FsIO.writeText(longLease.toString + ".__write_lock",
-      s"owner=someone\nts=${System.currentTimeMillis() - 120000}\n" +
-        "label=append.stage\nlease=3600000\n")
-    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000),
-      "an uncontended heal over crashed stages must run")
-    assert(!fs.exists(dead), "a pre-intent crashed stage must be swept")
-    assert(!fs.exists(fwd), "a post-intent crashed stage must be consumed by roll-forward")
-    assert(fs.exists(live), "a live stage must survive the heal")
-    assert(fs.exists(longLease),
-      "a declared-long-lease stage must survive a short-lease sweeper")
-    assert(vSet(dir) == Set(0L, 1L, 888L),
-      "exactly the intent-carrying batch must land")
-    // retention under the table lease also leaves the live stage alone
-    TimePartitioned.dropDaysBefore(spark, dir, Day1)
-    assert(fs.exists(live), "a live stage must survive maintenance")
-    // once its lease goes stale, the next touch sweeps it
-    FsIO.writeText(live.toString + ".__write_lock",
-      "owner=someone\nts=1\nlabel=append.stage\n")
-    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000))
-    assert(!fs.exists(live), "a stale stage must be swept once its lease expires")
-    assert(vSet(dir) == Set(0L, 1L, 888L))
-  }
-
-  test("a crashed appender's stage-lease renewal temps are swept with its stage") {
-    // an appender SIGKILLed mid-renewal of its stage lease leaves a
-    // `<stage>.__write_lock.renew.<owner>` temp next to the stage; the
-    // sweep must take it with the stage, or the stage root never empties
-    val dir = tmp() + "/t"
-    seedDays(dir, 2)
-    val fs    = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sroot = TimePartitioned.appendStageRoot(dir)
-    def stageBatch(name: String, v: Long): Path = {
-      val s = new Path(sroot, name)
-      TimePartitioned.write(
-        spark.range(0, 1).select(lit(Day1).as("ts"), lit(v).as("v")),
-        s.toString, "ts", filesPerDay = 1)
-      s
-    }
-    def names(): Set[String] =
-      if (!fs.exists(sroot)) Set.empty else fs.listStatus(sroot).map(_.getPath.getName).toSet
-    // (a) crashed post-intent, stale stage lease, in-flight renewal temp
-    val fwd = stageBatch("dead-postintent", 888L)
-    FsIO.writeText(new Path(fwd, "_publish_intent").toString, "")
-    FsIO.writeText(fwd.toString + ".__write_lock", "owner=dead\nts=1\nlabel=append.stage\n")
-    FsIO.writeText(fwd.toString + ".__write_lock.renew.deadbeef",
-      "owner=dead\nts=2\nlabel=append.stage\n")
-    // (b) a renewal temp whose stage and lock are already gone
-    FsIO.writeText(new Path(sroot, "gone.__write_lock.renew.cafebabe").toString,
-      "owner=gone\nts=1\nlabel=append.stage\n")
-    // (c) a LIVE stage mid-renewal: its temp belongs to a live holder
-    val live = stageBatch("live-staging", 666L)
-    FsIO.writeText(live.toString + ".__write_lock",
-      s"owner=someone\nts=${System.currentTimeMillis()}\nlabel=append.stage\n")
-    FsIO.writeText(live.toString + ".__write_lock.renew.someone0",
-      s"owner=someone\nts=${System.currentTimeMillis()}\nlabel=append.stage\n")
-    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000))
-    assert(vSet(dir) == Set(0L, 1L, 888L), "exactly the intent-carrying batch must land")
-    assert(names() == Set("live-staging", "live-staging.__write_lock",
-      "live-staging.__write_lock.renew.someone0"),
-      s"crashed stages must leave nothing behind; a live one must survive: ${names()}")
-    // once the live holder is gone for good, the next touch empties the root
-    FsIO.writeText(live.toString + ".__write_lock", "owner=someone\nts=1\nlabel=append.stage\n")
-    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000))
-    assert(names().isEmpty, s"stage root must empty: ${names()}")
+    assert(VersionedTable.latestVersion(dir).contains(4L), "one commit per append")
+    // every published file sits in its day directory
+    assert(VersionedTable.filesOf(dir, 4L).forall(_.startsWith("data/p_day=")))
   }
 
   test("dropDaysBefore refuses to race a live maintenance writer") {
@@ -427,31 +289,5 @@ class LockProtocolR18Spec extends SparkSpec {
     val dropped = TimePartitioned.dropDaysBefore(spark, dir, Day1 + 2 * DayNs)
     assert(dropped.size == 2)
     assert(vSet(dir) == Set(2L, 3L))
-  }
-
-  test("heal's live-writer skip is observable: returns false and logs the holder") {
-    val dir = tmp() + "/t"
-    seedDays(dir, 2)
-    val fs      = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending = new Path(dir, "_maint_pending")
-    FsIO.writeText(pending.toString, "") // compaction-crash evidence
-    val rival  = FsIO.acquireWriteLock(dir, "live-compaction", staleMs = 60000)
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val prev   = System.err
-    val healed =
-      try {
-        System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
-        TimePartitioned.heal(spark, dir, leaseMs = 60000)
-      } finally System.setErr(prev)
-    assert(!healed, "heal must report the live-writer skip")
-    val logged = new String(errBuf.toByteArray, "UTF-8")
-    assert(logged.contains("skipping recovery") && logged.contains("live-compaction"),
-      s"skip log must name the holder; got: $logged")
-    assert(fs.exists(pending), "a skipped heal must touch nothing")
-    FsIO.releaseWriteLock(rival)
-    assert(TimePartitioned.heal(spark, dir, leaseMs = 60000),
-      "an uncontended heal over evidence must run and report clean")
-    assert(!fs.exists(pending))
-    assert(vSet(dir) == Set(0L, 1L))
   }
 }
