@@ -2530,7 +2530,12 @@ object VersionedTable {
     * O(matching files), not O(table)). The row set is unchanged either
     * way, so the commit stays `dataChange=false`. A predicate matching no
     * file is a no-op: the CURRENT version number returns and no commit is
-    * published. */
+    * published.
+    *
+    * On a day-partitioned table the staging's (day, spread) shuffle is the
+    * layout: the rows go to it unshuffled, each rewritten day gets at most
+    * [[TimePartitioned.FilesPerDay]] files whatever `targetFiles` says, and
+    * `clusterBy`/`zOrderCols` are refused (that shuffle would undo them). */
   def commitCompact(spark: SparkSession, dir: String, targetFiles: Int,
       clusterBy: Seq[String] = Seq.empty,
       where: Option[org.apache.spark.sql.Column] = None,
@@ -2538,6 +2543,10 @@ object VersionedTable {
     require(targetFiles >= 1, s"commitCompact: targetFiles must be >= 1, got $targetFiles")
     require(clusterBy.isEmpty || zOrderCols.isEmpty,
       "commitCompact: clusterBy and zOrderCols are mutually exclusive layouts")
+    val dayTable = TimePartitioned.dayColumnCached(dir).isDefined
+    require(!dayTable || (clusterBy.isEmpty && zOrderCols.isEmpty),
+      s"commitCompact: $dir is day-partitioned; its layout is the day staging's, " +
+        "so clusterBy/zOrderCols are not supported on it")
     FsIO.withWriteLock(dir, "VersionedTable.commitCompact", TableManager.DefaultLockLeaseMs) {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
@@ -2564,10 +2573,11 @@ object VersionedTable {
         // (merge-on-read's compaction discipline)
         val full = scanEntries(spark, dir, scoped, declared)
         val laid =
+          if (dayTable) full // stageDataFiles lays it out by day
           // OPTIMIZE ZORDER BY: each rewritten file covers a narrow range
           // of EVERY listed column, so per-file stats prune selective
           // filters on any of them
-          if (zOrderCols.nonEmpty)
+          else if (zOrderCols.nonEmpty)
             TableManager.zLayoutN(full, zOrderCols, targetFiles,
               "VersionedTable.commitCompact")
           else if (clusterBy.isEmpty) full.repartition(targetFiles)

@@ -15,27 +15,8 @@ class OccCrossJvmSpec extends SparkSpec {
 
   private val PerChild = 12
 
-  private def spawn(dir: String, id: String, log: java.io.File): Process = {
-    val javaBin = java.nio.file.Paths.get(
-      sys.props("java.home"), "bin", "java").toString
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-Duser.language=en", "-Duser.country=US",
-      "-cp", sys.props("java.class.path"),
-      "graft.OccStressChild", dir, id, PerChild.toString)
-    new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(log).start() // file sink: a full pipe can't stall a child
-  }
+  private def spawn(dir: String, id: String, log: java.io.File): Process =
+    ChildJvm.spawn("2g", "graft.OccStressChild", Seq(dir, id, PerChild.toString), log)
 
   test("two JVMs racing appends + delete + vacuum: no lost commit, serialized versions") {
     val root = Files.createTempDirectory("graft_occ").toString

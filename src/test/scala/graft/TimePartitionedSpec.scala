@@ -146,6 +146,39 @@ class TimePartitionedSpec extends SparkSpec {
       "recovery preserves every row")
   }
 
+  test("compactDaysBefore stages through exactly one shuffle: the day layout's") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val d0 = 19724L * Day
+    val dir = tmpDir("graft_tp_cmp_plan")
+    def rows(wave: Long) =
+      (0L until 400L).map(i => (wave * 1000L + i, d0 + (i / 100L) * Day + i)).toDF("id", "ts")
+    TimePartitioned.write(rows(0), dir, "ts")
+    (1L to TimePartitioned.FilesPerDay.toLong).foreach(w =>
+      VersionedTable.commitAppend(spark, rows(w), dir))
+    // the shuffle count of every write command's optimized plan
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.optimizedPlan.exists(_.isInstanceOf[DataWritingCommand]))
+          writes.add(qe.optimizedPlan.collect { case r: RepartitionOperation if r.shuffle => r }.size)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(TimePartitioned.compactDaysBefore(spark, dir, d0 + 3 * Day).size == 3)
+      org.apache.spark.graft.ContextShim.drainListenerBus(spark.sparkContext, 60000L)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.toArray.toSeq == Seq(1), s"shuffles per staging write: $writes")
+    // a layout the day staging would shuffle away is refused, not dropped
+    val e = intercept[IllegalArgumentException](
+      VersionedTable.commitCompact(spark, dir, 4, clusterBy = Seq("id")))
+    assert(e.getMessage.contains("day-partitioned"), e.getMessage)
+  }
+
   test("day-table INSERT OVERWRITE is staged: _props never deleted, crash leftovers recover") {
     import spark.implicits._
     val d0 = 19724L * Day

@@ -13,8 +13,9 @@ import scala.jdk.CollectionConverters._
   * or just after the rename of a `<v>-<ms>.commit.tmp` log entry onto its
   * `.commit` name, the versioned log's commit point. `graft.test.haltAt`
   * (`before` | `after`) in the Hadoop conf arms it. Keeps the `file`
-  * scheme, so the write lease stays exact. */
-class HaltingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  * scheme, so the write lease stays exact, and extends the engine's own
+  * `file` file system, so the child runs production's file primitives. */
+class HaltingLocalFs extends graft.tables.ForkFreeLocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean = {
     val at = if (src.getName.endsWith(".commit.tmp")) getConf.get("graft.test.haltAt", "") else ""
     if (at == "before") Runtime.getRuntime.halt(HaltingLocalFs.ExitCode)
@@ -79,26 +80,8 @@ class VersionedLogCrashSpec extends SparkSpec {
   private val newRows = (0L until NewRows.toLong).map(_ + NewTag).toSet
   private val Marker  = 999999L
 
-  private def spawn(dir: String, mode: String, haltAt: String, log: java.io.File): Process = {
-    val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-Duser.language=en", "-Duser.country=US",
-      "-cp", sys.props("java.class.path"),
-      "graft.LogCrashChild", dir, mode, haltAt)
-    new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(log).start() // file sink: a full pipe can't stall a child
-  }
+  private def spawn(dir: String, mode: String, haltAt: String, log: java.io.File): Process =
+    ChildJvm.spawn("1g", "graft.LogCrashChild", Seq(dir, mode, haltAt), log)
 
   private def vals(dir: String): Seq[Long] =
     VersionedTable.read(spark, dir).select("v").collect().map(_.getLong(0)).toSeq
