@@ -1531,30 +1531,30 @@ object SparkEntry {
     // -- the reference notebooks END-TO-END as ONE query -------------------
     // The full `01. Ingest.py:33-189` + `03. Inference.py:73-115` chain:
     // binaryFile glob scan → label regex + size decode → dict label index →
-    // grouped-map grayscale kernel → left-outer re-attach → overwrite into
-    // a path table → OPTIMIZE compaction → micro-batch stream inference
-    // over the compacted table. Two in-query gates keep the un-oracle-able
-    // layers loud (grayscale payloads re-attached for every image; stream
-    // inference == batch inference row-for-row); the EMITTED columns are
-    // the metadata the DuckDB oracle re-derives from the fixture
-    // generator's arithmetic — width/height and the alphabetical dense
-    // label index are pure functions of (class, i), so the oracle needs no
-    // image decoding, just the same integer formulas.
+    // grouped-map grayscale kernel → left-outer re-attach → commit into a
+    // versioned table → OPTIMIZE (`commitCompact`) → stream inference over
+    // the table through `readStream.format("graft")`, whose initial
+    // snapshot is the compacted version. Two in-query gates keep the
+    // un-oracle-able layers loud (grayscale payloads re-attached for every
+    // image; stream inference == batch inference row-for-row); the EMITTED
+    // columns are the metadata the DuckDB oracle re-derives from the
+    // fixture generator's arithmetic — width/height and the alphabetical
+    // dense label index are pure functions of (class, i), so the oracle
+    // needs no image decoding, just the same integer formulas.
     "q_reference_e2e" -> ((s, _) => {
       val src  = ImageFixtures.shared()
       val work = scratchDir("graft_ref_e2e")
       val ingested = ImagePipeline.ingest(s, src, s"$work/stage")
       val tableDir = s"$work/table"
-      ingested.write.mode("overwrite").parquet(tableDir)
-      TableManager.compact(s, tableDir, targetFiles = 2)
-      val table = s.read.parquet(tableDir)
+      VersionedTable.commit(s, ingested, tableDir)
+      VersionedTable.commitCompact(s, tableDir, targetFiles = 2)
+      val table = VersionedTable.read(s, tableDir)
       val model = new graft.image.LinearScoringModel(ImageFixtures.Classes)
       // localCheckpoint both sides: the gate below runs three actions, and
       // uncached plans would re-run the model inference for each
-      val streamed = StreamingInference.streamTransform(
-        s, tableDir, table.schema,
-        df => ImagePipeline.batchInference(df, model),
-        s"$work/sink", s"$work/ckpt", maxFilesPerTrigger = 1)
+      val streamed = StreamingInference.runToCompletion(
+        ImagePipeline.batchInference(s.readStream.format("graft").load(tableDir), model),
+        s"$work/sink", s"$work/ckpt")
         .localCheckpoint(true)
       val batch = ImagePipeline.batchInference(table, model).localCheckpoint(true)
       // MULTISET equality (exceptAll both ways): a count+set check would
@@ -1577,8 +1577,8 @@ object SparkEntry {
     // The arrival-order near-dedup shape: each micro-batch LSH-probes the
     // MinHash signatures of all PRIOR survivors (payloads never shuffle;
     // the probe reads (id, sig) only), survivors persist WITH their
-    // signatures to the combined sink under batch_id dynamic-partition
-    // overwrite (replay-idempotent; one write per trigger — r19 layout).
+    // signatures to the sink table as one txn-marked append per trigger
+    // (replay-idempotent; the sink is the index).
     // Run-to-completion on fixture documents split
     // into deterministic micro-batches. Rows-only by contract: the result
     // depends on arrival order (a batch semantics no SQL oracle replays);
@@ -1804,8 +1804,8 @@ object SparkEntry {
     // The split is batch-deterministic (map-side rules), so unlike the
     // arrival-order near-dedup the STREAMING machinery's output equals a
     // plain filter — the oracle replays rules + violations string in SQL
-    // while the engine side routes through foreachBatch dual sinks with
-    // batch_id overwrite idempotence. Quarantine side declared (it carries
+    // while the engine side routes through foreachBatch dual sinks, one
+    // txn-marked versioned append each. Quarantine side declared (it carries
     // the violations annotation; the valid side is its complement).
     "q_stream_validate_route" -> ((s, d) => {
       val work   = scratchDir("graft_svr")

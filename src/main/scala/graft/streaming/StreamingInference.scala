@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.tables.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -33,6 +33,34 @@ object StreamingInference {
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
+
+  /** Run `perBatch` on every micro-batch of the rate-limited file stream
+    * over `srcDir` until the currently available input is consumed
+    * (Trigger.AvailableNow); `checkpointDir` is the stream's restart
+    * token. The foreachBatch sinks commit each batch through it. */
+  private[streaming] def foreachBatchToCompletion(
+      spark: SparkSession,
+      srcDir: String,
+      schema: StructType,
+      maxFilesPerTrigger: Int,
+      checkpointDir: String)(perBatch: (DataFrame, Long) => Unit): Unit =
+    readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(perBatch)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** A sink table's head; while the sink has no committed version (an
+    * empty source runs zero batches) an empty frame of its known `schema`
+    * — a local relation, so a probe against it optimizes away. A sink whose
+    * batches were all empty still holds a version: the staging write of an
+    * empty frame leaves one schema-bearing file. */
+  private def readSink(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    if (VersionedTable.latestVersion(dir).isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    else VersionedTable.read(spark, dir)
 
   /** S9: append sink + checkpoint, run to completion over the currently
     * available input (Trigger.AvailableNow honors the per-trigger rate
@@ -104,17 +132,11 @@ object StreamingInference {
       maxFilesPerTrigger: Int = 1): DataFrame = {
     // stable across restarts: the checkpoint IS the stream's identity
     val appId = s"graft.upsert:$checkpointDir"
-    val q = readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) {
+      (batch, batchId) =>
         VersionedTable.commitMerge(spark, targetDir, reduceBatch(batch), keyCols,
           txn = Some((appId, batchId)))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     VersionedTable.read(spark, targetDir)
   }
 
@@ -125,28 +147,25 @@ object StreamingInference {
     * pass (history text is never re-read; the probe reads 8·numHashes + 32
     * bytes per accepted doc).
     *
-    * COMBINED-SINK LAYOUT (r19): the sink IS the index. Each batch_id
-    * partition holds the batch's survivors with their (`sig`, `seth`)
-    * columns attached ([[graft.operators.Dedup.withMinHashSigs]], one
-    * kernel pass per doc); the next batch's probe reads only (id, sig,
-    * seth) — parquet column pruning leaves the payload bytes cold. One
-    * write per trigger where the previous layout paid two (sink + separate
-    * index, with the index's signatures recomputed from survivor text),
-    * and the per-trigger read plans with an explicit schema — no
-    * footer-inference pass per micro-batch.
+    * The sink IS the index: a [[graft.tables.VersionedTable]] whose rows are
+    * the survivors with their (`sig`, `seth`) columns attached
+    * ([[graft.operators.Dedup.withMinHashSigs]], one kernel pass per doc).
+    * The next batch's probe reads the head projected to (id, sig, seth), so
+    * parquet column pruning leaves the payload bytes cold. One write per
+    * trigger.
     *
-    * Exactly-once without a table swap: the sink partitions by `batch_id`
-    * under DYNAMIC partition overwrite, so a crashed-and-replayed batch
-    * rewrites exactly its own partition instead of appending duplicates —
-    * the idempotence device for foreachBatch appends (the checkpoint
-    * replays uncommitted batch ids only).
+    * Exactly-once: each micro-batch is ONE [[graft.tables.VersionedTable.commitAppend]]
+    * carrying the txn marker (`graft.near_dedup:<checkpointDir>`, batchId),
+    * the [[streamUpsert]] idiom. A batch whose commit landed but whose
+    * checkpoint did not replays as a no-op: the append returns before any
+    * staging action, so its survivor frame is never evaluated. A batch whose
+    * commit did not land probes a head without its own rows.
     *
     * 100 TB notes: per batch the work is ONE bands join of the batch
     * against (history ∪ lower-id batch siblings) — payloads never shuffle
-    * and the probe side carries (id, sig) only. A long-lived deployment
-    * should periodically compact the sink's batch_id partitions
-    * (TableManager.compactBatchIndex); the per-batch plan is unchanged by
-    * that maintenance. */
+    * and the probe side carries (id, sig) only. The head grows by one file
+    * set per trigger; a `commitCompact` (dataChange=false) re-lays it
+    * without changing the per-batch plan. */
   def streamNearDedup(
       spark: SparkSession,
       srcDir: String,
@@ -161,81 +180,37 @@ object StreamingInference {
       minEstJaccard: Double = 0.8,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.operators.Dedup
-    import org.apache.spark.sql.types.{ArrayType, StructField}
-    // the sink schema is KNOWN (input schema + sig/seth + the batch_id
-    // partition column): every per-trigger read and the final read plan
-    // against it explicitly instead of paying schema inference per batch
-    val sinkSchema = StructType(schema.fields ++ Seq(
-      StructField("sig", ArrayType(LongType)),
-      StructField("seth", StringType),
-      StructField("batch_id", LongType)))
-    val q = readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // path.getFileSystem, NOT FileSystem.get(default): an outDir on
-        // a non-default scheme (s3a:// under an hdfs:// default) would
-        // throw Wrong FS on every micro-batch (readSink's documented rule)
-        val outPath = new org.apache.hadoop.fs.Path(outDir)
-        val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val index =
-          if (fs.exists(outPath))
-            // Exclude THIS batch id's partition: a replayed batch (crash
-            // after a partial sink write, before the checkpoint commit)
-            // would otherwise probe its own signatures, match every doc
-            // against itself at Jaccard 1.0, and dynamically overwrite the
-            // sink partition with an emptied survivor set. `=!=` rather
-            // than `<`: under the documented checkpoint+sink PAIRING
-            // contract later partitions don't exist, and if an operator
-            // re-points a fresh checkpoint at a retained sink (batch ids
-            // restart, a contract violation), `<` would silently probe
-            // NOTHING while `=!=` still dedups against all other history.
-            // Null-sig rows (null-text survivors) cannot near-dup and are
-            // not part of the signature index.
-            spark.read.schema(sinkSchema).parquet(outDir)
-              .where(col("batch_id") =!= batchId && col("sig").isNotNull)
-              .select(col(idCol).as("id"), col("sig"), col("seth"))
-          else // empty index with the right (id, sig, seth) shape
-            Dedup.minHashIndex(batch.limit(0), textCol, idCol, shingleN, numHashes)
+    val appId = s"graft.near_dedup:$checkpointDir"
+    foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) {
+      (batch, batchId) =>
         // one signature-kernel pass attaches (sig, seth) to the payload;
         // the drop set, the anti join and the sink write all resolve in
-        // the single write action below while the persist is live
+        // the single staging write below while the persist is live
         val wide = Dedup.withMinHashSigs(batch, textCol, idCol, shingleN, numHashes)
+        // null-sig rows (null-text survivors) cannot near-dup and are not
+        // part of the signature index
+        def sigs(df: DataFrame) = df.where(col("sig").isNotNull)
+          .select(col(idCol).as("id"), col("sig"), col("seth"))
         wide.persist()
         try {
-          val batchSigs = wide.where(col("sig").isNotNull)
-            .select(col(idCol).as("id"), col("sig"), col("seth"))
-          val drops = Dedup.nearDedupDropSet(batchSigs, index, numHashes,
-            bands, minEstJaccard).withColumnRenamed("id", idCol)
-          wide.join(drops, Seq(idCol), "left_anti")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
+          val drops = Dedup.nearDedupDropSet(sigs(wide), sigs(readSink(spark, outDir, wide.schema)),
+            numHashes, bands, minEstJaccard).withColumnRenamed("id", idCol)
+          VersionedTable.commitAppend(spark, wide.join(drops, Seq(idCol), "left_anti"),
+            outDir, txn = Some((appId, batchId)))
         } finally wide.unpersist(false)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // an EMPTY SOURCE runs zero batches and never creates outDir — return
-    // an empty frame of the known schema rather than PATH_NOT_FOUND (the
-    // runToCompletion/streamValidateRoute discipline)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    if (!outPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(outPath))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(sinkSchema).parquet(outDir).drop("batch_id", "sig", "seth")
+    }
+    readSink(spark, outDir, schema).drop("sig", "seth")
   }
 
   /** Streaming perceptual-hash image dedup — [[streamNearDedup]]'s
     * multimodal sibling: each micro-batch dHashes its images, drops rows
-    * within `maxHamming` of the persisted hash index (all PRIOR survivors;
+    * within `maxHamming` of the sink head's hashes (all PRIOR survivors;
     * 8 bytes per image, payloads never re-read) or of a lower-id batch
-    * sibling, then persists survivors WITH their `phash` column to the
-    * combined sink under the same batch_id dynamic-partition-overwrite
-    * replay contract (the probe excludes the CURRENT batch id, so a
-    * crash-replayed batch never matches itself). One write per trigger
-    * (the sink doubles as the hash index — column pruning keeps the probe
-    * from touching image bytes), explicit schema on every read. */
+    * sibling, then commits the survivors WITH their `phash` column as one
+    * txn-marked append (`graft.image_dedup:<checkpointDir>`, batchId) —
+    * the same replay contract. One write per trigger: the sink doubles as
+    * the hash index, and column pruning keeps the probe from touching
+    * image bytes. */
   def streamImageDedup(
       spark: SparkSession,
       srcDir: String,
@@ -248,51 +223,31 @@ object StreamingInference {
       bands: Int = 8,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.image.Perceptual
-    import org.apache.spark.sql.types.StructField
-    val sinkSchema = StructType(
-      StructField("phash", LongType) +: schema.fields :+ StructField("batch_id", LongType))
-    val q = readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // path.getFileSystem, not the default FS (see streamNearDedup)
-        val outPath = new org.apache.hadoop.fs.Path(outDir)
-        val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val index =
-          if (fs.exists(outPath))
-            spark.read.schema(sinkSchema).parquet(outDir)
-              .where(col("batch_id") =!= batchId)
-              .select(col(idCol), col("phash"))
-          else batch.limit(0).select(col(idCol), lit(0L).as("phash"))
+    val appId = s"graft.image_dedup:$checkpointDir"
+    val sinkSchema = StructType(StructField("phash", LongType) +: schema.fields)
+    foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) {
+      (batch, batchId) =>
+        val index = readSink(spark, outDir, sinkSchema).select(col(idCol), col("phash"))
         // single consumer: the survivor frame (id, phash, payload…) goes
-        // straight to the one combined write — no checkpoint, no second
-        // sink, no re-hash (dedupAgainstIndex checkpoints the decoded
-        // hashes internally, so images decode once per batch)
-        Perceptual.dedupAgainstIndex(batch, bytesCol, idCol, index, maxHamming, bands)
-          .select(col("phash") +: batch.columns.map(c => col(s"`$c`")): _*)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // empty-source fallback, like streamNearDedup
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    if (!outPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(outPath))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(sinkSchema).parquet(outDir).drop("batch_id", "phash")
+        // straight to the one append — no checkpoint, no second sink, no
+        // re-hash (dedupAgainstIndex checkpoints the decoded hashes
+        // internally, so images decode once per batch)
+        VersionedTable.commitAppend(spark,
+          Perceptual.dedupAgainstIndex(batch, bytesCol, idCol, index, maxHamming, bands)
+            .select(col("phash") +: batch.columns.map(c => col(s"`$c`")): _*),
+          outDir, txn = Some((appId, batchId)))
+    }
+    readSink(spark, outDir, sinkSchema).drop("phash")
   }
 
   /** Continuous data-quality routing — `Relational.validateRules` in a
     * stream: each micro-batch splits into the valid sink and the
     * quarantine sink (rows annotated with their `violations`), both
     * written in the SAME foreachBatch so the source is read once per
-    * batch. Exactly-once without a table swap, [[streamNearDedup]]'s
-    * discipline: both sinks partition by `batch_id` under dynamic
-    * partition overwrite, so a replayed batch rewrites its own partition
-    * instead of appending duplicates.
+    * batch. Each sink is a [[graft.tables.VersionedTable]] and each batch
+    * makes one txn-marked append to each, under its own app id
+    * (`graft.route.valid:<checkpointDir>`, `graft.route.quarantine:…`):
+    * a crash between the two appends replays only the missing one.
     *
     * Scale shape: validation is map-side (one scan, no shuffle); the
     * split is two filters over the one validated frame, localCheckpointed
@@ -307,50 +262,18 @@ object StreamingInference {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): (DataFrame, DataFrame) = {
     import graft.operators.Relational
-    val q = readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) {
+      (batch, batchId) =>
         val checked = Relational.validateRules(batch, rules)
           .localCheckpoint(true) // two sinks below: validate once
-        checked.where(col("is_valid") === 1L)
-          .drop("violations", "is_valid")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(validDir)
-        checked.where(col("is_valid") === 0L)
-          .drop("is_valid")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(quarantineDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // Explicit schemas on the final reads: when EVERY batch routed one way,
-    // the other sink directory holds no part files and a schema-inferring
-    // read would throw "unable to infer schema". The sink schemas are
-    // knowable without inference (input schema, + violations for the
-    // quarantine side, + the batch_id partition column). An EMPTY SOURCE
-    // runs zero batches and creates neither directory — return empty
-    // frames of the known schemas rather than throwing path-not-found.
-    def readSink(dir: String, s: StructType): DataFrame = {
-      // per-path FS resolution (not FileSystem.get): sink paths may carry a
-      // scheme that differs from the default filesystem
-      val p  = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(s.fields.filterNot(_.name == "batch_id")))
-      else spark.read.schema(s).parquet(dir).drop("batch_id")
+        VersionedTable.commitAppend(spark,
+          checked.where(col("is_valid") === 1L).drop("violations", "is_valid"),
+          validDir, txn = Some((s"graft.route.valid:$checkpointDir", batchId)))
+        VersionedTable.commitAppend(spark,
+          checked.where(col("is_valid") === 0L).drop("is_valid"),
+          quarantineDir, txn = Some((s"graft.route.quarantine:$checkpointDir", batchId)))
     }
-    val validSchema = new StructType(
-      schema.fields :+ StructField("batch_id", LongType))
-    val quarantineSchema = new StructType(
-      (schema.fields :+ StructField("violations", StringType)) :+
-        StructField("batch_id", LongType))
-    (readSink(validDir, validSchema), readSink(quarantineDir, quarantineSchema))
+    (readSink(spark, validDir, schema),
+      readSink(spark, quarantineDir, schema.add(StructField("violations", StringType))))
   }
 }

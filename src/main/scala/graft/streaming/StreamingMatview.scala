@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.tables.{MaterializedAgg, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming materialized aggregate — the Delta "streaming aggregate table"
@@ -48,22 +47,16 @@ object StreamingMatview {
       maxFilesPerTrigger: Int = 1): DataFrame = {
     // stable across restarts: the checkpoint IS the stream's identity
     val appId = s"graft.matview:$checkpointDir"
-    val q = StreamingInference.readFileStream(spark, srcDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        VersionedTable.commitAppend(spark, batch, tableDir,
-          txn = Some((appId, batchId)))
-        if (!MaterializedAgg.exists(viewDir))
-          MaterializedAgg.create(spark, tableDir, viewDir,
-            keyCols, groupCols, sumCols, minMaxCols)
-        else
-          MaterializedAgg.refresh(spark, viewDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamingInference.foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger,
+        checkpointDir) { (batch, batchId) =>
+      VersionedTable.commitAppend(spark, batch, tableDir,
+        txn = Some((appId, batchId)))
+      if (!MaterializedAgg.exists(viewDir))
+        MaterializedAgg.create(spark, tableDir, viewDir,
+          keyCols, groupCols, sumCols, minMaxCols)
+      else
+        MaterializedAgg.refresh(spark, viewDir)
+    }
     MaterializedAgg.read(spark, viewDir)
   }
 }

@@ -72,7 +72,7 @@ object FsIO {
   /** A LIVE holder owns the lease — thrown (never silently waited out) by
     * [[acquireWriteLock]]. Typed so callers with a SHORT critical section
     * ([[withWriteLockRetry]]) can distinguish "busy, try again shortly"
-    * from real failures; long-swap callers keep failing loudly. */
+    * from real failures; long-hold callers keep failing loudly. */
   final class LockBusy(msg: String) extends RuntimeException(msg)
 
   /** Schemes with a TRUE atomic create-no-overwrite: POSIX O_EXCL
@@ -80,9 +80,10 @@ object FsIO {
     * hierarchical namespace (abfs/abfss), GCS precondition-checked create
     * (gs). On anything else — S3A being the important case: without
     * S3 conditional writes, create(overwrite=false) is check-then-act —
-    * the lock is BEST-EFFORT ONLY, and because this lease gates swap
-    * protocols that DELETE data, best-effort must be an explicit operator
-    * decision, not a silent default. */
+    * the lock is BEST-EFFORT ONLY, and because this lease gates the
+    * versioned log's commit point and vacuum (which DELETES data),
+    * best-effort must be an explicit operator decision, not a silent
+    * default. */
   private val ExactLockSchemes = Set("file", "local", "hdfs", "viewfs", "abfs", "abfss", "gs")
 
   /** Hadoop conf key an operator sets (via `spark.hadoop.` prefix) to
@@ -104,14 +105,13 @@ object FsIO {
   val ConditionalPutLockKey = "graft.lock.conditionalPut"
 
   /** Acquire an exclusive write lease for `dir` — the concurrent-writer
-    * guard for the rename-swap protocols (compact/compactPartitioned/
-    * compactBatchIndex) and the versioned-log publish:
-    * two writers interleaving `swapDir`'s stage/rename steps can corrupt
-    * the target, so the WHOLE stage+swap must be single-writer.
+    * guard for the versioned-log publish (two writers could otherwise both
+    * publish the same version), the rewrites that depend on the version
+    * they read (update/delete/merge/compact), vacuum, and the IVF index
+    * append.
     *
-    * The lock is a SIBLING file (`<dir>.__write_lock` — it cannot live
-    * inside `dir`, which the swap renames away) holding (owner, acquire
-    * millis, label). Acquisition: on `file://` a POSIX O_EXCL create
+    * The lock is a SIBLING file (`<dir>.__write_lock`) holding (owner,
+    * acquire millis, label). Acquisition: on `file://` a POSIX O_EXCL create
     * (`Files.createFile` — truly atomic; Hadoop's local create-no-overwrite
     * is check-then-act and the cross-process stress caught two writers both
     * passing the check), on other schemes create-no-overwrite (atomic on
@@ -122,7 +122,7 @@ object FsIO {
     * Lease, not lock: a holder that crashed can't release, so a lock older
     * than `staleMs` is taken over (deleted + one re-acquire attempt) on the
     * assumption the writer is gone — size `staleMs` above the longest
-    * legitimate stage+swap. A LIVE contender inside the lease window fails
+    * legitimate stage+publish. A LIVE contender inside the lease window fails
     * loudly with the holder's label/age instead of corrupting the target. */
   def acquireWriteLock(dir: String, label: String, staleMs: Long,
       conf: Configuration = hadoopConf()): WriteLock = {
@@ -136,8 +136,8 @@ object FsIO {
         !conf.getBoolean(BestEffortLockKey, false))
       throw new IllegalStateException(s"$label: exact write-locking is unavailable on " +
         s"scheme '$lockScheme' (no atomic create-no-overwrite). This lease serializes " +
-        "the engine's maintenance and commit protocols — including rename-swaps that " +
-        "delete data and the versioned log's commit point — so best-effort " +
+        "the engine's maintenance and commit protocols — including vacuum, which " +
+        "deletes data, and the versioned log's commit point — so best-effort " +
         s"locking must be an explicit operator decision. Either attest the store's " +
         s"conditional-write support with $ConditionalPutLockKey=true " +
         s"(spark.hadoop.$ConditionalPutLockKey — S3 conditional PUT makes " +
@@ -182,7 +182,7 @@ object FsIO {
       // mtime. An absent/unparsable ts must read as LIVE, not stale — a
       // contender racing the winner's create-to-body-write window sees an
       // empty body, and classifying that as stale would steal a live lease
-      // (both writers then interleave the swap). If even the mtime is
+      // (both writers then interleave their writes). If even the mtime is
       // unreadable (lock vanished — holder released between our create
       // attempt and now), retry the create rather than deleting anything.
       val ageMs: Option[Long] = fields.get("ts").flatMap(_.toLongOption)
@@ -198,7 +198,7 @@ object FsIO {
         throw new LockBusy(s"$label: ${new Path(dir).getName} is being written by another " +
           s"writer (label=${fields.getOrElse("label", "?")}, lock age " +
           s"${ageMs.map(_.toString).getOrElse("unknown")} ms, lease $bar ms) — " +
-          "concurrent swap would corrupt the target; retry after it finishes or " +
+          "a concurrent write would corrupt the target; retry after it finishes or " +
           "take over once the lease expires")
       }
       // stale lease (age measured and past the window): take over once,
@@ -376,7 +376,7 @@ object FsIO {
       * immediately before every irreversible publish/rename: an aborted
       * writer leaves only unpublished staging behind — a writer that
       * published on a lost lease could race the
-      * new owner into a torn swap. Self-expiry counts as lost even if
+      * new owner into a torn publish. Self-expiry counts as lost even if
       * the lock file still reads as ours: past the lease a rival's
       * takeover may be mid-flight, and "file still mine" is not
       * evidence it will stay so through the next rename. */
@@ -393,9 +393,9 @@ object FsIO {
     * rewrites the lease `ts` every `staleMs/3`, so a LIVE holder never
     * ages past [[acquireWriteLock]]'s stale-takeover bar no matter how
     * long `body` runs. This is the lease for bodies that hold the lock
-    * across a DATA-PROPORTIONAL write (TableManager's compaction swap of a
-    * 100 TB directory runs hours; under the fixed lease a rival would
-    * classify the live writer as crashed 15 minutes in and seize the lock
+    * across a DATA-PROPORTIONAL write (a versioned overwrite of a 100 TB
+    * table stages for hours; under the fixed lease a rival would classify
+    * the live writer as crashed 15 minutes in and seize the lock
     * mid-write). The body receives a [[Heartbeat]] and must `verifyOwned`
     * before each irreversible publish step — on a lost lease (renewal
     * stalled past `staleMs`, a rival took over) the writer aborts loudly
@@ -511,7 +511,7 @@ object FsIO {
     * ~50–100 ms polls up to `maxWaitMs`). ONLY for bodies whose hold is
     * O(metadata) — the lock-free append's publish tail, where the holder
     * ahead is guaranteed to release within milliseconds and erroring out
-    * would make concurrent appenders flaky for no reason. Long swaps keep
+    * would make concurrent appenders flaky for no reason. Long holds keep
     * [[withWriteLock]]'s fail-loud semantics: waiting minutes for a rival
     * compaction is a pipeline stall better surfaced than absorbed. */
   def withWriteLockRetry[A](dir: String, label: String, staleMs: Long,

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Table-management layer (SURVEY.md §2a S7–S13): managed Parquet tables
   * standing in for the reference's Delta tables. This environment ships no
-  * Delta jar (SURVEY.md §1), so the specific Delta behaviors the reference
-  * exercises are emulated — with file-commit-protocol (not transaction-log)
-  * guarantees, scoped to exactly what the reference uses.
+  * Delta jar (SURVEY.md §1): the catalog-table helpers here (overwrite,
+  * mergeSchema, bucketing, codec control) carry Spark's file-commit-protocol
+  * guarantees, and every path table with a history — compaction included
+  * ([[VersionedTable.commitCompact]]) — commits through [[VersionedTable]]'s
+  * log.
   */
 object TableManager {
 
@@ -56,108 +58,15 @@ object TableManager {
     deleteDir(spark, staging)
   }
 
-  /** Atomic rename-swap shared by the compaction procedures: stage the
-    * current dir to `.bak`, move the rewritten `tmp` into place, roll back
-    * on failure. One copy of the crash-safety-critical protocol. */
-  private def swapDir(spark: SparkSession, dir: String, tmp: Path, bak: Path, label: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // CRASH RECOVERY for the two-rename window: a kill between
-    // rename(dir→bak) and rename(tmp→dir) leaves the table directory
-    // MISSING with the data stranded in bak — the next swap attempt (or
-    // any caller reaching this) restores the previous state first, so the
-    // window is self-healing instead of a manual repair
-    if (!fs.exists(new Path(dir)) && fs.exists(bak)) {
-      require(fs.rename(bak, new Path(dir)),
-        s"$label: could not recover $dir from its interrupted-swap backup $bak")
-    }
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (!fs.rename(new Path(dir), bak)) sys.error(s"$label: could not stage $dir")
-    if (!fs.rename(tmp, new Path(dir))) { fs.rename(bak, new Path(dir)); sys.error(s"$label: swap failed for $dir") }
-    fs.delete(bak, true)
-  }
-
-  /** Write-lease length of every table writer (versioned commits, the
-    * compact* family, constraints, views, the IVF index append). Since r17
-    * the data-proportional holders (the compact* family) renew it every
-    * `leaseMs/3` ([[FsIO.withWriteLockHeartbeat]]) — 15 min bounds the
-    * longest tolerated heartbeat STALL, not the stage-write length, so a
-    * multi-hour 100 TB rewrite never looks crashed while a genuinely
-    * crashed holder is healable within one lease. */
+  /** Write-lease length of every table writer (versioned commits,
+    * constraints, views, the IVF index append). The versioned overwrite
+    * ([[VersionedTable.commit]]) holds the lease across a data-proportional
+    * staging write and renews it every `leaseMs/3`
+    * ([[FsIO.withWriteLockHeartbeat]]) — 15 min bounds the longest
+    * tolerated heartbeat STALL, not the stage-write length, so a multi-hour
+    * 100 TB overwrite never looks crashed while a genuinely crashed holder
+    * is healable within one lease. */
   val DefaultLockLeaseMs: Long = 15L * 60 * 1000
-
-  /** S10: OPTIMIZE-style small-file compaction (`00. Explore.py:89-90`,
-    * `01. Ingest.py:188-189`) for a path table: rewrite the directory into
-    * `targetFiles` files via an atomic rename swap. A maintenance procedure,
-    * not a Catalyst rule (SURVEY.md §4). Single-writer by lease lock — a
-    * second writer entering the swap mid-flight would interleave renames. */
-  def compact(spark: SparkSession, dir: String, targetFiles: Int): Unit =
-    // HEARTBEAT lease (r17): the rewrite inside the lock is
-    // data-proportional — on a 100 TB table it outlives any fixed lease,
-    // and a rival takeover would share the .__compact_tmp path with the
-    // still-running writer (clobbered stage, partial table published by
-    // the interleaved swap). Renewal keeps a live writer unstealable;
-    // verifyOwned aborts a genuinely lost writer BEFORE its swap.
-    FsIO.withWriteLockHeartbeat(dir, "compact", DefaultLockLeaseMs) { hb =>
-      val tmp = new Path(dir + ".__compact_tmp")
-      spark.read.parquet(dir).repartition(targetFiles).write.mode("overwrite").parquet(tmp.toString)
-      hb.verifyOwned("the compact swap")
-      swapDir(spark, dir, tmp, new Path(dir + ".__compact_bak"), "compact")
-    }
-
-  /** [[compact]] for a PARTITIONED path table (e.g. the IVF index's
-    * `ivf_cell=` layout, whose per-cell file count grows with every
-    * incremental append): rewrites each partition's rows into contiguous
-    * few files while PRESERVING the partition directory structure —
-    * `compact` would flatten it and destroy partition pruning. One shuffle
-    * on the partition column (each partition value lands wholly in one
-    * task → one file per partition dir), then the same lease-locked atomic
-    * rename swap. */
-  def compactPartitioned(spark: SparkSession, dir: String, partitionCol: String): Unit =
-    FsIO.withWriteLockHeartbeat(dir, "compactPartitioned", DefaultLockLeaseMs) { hb =>
-      val tmp = new Path(dir + ".__compact_tmp")
-      spark.read.parquet(dir)
-        .repartition(col(partitionCol))
-        .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp.toString)
-      hb.verifyOwned("the compactPartitioned swap") // see compact: shared-tmp hazard
-      swapDir(spark, dir, tmp, new Path(dir + ".__compact_bak"), "compactPartitioned")
-    }
-
-  /** Small-file maintenance for the STREAMING dedup indexes
-    * (`StreamingInference.streamNearDedup` / `streamImageDedup`), whose
-    * `batch_id=` partitions accrete one per micro-batch forever: fold every
-    * partition EXCEPT the newest into the sentinel partition
-    * `batch_id=-1`, each as few contiguous files.
-    *
-    * Why the newest partition survives untouched: the streams' replay
-    * contract excludes only the CURRENT batch id when probing
-    * (`batch_id =!= batchId`), and the only partition that can belong to
-    * an un-checkpointed (hence replayable) batch is the newest one —
-    * earlier batches committed before later ones ran. Folding the newest
-    * into the sentinel would let its crash-replay probe its own partial
-    * signatures (self-match → mass drop); leaving it keeps the exclusion
-    * rule airtight. The sentinel can never collide with a real batch id
-    * (ids are ≥ 0) and re-folds idempotently on the next compaction.
-    * Same lease-locked atomic rename swap as [[compactPartitioned]]. */
-  def compactBatchIndex(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
-    FsIO.withWriteLockHeartbeat(dir, "compactBatchIndex", DefaultLockLeaseMs) { hb =>
-      val raw = spark.read.parquet(dir)
-      require(raw.columns.contains("batch_id"),
-        s"$dir is not a batch-partitioned dedup index (no batch_id)")
-      // partition discovery may infer batch_id as INT — normalize to the
-      // writers' LONG so the sentinel partition name stays consistent
-      val all = raw.withColumn("batch_id", col("batch_id").cast("long"))
-      val maxRow = all.agg(max("batch_id")).head()
-      require(!maxRow.isNullAt(0), s"$dir holds no index rows — nothing to compact")
-      val maxId = maxRow.getLong(0)
-      val tmp   = new Path(dir + ".__compact_tmp")
-      all.where(col("batch_id") =!= maxId).drop("batch_id")
-        .withColumn("batch_id", lit(-1L))
-        .repartition(targetFiles)
-        .unionByName(all.where(col("batch_id") === maxId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(tmp.toString)
-      hb.verifyOwned("the compactBatchIndex swap") // see compact: shared-tmp hazard
-      swapDir(spark, dir, tmp, new Path(dir + ".__compact_bak"), "compactBatchIndex")
-    }
 
   /** N-COLUMN z-order (Delta's `ZORDER BY (c1, ..., cN)`): interleave each
     * column's range-normalized bucket rank bit-by-bit — dimension d's bit i
@@ -212,12 +121,6 @@ object TableManager {
       .repartitionByRange(targetFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-  }
-
-  /** Number of data files currently backing a path table (compaction metric). */
-  def dataFileCount(spark: SparkSession, dir: String): Int = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new Path(dir)).count(s => s.getPath.getName.endsWith(".parquet"))
   }
 
   /** Bucketed managed table: pre-shuffles once at write time so subsequent

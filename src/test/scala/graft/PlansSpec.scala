@@ -377,20 +377,6 @@ class PlansSpec extends SparkSpec {
       Similarity.appendToIvfIndex(batch, "embedding", "vec_id", path + "_missing")
     }
     assert(e.getMessage.contains("buildIvfIndex"), e.getMessage)
-    // lifecycle tail: append-grown cells compact back to one file per cell
-    // WITHOUT flattening the partition layout, probe identical, pruning kept
-    graft.tables.TableManager.compactPartitioned(spark, path, "ivf_cell")
-    val cellDirs = new java.io.File(path).listFiles.filter(_.getName.startsWith("ivf_cell="))
-    assert(cellDirs.nonEmpty && cellDirs.forall(
-      d => d.listFiles.count(_.getName.endsWith(".parquet")) == 1),
-      "each cell partition must compact to one file")
-    val afterCompact = Similarity.probeIvfIndex(spark, path, "vec_id", "embedding", q,
-      centroids, k = 10, nProbes = 3).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(afterCompact == direct)
-    val scan2 = Similarity.probeIvfIndex(spark, path, "vec_id", "embedding", q,
-        centroids, k = 10, nProbes = 3)
-      .queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
-    assert(scan2.map(_.selectedPartitions.partitionCount).sum == 3)
   }
 
   test("heavyHitters confirm pass: candidate prune is a broadcast join, no sort-merge") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.StreamingInference
+import graft.tables.VersionedTable
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -104,9 +105,9 @@ class StreamingSpec extends SparkSpec {
         (5L, t2)).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$srcDir/f2")
     assert(run() == Set(1L, 2L, 4L))
-    // the combined sink carries a signature for exactly the survivors
-    // (r19 layout: the sink IS the index)
-    assert(spark.read.parquet(s"$work/out")
+    // the sink table carries a signature for exactly the survivors (the
+    // sink IS the index)
+    assert(VersionedTable.read(spark, s"$work/out")
       .where(col("sig").isNotNull).count() == 3L)
     // no new files → no change (exactly-once)
     assert(run() == Set(1L, 2L, 4L))
@@ -116,14 +117,6 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val work   = Files.createTempDirectory("graft_stream_id").toString
     val srcDir = s"$work/src"
-    def png(seed: Long): Array[Byte] = {
-      val rnd = new scala.util.Random(seed)
-      val img = new java.awt.image.BufferedImage(64, 48, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-      for (y <- 0 until 48; x <- 0 until 64) img.setRGB(x, y, rnd.nextInt(1 << 24))
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", out)
-      out.toByteArray
-    }
     val a = png(1); val b = png(2)
     Seq(("a", a), ("b", b)).toDF("img_id", "content")
       .coalesce(1).write.parquet(s"$srcDir/f1")
@@ -139,71 +132,88 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$srcDir/f2")
     assert(run() == Set("a", "b", "c"))
     // combined sink = one phash per survivor; no new files → no change
-    assert(spark.read.parquet(s"$work/out")
+    assert(VersionedTable.read(spark, s"$work/out")
       .where(col("phash").isNotNull).count() == 3L)
     assert(run() == Set("a", "b", "c"))
   }
 
-  test("compactBatchIndex folds old partitions to the sentinel, keeps the newest, history intact") {
-    import spark.implicits._
-    val work   = Files.createTempDirectory("graft_stream_cbi").toString
-    val srcDir = s"$work/src"
-    val t1 = "the quick brown fox jumps over the lazy dog and keeps on running far away"
-    val t2 = "completely different text about spark engines and columnar execution at scale"
-    Seq((1L, t1)).toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f1")
-    val schema = spark.read.parquet(s"$srcDir/f1").schema
-    def run(): Set[Long] = StreamingInference.streamNearDedup(
-      spark, s"$srcDir/*", schema, "text", "doc_id",
-      s"$work/out", s"$work/ckpt",
-      shingleN = 2, minEstJaccard = 0.6)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(run() == Set(1L))
-    Seq((2L, t2)).toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f2")
-    assert(run() == Set(1L, 2L))
-    // r19 combined layout: the sink doubles as the signature index, and
-    // compactBatchIndex folds ITS old partitions to the sentinel
-    graft.tables.TableManager.compactBatchIndex(spark, s"$work/out")
-    // layout: exactly {-1, newest}; rows preserved
-    val parts = spark.read.parquet(s"$work/out")
-      .select(col("batch_id").cast("long")).distinct().collect().map(_.getLong(0)).toSet
-    assert(parts.size == 2 && parts.contains(-1L), s"unexpected partitions $parts")
-    assert(spark.read.parquet(s"$work/out").count() == 2L)
-    // history folded into the sentinel still dedups: near-dup of the
-    // batch-0 doc (now in -1) must drop, a novel doc must survive
-    Seq((3L, t1.replace("far away", "far off")),
-        (4L, "a fourth genuinely novel document with entirely fresh vocabulary inside"))
-      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f3")
-    assert(run() == Set(1L, 2L, 4L))
-    // idempotent re-fold
-    graft.tables.TableManager.compactBatchIndex(spark, s"$work/out")
-    assert(spark.read.parquet(s"$work/out").count() == 3L)
+  // One case per versioned-log sink. A setup writes the sink's one-file
+  // source under `work` and returns the run (its survivors, sorted, so a
+  // duplicated row shows) and the sink table directories.
+  private val crashReplaySinks: Seq[(String, String => (() => Seq[String], Seq[String]))] = Seq(
+    "streamNearDedup" -> { work =>
+      import spark.implicits._
+      val t1 = "the quick brown fox jumps over the lazy dog and keeps on running far away"
+      val t2 = "completely different text about spark engines and columnar execution at scale"
+      // doc 3 near-dups doc 1 inside the batch: the batch drops a row
+      Seq((1L, t1), (2L, t2), (3L, t1.replace("far away", "far off")))
+        .toDF("doc_id", "text").coalesce(1).write.parquet(s"$work/src/f1")
+      val schema = spark.read.parquet(s"$work/src/f1").schema
+      (() => StreamingInference.streamNearDedup(
+          spark, s"$work/src/*", schema, "text", "doc_id", s"$work/out", s"$work/ckpt",
+          shingleN = 2, minEstJaccard = 0.6)
+        .collect().map(r => s"${r.getLong(0)}:${r.getString(1)}").toSeq.sorted,
+        Seq(s"$work/out"))
+    },
+    "streamImageDedup" -> { work =>
+      import spark.implicits._
+      val a = png(1)
+      // a2 is a shifted re-encode of a inside the batch: the batch drops it
+      Seq(("a", a), ("b", png(2)), ("a2", graft.image.Kernels.brightnessShiftJpg(a, 8)))
+        .toDF("img_id", "content").coalesce(1).write.parquet(s"$work/src/f1")
+      val schema = spark.read.parquet(s"$work/src/f1").schema
+      (() => StreamingInference.streamImageDedup(
+          spark, s"$work/src/*", schema, "content", "img_id", s"$work/out", s"$work/ckpt")
+        .collect().map(r => s"${r.getString(0)}:${r.getAs[Array[Byte]](1).length}").toSeq.sorted,
+        Seq(s"$work/out"))
+    },
+    "streamValidateRoute" -> { work =>
+      import spark.implicits._
+      Seq((1L, 10.0), (2L, 99.0), (3L, 20.0)).toDF("id", "v")
+        .coalesce(1).write.parquet(s"$work/src/f1")
+      val schema = spark.read.parquet(s"$work/src/f1").schema
+      (() => {
+        val (v, q) = StreamingInference.streamValidateRoute(
+          spark, s"$work/src/*", schema, Seq("v_small" -> (col("v") < 50)),
+          s"$work/valid", s"$work/quar", s"$work/ckpt")
+        (v.collect().map(r => s"valid ${r.getLong(0)}") ++
+          q.collect().map(r => s"quarantine ${r.getLong(0)} ${r.getString(2)}")).toSeq.sorted
+      }, Seq(s"$work/valid", s"$work/quar"))
+    })
+
+  private def png(seed: Long): Array[Byte] = {
+    val rnd = new scala.util.Random(seed)
+    val img = new java.awt.image.BufferedImage(64, 48, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    for (y <- 0 until 48; x <- 0 until 64) img.setRGB(x, y, rnd.nextInt(1 << 24))
+    val out = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", out)
+    out.toByteArray
   }
 
-  test("streamNearDedup replay safety: a batch never probes its own (or later) index partitions") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val work   = Files.createTempDirectory("graft_stream_ndr").toString
-    val srcDir = s"$work/src"
-    val text   = "one single document that must survive its own replayed signatures intact"
-    Seq((1L, text)).toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f1")
-    val schema = spark.read.parquet(s"$srcDir/f1").schema
-    // forge the crash artifact: the combined sink already holds THIS
-    // batch's own survivors+signatures under a batch_id >= the replaying
-    // batch (partial sink write landed, checkpoint did not) — pre-fix the
-    // doc matched itself at Jaccard 1.0 and was dropped from its own sink
-    // partition
-    Dedup.withMinHashSigs(Seq((1L, text)).toDF("doc_id", "text"), "text", "doc_id",
-        shingleN = 2, numHashes = 64)
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$work/out")
-    val survivors = StreamingInference.streamNearDedup(
-      spark, s"$srcDir/*", schema, "text", "doc_id",
-      s"$work/out", s"$work/ckpt",
-      shingleN = 2, minEstJaccard = 0.6)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(survivors == Set(1L),
-      "replayed batch must not be deduped against its own partial sink write")
-  }
+  for ((sink, setup) <- crashReplaySinks)
+    test(s"$sink crash-replay: a batch committed but not checkpointed replays as a no-op") {
+      val work = Files.createTempDirectory("graft_stream_crash").toString
+      val (run, sinkDirs) = setup(work)
+      def dataFiles(dir: String): Int = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+        walk(new java.io.File(s"$dir/data")).count(_.getName.endsWith(".parquet"))
+      }
+      def state() = sinkDirs.map(d => (VersionedTable.latestVersion(d), dataFiles(d)))
+      val survivors = run()
+      assert(survivors.nonEmpty)
+      val before = state()
+      assert(before.forall(_._1.isDefined), s"$sink: every sink table commits the batch")
+      // the crash window: the data commit landed, the checkpoint commit of
+      // batch 0 did not — the restarted stream re-executes the batch
+      val commit0 = new java.io.File(s"$work/ckpt/commits/0")
+      assert(commit0.delete())
+      new java.io.File(s"$work/ckpt/commits/.0.crc").delete()
+      assert(run() == survivors, s"$sink: replayed survivors differ")
+      assert(commit0.exists, s"$sink: the uncheckpointed batch must re-execute")
+      assert(state() == before,
+        s"$sink: the replay must publish no version and stage no file")
+    }
 
   test("streamValidateRoute: empty source runs zero batches and returns empty frames, not errors") {
     import spark.implicits._
@@ -217,6 +227,14 @@ class StreamingSpec extends SparkSpec {
     assert(v.count() == 0L && q.count() == 0L)
     assert(v.columns.toSeq == Seq("id", "v"))
     assert(q.columns.toSeq == Seq("id", "v", "violations"))
+    // a sink that only ever received empty batches: every row is valid, so
+    // the quarantine table holds nothing but empty appends
+    Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v").coalesce(1).write.parquet(s"$work/src/f1")
+    val (v1, q1) = StreamingInference.streamValidateRoute(
+      spark, s"$srcDir/*", schema, Seq("v_small" -> (col("v") < 50)),
+      s"$work/valid1", s"$work/quar1", s"$work/ckpt1")
+    assert(v1.count() == 2L && q1.count() == 0L)
+    assert(q1.columns.toSeq == Seq("id", "v", "violations"))
   }
 
   test("streamValidateRoute: valid/quarantine dual sink, exactly-once replay") {
@@ -276,7 +294,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamUpsert merges each micro-batch into the target (CDC foreachBatch shape)") {
-    import graft.tables.VersionedTable
     import spark.implicits._
     val work      = Files.createTempDirectory("graft_stream_merge").toString
     val srcDir    = s"$work/src"
@@ -323,7 +340,6 @@ class StreamingSpec extends SparkSpec {
     // the upsert's scale contract on the versioned target: a micro-batch
     // rewrites only the data files holding its keys; every other file
     // stays in the new manifest as the SAME bytes on disk
-    import graft.tables.VersionedTable
     import spark.implicits._
     val work      = Files.createTempDirectory("graft_stream_pmerge").toString
     val srcDir    = s"$work/src"
@@ -416,20 +432,43 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("compact under a live foreign lease fails loudly and leaves the dir intact") {
-    import graft.tables.{FsIO, TableManager}
+    // a stream sink is a versioned table that grows one file set per
+    // micro-batch; its compaction is commitCompact, which must refuse a
+    // live lease held by another writer before it stages anything
+    import graft.tables.FsIO
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact_lock").toString + "/t"
-    (1L to 100L).toDF("v").repartition(10).write.parquet(dir)
-    val lock = FsIO.acquireWriteLock(dir, "other-compactor", staleMs = 600000)
+    val work   = Files.createTempDirectory("graft_compact_lock").toString
+    val srcDir = s"$work/src"
+    for (f <- 0 until 4)
+      (f * 25L + 1 to f * 25L + 25).map(i => (i, 1.0)).toDF("id", "v")
+        .repartition(2).write.parquet(s"$srcDir/f$f")
+    val schema = spark.read.parquet(s"$srcDir/f0").schema
+    val sink   = s"$work/valid"
+    StreamingInference.streamValidateRoute(
+      spark, s"$srcDir/*", schema, Seq("v_small" -> (col("v") < 50)),
+      sink, s"$work/quar", s"$work/ckpt")
+    def files(): Seq[String] =
+      VersionedTable.entriesOf(sink, VersionedTable.latestVersion(sink).get).map(_._1)
+    def onDisk(): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(sink)).map(f => f.getPath -> f.length()).toMap
+    }
+    assert(files().size > 2, "every micro-batch appends its own files")
+    val version = VersionedTable.latestVersion(sink)
+    val before  = onDisk()
+    val lock = FsIO.acquireWriteLock(sink, "other-compactor", staleMs = 600000)
     val e = intercept[RuntimeException] {
-      TableManager.compact(spark, dir, targetFiles = 2)
+      VersionedTable.commitCompact(spark, sink, targetFiles = 2)
     }
     assert(e.getMessage.contains("another writer"), e.getMessage)
-    assert(spark.read.parquet(dir).count() == 100)
+    assert(VersionedTable.latestVersion(sink) == version, "failed compaction must not publish")
+    assert(onDisk() == before, "failed compaction must not touch the sink")
+    assert(VersionedTable.read(spark, sink).count() == 100)
     FsIO.releaseWriteLock(lock)
-    TableManager.compact(spark, dir, targetFiles = 2)
-    assert(spark.read.parquet(dir).count() == 100)
-    assert(TableManager.dataFileCount(spark, dir) == 2)
+    VersionedTable.commitCompact(spark, sink, targetFiles = 2)
+    assert(VersionedTable.read(spark, sink).count() == 100)
+    assert(files().size == 2)
   }
 
   test("stream-static broadcast enrichment equals the batch join") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.tables.TableManager
+import graft.tables.{TableManager, VersionedTable}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -54,15 +54,17 @@ class TableManagerSpec extends SparkSpec {
   }
 
   test("compact rewrites a many-file dir into target file count, content-stable (S10)") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/data"
+    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
     val li  = Tables.load(spark, sfDir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    li.repartition(16).write.parquet(dir)
-    assert(TableManager.dataFileCount(spark, dir) >= 16)
-    val before = spark.read.parquet(dir).orderBy("l_orderkey", "l_linenumber", "l_quantity").collect()
-    TableManager.compact(spark, dir, targetFiles = 2)
-    assert(TableManager.dataFileCount(spark, dir) == 2)
-    val after = spark.read.parquet(dir).orderBy("l_orderkey", "l_linenumber", "l_quantity").collect()
-    assert(after.sameElements(before))
+    VersionedTable.commit(spark, li.repartition(16), dir)
+    assert(VersionedTable.filesOf(dir, 0L).size >= 16)
+    def rows() = VersionedTable.read(spark, dir)
+      .orderBy("l_orderkey", "l_linenumber", "l_quantity").collect()
+    val before = rows()
+    val v = VersionedTable.commitCompact(spark, dir, targetFiles = 2)
+    assert(VersionedTable.filesOf(dir, v).size == 2)
+    assert(!VersionedTable.dataChanged(dir, v), "OPTIMIZE is a dataChange=false commit")
+    assert(rows().sameElements(before))
   }
 
   test("withParquetCodec restores previous codec even on failure (S11)") {

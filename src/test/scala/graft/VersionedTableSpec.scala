@@ -191,16 +191,20 @@ class VersionedTableSpec extends SparkSpec {
 
   test("commit serializes through the write lease: live contender fails loudly") {
     import spark.implicits._
-    val dir  = dirOf()
-    VersionedTable.commit(spark, Seq((1L, 1)).toDF("id", "v"), dir)
-    val lock = graft.tables.FsIO.acquireWriteLock(dir, "other-committer", staleMs = 600000)
-    val e = intercept[RuntimeException] {
-      VersionedTable.commit(spark, Seq((2L, 2)).toDF("id", "v"), dir)
+    // the overwrite and the OPTIMIZE re-layout both refuse a live lease
+    val writers: Seq[(String, String => Long)] = Seq(
+      "commit"        -> (dir => VersionedTable.commit(spark, Seq((2L, 2)).toDF("id", "v"), dir)),
+      "commitCompact" -> (dir => VersionedTable.commitCompact(spark, dir, targetFiles = 1)))
+    for ((name, write) <- writers) {
+      val dir  = dirOf()
+      VersionedTable.commit(spark, Seq((1L, 1), (3L, 3)).toDF("id", "v").repartition(2), dir)
+      val lock = graft.tables.FsIO.acquireWriteLock(dir, "other-committer", staleMs = 600000)
+      val e = intercept[RuntimeException](write(dir))
+      assert(e.getMessage.contains("another writer"), s"$name: ${e.getMessage}")
+      assert(VersionedTable.latestVersion(dir).contains(0L), s"$name: failed commit must not publish")
+      graft.tables.FsIO.releaseWriteLock(lock)
+      assert(write(dir) == 1L, name)
     }
-    assert(e.getMessage.contains("another writer"), e.getMessage)
-    assert(VersionedTable.latestVersion(dir).contains(0L), "failed commit must not publish")
-    graft.tables.FsIO.releaseWriteLock(lock)
-    assert(VersionedTable.commit(spark, Seq((2L, 2)).toDF("id", "v"), dir) == 1L)
   }
 
   test("diff: added/removed/updated between versions; reverse diff mirrors") {
