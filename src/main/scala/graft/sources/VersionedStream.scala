@@ -51,7 +51,7 @@ class VersionedStream extends StreamSourceProvider with StreamSinkProvider {
     * lands each micro-batch as a versioned COMMIT — Append mode appends
     * (O(batch) file writes, unchanged files shared), Complete mode
     * snapshots the whole state per batch (the streaming-aggregate shape).
-    * Exactly-once for Append rides the (txnAppId, txnVersion) marker
+    * Exactly-once in both modes rides the (txnAppId, txnVersion) marker
     * INSIDE the commit entry: appId derives from the checkpoint location,
     * txnVersion is the batch id, so a replayed `addBatch` after a crash
     * between data-commit and checkpoint-commit is recognized and skipped
@@ -697,9 +697,9 @@ object VersionedStream {
           VersionedTable.commitAppend(spark, batch, dir, txn = Some((appId, batchId)))
         case m if m == OutputMode.Complete() =>
           // Complete rewrites the whole (small, aggregated) state each
-          // batch; a replay commits an identical snapshot — same content,
-          // one extra version (documented, like Delta's complete mode)
-          VersionedTable.commit(spark, batch, dir)
+          // batch; the same replay marker makes a re-delivered batch a
+          // no-op rather than an identical extra version
+          VersionedTable.commit(spark, batch, dir, txn = Some((appId, batchId)))
         case other =>
           sys.error(s"VersionedStream sink: unsupported output mode $other " +
             "(Append and Complete are supported)")

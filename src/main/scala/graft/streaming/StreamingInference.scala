@@ -53,14 +53,18 @@ object StreamingInference {
       .awaitTermination()
 
   /** A sink table's head; while the sink has no committed version (an
-    * empty source runs zero batches) an empty frame of its known `schema`
-    * — a local relation, so a probe against it optimizes away. A sink whose
-    * batches were all empty still holds a version: the staging write of an
-    * empty frame leaves one schema-bearing file. */
+    * empty source runs zero batches, and a routing side that never got a
+    * row is never appended to) an empty frame of its known `schema` — a
+    * local relation, so a probe against it optimizes away. */
   private def readSink(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     if (VersionedTable.latestVersion(dir).isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     else VersionedTable.read(spark, dir)
+
+  /** Whether the sink table at `dir` already holds `appId`'s commit of
+    * `batchId` — a replayed batch returns on this before it runs a job. */
+  private def committed(dir: String, appId: String, batchId: Long): Boolean =
+    VersionedTable.lastTxnVersion(dir, appId).exists(_ >= batchId)
 
   /** S9: append sink + checkpoint, run to completion over the currently
     * available input (Trigger.AvailableNow honors the per-trigger rate
@@ -158,8 +162,9 @@ object StreamingInference {
     * carrying the txn marker (`graft.near_dedup:<checkpointDir>`, batchId),
     * the [[streamUpsert]] idiom. A batch whose commit landed but whose
     * checkpoint did not replays as a no-op: the append returns before any
-    * staging action, so its survivor frame is never evaluated. A batch whose
-    * commit did not land probes a head without its own rows.
+    * staging action, so its survivor frame is never evaluated — and the
+    * batch returns before even that when the marker already covers it. A
+    * batch whose commit did not land probes a head without its own rows.
     *
     * 100 TB notes: per batch the work is ONE bands join of the batch
     * against (history ∪ lower-id batch siblings) — payloads never shuffle
@@ -182,7 +187,7 @@ object StreamingInference {
     import graft.operators.Dedup
     val appId = s"graft.near_dedup:$checkpointDir"
     foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) {
-      (batch, batchId) =>
+      (batch, batchId) => if (!committed(outDir, appId, batchId)) {
         // one signature-kernel pass attaches (sig, seth) to the payload;
         // the drop set, the anti join and the sink write all resolve in
         // the single staging write below while the persist is live
@@ -198,6 +203,7 @@ object StreamingInference {
           VersionedTable.commitAppend(spark, wide.join(drops, Seq(idCol), "left_anti"),
             outDir, txn = Some((appId, batchId)))
         } finally wide.unpersist(false)
+      }
     }
     readSink(spark, outDir, schema).drop("sig", "seth")
   }
@@ -208,7 +214,8 @@ object StreamingInference {
     * 8 bytes per image, payloads never re-read) or of a lower-id batch
     * sibling, then commits the survivors WITH their `phash` column as one
     * txn-marked append (`graft.image_dedup:<checkpointDir>`, batchId) —
-    * the same replay contract. One write per trigger: the sink doubles as
+    * the same replay contract: a covered batch returns before it decodes
+    * an image. One write per trigger: the sink doubles as
     * the hash index, and column pruning keeps the probe from touching
     * image bytes. */
   def streamImageDedup(
@@ -226,7 +233,7 @@ object StreamingInference {
     val appId = s"graft.image_dedup:$checkpointDir"
     val sinkSchema = StructType(StructField("phash", LongType) +: schema.fields)
     foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) {
-      (batch, batchId) =>
+      (batch, batchId) => if (!committed(outDir, appId, batchId)) {
         val index = readSink(spark, outDir, sinkSchema).select(col(idCol), col("phash"))
         // single consumer: the survivor frame (id, phash, payload…) goes
         // straight to the one append — no checkpoint, no second sink, no
@@ -236,6 +243,7 @@ object StreamingInference {
           Perceptual.dedupAgainstIndex(batch, bytesCol, idCol, index, maxHamming, bands)
             .select(col("phash") +: batch.columns.map(c => col(s"`$c`")): _*),
           outDir, txn = Some((appId, batchId)))
+      }
     }
     readSink(spark, outDir, sinkSchema).drop("phash")
   }
@@ -247,7 +255,10 @@ object StreamingInference {
     * batch. Each sink is a [[graft.tables.VersionedTable]] and each batch
     * makes one txn-marked append to each, under its own app id
     * (`graft.route.valid:<checkpointDir>`, `graft.route.quarantine:…`):
-    * a crash between the two appends replays only the missing one.
+    * a crash between the two appends replays only the missing one. A side
+    * with no rows is not appended to, so an all-valid stream leaves the
+    * quarantine table without a version; a batch both markers cover
+    * returns before it validates a row.
     *
     * Scale shape: validation is map-side (one scan, no shuffle); the
     * split is two filters over the one validated frame, localCheckpointed
@@ -262,16 +273,25 @@ object StreamingInference {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): (DataFrame, DataFrame) = {
     import graft.operators.Relational
+    val (validApp, quarantineApp) =
+      (s"graft.route.valid:$checkpointDir", s"graft.route.quarantine:$checkpointDir")
     foreachBatchToCompletion(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) {
       (batch, batchId) =>
-        val checked = Relational.validateRules(batch, rules)
-          .localCheckpoint(true) // two sinks below: validate once
-        VersionedTable.commitAppend(spark,
-          checked.where(col("is_valid") === 1L).drop("violations", "is_valid"),
-          validDir, txn = Some((s"graft.route.valid:$checkpointDir", batchId)))
-        VersionedTable.commitAppend(spark,
-          checked.where(col("is_valid") === 0L).drop("is_valid"),
-          quarantineDir, txn = Some((s"graft.route.quarantine:$checkpointDir", batchId)))
+        if (!committed(validDir, validApp, batchId) ||
+            !committed(quarantineDir, quarantineApp, batchId)) {
+          val checked = Relational.validateRules(batch, rules)
+            .localCheckpoint(true) // two sinks below: validate once
+          val counts = checked.groupBy("is_valid").count().collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          if (counts.contains(1L))
+            VersionedTable.commitAppend(spark,
+              checked.where(col("is_valid") === 1L).drop("violations", "is_valid"),
+              validDir, txn = Some((validApp, batchId)))
+          if (counts.contains(0L))
+            VersionedTable.commitAppend(spark,
+              checked.where(col("is_valid") === 0L).drop("is_valid"),
+              quarantineDir, txn = Some((quarantineApp, batchId)))
+        }
     }
     (readSink(spark, validDir, schema),
       readSink(spark, quarantineDir, schema.add(StructField("violations", StringType))))

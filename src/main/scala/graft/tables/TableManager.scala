@@ -59,13 +59,12 @@ object TableManager {
   }
 
   /** Write-lease length of every table writer (versioned commits,
-    * constraints, views, the IVF index append). The versioned overwrite
-    * ([[VersionedTable.commit]]) holds the lease across a data-proportional
-    * staging write and renews it every `leaseMs/3`
-    * ([[FsIO.withWriteLockHeartbeat]]) — 15 min bounds the longest
-    * tolerated heartbeat STALL, not the stage-write length, so a multi-hour
-    * 100 TB overwrite never looks crashed while a genuinely crashed holder
-    * is healable within one lease. */
+    * constraints, views, the IVF index append). No writer holds the lease
+    * across a data-proportional write: versioned data commits stage
+    * outside it and hold it only for the O(metadata) publish tail, so
+    * 15 min is a wide bound on any legitimate hold, and a crashed
+    * holder's lease is taken over within one lease. It also bounds how
+    * long a publish waits behind a live holder. */
   val DefaultLockLeaseMs: Long = 15L * 60 * 1000
 
   /** N-COLUMN z-order (Delta's `ZORDER BY (c1, ..., cN)`): interleave each
@@ -153,12 +152,9 @@ object TableManager {
   def deleteDir(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(dir), true)
-    // sibling artifacts (the write-lease lock and its crashed-renewal
-    // temps) live NEXT TO the table dir and would linger as orphans past
-    // the delete
-    val lock = new Path(dir + ".__write_lock")
-    fs.delete(lock, false)
-    FsIO.sweepRenewTemps(fs, lock)
+    // the write-lease lock lives NEXT TO the table dir and would linger as
+    // an orphan past the delete
+    fs.delete(new Path(dir + ".__write_lock"), false)
     // a table recreated here must not inherit the old one's day marker
     TimePartitioned.invalidateDayColumn(dir)
     // a versioned table recreated at this path could collide with cached

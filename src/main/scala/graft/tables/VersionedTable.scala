@@ -43,9 +43,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[vacuum]] refcounts files across retained manifests before deleting
   * anything.
   *
-  * Concurrency: commits and vacuums serialize through
-  * [[FsIO.acquireWriteLock]] (the lease guard); readers take no lock ever —
-  * they resolve the log once and from then on touch only immutable files.
+  * Concurrency: every data commit stages its files with no lock and
+  * takes the write lease ([[FsIO.acquireWriteLock]]) only for its
+  * O(metadata) publish tail, rebasing over blind appends that landed
+  * meanwhile and failing with a conflict on anything else
+  * ([[publishRebased]], Delta's optimistic concurrency). Metadata-only
+  * commits, table creation by clone/convert, and [[vacuum]] hold the lease
+  * for their whole (O(metadata)) span. Readers take no lock ever — they
+  * resolve the log once and from then on touch only immutable files.
   */
 object VersionedTable {
 
@@ -238,20 +243,13 @@ object VersionedTable {
           s"VersionedTable: delta entry $v of $dir has no full-manifest anchor — log corrupt")))(applyDelta)
     }
 
-  /** Stage the commit entry (with optional manifest lines and optional
-    * idempotent-transaction marker) and rename it into the log — the atomic
-    * commit point of every version. The txn marker riding IN the commit
-    * entry (not a sidecar) is what makes [[commitAppend]]'s replay check
-    * transactional: the data and the "this batch landed" fact become
-    * visible in one rename, so no crash window can separate them. */
-  private def publishEntry(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      v: Long, rels: Option[Seq[String]], txn: Option[(String, Long)] = None,
-      dataChange: Boolean = true, opLabel: String = ""): Unit =
-    publishEntries(fs, dir, v, rels.map(_.map(FileEntry(_, Nil))), txn, dataChange,
-      opLabel = opLabel)
-
-  /** Like [[publishEntry]] but carrying full (file, deletion-vector)
-    * entries. When `prev` (the previous version's resolved entries) is
+  /** Stage the commit entry (with optional (file, deletion-vector)
+    * manifest lines and optional idempotent-transaction marker) and rename
+    * it into the log — the atomic commit point of every version. The txn
+    * marker riding IN the commit entry (not a sidecar) is what makes
+    * [[commitAppend]]'s replay check transactional: the data and the "this
+    * batch landed" fact become visible in one rename, so no crash window
+    * can separate them. When `prev` (the previous version's resolved entries) is
     * given, the entry serializes as a DELTA of actions — O(change) bytes —
     * unless (a) the chain below has reached [[CheckpointInterval]] (forced
     * checkpoint), (b) there is no anchored predecessor, or (c) the delta
@@ -285,9 +283,10 @@ object VersionedTable {
 
   /** Whether version `v` was committed with `dataChange=false` (a pure
     * re-layout: identical rows, different files). Only [[commitCompact]]
-    * writes the flag, and it rewrites the previous version's rows verbatim
-    * inside the commit lease — that invariant is what lets [[changes]]
-    * skip the step wholesale. */
+    * and [[compactDeletionVectors]] write the flag, and each publishes
+    * exactly the files it read, re-laid verbatim, plus any blind appends
+    * it rebased over — that invariant is what lets [[changes]] skip the
+    * step wholesale. */
   private def isNoDataChange(dir: String, v: Long, ms: Long): Boolean =
     entryText(dir, v, ms)
       .exists(_.split("\n").contains("dataChange=false"))
@@ -735,19 +734,13 @@ object VersionedTable {
       entries.map { case (rel, dvs) => FileEntry(rel, dvs.toList) }, declared)
 
   /** Write `df`'s rows into a staging dir, then move each part file into
-    * `<dir>/data/` under a version-prefixed UUID name (immutable once moved;
-    * a crashed attempt's moved files are unreferenced orphans that the next
+    * `<dir>/data/` under a `<tag>-<uuid>` name (immutable once moved; a
+    * crashed attempt's moved files are unreferenced orphans that the next
     * [[vacuum]] sweeps — never resurrected, because entry publication is the
-    * only commit point). Returns the new relative paths. */
-  private def stageDataFiles(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      df: DataFrame, v: Long): Seq[String] =
-    stageDataFilesTagged(fs, dir, df, f"c$v%05d")
-
-  /** Like [[stageDataFiles]] but with a caller-chosen name prefix — the
-    * lock-free append path stages BEFORE a version number exists (the
-    * version is only assigned inside the publish lease), so its files
-    * carry a UUID tag instead of a version prefix. The prefix is cosmetic
-    * either way: base-name uniqueness comes from the UUID.
+    * only commit point). Returns the new relative paths. Every writer
+    * stages BEFORE a version number exists (the version is only assigned
+    * inside the publish lease), so `tag` is a caller-chosen UUID prefix;
+    * base-name uniqueness comes from the inner UUID either way.
     *
     * The table's layout is decided HERE, once for every row-writing
     * commit: a directory marked day-partitioned ([[TimePartitioned.DaysProp]],
@@ -957,23 +950,36 @@ object VersionedTable {
     ((committed.map(_._1).foldLeft(-1L)(math.max) +: listSchemaVersions(fs, dir)).max: Long) + 1
 
   /** Commit `df` as the whole content of the next version (overwrite).
-    * Returns the new version number. Serialized by the write lease, held
-    * across the staging write and heartbeat-renewed (a 100 TB day-table
-    * overwrite runs hours and must never look crashed to a rival; the
-    * publish aborts if the lease was lost anyway). The new files stage
-    * through the table's layout ([[stageDataFiles]] — day directories on
-    * a day-partitioned table) and publish as a full manifest, so every
-    * crash window before the entry rename leaves the previously committed
-    * history fully visible (the staged files are orphans [[vacuum]]
-    * sweeps) — never a torn table. Earlier versions keep their files for
-    * readers pinned to them until vacuum retires them. */
-  def commit(spark: SparkSession, df: DataFrame, dir: String): Long =
-    FsIO.withWriteLockHeartbeat(dir, "VersionedTable.commit", TableManager.DefaultLockLeaseMs) { hb =>
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val committed = log(dir)
-      val next = nextVersion(fs, dir, committed)
-      val staged = stageDataFiles(fs, dir, df, next)
-      validateStaged(spark, dir, staged, "VersionedTable.commit")
+    * Returns the new version number. The O(data) span — staging through
+    * the table's layout ([[stageDataFilesTagged]]: day directories on a
+    * day-partitioned table) and the constraint proof — runs OUTSIDE the
+    * write lease; only the O(metadata) publish tail ([[publishRebased]])
+    * takes it. A blind append that lands during the stage is rebased: its
+    * files carry into the overwrite's manifest (WriteSerializable order:
+    * overwrite, then append — the table an appender queued behind the
+    * overwrite would have produced). A rival rewrite or overwrite, a
+    * carried file whose schema differs from the staged one, a schema
+    * change, or a rival's first commit on a table that had no version
+    * fails LOUDLY with a [[CommitConflict]], never retried: `df` may read
+    * the very table it replaces.
+    *
+    * Every crash window before the entry rename leaves the previously
+    * committed history fully visible (the staged files are orphans
+    * [[vacuum]] sweeps) — never a torn table. Earlier versions keep their
+    * files for readers pinned to them until vacuum retires them. `txn`
+    * gives [[commitAppend]]'s replay idempotence. */
+  def commit(spark: SparkSession, df: DataFrame, dir: String,
+      txn: Option[(String, Long)] = None): Long = {
+    val op = "VersionedTable.commit"
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val preReplayed = txn.flatMap { case (app, tv) =>
+      lastTxnVersion(dir, app).filter(_ >= tv) }
+    if (preReplayed.isDefined) latestVersion(dir).getOrElse(
+      sys.error(s"$op: txn marker without a committed version in $dir"))
+    else {
+      val head = log(dir).lastOption
+      val readEntries = head.map { case (v, ms) => entriesOfVersion(dir, v, ms) }
+        .getOrElse(Seq.empty)
       // SCHEMA RESET: on a previously EVOLVED table, the overwrite's own
       // schema becomes the declared truth at this version — without it
       // declaredSchemaAt keeps resolving the pre-overwrite evolved schema
@@ -981,14 +987,17 @@ object VersionedTable {
       // of incremental versions on top of the overwrite would silently
       // null/drop its columns. Never-evolved tables skip this (no _schema
       // dir, no cost).
-      if (committed.lastOption.exists { case (pv, _) => declaredSchemaAt(dir, pv).isDefined })
-        writeDeclaredSchema(fs, dir, next, df.schema)
-      // the commit point: a write-once entry staged then renamed into the
-      // log dir (readers never observe a partially named commit entry)
-      hb.verifyOwned("publishing the overwrite")
-      publishEntry(fs, dir, next, Some(staged), opLabel = "WRITE")
-      next
+      val reset = head.collect { case (pv, _) if declaredSchemaAt(dir, pv).isDefined => df.schema }
+      val staged = stageDataFilesTagged(fs, dir, df,
+        s"a${java.util.UUID.randomUUID().toString.take(8)}")
+      val provenAgainst = Constraints.list(dir)
+      validateStaged(spark, dir, staged, op)
+      publishRebased(spark, fs, dir, op, head.fold(-1L)(_._1), readEntries,
+        staged.map(FileEntry(_, Nil)), staged = staged, provenAgainst = provenAgainst,
+        txn = txn, validateRels = staged, declareSchema = reset, overwrite = true,
+        opLabel = "WRITE")
     }
+  }
 
   /** Metadata-only DELETE of whole files: one commit whose manifest is the
     * head's minus every entry whose relative path satisfies `drop` —
@@ -1030,19 +1039,19 @@ object VersionedTable {
     }
   }
 
+  private def schemaKey(s: org.apache.spark.sql.types.StructType) =
+    s.fields.map(f => (f.name.toLowerCase(java.util.Locale.ROOT), normType(f.dataType)))
+      .sortBy(_._1).toSeq
+
   private def requireCompatibleSchema(op: String,
       existing: org.apache.spark.sql.types.StructType,
-      incoming: org.apache.spark.sql.types.StructType): Unit = {
-    def keyed(s: org.apache.spark.sql.types.StructType) =
-      s.fields.map(f => (f.name.toLowerCase(java.util.Locale.ROOT), normType(f.dataType)))
-        .sortBy(_._1).toSeq
-    require(keyed(existing) == keyed(incoming),
+      incoming: org.apache.spark.sql.types.StructType): Unit =
+    require(schemaKey(existing) == schemaKey(incoming),
       s"$op: schema mismatch — table has ${existing.simpleString}, " +
         s"incoming is ${incoming.simpleString}; a mixed-schema manifest reads " +
         "non-deterministically. Cast to the table schema, or evolve explicitly " +
         "through commitAppendEvolve (additive columns) or the mergeSchema " +
         "overwrite path.")
-  }
 
   /** The evolution gate: every EXISTING column must appear in `incoming`
     * with the same normalized type; `incoming` may only ADD columns.
@@ -1084,9 +1093,9 @@ object VersionedTable {
     * therefore overlap their entire write phase and serialize for
     * milliseconds, instead of one blocking for the other's whole upload —
     * the difference between one and N concurrent writers on a 100 TB
-    * table. (Rewrites — update/delete/merge/compact — still hold the
-    * lease across their read-compute-rewrite span: they depend on the
-    * version they read, and that dependency is what the lease serializes.)
+    * table. (Every other data commit — overwrite, update/delete/merge,
+    * compaction — stages the same way and publishes through
+    * [[publishRebased]], which rebases it over appends like this one.)
     *
     * `txn = Some((appId, txnVersion))` makes the append IDEMPOTENT per
     * (appId, txnVersion): if a commit for `appId` with an equal-or-higher
@@ -1375,6 +1384,9 @@ object VersionedTable {
     *    re-masked): [[CommitConflict]] — the result was computed against
     *    rows that no longer exist; the OCC loop re-reads and re-stages.
     *
+    * `readV = -1` means the table had no version when the writer read it;
+    * a rival's first commit landing meanwhile is then a conflict.
+    *
     * `staged` are this attempt's staged files, deleted on replay/conflict
     * so a retry loop doesn't accumulate vacuum litter. `provenAgainst` is
     * the constraint set the lock-free validation proved; if it changed,
@@ -1392,6 +1404,11 @@ object VersionedTable {
         * a crash between leaves an ignorable orphan, never a committed
         * version missing its schema. */
       declareSchema: Option[org.apache.spark.sql.types.StructType] = None,
+      /** `result` REPLACES every row read (a whole-table [[commit]]): its
+        * staged files set the schema, so a carried file must match the
+        * first `validateRels` footer, and any declared-schema change
+        * since `readV` conflicts even when this commit declares none. */
+      overwrite: Boolean = false,
       opLabel: String = ""): Long =
     FsIO.withWriteLockRetry(dir, op, TableManager.DefaultLockLeaseMs,
         maxWaitMs = TableManager.DefaultLockLeaseMs) {
@@ -1404,34 +1421,43 @@ object VersionedTable {
       } else {
         val committed = VersionedTable.log(dir)
         val next = nextVersion(fs, dir, committed)
-        val (hv, hms) = committed.last
+        val hv = committed.lastOption.fold(-1L)(_._1)
+        def conflict(msg: String): Nothing = {
+          staged.foreach(rel => fs.delete(absOf(dir, rel), false))
+          throw new CommitConflict(msg)
+        }
         def keyOf(e: FileEntry) = (e.rel, e.dvs)
+        def footer(rel: String) =
+          org.apache.spark.sql.graft.FooterShim.schemaOf(spark, absOf(dir, rel).toString)
         val (manifest, prevEntries) =
           if (hv == readV) (result, readEntries)
+          else if (readV < 0 || hv < 0)
+            conflict(s"the log head moved from v$readV to v$hv while this commit staged")
           else {
-            val head     = checkedEntries(fs, dir, hv, hms)
+            val head     = checkedEntries(fs, dir, hv, committed.last._2)
             val headKeys = head.map(keyOf).toSet
             val gone     = readEntries.filterNot(e => headKeys(keyOf(e)))
-            if (gone.nonEmpty) {
-              staged.foreach(rel => fs.delete(absOf(dir, rel), false))
-              throw new CommitConflict(s"concurrent commit v$hv modified " +
-                s"${gone.size} file(s) this rewrite read at v$readV " +
-                s"(e.g. ${gone.head.rel})")
-            }
+            if (gone.nonEmpty)
+              conflict(s"concurrent commit v$hv modified ${gone.size} file(s) " +
+                s"this commit read at v$readV (e.g. ${gone.head.rel})")
             val readKeys = readEntries.map(keyOf).toSet
-            (result ++ head.filterNot(e => readKeys(keyOf(e))), head)
+            val carried  = head.filterNot(e => readKeys(keyOf(e)))
+            if (overwrite) validateRels.headOption.map(footer).foreach { s =>
+              carried.find(e => schemaKey(footer(e.rel)) != schemaKey(s)).foreach(e =>
+                conflict(s"concurrent commit v$hv added ${e.rel}, whose schema " +
+                  s"differs from this overwrite's ${s.simpleString}"))
+            }
+            (result ++ carried, head)
           }
         // a schema-publishing rewrite folded its evolution against readV's
         // schema — if a concurrent commit changed the declared schema or
         // the tombstone set since, the fold is stale; retry re-folds
         // against the new head (the OCC loop re-runs the whole attempt)
-        if (declareSchema.isDefined && hv != readV &&
+        if ((declareSchema.isDefined || overwrite) && hv != readV &&
             (declaredSchemaAt(dir, hv) != declaredSchemaAt(dir, readV) ||
-              tombstonesAt(dir, hv) != tombstonesAt(dir, readV))) {
-          staged.foreach(rel => fs.delete(absOf(dir, rel), false))
-          throw new CommitConflict(s"concurrent commit v$hv changed the " +
-            s"declared schema this evolving rewrite folded against at v$readV")
-        }
+              tombstonesAt(dir, hv) != tombstonesAt(dir, readV)))
+          conflict(s"concurrent commit v$hv changed the declared schema " +
+            s"this commit read at v$readV")
         if (Constraints.list(dir) != provenAgainst)
           validateStaged(spark, dir, validateRels, op, validateDeclared)
         requireStagedPresent(fs, dir, staged, op)
@@ -1730,8 +1756,7 @@ object VersionedTable {
     * skip other files' positions. No-op (current version, no commit) when
     * nothing would shrink. */
   def compactDeletionVectors(spark: SparkSession, dir: String): Long =
-    FsIO.withWriteLock(dir, "VersionedTable.compactDeletionVectors",
-        TableManager.DefaultLockLeaseMs) {
+    withOccRetries("VersionedTable.compactDeletionVectors") { () =>
       import org.apache.spark.sql.functions.col
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
@@ -1742,20 +1767,24 @@ object VersionedTable {
       val dvRels = entries.flatMap(_.dvs).distinct
       if (dvRels.size <= 1 && entries.forall(_.dvs.size <= 1)) pv // already compact
       else {
-        val next = nextVersion(fs, dir, committed)
+        // staged lock-free; the publish rebases over blind appends and
+        // conflicts (then re-merges) if a rival re-masked a file read here
         val merged = spark.read.schema(DvSidecarSchema)
           .parquet(dvRels.map(r => absOf(dir, r).toString): _*)
           .select(col("fname"), col("pos")).distinct()
           .coalesce(1).sortWithinPartitions("fname", "pos")
-        val dvRel = stageFiles(fs, dir, merged, f"c$next%05d", None) match {
+        val staged = stageFiles(fs, dir, merged,
+          s"a${java.util.UUID.randomUUID().toString.take(8)}", None)
+        val dvRel = staged match {
           case Seq(one) => one
           case other => sys.error(
             s"compactDeletionVectors: expected one staged sidecar, got ${other.size}")
         }
-        publishEntries(fs, dir, next, Some(entries.map(e =>
-          if (e.dvs.nonEmpty) e.copy(dvs = List(dvRel)) else e)), dataChange = false,
-          prev = Some(entries), opLabel = "OPTIMIZE DV")
-        next
+        publishRebased(spark, fs, dir, "VersionedTable.compactDeletionVectors",
+          pv, entries,
+          entries.map(e => if (e.dvs.nonEmpty) e.copy(dvs = List(dvRel)) else e),
+          staged = staged, provenAgainst = Constraints.list(dir), txn = None,
+          dataChange = false, opLabel = "OPTIMIZE DV")
       }
     }
 
@@ -2517,6 +2546,12 @@ object VersionedTable {
     * across a compaction stays CORRECT but loses shared-file pruning for
     * that pair (no files are shared); step through [[changes]] instead.
     *
+    * The read, the re-layout and the staging write run OUTSIDE the write
+    * lease; the publish tail ([[publishRebased]]) rebases over blind
+    * appends that landed meanwhile (they carry over untouched, so the
+    * rows still equal the predecessor's), and a rival that rewrote or
+    * re-masked a file read here makes the OCC loop re-read and re-stage.
+    *
     * `clusterBy` range-clusters while rewriting (sorted within files), so
     * per-file stats regain the selectivity append fragmentation lost —
     * the matview dirty-group rescan and parquet row-group skipping both
@@ -2547,11 +2582,10 @@ object VersionedTable {
     require(!dayTable || (clusterBy.isEmpty && zOrderCols.isEmpty),
       s"commitCompact: $dir is day-partitioned; its layout is the day staging's, " +
         "so clusterBy/zOrderCols are not supported on it")
-    FsIO.withWriteLock(dir, "VersionedTable.commitCompact", TableManager.DefaultLockLeaseMs) {
+    withOccRetries("VersionedTable.commitCompact") { () =>
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val committed = VersionedTable.log(dir)
       require(committed.nonEmpty, s"commitCompact: $dir has no committed version")
-      val next = nextVersion(fs, dir, committed)
       val (pv, pms) = committed.last
       val entries  = checkedEntries(fs, dir, pv, pms)
       val declared = declaredSchemaAt(dir, pv)
@@ -2585,16 +2619,19 @@ object VersionedTable {
               clusterBy.map(c => org.apache.spark.sql.functions.col(s"`$c`")): _*)
             .sortWithinPartitions(clusterBy.head, clusterBy.tail: _*)
         val laidPhys = toPhysical(laid, declared)
-        val newRels = stageDataFiles(fs, dir, laidPhys, next)
+        val stageTag = s"a${java.util.UUID.randomUUID().toString.take(8)}"
+        val newRels = stageDataFilesTagged(fs, dir, laidPhys, stageTag)
         // an empty table compacts to an empty manifest only if the previous
         // manifest was empty too — otherwise guarantee one schema-bearing file
         val staged =
           if (newRels.nonEmpty || untouched.nonEmpty || entries.isEmpty) newRels
-          else stageDataFiles(fs, dir, laidPhys.coalesce(1), next)
-        publishEntries(fs, dir, next,
-          Some(untouched ++ staged.map(FileEntry(_, Nil))), dataChange = false,
-          prev = Some(entries), opLabel = "OPTIMIZE")
-        next
+          else stageDataFilesTagged(fs, dir, laidPhys.coalesce(1), stageTag)
+        // rows identical to the files read, so a rebase over blind appends
+        // keeps the dataChange=false contract against the new predecessor
+        publishRebased(spark, fs, dir, "VersionedTable.commitCompact", pv, entries,
+          untouched ++ staged.map(FileEntry(_, Nil)), staged = staged,
+          provenAgainst = Constraints.list(dir), txn = None, dataChange = false,
+          opLabel = "OPTIMIZE")
       }
     }
   }

@@ -78,64 +78,109 @@ class ConcurrentAppendSpec extends SparkSpec {
   }
 
   test("an append lands DURING a rewrite's stage; the rewrite rebases over it (WriteSerializable)") {
-    val dir = dirOf()
-    VersionedTable.commitAppend(spark,
-      spark.range(0L, 10L).select(col("id").as("k"), col("id").as("x")), dir) // v0
-    val marker = java.nio.file.Files.createTempDirectory("graft_occ_m")
-      .resolve("rewrite-started").toString
-    val slowSet = udf { (x: Long) =>
-      try java.nio.file.Files.createFile(java.nio.file.Paths.get(marker))
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      Thread.sleep(2000)
-      x + 1000L
+    import ConcurrentAppendSpec.holdOn5
+    // each rewrite: its name, the rewrite of `dir` (held open by a UDF
+    // that touches `marker`), and the rows it leaves of the v0 table
+    val rewrites: Seq[(String, (String, String) => Long, Map[Long, Long])] = Seq(
+      ("commitUpdate", (dir, marker) => {
+        val slow = udf { (x: Long) => holdOn5(marker, x); x }
+        VersionedTable.commitUpdate(spark, dir, col("k") === 5L,
+          Map("x" -> (slow(col("x")) + 1000L)))
+      }, (0L until 10L).map(k => k -> (if (k == 5L) 1005L else k)).toMap),
+      // the overwrite's source reads no table: its rows are the new content
+      ("commit", (dir, marker) => {
+        val slow = udf { (x: Long) => holdOn5(marker, x); x }
+        VersionedTable.commit(spark, spark.range(0L, 10L)
+          .select(col("id").as("k"), (slow(col("id")) * 2L).as("x")), dir)
+      }, (0L until 10L).map(k => k -> k * 2L).toMap),
+      // the scoping predicate's scan holds the compaction's stage open
+      ("commitCompact", (dir, marker) => {
+        val slow = udf { (k: Long) => holdOn5(marker, k); true }
+        VersionedTable.commitCompact(spark, dir, targetFiles = 1, where = Some(slow(col("k"))))
+      }, (0L until 10L).map(k => k -> k).toMap))
+    for ((name, rewrite, expected) <- rewrites) {
+      val dir = dirOf()
+      VersionedTable.commitAppend(spark,
+        spark.range(0L, 10L).select(col("id").as("k"), col("id").as("x")), dir) // v0
+      val marker = java.nio.file.Files.createTempDirectory("graft_occ_m")
+        .resolve("rewrite-started").toString
+      @volatile var rwV = -1L
+      @volatile var rwErr: Throwable = null
+      val rw = new Thread(() => {
+        try rwV = rewrite(dir, marker)
+        catch { case e: Throwable => rwErr = e }
+      })
+      rw.start()
+      val t0 = System.currentTimeMillis()
+      while (!java.nio.file.Files.exists(java.nio.file.Paths.get(marker)) &&
+        System.currentTimeMillis() - t0 < 30000) Thread.sleep(10)
+      // the rewrite is mid-stage (holding NO lease); a blind append lands now
+      val appV = VersionedTable.commitAppend(spark,
+        Seq((100L, 100L)).toDF("k", "x"), dir)
+      rw.join(60000)
+      assert(rwErr == null, s"$name failed: $rwErr")
+      assert(rwV >= 0, s"$name never committed")
+      assert(appV < rwV, s"$name: append ($appV) must land before the rewrite's publish ($rwV)")
+      // the rewrite REBASED: its manifest carries the appended file it never read
+      val rows = VersionedTable.read(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(rows == expected + (100L -> 100L), s"$name: $rows")
+      if (name == "commitCompact")
+        assert(!VersionedTable.dataChanged(dir, rwV), "a rebased compaction changes no rows")
     }
-    @volatile var updV = -1L
-    val upd = new Thread(() => {
-      updV = VersionedTable.commitUpdate(spark, dir, col("k") === 5L,
-        Map("x" -> slowSet(col("x"))))
-    })
-    upd.start()
-    val t0 = System.currentTimeMillis()
-    while (!java.nio.file.Files.exists(java.nio.file.Paths.get(marker)) &&
-      System.currentTimeMillis() - t0 < 30000) Thread.sleep(10)
-    // the rewrite is mid-stage (holding NO lease); a blind append lands now
-    val appV = VersionedTable.commitAppend(spark,
-      Seq((100L, 100L)).toDF("k", "x"), dir)
-    upd.join(60000)
-    assert(updV >= 0, "update never committed")
-    assert(appV < updV, s"append ($appV) must land before the update's publish ($updV)")
-    // the update REBASED: its manifest carries the appended file it never read
-    val rows = VersionedTable.read(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rows(5L) == 1005L, s"update applied: ${rows(5L)}")
-    assert(rows(100L) == 100L, "appended row survives the rebase")
-    assert(rows.size == 11)
   }
 
   test("two racing rewrites: the loser detects the conflict and auto-retries to a correct state") {
-    val dir = dirOf()
-    VersionedTable.commitAppend(spark,
-      spark.range(0L, 200L).select(col("id").as("k"), lit(0L).as("x"))
-        .repartition(4), dir) // v0
-    val start = new CountDownLatch(1)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    def updater(cond: org.apache.spark.sql.Column, delta: Long) = new Thread(() => {
-      start.await()
-      try VersionedTable.commitUpdate(spark, dir, cond,
-        Map("x" -> (col("x") + delta)))
-      catch { case e: Throwable => errs.add(e) }
-    })
-    val a = updater(pmod(col("k"), lit(2L)) === 0L, 1L)
-    val b = updater(pmod(col("k"), lit(2L)) === 1L, 2L)
-    a.start(); b.start(); start.countDown(); a.join(120000); b.join(120000)
-    assert(errs.isEmpty, s"updater errors: ${errs.toArray.mkString("; ")}")
-    assert(VersionedTable.latestVersion(dir).contains(2L), "both updates must commit")
-    val rows = VersionedTable.read(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    assert(rows.length == 200)
-    assert(rows.forall { case (k, x) => x == (if (k % 2 == 0) 1L else 2L) },
-      s"every row carries exactly its own update: ${rows.filterNot {
-        case (k, x) => x == (if (k % 2 == 0) 1L else 2L) }.take(5).mkString(",")}")
+    import ConcurrentAppendSpec.holdOn5
+    // each input holds one rewrite mid-stage (a UDF on key 5) while a rival
+    // rewrite of the same files commits: two disjoint updates, and an
+    // OPTIMIZE re-layout against an update of every row. The held rewrite's
+    // publish conflicts, it re-reads the rival's head and commits on top;
+    // every row carries exactly its update
+    val inputs: Seq[(String, (String, String) => Long, String => Long, Long => Long)] = Seq(
+      ("commitUpdate x2", (dir, marker) => {
+        val two = udf { (k: Long) => holdOn5(marker, k); 2L }
+        VersionedTable.commitUpdate(spark, dir, pmod(col("k"), lit(2L)) === 1L,
+          Map("x" -> (col("x") + two(col("k")))))
+      }, dir => VersionedTable.commitUpdate(spark, dir, pmod(col("k"), lit(2L)) === 0L,
+          Map("x" -> (col("x") + 1L))),
+        k => if (k % 2 == 0) 1L else 2L),
+      ("commitCompact vs commitUpdate", (dir, marker) => {
+        val scope = udf { (k: Long) => holdOn5(marker, k); true }
+        VersionedTable.commitCompact(spark, dir, targetFiles = 1, where = Some(scope(col("k"))))
+      }, dir => VersionedTable.commitUpdate(spark, dir, lit(true), Map("x" -> (col("x") + 1L))),
+        _ => 1L))
+    for ((name, held, rival, expected) <- inputs) {
+      val dir = dirOf()
+      VersionedTable.commitAppend(spark,
+        spark.range(0L, 200L).select(col("id").as("k"), lit(0L).as("x"))
+          .repartition(4), dir) // v0
+      val marker = java.nio.file.Files.createTempDirectory("graft_occ_r")
+        .resolve("held").toString
+      @volatile var heldV = -1L
+      @volatile var heldErr: Throwable = null
+      val t = new Thread(() => {
+        try heldV = held(dir, marker)
+        catch { case e: Throwable => heldErr = e }
+      })
+      t.start()
+      val t0 = System.currentTimeMillis()
+      while (!java.nio.file.Files.exists(java.nio.file.Paths.get(marker)) &&
+        System.currentTimeMillis() - t0 < 30000) Thread.sleep(10)
+      val rivalV = rival(dir)
+      t.join(120000)
+      assert(heldErr == null, s"$name: held rewrite failed: $heldErr")
+      assert(rivalV == 1L && heldV == 2L,
+        s"$name: the rival must commit during the held stage (v$rivalV), the held one after (v$heldV)")
+      if (name.startsWith("commitCompact"))
+        assert(!VersionedTable.dataChanged(dir, heldV), s"$name: a compaction changes no rows")
+      val rows = VersionedTable.read(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.length == 200, name)
+      assert(rows.forall { case (k, x) => x == expected(k) },
+        s"$name: every row carries exactly its own update: ${rows.filterNot {
+          case (k, x) => x == expected(k) }.take(5).mkString(",")}")
+    }
   }
 
   test("DV delete rebases over a concurrent append; appended rows stay unmasked") {
@@ -176,4 +221,15 @@ class ConcurrentAppendSpec extends SparkSpec {
     assert(rows.contains((0L, 999L)), "the rebased-over appended row survives")
     assert(rows.size == 46) // 50 - 5 masked + 1 appended
   }
+}
+
+object ConcurrentAppendSpec {
+  /** On key 5: mark the stage as started (create `marker`) and hold it open
+    * for 2 s — the window a rival append lands in. */
+  def holdOn5(marker: String, k: Long): Unit =
+    if (k == 5L) {
+      try java.nio.file.Files.createFile(java.nio.file.Paths.get(marker))
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      Thread.sleep(2000)
+    }
 }

@@ -209,10 +209,18 @@ class StreamingSpec extends SparkSpec {
       val commit0 = new java.io.File(s"$work/ckpt/commits/0")
       assert(commit0.delete())
       new java.io.File(s"$work/ckpt/commits/.0.crc").delete()
-      assert(run() == survivors, s"$sink: replayed survivors differ")
+      val (replayed, replay) = graft.obs.Obs.measure(spark)(run())
+      assert(replayed == survivors, s"$sink: replayed survivors differ")
       assert(commit0.exists, s"$sink: the uncheckpointed batch must re-execute")
       assert(state() == before,
         s"$sink: the replay must publish no version and stage no file")
+      // the replayed batch returns on its txn marker before it runs a job:
+      // the re-run costs exactly what a run with no batch to execute does
+      // (the final read of the sink)
+      val (_, idle) = graft.obs.Obs.measure(spark)(run())
+      assert(replay.jobs == idle.jobs,
+        s"$sink: the replayed batch ran Spark jobs: ${replay.jobRows.map(_.label)} " +
+          s"vs an idle run's ${idle.jobRows.map(_.label)}")
     }
 
   test("streamValidateRoute: empty source runs zero batches and returns empty frames, not errors") {
@@ -227,14 +235,17 @@ class StreamingSpec extends SparkSpec {
     assert(v.count() == 0L && q.count() == 0L)
     assert(v.columns.toSeq == Seq("id", "v"))
     assert(q.columns.toSeq == Seq("id", "v", "violations"))
-    // a sink that only ever received empty batches: every row is valid, so
-    // the quarantine table holds nothing but empty appends
+    // a side that never receives a row: every row is valid, so the
+    // quarantine table is never appended to and reads as the typed empty
+    // frame
     Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v").coalesce(1).write.parquet(s"$work/src/f1")
     val (v1, q1) = StreamingInference.streamValidateRoute(
       spark, s"$srcDir/*", schema, Seq("v_small" -> (col("v") < 50)),
       s"$work/valid1", s"$work/quar1", s"$work/ckpt1")
     assert(v1.count() == 2L && q1.count() == 0L)
     assert(q1.columns.toSeq == Seq("id", "v", "violations"))
+    assert(VersionedTable.latestVersion(s"$work/quar1").isEmpty,
+      "an all-valid stream must commit no quarantine version")
   }
 
   test("streamValidateRoute: valid/quarantine dual sink, exactly-once replay") {
@@ -390,9 +401,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsertPartitioned: live second writer loses loudly, target untouched; stale lease taken over") {
-    // the upsert target's write lease: a merge publish waits out a live
-    // lease (bounded retry), so the writer that must lose loudly here is a
-    // non-waiting one — a versioned overwrite of the same target
+    // the upsert target's write lease: a data commit's publish waits out a
+    // live lease (bounded retry), so the writer that must lose loudly here
+    // is a non-waiting metadata-only one — a restore of the same target
     import graft.tables.{FsIO, VersionedTable}
     import spark.implicits._
     val targetDir = Files.createTempDirectory("graft_pmerge_lock").toString + "/target"
@@ -410,7 +421,7 @@ class StreamingSpec extends SparkSpec {
     val lockA  = FsIO.acquireWriteLock(targetDir, "streamUpsert", staleMs = 600000)
     val before = fileState(targetDir)
     val e = intercept[RuntimeException] {
-      VersionedTable.commit(spark, Seq((2L, 9.0)).toDF("id", "bal"), targetDir)
+      VersionedTable.commitRestore(spark, targetDir, 0L)
     }
     assert(e.getMessage.contains("another writer"), e.getMessage)
     assert(fileState(targetDir) == before, "loser must not have touched the target")
@@ -431,12 +442,15 @@ class StreamingSpec extends SparkSpec {
     FsIO.releaseWriteLock(lockB)
   }
 
-  test("compact under a live foreign lease fails loudly and leaves the dir intact") {
+  test("compact under a live foreign lease stages but publishes only after release") {
     // a stream sink is a versioned table that grows one file set per
-    // micro-batch; its compaction is commitCompact, which must refuse a
-    // live lease held by another writer before it stages anything
+    // micro-batch; its compaction is commitCompact, which stages with no
+    // lock and publishes only once the lease held by another writer is gone
     import graft.tables.FsIO
     import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
     val work   = Files.createTempDirectory("graft_compact_lock").toString
     val srcDir = s"$work/src"
     for (f <- 0 until 4)
@@ -449,24 +463,29 @@ class StreamingSpec extends SparkSpec {
       sink, s"$work/quar", s"$work/ckpt")
     def files(): Seq[String] =
       VersionedTable.entriesOf(sink, VersionedTable.latestVersion(sink).get).map(_._1)
-    def onDisk(): Map[String, Long] = {
+    def dataFiles(): Set[String] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(sink)).map(f => f.getPath -> f.length()).toMap
+      walk(new java.io.File(s"$sink/data")).map(_.getName).filter(_.endsWith(".parquet")).toSet
     }
     assert(files().size > 2, "every micro-batch appends its own files")
     val version = VersionedTable.latestVersion(sink)
-    val before  = onDisk()
+    val before  = dataFiles()
     val lock = FsIO.acquireWriteLock(sink, "other-compactor", staleMs = 600000)
-    val e = intercept[RuntimeException] {
-      VersionedTable.commitCompact(spark, sink, targetFiles = 2)
-    }
-    assert(e.getMessage.contains("another writer"), e.getMessage)
-    assert(VersionedTable.latestVersion(sink) == version, "failed compaction must not publish")
-    assert(onDisk() == before, "failed compaction must not touch the sink")
-    assert(VersionedTable.read(spark, sink).count() == 100)
-    FsIO.releaseWriteLock(lock)
-    VersionedTable.commitCompact(spark, sink, targetFiles = 2)
+    val fut =
+      try {
+        val f = Future(VersionedTable.commitCompact(spark, sink, targetFiles = 2))
+        val deadline = System.currentTimeMillis() + 30000
+        while ((dataFiles() -- before).isEmpty && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        assert((dataFiles() -- before).nonEmpty, "compaction must stage under the lease")
+        Thread.sleep(500) // the publish now polls the held lease
+        assert(!f.isCompleted, "compaction must not publish under a live lease")
+        assert(VersionedTable.latestVersion(sink) == version, "the head must not move")
+        assert(VersionedTable.read(spark, sink).count() == 100)
+        f
+      } finally FsIO.releaseWriteLock(lock)
+    assert(Await.result(fut, 90.seconds) == version.get + 1)
     assert(VersionedTable.read(spark, sink).count() == 100)
     assert(files().size == 2)
   }

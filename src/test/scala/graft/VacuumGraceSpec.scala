@@ -69,34 +69,41 @@ class VacuumGraceSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val dir = dirOf()
-    VersionedTable.commitAppend(spark, Seq((1L, "a")).toDF("id", "s"), dir)
-    val referenced = VersionedTable.filesOf(dir, 0L).toSet
-    // hold the table's write lease so the rival append can stage (lock-free)
-    // but cannot publish — the window a racing vacuum exploits
-    val lock = FsIO.acquireWriteLock(dir, "test-hold", staleMs = 120000)
-    try {
-      val fut = Future(VersionedTable.commitAppend(spark,
-        Seq((2L, "b")).toDF("id", "s"), dir))
-      def unreferenced(): Seq[java.io.File] = {
-        val dd = new java.io.File(s"$dir/data")
-        if (!dd.exists) Seq.empty
-        else dd.listFiles.toSeq.filter(f => !referenced.contains("data/" + f.getName))
-      }
-      val deadline = System.currentTimeMillis() + 30000
-      while (unreferenced().isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      assert(unreferenced().nonEmpty, "rival append staged files while the lease was held")
-      Thread.sleep(500) // let all of the rival's staging renames land
-      // simulate the graceless vacuum: delete the staged files
-      unreferenced().foreach(f => assert(f.delete()))
-      FsIO.releaseWriteLock(lock)
-      val ex = intercept[IllegalArgumentException] { Await.result(fut, 90.seconds) }
-      assert(ex.getMessage.contains("swept before publish"), ex.getMessage)
-      // the table head is untouched — no manifest references vanished files
-      assert(VersionedTable.latestVersion(dir).contains(0L))
-      assert(VersionedTable.read(spark, dir).count() == 1L)
-    } finally FsIO.releaseWriteLock(lock)
+    // every data commit stages lock-free: an append, an overwrite, and an
+    // OPTIMIZE re-layout
+    val writers: Seq[(String, String => Long)] = Seq(
+      "commitAppend"  -> (dir => VersionedTable.commitAppend(spark, Seq((2L, "b")).toDF("id", "s"), dir)),
+      "commit"        -> (dir => VersionedTable.commit(spark, Seq((2L, "b")).toDF("id", "s"), dir)),
+      "commitCompact" -> (dir => VersionedTable.commitCompact(spark, dir, targetFiles = 1)))
+    for ((name, write) <- writers) {
+      val dir = dirOf()
+      VersionedTable.commitAppend(spark, Seq((1L, "a")).toDF("id", "s"), dir)
+      val referenced = VersionedTable.filesOf(dir, 0L).toSet
+      // hold the table's write lease so the rival writer can stage
+      // (lock-free) but cannot publish — the window a racing vacuum exploits
+      val lock = FsIO.acquireWriteLock(dir, "test-hold", staleMs = 120000)
+      try {
+        val fut = Future(write(dir))
+        def unreferenced(): Seq[java.io.File] = {
+          val dd = new java.io.File(s"$dir/data")
+          if (!dd.exists) Seq.empty
+          else dd.listFiles.toSeq.filter(f => !referenced.contains("data/" + f.getName))
+        }
+        val deadline = System.currentTimeMillis() + 30000
+        while (unreferenced().isEmpty && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        assert(unreferenced().nonEmpty, s"$name staged files while the lease was held")
+        Thread.sleep(500) // let all of the rival's staging renames land
+        // simulate the graceless vacuum: delete the staged files
+        unreferenced().foreach(f => assert(f.delete()))
+        FsIO.releaseWriteLock(lock)
+        val ex = intercept[IllegalArgumentException] { Await.result(fut, 90.seconds) }
+        assert(ex.getMessage.contains("swept before publish"), s"$name: ${ex.getMessage}")
+        // the table head is untouched — no manifest references vanished files
+        assert(VersionedTable.latestVersion(dir).contains(0L), name)
+        assert(VersionedTable.read(spark, dir).count() == 1L, name)
+      } finally FsIO.releaseWriteLock(lock)
+    }
   }
 
   test("snapshot commit on an evolved table resets the declared schema") {

@@ -28,9 +28,10 @@ object HaltingLocalFs { val ExitCode = 86 }
 
 /** Child process for [[VersionedLogCrashSpec]]: a REAL second JVM whose
   * `file` scheme is [[HaltingLocalFs]], running ONE commit on the day
-  * table `dir` — `append` (commitAppend of [[NewRows]]) or `commit` (the
-  * whole-table commit of the same rows) — so the crash lands exactly at
-  * the chosen side of the log-entry rename. */
+  * table `dir` — `append` (commitAppend of [[NewRows]]), `commit` (the
+  * whole-table commit of the same rows) or `compact` (commitCompact of
+  * the table as it stands) — so the crash lands exactly at the chosen side
+  * of the log-entry rename. */
 object LogCrashChild {
 
   val Day1    = 1700000000000000000L // 2023-11-14 UTC, epoch nanos
@@ -48,8 +49,11 @@ object LogCrashChild {
     spark.sparkContext.setLogLevel("ERROR")
     val df = spark.range(0L, NewRows.toLong).select(
       (lit(Day1) + col("id") * lit(DayNs)).as("ts"), (col("id") + NewTag).as("v"))
-    if (mode == "append") VersionedTable.commitAppend(spark, df, dir)
-    else VersionedTable.commit(spark, df, dir)
+    mode match {
+      case "append"  => VersionedTable.commitAppend(spark, df, dir)
+      case "compact" => VersionedTable.commitCompact(spark, dir, targetFiles = 1)
+      case _         => VersionedTable.commit(spark, df, dir)
+    }
     println("CHILD_DONE") // unreachable when the halt point is armed
     spark.stop()
   }
@@ -66,7 +70,8 @@ object LogCrashChild {
   *    [[VersionedTable.vacuum]] sweeps them (and the entry temp) once the
   *    grace window has passed;
   *  - halted AFTER the rename: the batch (append) or the overwrite
-  *    (commit) is visible exactly once.
+  *    (commit) is visible exactly once, and a compaction is a new
+  *    `dataChange=false` version holding the same rows.
   *
   * Either way the dead child still holds the table lease; the parent
   * ages it out (a `ts=1` body, as a crashed writer's lease looks once
@@ -114,15 +119,17 @@ class VersionedLogCrashSpec extends SparkSpec {
     assert(staged.nonEmpty && staged.forall(_.startsWith("data/p_day=")),
       s"the child must have staged day files: $staged")
     val expected = (mode, haltAt) match {
-      case (_, "before")      => oldRows
-      case ("append", _)      => oldRows ++ newRows
-      case _                  => newRows
+      case (_, "before") | ("compact", _) => oldRows
+      case ("append", _)                  => oldRows ++ newRows
+      case _                              => newRows
     }
     val got = vals(dir)
     assert(got.size == got.toSet.size, s"duplicated rows after the crash: $got")
     assert(got.toSet == expected,
       s"$mode halted $haltAt the rename: expected ${expected.size} rows, got ${got.size}")
     assert(VersionedTable.latestVersion(dir).contains(if (haltAt == "before") 0L else 1L))
+    if (mode == "compact" && haltAt == "after")
+      assert(!VersionedTable.dataChanged(dir, 1L), "a compaction changes no rows")
     // the dead child's lease, aged out the way a crashed writer's looks
     val lock = dir + ".__write_lock"
     assert(new java.io.File(lock).exists, "the halted child must die holding the lease")
@@ -159,5 +166,13 @@ class VersionedLogCrashSpec extends SparkSpec {
 
   test("commit halted after the log rename: the overwrite is visible exactly once") {
     crashAt("commit", "after")
+  }
+
+  test("commitCompact halted before the log rename: old snapshot stands") {
+    crashAt("compact", "before")
+  }
+
+  test("commitCompact halted after the log rename: same rows, new layout") {
+    crashAt("compact", "after")
   }
 }

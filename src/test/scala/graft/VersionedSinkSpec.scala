@@ -37,18 +37,23 @@ class VersionedSinkSpec extends SparkSpec {
 
   test("crash-window replay: a re-delivered batch id commits exactly once") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_vsink_rp").toString
-    val table = root + "/t"
-    val sink = new VersionedStream().createSink(spark.sqlContext,
-      Map("path" -> table, "checkpointLocation" -> (root + "/ckpt")),
-      Seq.empty, OutputMode.Append())
-    val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    sink.addBatch(0L, b0)
-    sink.addBatch(0L, b0) // crash between data-commit and checkpoint-commit
-    assert(VersionedTable.read(spark, table).count() == 2L, "replayed batch must be skipped")
-    assert(VersionedTable.latestVersion(table).contains(0L))
-    sink.addBatch(1L, Seq((3L, "c")).toDF("id", "s"))
-    assert(VersionedTable.read(spark, table).count() == 3L)
+    // batch 1 is the new rows (Append) or the whole new state (Complete)
+    for ((mode, b1) <- Seq(
+        OutputMode.Append()   -> Seq((3L, "c")),
+        OutputMode.Complete() -> Seq((1L, "a"), (2L, "b"), (3L, "c")))) {
+      val root = Files.createTempDirectory("graft_vsink_rp").toString
+      val table = root + "/t"
+      val sink = new VersionedStream().createSink(spark.sqlContext,
+        Map("path" -> table, "checkpointLocation" -> (root + "/ckpt")),
+        Seq.empty, mode)
+      val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+      sink.addBatch(0L, b0)
+      sink.addBatch(0L, b0) // crash between data-commit and checkpoint-commit
+      assert(VersionedTable.read(spark, table).count() == 2L, s"$mode: replayed batch must be skipped")
+      assert(VersionedTable.latestVersion(table).contains(0L), s"$mode: a replay adds no version")
+      sink.addBatch(1L, b1.toDF("id", "s"))
+      assert(VersionedTable.read(spark, table).count() == 3L, s"$mode")
+    }
   }
 
   test("distinct queries without an explicit checkpoint option never share a replay marker") {

@@ -189,21 +189,37 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.read(spark, dir).count() == 1L)
   }
 
-  test("commit serializes through the write lease: live contender fails loudly") {
+  test("commit and commitCompact stage under a live lease, publish after release") {
     import spark.implicits._
-    // the overwrite and the OPTIMIZE re-layout both refuse a live lease
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // the overwrite and the OPTIMIZE re-layout stage with no lock; only
+    // their publish waits out a live lease
     val writers: Seq[(String, String => Long)] = Seq(
       "commit"        -> (dir => VersionedTable.commit(spark, Seq((2L, 2)).toDF("id", "v"), dir)),
       "commitCompact" -> (dir => VersionedTable.commitCompact(spark, dir, targetFiles = 1)))
     for ((name, write) <- writers) {
       val dir  = dirOf()
       VersionedTable.commit(spark, Seq((1L, 1), (3L, 3)).toDF("id", "v").repartition(2), dir)
+      val v0Files = VersionedTable.filesOf(dir, 0L).toSet
+      def staged(): Seq[String] =
+        new java.io.File(s"$dir/data").listFiles.map("data/" + _.getName)
+          .filter(f => f.endsWith(".parquet") && !v0Files(f)).toSeq
       val lock = graft.tables.FsIO.acquireWriteLock(dir, "other-committer", staleMs = 600000)
-      val e = intercept[RuntimeException](write(dir))
-      assert(e.getMessage.contains("another writer"), s"$name: ${e.getMessage}")
-      assert(VersionedTable.latestVersion(dir).contains(0L), s"$name: failed commit must not publish")
-      graft.tables.FsIO.releaseWriteLock(lock)
-      assert(write(dir) == 1L, name)
+      val fut =
+        try {
+          val f = Future(write(dir))
+          val deadline = System.currentTimeMillis() + 30000
+          while (staged().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+          assert(staged().nonEmpty, s"$name: must stage while the lease is held")
+          Thread.sleep(500) // the publish now polls the held lease
+          assert(!f.isCompleted, s"$name: must not publish under a live lease")
+          assert(VersionedTable.latestVersion(dir).contains(0L), s"$name: the head must not move")
+          f
+        } finally graft.tables.FsIO.releaseWriteLock(lock)
+      assert(Await.result(fut, 90.seconds) == 1L, name)
+      assert(VersionedTable.filesOf(dir, 1L).toSet == staged().toSet, name)
     }
   }
 

@@ -28,22 +28,30 @@ class MockConditionalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 object MockConditionalFs { val monitor = new Object }
 
-/** Round-18 lock-protocol hardening specs:
-  *  - ADVICE-r17 medium: the heartbeat's renewal boundary FENCE — a
-  *    renewal whose ownership-read→rewrite span straddles the lease
-  *    boundary must read as LOST, not as a success that resets the
-  *    holder's clock while a displaced rival aborts.
-  *  - ADVICE-r17 low: renewals land by temp-sibling + atomic rename, so
-  *    a rival polling the lock can never parse a truncated `ts=` prefix
-  *    as a tiny long and classify a LIVE lease as stale.
-  *  - VERDICT-r17 #4: the `graft.lock.conditionalPut` capability
-  *    attestation — a store with conditional creates (modern S3) gets an
-  *    EXACT lease instead of a refusal-or-lie choice; proven exactly-once
-  *    under a 16-thread acquire race on a mock conditional-create FS.
-  *  - day-table writers serialize on the versioned log's lease: an
-  *    append racing a live overwrite commits on top of it (never under
-  *    the replaced head), concurrent appends all land, and a retention
-  *    drop refuses to race a live maintenance writer. */
+/** A RawLocalFileSystem wearing a scheme FsIO does not recognize as
+  * having an atomic create-no-overwrite — the stand-in for S3A-without-
+  * conditional-writes in the lock-honesty gate test. */
+class MockNonAtomicFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "mock"
+  override def getUri: java.net.URI = java.net.URI.create("mock:///")
+}
+
+/** Lock-protocol specs:
+  *  - a fixed lease goes stale under a holder that outlives it, and a
+  *    short-lease contender still honors a holder's DECLARED lease;
+  *  - [[FsIO.replaceText]] (change-feed offsets, table properties) lands
+  *    by temp-sibling + atomic rename, so a concurrent reader never
+  *    parses a truncated body, and writes in place on an object store
+  *    with no AbstractFileSystem binding;
+  *  - lock honesty: a scheme without an atomic create is refused unless
+  *    the operator opts in, and the `graft.lock.conditionalPut`
+  *    attestation gives a store with conditional creates (modern S3) an
+  *    EXACT lease, proven exactly-once under a 16-thread acquire race on
+  *    a mock conditional-create FS;
+  *  - day-table writers on the versioned log: an append that lands
+  *    during an overwrite's stage survives it (the overwrite rebases),
+  *    concurrent appends all land, and a retention drop refuses to race
+  *    a live maintenance writer. */
 class LockProtocolR18Spec extends SparkSpec {
 
   private def tmp() = Files.createTempDirectory("graft_lockr18").toString
@@ -51,107 +59,87 @@ class LockProtocolR18Spec extends SparkSpec {
   private val Day1  = 1700000000000000000L
   private val DayNs = 86400L * 1000000000L
 
-  // ------------------------------------------------ renewal boundary fence
+  test("a fixed lease goes stale under a slow holder") {
+    // ts is written once at acquire, so a rival's takeover succeeds once
+    // the holder outlives the lease
+    val dir = tmp() + "/t"
+    FsIO.acquireWriteLock(dir, "slow-fixed", staleMs = 400)
+    Thread.sleep(900)
+    val rival = FsIO.acquireWriteLock(dir, "rival", staleMs = 400)
+    FsIO.releaseWriteLock(rival)
+  }
 
-  test("a renewal that straddles the lease boundary reads as LOST") {
-    val dir  = tmp() + "/t"
-    val conf = FsIO.hadoopConf()
-    val l    = FsIO.acquireWriteLock(dir, "w", staleMs = 400, conf)
-    val hb   = new FsIO.Heartbeat(l, "w", 400, conf)
-    // a prompt renewal inside the window: held, clock advances
-    FsIO.heartbeatTick(hb, 400, () => FsIO.renewWriteLock(l, "w", conf))
-    assert(!hb.lost, "an in-window renewal must keep the lease held")
-    // a renewal that stalls past the boundary before its write lands:
-    // LOST — even though the write succeeded and the lock file still
-    // carries this owner, a rival's legal takeover may have been
-    // clobbered mid-stall, and "file still mine" is not evidence it
-    // stayed so through the stall
-    FsIO.heartbeatTick(hb, 400, () => {
-      Thread.sleep(700)
-      FsIO.renewWriteLock(l, "w", conf)
-    })
-    assert(hb.lost, "a boundary-straddling renewal must read as lost")
-    intercept[RuntimeException] { hb.verifyOwned("publishing") }
+  test("lock honesty: a scheme without atomic create is refused unless opted in") {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.mock.impl", classOf[MockNonAtomicFs].getName)
+    conf.set("fs.mock.impl.disable.cache", "true")
+    val dir = "mock:" + tmp() + "/t"
+    val e = intercept[IllegalStateException] {
+      FsIO.acquireWriteLock(dir, "w", staleMs = 60000, conf = conf)
+    }
+    assert(e.getMessage.contains(FsIO.BestEffortLockKey))
+    conf.setBoolean(FsIO.BestEffortLockKey, true)
+    val l = FsIO.acquireWriteLock(dir, "w", staleMs = 60000, conf = conf)
     FsIO.releaseWriteLock(l, conf)
   }
 
-  test("lease renewal is torn-read-free under concurrent polling") {
-    val dir      = tmp() + "/t"
-    val lockPath = dir + ".__write_lock"
+  // ---------------------------------------------------------- replaceText
+
+  private def body(): String = s"owner=w\nts=${System.currentTimeMillis()}\nlabel=w\n"
+
+  test("replaceText is torn-read-free under concurrent polling") {
+    val dir  = tmp() + "/t"
+    val path = new Path(dir + ".state")
+    FsIO.writeText(path.toString, body())
     @volatile var stop = false
     val torn  = new java.util.concurrent.atomic.AtomicInteger(0)
     val reads = new java.util.concurrent.atomic.AtomicInteger(0)
     val reader = new Thread(() => while (!stop) {
-      // the exact parse a rival's staleness poll runs: a truncated body
-      // (empty, or a partial ts digit prefix) would misread a LIVE lease
-      FsIO.readText(lockPath).foreach { body =>
+      // a truncated body (empty, or a partial ts digit prefix) would
+      // misparse in any reader of the file
+      FsIO.readText(path.toString).foreach { body =>
         reads.incrementAndGet()
         val tsOk = body.split("\n").exists(ln =>
           ln.startsWith("ts=") && ln.stripPrefix("ts=").toLongOption.exists(_ > 1600000000000L))
         if (!(body.contains("owner=") && tsOk && body.contains("label="))) {
           torn.incrementAndGet()
-          System.err.println(s"TORN LOCK BODY: <<<$body>>>")
+          System.err.println(s"TORN BODY: <<<$body>>>")
         }
       }
     })
-    val l = FsIO.acquireWriteLock(dir, "w", staleMs = 60000)
+    val tmpSibling = new Path(dir + ".state.tmp")
     reader.start()
-    (1 to 300).foreach { _ => assert(FsIO.renewWriteLock(l, "w")) }
+    (1 to 300).foreach { _ => FsIO.replaceText(path, body(), tmpSibling) }
     stop = true
     reader.join(10000)
-    assert(reads.get > 0, "reader never observed the lock")
-    assert(torn.get == 0, s"${torn.get} torn lock bodies observed by a concurrent poller")
-    FsIO.releaseWriteLock(l)
+    assert(reads.get > 0, "reader never observed the file")
+    assert(torn.get == 0, s"${torn.get} torn bodies observed by a concurrent poller")
     // the rename consumed every temp sibling — nothing lingers
     val leftovers = new java.io.File(dir).getParentFile.listFiles()
-      .map(_.getName).filter(_.contains(".renew."))
-    assert(leftovers.isEmpty, s"renewal temp files linger: ${leftovers.mkString(",")}")
+      .map(_.getName).filter(_.contains(".tmp"))
+    assert(leftovers.isEmpty, s"temp files linger: ${leftovers.mkString(",")}")
   }
 
-  test("renewal works on an object-store scheme with no AbstractFileSystem binding") {
+  test("replaceText works on an object-store scheme with no AbstractFileSystem binding") {
     // mockcond deliberately registers only fs.mockcond.impl — no
     // fs.AbstractFileSystem binding, the shape of most object-store
-    // connectors. A FileContext-rename renewal would throw
-    // UnsupportedFileSystemException on every heartbeat tick here, so the
-    // holder could never renew on exactly the stores the conditional-PUT
-    // attestation admits; the in-place atomic-PUT path must renew fine.
+    // connectors. A FileContext-rename replace would throw
+    // UnsupportedFileSystemException on every call here, on exactly the
+    // stores the conditional-PUT attestation admits; the in-place
+    // atomic-PUT path must replace fine.
     val conf = new org.apache.hadoop.conf.Configuration()
     conf.set("fs.mockcond.impl", classOf[MockConditionalFs].getName)
     conf.set("fs.mockcond.impl.disable.cache", "true")
-    conf.setBoolean(FsIO.ConditionalPutLockKey, true)
-    val dir = "mockcond:" + tmp() + "/t"
-    val l   = FsIO.acquireWriteLock(dir, "w", staleMs = 60000, conf = conf)
-    val ts0 = FsIO.readText(l.path.toString, conf).get
+    val path = new Path("mockcond:" + tmp() + "/t.state")
+    FsIO.writeText(path.toString, body(), conf)
+    val ts0 = FsIO.readText(path.toString, conf).get
       .split("\n").find(_.startsWith("ts=")).get.stripPrefix("ts=").toLong
     Thread.sleep(5)
-    assert(FsIO.renewWriteLock(l, "w", conf), "renewal must succeed on the object-store scheme")
-    val body1 = FsIO.readText(l.path.toString, conf).get
-    assert(body1.contains(s"owner=${l.owner}"), "renewal must preserve ownership")
+    FsIO.replaceText(path, body(), new Path(path.toString + ".tmp"), conf)
+    val body1 = FsIO.readText(path.toString, conf).get
+    assert(body1.contains("owner=w"), "the replace must land the whole body")
     val ts1 = body1.split("\n").find(_.startsWith("ts=")).get.stripPrefix("ts=").toLong
-    assert(ts1 > ts0, "renewal must advance the lease ts")
-    FsIO.releaseWriteLock(l, conf)
-  }
-
-  test("crashed-renewal temp orphans are swept at release and at stale takeover") {
-    val dir      = tmp() + "/t"
-    val lockPath = dir + ".__write_lock"
-    def orphans(): Seq[String] = {
-      val files = new java.io.File(dir).getParentFile.listFiles()
-      if (files == null) Seq.empty else files.map(_.getName).filter(_.contains(".renew.")).toSeq
-    }
-    // owned release sweeps a dead holder's leftover temp
-    val l = FsIO.acquireWriteLock(dir, "w", staleMs = 60000)
-    FsIO.writeText(lockPath + ".renew.deadbeef", "owner=dead\nts=1\nlabel=crashed\n")
-    assert(orphans().nonEmpty)
-    FsIO.releaseWriteLock(l)
-    assert(orphans().isEmpty, s"release must sweep renew temps: ${orphans()}")
-    // stale takeover sweeps the dead holder's temp too
-    val stale = FsIO.acquireWriteLock(dir, "w-crashing", staleMs = 50)
-    FsIO.writeText(lockPath + s".renew.${stale.owner.take(8)}", "owner=x\nts=1\nlabel=x\n")
-    Thread.sleep(120) // age the lease past the taker's staleness bar
-    val taker = FsIO.acquireWriteLock(dir, "w-taker", staleMs = 100)
-    assert(orphans().isEmpty, s"takeover must sweep the dead holder's temps: ${orphans()}")
-    FsIO.releaseWriteLock(taker)
+    assert(ts1 > ts0, "the replace must land the new body")
   }
 
   test("a short-lease contender honors the holder's DECLARED lease") {
@@ -226,30 +214,37 @@ class LockProtocolR18Spec extends SparkSpec {
   test("append racing a live staged overwrite lands entirely in the post-swap table") {
     val dir = tmp() + "/t"
     seedDays(dir, 6)
-    val lock = new Path(dir + ".__write_lock")
-    val fs   = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ~2.9 s single-partition stage write, held under the table lease —
-    // the live-writer window
-    val slow = udf((x: Long) => { Thread.sleep(120L); x })
+    val marker = Files.createTempDirectory("graft_lockr18_m").resolve("staging").toString
+    // ~2.9 s single-partition stage write, holding no lease — the window
+    // the append below lands in
+    val slow = udf { (x: Long) =>
+      try Files.createFile(java.nio.file.Paths.get(marker))
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      Thread.sleep(120L)
+      x
+    }
     val next = spark.range(0, 24, 1, numPartitions = 1)
       .select((lit(Day1 + DayNs) + col("id")).as("ts"), slow(col("id") + 100L).as("v"))
     val writerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    @volatile var ov = -1L
     val writer = new Thread(() => {
-      try TimePartitioned.write(next, dir, "ts")
+      try ov = TimePartitioned.write(next, dir, "ts")
       catch { case t: Throwable => writerErr.set(t) }
     })
     writer.start()
     val deadline = System.currentTimeMillis() + 30000
-    while (!fs.exists(lock) && writerErr.get() == null &&
-        System.currentTimeMillis() < deadline) Thread.onSpinWait()
-    assert(fs.exists(lock), s"overwrite never took the lease: ${writerErr.get()}")
-    // mid-stage append: it stages lock-free, then its publish waits out
-    // the overwrite's lease and commits on top of the NEW version — an
-    // append published under the old head would have been replaced
+    while (!Files.exists(java.nio.file.Paths.get(marker)) && writerErr.get() == null &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(Files.exists(java.nio.file.Paths.get(marker)),
+      s"overwrite never started staging: ${writerErr.get()}")
+    // mid-stage append: it commits v1 while the overwrite stages; the
+    // overwrite then publishes v2 REBASED over it (WriteSerializable:
+    // overwrite, then append), so the appended row is never replaced
     val av = appendRow(dir, 999L)
     writer.join(60000)
     assert(writerErr.get() == null, s"overwrite failed: ${writerErr.get()}")
-    assert(av == 2L, s"the append must commit after the overwrite (v1), got v$av")
+    assert(av == 1L, s"the append must commit during the overwrite's stage, got v$av")
+    assert(ov == 2L, s"the overwrite must publish after the append, got v$ov")
     // every overwrite row AND the appended row survive — nothing retired
     assert(vSet(dir) == (100L until 124L).toSet + 999L,
       "append raced the overwrite into row loss")
